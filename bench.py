@@ -109,11 +109,15 @@ def _duck_conn(sf_dir: str):
     import duckdb
 
     con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.isdir(p):  # Spark-written tables are directories
-            p = os.path.join(p, "*.parquet")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    try:
+        for t in TABLES:
+            p = os.path.join(sf_dir, f"{t}.parquet")
+            if os.path.isdir(p):  # Spark-written tables are directories
+                p = os.path.join(p, "*.parquet")
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    except Exception:
+        con.close()
+        raise
     return con
 
 
@@ -157,24 +161,34 @@ def _bench_dir(spark, qs, osql, sf_dir: str) -> dict:
         spark_t[name] = round(best, 3)
         spark.catalog.clearCache()  # queries must not inherit earlier persists
 
+    # A failing DuckDB twin drops only its own timing; a failed connect
+    # (no duckdb, unreadable sf_dir) leaves Spark timings only.
     duck_t: dict[str, float] = {}
     try:
         con = _duck_conn(sf_dir)
-        for name in HEADLINE:
-            if name in DUCKDB_SKIP or name not in osql:
-                continue
-            con.execute(osql[name]).fetchall()  # warm
-            best = float("inf")
-            for _ in range(4):
-                t0 = time.perf_counter()
-                con.execute(osql[name]).fetchall()
-                best = min(best, time.perf_counter() - t0)
-                if best > 5.0:  # same early-out rule as the Spark side
-                    break
-            duck_t[name] = round(best, 3)
-        con.close()
-    except Exception:
-        duck_t = {}
+    except Exception as exc:
+        print(f"duckdb twins skipped at {sf_dir}: {exc!r}", file=sys.stderr)
+        con = None
+    if con is not None:
+        try:
+            for name in HEADLINE:
+                if name in DUCKDB_SKIP or name not in osql:
+                    continue
+                try:
+                    con.execute(osql[name]).fetchall()  # warm
+                    best = float("inf")
+                    for _ in range(4):
+                        t0 = time.perf_counter()
+                        con.execute(osql[name]).fetchall()
+                        best = min(best, time.perf_counter() - t0)
+                        if best > 5.0:  # same early-out rule as the Spark side
+                            break
+                except Exception as exc:
+                    print(f"duckdb twin {name} skipped: {exc!r}", file=sys.stderr)
+                    continue
+                duck_t[name] = round(best, 3)
+        finally:
+            con.close()
 
     comparable = [n for n in duck_t if n in spark_t]
     s_cmp = sum(spark_t[n] for n in comparable)

@@ -939,3 +939,39 @@ def test_q16_heavy_exchange_carries_hashed_bts_key(spark, qs):
             f"attribute strings leaked into the heavy exchange: {args}"
         )
         assert "bk#" in args and "l_suppkey#" in args, args
+
+
+def test_source_result_is_a_scan_of_pinned_rows(spark):
+    """The REST and RPC sources fetch in one single-stage job over the key
+    relation's own partitions (no spread shuffle) and return pinned rows:
+    a source result's executed plan holds neither an Exchange nor the
+    MapInPandas fetch, so no consumer can re-fetch."""
+    from pyspark.sql import types as T
+
+    from traderjoe_etl_spark.sources.rest import rest_snapshot_source
+    from traderjoe_etl_spark.sources.rpc import rpc_bins_source
+
+    keys = spark.createDataFrame(
+        [("u", f"p{i}", i) for i in range(8)], "user_address string, poolAddress string, activeBinId int"
+    ).coalesce(3)
+    sources = {
+        "rest": lambda: rest_snapshot_source(
+            keys, "https://api/{poolAddress}", T.StructType([T.StructField("v", T.DoubleType())]),
+            fetcher=lambda url, params: [{"v": 1.0}],
+        ),
+        "rpc": lambda: rpc_bins_source(keys, lambda pool, user, active, plus, minus: [(active, 1, 1, 1, 1)]),
+    }
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    for name, make in sources.items():
+        group = f"source-shape-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            df = make()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        stages = [s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds]
+        assert len(stages) == 1, f"{name}: fetch ran in stages {stages}"
+        assert tracker.getStageInfo(stages[0]).numTasks == 3  # the key relation's partitions
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Scan ExistingRDD" in plan, plan
+        assert "Exchange" not in plan and "MapInPandas" not in plan, plan

@@ -85,3 +85,13 @@ def test_spill_dir_resolution(spark, monkeypatch, tmp_path):
     assert _free_mb("/tmp") > 0
     (tmp_path / "x.bin").write_bytes(b"\0" * 4096)
     assert _dir_bytes(str(tmp_path)) >= 4096
+
+
+def test_bench_dir_keeps_partial_duckdb_timings(sf_dir):
+    """One failing DuckDB twin drops only its own timing in bench.py."""
+    from bench import HEADLINE, _bench_dir
+
+    good, bad = HEADLINE[0], HEADLINE[1]
+    osql = {good: "SELECT count(*) FROM region", bad: "SELECT no_such_column FROM region"}
+    out = _bench_dir(None, {}, osql, sf_dir)
+    assert list(out["duckdb"]) == [good]

@@ -79,6 +79,49 @@ def test_rpc_source_decimal_fidelity(spark):
     assert row.totalShares == Decimal(2**91)
 
 
+def test_sources_fetch_each_key_once(spark):
+    """Both sources fetch at call time, once per key: the quarantine ok
+    side, the bad side and a join all read the same pinned rows."""
+    rest_calls, rpc_calls = spark.sparkContext.accumulator(0), spark.sparkContext.accumulator(0)
+
+    def fetch(url, params):
+        rest_calls.add(1)
+        pool = url.rsplit("/", 1)[-1]
+        if pool == "boom":
+            raise RuntimeError("api 500")
+        return [{"activeBinId": int(pool[1:])}]
+
+    def caller(pool, user, active, plus, minus):
+        rpc_calls.add(1)
+        if user == "u_boom":
+            raise RuntimeError("rpc revert")
+        return [(active, 10**30, 1, 2**90, 2**91)]
+
+    pools = ["p1", "p2", "p3", "boom"]
+    keys = spark.createDataFrame([(p,) for p in pools], "pool string")
+    stats = rest_snapshot_source(
+        keys, "https://api/{pool}", T.StructType([T.StructField("activeBinId", T.IntegerType())]), fetcher=fetch
+    )
+    assert rest_calls.value == len(pools)  # fetched at call time, before any action
+    ok, bad = quarantine(stats)
+    assert sorted(r.pool for r in ok.collect()) == ["p1", "p2", "p3"]
+    assert [r.pool for r in bad.collect()] == ["boom"]
+    users = spark.createDataFrame([("u1",), ("u_boom",)], "user_address string")
+    bin_keys = users.crossJoin(ok.withColumnRenamed("pool", "poolAddress"))
+    assert bin_keys.count() == 6
+    assert rest_calls.value == len(pools)
+
+    bins = rpc_bins_source(bin_keys, caller)
+    assert rpc_calls.value == 6
+    bins_ok, bins_bad = quarantine(bins)
+    assert bins_ok.count() == 3
+    assert {r.user_address for r in bins_bad.collect()} == {"u_boom"}
+    joined = bins_ok.join(ok.withColumnRenamed("pool", "poolAddress"), "poolAddress").collect()
+    assert {r.binId for r in joined} == {1, 2, 3}
+    assert all(r.reserveX == Decimal(10**30) and r.totalShares == Decimal(2**91) for r in joined)
+    assert rest_calls.value == len(pools) and rpc_calls.value == 6
+
+
 def test_python_datasource_rest(spark):
     """Spark-4 Python DataSource API source: registered format, declared
     schema, deterministic fixture payload."""

@@ -254,7 +254,13 @@ def bloom_prefilter_join(
     query proper — is skipped entirely. Overestimating only enlarges the
     bitmap (fewer false positives, same exact result); the regime pick
     (literal vs broadcast-value) follows the bound the same way it
-    followed the measured count.
+    followed the measured count. Underestimating is the failure mode: the
+    bitmap is sized for too few keys, so it fills up and the effective
+    fpp rises, ``(1 - exp(-k·n/m))^k`` for n real keys in m bits — at the
+    default fpp=1% and k=5, 2× too few keys gives ~11% and 10× too few
+    ~97%, so the prefilter passes nearly every probe row. The result stays
+    exact either way; only the saving is lost. ``0`` or ``None`` falls
+    back to the ``approx_count_distinct`` scan.
     """
     if how not in ("inner", "semi", "left_semi", "leftsemi"):
         raise ValueError(f"bloom prefilter preserves exactness only for inner/semi joins, got {how!r}")

@@ -49,7 +49,12 @@ def ngram_hashes(tokens_col: Column, n: int, hasher: str = "md5") -> Column:
     exploded stream carries 8-byte longs instead of 32-char digests.
     Hash equality ⟺ n-gram string equality up to 64-bit collisions (the
     repo's surrogate-key convention — the hash itself never reaches any
-    output)."""
+    output). The 64-bit bound: N distinct n-grams (corpus plus benchmark)
+    expect about N²/2⁶⁵ colliding pairs, i.e. ~3·10⁻⁴ at N = 10⁸ and one
+    expected collision at N ≈ 2³²·⁵ ≈ 6·10⁹. A collision can add a false
+    match or merge two shared n-grams into one count, but never unflags a
+    contaminated document; the token-hash level adds V²/2⁶⁵ for a V-token
+    vocabulary, negligible beside it."""
     if hasher == "chained":
         # tokens_col here is the array of token HASHES (array<bigint>)
         return F.when(

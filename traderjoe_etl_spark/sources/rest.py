@@ -1,16 +1,18 @@
 """Distributed REST snapshot source.
 
 The reference fetches four endpoints sequentially per (user, pool) pair on
-one thread (main.py:36-42, 51, 90, 105, 156). The engine turns the pair
-list into a DataFrame and fetches on EXECUTORS with ``mapInPandas`` — N
-pairs fetch with full cluster parallelism, and a failed pair becomes an
-error row instead of aborting the batch (the S1 try/except isolation at
-main.py:13-17, quarantine-table style — SURVEY.md §3 EP3).
+one thread (main.py:36-42, 51, 90, 105, 156). The engine fetches every key
+row on EXECUTORS with ``mapInPandas``; a failed key becomes an error row
+instead of aborting the batch (main.py:13-17 try/except isolation,
+SURVEY.md §3 EP3). Pushdown params (pageSize, startTime/endTime,
+main.py:30-34) stay adapter options.
 
-Source-level pushdown (the reference's manual params: pageSize, startTime/
-endTime at main.py:30-34) stays an adapter option — a DataSource V2
-implementation would be over-engineering at this payload size
-(SURVEY.md §4 decision).
+The source is eager: it fetches each key exactly once, at call time, and
+pins the rows with ``localCheckpoint(eager=True)``, so every consumer (pool
+dim, bin keys, both ``quarantine`` sides) reads the same rows and none
+re-fetches. Fetch parallelism equals the key relation's partition count.
+Trade-off: pinned rows live on the executors, so a lost executor fails the
+job reading them; the next hourly cycle fetches again.
 
 The HTTP client is injected (``fetcher``), so tests run fixture payloads
 through the identical executor-side code path with zero network.
@@ -48,15 +50,11 @@ def rest_snapshot_source(
     row_schema: T.StructType,
     params: dict | None = None,
     fetcher: Fetcher | None = None,
-    fetch_partitions: int = 8,
 ) -> DataFrame:
-    """Fetch ``url_template.format(**key_row)`` for every key row, exploding
-    the JSON rows into ``row_schema`` plus the key columns and a
-    ``_fetch_error`` column (NULL on success).
-
-    The keys DataFrame is repartitioned so fetches spread across executors;
-    each partition issues its fetches serially inside one Python worker
-    (rate-limit friendly), different partitions run in parallel.
+    """Fetch ``url_template.format(**key_row)`` once per key row, now, and
+    return the pinned rows: ``row_schema`` plus the key columns and a
+    ``_fetch_error`` column (NULL on success). Each partition of ``keys_df``
+    fetches serially in one Python worker (rate-limit friendly).
     """
     params = dict(params or {})
     fetch = fetcher or _default_fetcher
@@ -86,8 +84,7 @@ def rest_snapshot_source(
                     out_rows.append(rec)
             yield pd.DataFrame(out_rows, columns=[*key_cols, *field_names, "_fetch_error"])
 
-    spread = keys_df.repartition(fetch_partitions)
-    return spread.mapInPandas(run, schema=out_schema)
+    return keys_df.mapInPandas(run, schema=out_schema).localCheckpoint(eager=True)
 
 
 def quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:

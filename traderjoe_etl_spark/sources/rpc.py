@@ -2,14 +2,16 @@
 
 The reference makes one blocking ``getBinsReserveOf`` call per pair on the
 driver thread (main.py:203-219, ABI helperContractABI.json:194-264). The
-engine fetches per-pair bins on executors via ``mapInPandas`` over the key
-DataFrame, with the bin-window pushdown (activeBinId ± N, main.py:213-214)
-as adapter options.
+engine calls per pair on executors via ``mapInPandas``, with the bin-window
+pushdown (activeBinId ± N, main.py:213-214) as adapter options. It is
+eager and fetch-once like ``sources.rest``: one call per key at call time,
+pinned by a local checkpoint. Fetch parallelism equals the key relation's
+partition count; a lost executor fails the job reading the pinned rows,
+and the next hourly cycle fetches again.
 
 The RPC client is injected; the default web3 client is gated behind an
-import-try (web3 is not in the engine's dependency set — SURVEY.md env
-constraints) so offline/test environments use fixture callers through the
-identical executor-side code path.
+import-try (web3 is not a dependency), so tests use fixture callers
+through the identical executor-side code path.
 """
 
 from __future__ import annotations
@@ -50,9 +52,8 @@ def rpc_bins_source(
     caller: BinsCaller,
     ids_plus: int = 1000,
     ids_minus: int = 1000,
-    fetch_partitions: int = 8,
 ) -> DataFrame:
-    """Fetch per-(user, pool) bin reserves on executors.
+    """Fetch per-(user, pool) bin reserves on executors, once per key, now.
 
     ``keys_df`` columns: user_address, poolAddress, activeBinId. The bin
     window (± ids) is the source-level pushdown (main.py:213-214). Output:
@@ -90,4 +91,4 @@ def rpc_bins_source(
                     )
             yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
 
-    return keys_df.repartition(fetch_partitions).mapInPandas(run, schema=out_schema)
+    return keys_df.mapInPandas(run, schema=out_schema).localCheckpoint(eager=True)
