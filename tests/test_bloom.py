@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import warnings
+
+import pytest
 from pyspark.sql import functions as F
 
 from traderjoe_etl_spark.operators.bloom import (
@@ -113,3 +116,18 @@ def test_bloom_null_probe_keys_deterministically_drop(spark):
     probe = spark.createDataFrame([(None,), (5,), (10**9,)], "k long")
     kept = [r["k"] for r in probe.where(might_contain(F.col("k"), words, m, k)).collect()]
     assert 5 in kept and None not in kept
+
+
+def test_bloom_warns_when_expected_keys_underestimated(spark):
+    """An ``expected_keys`` 10× too low fills the literal bitmap (effective
+    fpp ~97 % vs 1 %) and warns; a correct bound stays silent. Either way
+    the join is exact."""
+    build = spark.range(0, 2000).select(F.col("id").alias("k"))
+    probe = spark.range(0, 4000).select(F.col("id").alias("k"))
+    with pytest.warns(UserWarning, match="effective fpp"):
+        under = bloom_prefilter_join(probe, build, "k", "k", expected_keys=200)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        right = bloom_prefilter_join(probe, build, "k", "k", expected_keys=2000)
+    assert not [w for w in caught if "effective fpp" in str(w.message)]
+    assert under.count() == right.count() == 2000

@@ -48,6 +48,7 @@ history (main.py:182-183) is the small-scale instance; at 100 TB the
 from __future__ import annotations
 
 import math
+import warnings
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -225,6 +226,23 @@ def native_bloom_prefilter(
     return joined.where(test).drop("__bloom_words")
 
 
+def _warn_if_underfilled(words: list[int], m_bits: int, k: int, fpp: float, n_keys: int) -> None:
+    """Warn when a built bitmap's effective fpp exceeds twice the target.
+
+    With X of m bits set, the false-positive rate is (X/m)^k and the
+    distinct-key estimate n = -(m/k)·ln(1 - X/m) — read off the words
+    already on the driver, so the check runs no Spark job."""
+    ones = sum((w & 0xFFFFFFFFFFFFFFFF).bit_count() for w in words)
+    effective = (ones / m_bits) ** k
+    if effective > 2 * fpp:
+        est = math.inf if ones >= m_bits else -(m_bits / k) * math.log(1 - ones / m_bits)
+        warnings.warn(
+            f"bloom bitmap sized for {n_keys} keys holds ~{est:.0f}: effective "
+            f"fpp {effective:.3g} vs requested {fpp:g}; raise expected_keys",
+            stacklevel=3,
+        )
+
+
 def bloom_prefilter_join(
     probe: DataFrame,
     build: DataFrame,
@@ -259,8 +277,9 @@ def bloom_prefilter_join(
     fpp rises, ``(1 - exp(-k·n/m))^k`` for n real keys in m bits — at the
     default fpp=1% and k=5, 2× too few keys gives ~11% and 10× too few
     ~97%, so the prefilter passes nearly every probe row. The result stays
-    exact either way; only the saving is lost. ``0`` or ``None`` falls
-    back to the ``approx_count_distinct`` scan.
+    exact either way; only the saving is lost, and the literal path warns
+    when the built bitmap's effective fpp exceeds twice ``fpp``. ``0`` or
+    ``None`` falls back to the ``approx_count_distinct`` scan.
     """
     if how not in ("inner", "semi", "left_semi", "leftsemi"):
         raise ValueError(f"bloom prefilter preserves exactness only for inner/semi joins, got {how!r}")
@@ -280,6 +299,7 @@ def bloom_prefilter_join(
         words, m_bits, k = build_bloom(
             build, build_key, expected_keys=n_keys, fpp=fpp, num_hashes=num_hashes
         )
+        _warn_if_underfilled(words, m_bits, k, fpp, n_keys)
         pref = probe.where(might_contain(F.col(probe_key), words, m_bits, k))
     if how in ("semi", "left_semi", "leftsemi"):
         return pref.join(build, pref[probe_key] == build[build_key], "left_semi")
