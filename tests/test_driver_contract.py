@@ -113,14 +113,13 @@ def test_non_utc_session_still_matches(spark, sf_dir):
 
 def test_runtime_confs_pinned(spark):
     """The conf surface queries rely on must survive apply_runtime_confs:
-    timestamp reading/writing modes and Python-source pushdown."""
+    timestamp reading/writing modes and the session time zone."""
     from traderjoe_etl_spark.session import RUNTIME_CONFS, apply_runtime_confs
 
     apply_runtime_confs(spark)
     for key in (
         "spark.sql.parquet.inferTimestampNTZ.enabled",
         "spark.sql.parquet.outputTimestampType",
-        "spark.sql.python.filterPushdown.enabled",
         "spark.sql.session.timeZone",
     ):
         assert spark.conf.get(key) == RUNTIME_CONFS[key]

@@ -129,7 +129,8 @@ def test_column_order_full(snapshot):
 def test_strict_repr_packed_string(spark):
     # floats whose JVM rendering differs from Python repr: 1e16 (Spark
     # "1.0E16") and 0.0001 (Spark "1.0E-4") — strict mode must emit the
-    # reference's f-string bytes (main.py:168)
+    # reference's f-string bytes (main.py:168, 239) in both packed strings.
+    # The bin amounts are scaled by 10^6 (token x) and 10^18 (token y).
     inputs = SnapshotInputs(
         pools_1d=spark.createDataFrame([_pool_row()], POOL_STATS_SCHEMA),
         pools_1h=spark.createDataFrame([_pool_row()], POOL_STATS_SCHEMA),
@@ -141,14 +142,25 @@ def test_strict_repr_packed_string(spark):
             ],
             FEES_EARNED_SCHEMA,
         ),
-        bins=spark.createDataFrame([], BINS_RESERVE_SCHEMA),
+        bins=spark.createDataFrame(
+            [
+                {"user_address": USER, "poolAddress": POOL, "binId": 7,
+                 "reserveX": Decimal(10) ** 22, "reserveY": Decimal(10) ** 14,
+                 "shares": Decimal(1), "totalShares": Decimal(1)},
+            ],
+            BINS_RESERVE_SCHEMA,
+        ),
     )
     pairs = spark.createDataFrame([(USER, POOL)], "user_address string, pool_address string")
+    fees_col = "fees_per_bin(bin_id: token_x, token_y_amounts)"
+    bins_col = "bin_distribution(bin id: token_x_amount, token_y_amounts)"
     row = build_snapshot(pairs, inputs, RUN_TS, strict_repr=True).collect()[0].asDict()
-    assert row["fees_per_bin(bin_id: token_x, token_y_amounts)"] == f"(5: {1e16!r}, {0.0001!r})"
+    assert row[fees_col] == f"(5: {1e16!r}, {0.0001!r})"
+    assert row[bins_col] == f"(7: {1e16!r}, {0.0001!r})"
     # default mode keeps the (documented) JVM rendering
     row_jvm = build_snapshot(pairs, inputs, RUN_TS).collect()[0].asDict()
-    assert row_jvm["fees_per_bin(bin_id: token_x, token_y_amounts)"] == "(5: 1.0E16, 1.0E-4)"
+    assert row_jvm[fees_col] == "(5: 1.0E16, 1.0E-4)"
+    assert row_jvm[bins_col] == "(7: 1.0E16, 1.0E-4)"
 
 
 def test_argmax_tie_sums_all_rows(snapshot):

@@ -9,6 +9,8 @@ import sys
 import tempfile
 from decimal import Decimal
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import types as T
@@ -47,23 +49,45 @@ def test_read_csv_with_header_and_bad_cell(spark):
     assert rows[2].score is None  # PERMISSIVE: bad cell → NULL
 
 
-def test_rest_source_explodes_rows_and_quarantines(spark):
-    payload = {"p1": [{"v": 1.0}, {"v": 2.0}], "p2": []}
-
+def _rest_source(spark, payload):
     def fetch(url, params):
-        key = url.rsplit("/", 1)[-1]
-        if key == "boom":
-            raise RuntimeError("api 500")
-        return payload[key]
+        pool = url.rsplit("/", 1)[-1]
+        if pool not in payload:
+            raise RuntimeError(f"api 500 for {pool}")
+        return [{"v": v} for v in payload[pool]]
 
-    keys = spark.createDataFrame([("p1",), ("p2",), ("boom",)], "pool string")
-    out = rest_snapshot_source(
-        keys, "https://api/{pool}", T.StructType([T.StructField("v", T.DoubleType())]), fetcher=fetch
+    keys = spark.createDataFrame([(p,) for p in [*payload, "boom"]], "pool string")
+    schema = T.StructType([T.StructField("v", T.DoubleType())])
+    return rest_snapshot_source(keys, "https://api/{pool}", schema, fetcher=fetch), "v"
+
+
+def _rpc_source(spark, payload):
+    def caller(pool, user, active, plus, minus):
+        assert (plus, minus) == (1000, 1000)
+        if pool not in payload:
+            raise RuntimeError(f"api 500 for {pool}")
+        return [(active + i, v, 0, 1, 1) for i, v in enumerate(payload[pool])]
+
+    keys = spark.createDataFrame(
+        [("u", p, 7) for p in [*payload, "boom"]],
+        "user_address string, poolAddress string, activeBinId int",
     )
+    return rpc_bins_source(keys, caller).withColumnRenamed("poolAddress", "pool"), "reserveX"
+
+
+@pytest.mark.parametrize("make_source", [_rest_source, _rpc_source], ids=["rest", "rpc"])
+def test_rest_source_explodes_rows_and_quarantines(spark, make_source):
+    """The per-key fetch contract both sources share: N payload items give
+    N rows, an empty payload gives none, a failing key gives exactly one
+    row with its key columns set, NULL payload and the formatted error."""
+    out, value_col = make_source(spark, {"p1": [1, 2], "p2": []})
     ok, bad = quarantine(out)
-    assert sorted(r.v for r in ok.filter("pool = 'p1'").collect()) == [1.0, 2.0]
+    assert sorted(r[value_col] for r in ok.filter("pool = 'p1'").collect()) == [1, 2]
     assert ok.filter("pool = 'p2'").count() == 0
-    assert bad.collect()[0].pool == "boom"
+    failed = bad.collect()
+    assert len(failed) == 1 and failed[0].pool == "boom"
+    assert failed[0][value_col] is None
+    assert failed[0]._fetch_error == "RuntimeError: api 500 for boom"
 
 
 def test_rpc_source_decimal_fidelity(spark):
@@ -120,86 +144,6 @@ def test_sources_fetch_each_key_once(spark):
     assert {r.binId for r in joined} == {1, 2, 3}
     assert all(r.reserveX == Decimal(10**30) and r.totalShares == Decimal(2**91) for r in joined)
     assert rest_calls.value == len(pools) and rpc_calls.value == 6
-
-
-def test_python_datasource_rest(spark):
-    """Spark-4 Python DataSource API source: registered format, declared
-    schema, deterministic fixture payload."""
-    from traderjoe_etl_spark.sources.pyds import SnapshotRestDataSource, fixture_payload
-
-    spark.dataSource.register(SnapshotRestDataSource)
-    df = (
-        spark.read.format("rest_snapshot")
-        .option("n_pools", 6)
-        .option("hours", 12)
-        .load()
-    )
-    assert df.columns == ["pool_id", "hour", "reserve_x", "reserve_y", "fees_usd"]
-    rows = df.collect()
-    assert len(rows) == 6 * 12
-    expected = {(r[0], r[1]): r for p in range(6) for r in fixture_payload(p, 12)}
-    got = {(r.pool_id, r.hour): tuple(r) for r in rows}
-    assert got == expected
-
-
-def test_python_datasource_filter_pushdown(spark):
-    """EqualTo/In on pool_id prune source partitions BEFORE the scan."""
-    from pyspark.sql.datasource import EqualTo, GreaterThan, In
-
-    from traderjoe_etl_spark.sources.pyds import SnapshotRestReader
-
-    r = SnapshotRestReader({"n_pools": 16, "hours": 4})
-    assert len(r.partitions()) == 16
-    leftover = list(r.pushFilters([EqualTo(("pool_id",), 3), GreaterThan(("hour",), 1)]))
-    # the hour predicate is NOT consumed (Spark evaluates it post-scan)
-    assert len(leftover) == 1 and isinstance(leftover[0], GreaterThan)
-    assert len(r.partitions()) == 1 and r.partitions()[0].pool_ids == [3]
-
-    r2 = SnapshotRestReader({"n_pools": 16, "hours": 4})
-    list(r2.pushFilters([In(("pool_id",), (2, 5, 7))]))
-    assert sorted(p.pool_ids[0] for p in r2.partitions()) == [2, 5, 7]
-
-    # end-to-end: the filtered read still returns exactly the pruned pool
-    from traderjoe_etl_spark.sources.pyds import SnapshotRestDataSource
-
-    spark.dataSource.register(SnapshotRestDataSource)
-    df = (
-        spark.read.format("rest_snapshot")
-        .option("n_pools", 16)
-        .option("hours", 4)
-        .load()
-        .filter("pool_id = 3 AND hour > 1")
-    )
-    out = df.collect()
-    assert {r.pool_id for r in out} == {3} and len(out) == 2
-
-
-def test_python_datasource_stream(spark, tmp_path):
-    """Streaming Python DataSource: hourly micro-batch offsets drain into
-    a memory sink; total rows = pools x hours and offsets checkpoint."""
-    from pyspark.sql import functions as F
-
-    from traderjoe_etl_spark.sources.pyds import SnapshotRestDataSource
-
-    spark.dataSource.register(SnapshotRestDataSource)
-    stream = (
-        spark.readStream.format("rest_snapshot")
-        .option("n_pools", 4)
-        .option("max_hours", 6)
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("__pyds_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.table("__pyds_stream")
-    assert out.count() == 4 * 6
-    agg = out.groupBy("pool_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    assert all(r.n == 6 for r in agg)
 
 
 def test_parquet_schema_evolution_mergeschema(spark, tmp_path):

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from traderjoe_etl_spark.streaming.jobs import (
-    hourly_snapshot_query,
     rate_event_source,
     session_window_agg,
     stream_dedup,
@@ -137,18 +136,3 @@ def test_stream_stream_join_matches_batch(spark, event_dir):
         "inner",
     ).count()
     assert got == expected and got > 0
-
-
-def test_hourly_snapshot_query_appends(spark, event_dir):
-    sink = tempfile.mkdtemp(prefix="snap_sink_")
-    ckpt = tempfile.mkdtemp(prefix="snap_ckpt_")
-    src = spark.readStream.schema(EVENTS_SCHEMA).parquet(event_dir)
-
-    def build(batch_df, epoch_id):
-        return batch_df.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-
-    q = hourly_snapshot_query(src, sink, ckpt, build_batch=build)
-    q.awaitTermination(120)
-    out = spark.read.parquet(sink)
-    assert out.count() > 0
-    assert set(out.columns) == {"event_type", "n"}

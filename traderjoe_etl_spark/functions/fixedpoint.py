@@ -42,12 +42,6 @@ from pyspark.sql import functions as F
 SPLIT = 1_000_000
 
 
-def scaled_units(col: Column, scale: int) -> Column:
-    """Exact integer units: floor(col * 10^scale + 0.5) as long (HALF_UP
-    for the non-negative money domain; truncating cast == floor here)."""
-    return (col * F.lit(float(10**scale)) + F.lit(0.5)).cast("long")
-
-
 def fixed_sum_aggs(name: str, expr: str, scale: int) -> list[Column]:
     """Aggregate expressions (two long sums) for one money measure.
 

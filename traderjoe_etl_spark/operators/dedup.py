@@ -66,13 +66,6 @@ def _shingles_from_tokens(tokens: Column, k: int = 3) -> Column:
     )).otherwise(F.array(F.concat_ws(" ", tokens)))
 
 
-def _word_shingles(text_col: str | Column, k: int = 3) -> Column:
-    """k-word shingles as an array column (lowercased, whitespace-split).
-    Prefer the two-step ``_tokens`` + ``_shingles_from_tokens`` with an
-    intermediate projection (see ``_tokens``)."""
-    return _shingles_from_tokens(_tokens(text_col), k)
-
-
 MERSENNE31 = (1 << 31) - 1
 
 

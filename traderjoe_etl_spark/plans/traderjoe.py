@@ -140,10 +140,31 @@ def _render_float(col: Column, strict_repr: bool) -> Column:
     return col.cast("string")
 
 
+def _packed_bins(bin_id: Column, x: Column, y: Column, strict_repr: bool) -> Column:
+    """The packed ``"(binId: x, y; …)"`` aggregate behind both the fees
+    and the bin strings (main.py:168-170, 239-244), sorted by binId for
+    determinism (§2C.1; the reference relied on API order)."""
+    rendered = F.concat_ws(
+        ": ",
+        bin_id.cast("string"),
+        F.concat_ws(", ", _render_float(x, strict_repr), _render_float(y, strict_repr)),
+    )
+    return F.concat(
+        F.lit("("),
+        F.concat_ws(
+            "; ",
+            F.transform(
+                F.array_sort(F.collect_list(F.struct(bin_id.alias("_o0"), rendered.alias("_s")))),
+                lambda s: s["_s"],
+            ),
+        ),
+        F.lit(")"),
+    )
+
+
 def _fees_summary(inputs: SnapshotInputs, strict_repr: bool = False) -> DataFrame:
     """A4+A5 (reference main.py:158-181): per-pair fee totals plus the
-    packed ``"(binId: feesX, feesY; …)"`` string, sorted by binId for
-    determinism (§2C.1; the reference relied on API order)."""
+    packed ``"(binId: feesX, feesY; …)"`` string."""
     f = inputs.fees.select(
         F.col("user_address"),
         F.col("poolAddress").alias("pool_address"),
@@ -151,32 +172,14 @@ def _fees_summary(inputs: SnapshotInputs, strict_repr: bool = False) -> DataFram
         lenient_cast(F.col("accruedFeesX"), "double", default=0.0).alias("feesX"),
         lenient_cast(F.col("accruedFeesY"), "double", default=0.0).alias("feesY"),
     )
-    rendered = F.concat_ws(
-        ": ",
-        F.col("binId").cast("string"),
-        F.concat_ws(
-            ", ",
-            _render_float(F.col("feesX"), strict_repr),
-            _render_float(F.col("feesY"), strict_repr),
-        ),
-    )
     # single-pass: totals AND the sorted packed string in ONE groupBy
     # (two groupBys + self-join would shuffle twice and join for nothing)
-    packed = F.concat(
-        F.lit("("),
-        F.concat_ws(
-            "; ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("binId").alias("_o0"), rendered.alias("_s")))),
-                lambda s: s["_s"],
-            ),
-        ),
-        F.lit(")"),
-    )
     return f.groupBy(*PAIR_KEYS).agg(
         F.sum("feesX").alias("accrued_fees_token_x"),
         F.sum("feesY").alias("accrued_fees_token_y"),
-        packed.alias("fees_per_bin(bin_id: token_x, token_y_amounts)"),
+        _packed_bins(F.col("binId"), F.col("feesX"), F.col("feesY"), strict_repr).alias(
+            "fees_per_bin(bin_id: token_x, token_y_amounts)"
+        ),
     )
 
 
@@ -217,32 +220,14 @@ def _contract_summary(
         "token_x_decimals",  # kept: the totals agg scales the raw sums once
         "token_y_decimals",
     )
-    rendered = F.concat_ws(
-        ": ",
-        F.col("binId").cast("string"),
-        F.concat_ws(
-            ", ",
-            _render_float(F.col("ux"), strict_repr),
-            _render_float(F.col("uy"), strict_repr),
-        ),
-    )
-    packed = F.concat(
-        F.lit("("),
-        F.concat_ws(
-            "; ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("binId").alias("_o0"), rendered.alias("_s")))),
-                lambda s: s["_s"],
-            ),
-        ),
-        F.lit(")"),
-    )
     # single groupBy: raw sums scaled ONCE (main.py:234, 241-242 — not
     # sum-of-scaled) + the sorted packed bin string, one shuffle total
     return scaled.groupBy(*PAIR_KEYS).agg(
         (F.sum("ux_raw") / F.pow(F.lit(10.0), F.first("token_x_decimals"))).alias("token_x_amount"),
         (F.sum("uy_raw") / F.pow(F.lit(10.0), F.first("token_y_decimals"))).alias("token_y_amount"),
-        packed.alias("bin_distribution(bin id: token_x_amount, token_y_amounts)"),
+        _packed_bins(F.col("binId"), F.col("ux"), F.col("uy"), strict_repr).alias(
+            "bin_distribution(bin id: token_x_amount, token_y_amounts)"
+        ),
     )
 
 

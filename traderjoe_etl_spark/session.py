@@ -49,9 +49,6 @@ RUNTIME_CONFS = {
     # prune timestamp filters on data WE wrote. Micros also round-trips
     # through DuckDB/pyarrow without the INT96 shim.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
-    # Let Python DataSource readers (sources/pyds.py) receive query
-    # predicates via pushFilters — off by default in Spark 4.1.
-    "spark.sql.python.filterPushdown.enabled": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

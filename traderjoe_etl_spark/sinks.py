@@ -16,17 +16,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def append_snapshot(df: DataFrame, path: str, partition_col: str = "snapshot_date") -> None:
-    """Append-mode partitioned Parquet sink.
+def append_snapshot(df: DataFrame, path: str) -> None:
+    """Append-mode Parquet sink partitioned by ``snapshot_date``.
 
     Derives the partition date from ``current_unix_timestamp`` (the
     reference's run stamp, main.py:271). Append mode: hourly batches only
     add files — the Parquet analog of the CSV append at main.py:347.
     """
     out = df.withColumn(
-        partition_col, F.to_date(F.timestamp_seconds(F.col("current_unix_timestamp")))
+        "snapshot_date", F.to_date(F.timestamp_seconds(F.col("current_unix_timestamp")))
     )
-    out.write.mode("append").partitionBy(partition_col).parquet(path)
+    out.write.mode("append").partitionBy("snapshot_date").parquet(path)
 
 
 #: csv_export materializes on the driver; above this many rows the caller

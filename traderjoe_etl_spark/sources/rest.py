@@ -44,6 +44,45 @@ def _default_fetcher(url: str, params: dict) -> list:
     return data if isinstance(data, list) else [data]
 
 
+def _fetch_per_key(
+    keys_df: DataFrame,
+    schema: T.StructType,
+    fetch_rows: Callable[[dict], list],
+) -> DataFrame:
+    """The one per-key fetch loop under every source: ``fetch_rows(key)``
+    maps one key row (a dict) to its payload rows (dicts), and the result
+    is ``schema`` (key columns taken from the key row, payload columns from
+    the payload row) plus ``_fetch_error``, pinned now.
+
+    A key whose fetch raises yields ONE row: its key columns set, payload
+    NULL, ``_fetch_error = "ExcType: msg"`` (per-pair isolation,
+    main.py:13-17). An empty payload yields zero rows. Every column is set
+    explicitly (``None`` when missing): a column pandas fills with NaN
+    would break the Arrow cast to Decimal.
+    """
+    out_schema = T.StructType([*schema.fields, T.StructField("_fetch_error", T.StringType())])
+    key_cols = set(keys_df.columns)
+    names = schema.fieldNames()
+
+    def run(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            out_rows = []
+            for key in pdf.to_dict("records"):
+                try:
+                    rows, err = fetch_rows(key), None
+                except Exception as exc:
+                    rows, err = [{}], f"{type(exc).__name__}: {exc}"
+                for r in rows:
+                    rec = {n: key[n] if n in key_cols else r.get(n) for n in names}
+                    rec["_fetch_error"] = err
+                    out_rows.append(rec)
+            yield pd.DataFrame(out_rows, columns=out_schema.fieldNames())
+
+    return keys_df.mapInPandas(run, schema=out_schema).localCheckpoint(eager=True)
+
+
 def rest_snapshot_source(
     keys_df: DataFrame,
     url_template: str,
@@ -58,33 +97,12 @@ def rest_snapshot_source(
     """
     params = dict(params or {})
     fetch = fetcher or _default_fetcher
-    key_cols = keys_df.columns
-    out_schema = T.StructType(
-        [*(keys_df.schema.fields), *row_schema.fields, T.StructField("_fetch_error", T.StringType())]
-    )
-    field_names = [f.name for f in row_schema.fields]
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(key: dict) -> list:
+        return [r if isinstance(r, dict) else {} for r in fetch(url_template.format(**key), params)]
 
-        for pdf in batches:
-            out_rows = []
-            for key in pdf.to_dict("records"):
-                url = url_template.format(**key)
-                try:
-                    rows = fetch(url, params)
-                    err = None
-                except Exception as exc:  # per-pair isolation (main.py:13-17)
-                    rows, err = [{}], f"{type(exc).__name__}: {exc}"
-                for r in rows:
-                    rec = dict(key)
-                    for name in field_names:
-                        rec[name] = r.get(name) if isinstance(r, dict) else None
-                    rec["_fetch_error"] = err
-                    out_rows.append(rec)
-            yield pd.DataFrame(out_rows, columns=[*key_cols, *field_names, "_fetch_error"])
-
-    return keys_df.mapInPandas(run, schema=out_schema).localCheckpoint(eager=True)
+    schema = T.StructType([*keys_df.schema.fields, *row_schema.fields])
+    return _fetch_per_key(keys_df, schema, rows)
 
 
 def quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -1,12 +1,10 @@
 from .jobs import (
-    hourly_snapshot_query,
     session_window_agg,
     stream_dedup,
     windowed_event_agg,
 )
 
 __all__ = [
-    "hourly_snapshot_query",
     "windowed_event_agg",
     "session_window_agg",
     "stream_dedup",

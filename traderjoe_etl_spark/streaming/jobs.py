@@ -2,13 +2,11 @@
 
 The reference's only "streaming" is ``while True: main(); sleep(3600)``
 (main.py:353-359) stamping wall-clock rows — processing-time, no event-time
-semantics. Engine mapping (SURVEY.md §2B Streaming):
-
-- parity mode: a processing-time trigger (1 hour) driving snapshot batches
-  into the append sink — ``hourly_snapshot_query``;
-- ◆ event-time mode: tumbling/sliding windows + watermarks for late
-  snapshots, session windows on the events stream, stateful dedup via
-  ``dropDuplicatesWithinWatermark``.
+semantics. That loop is the CLI's ``run --loop-seconds`` (``__main__.py``),
+appending through ``sinks.append_snapshot``. This module is the event-time
+generalization (SURVEY.md §2B Streaming): tumbling/sliding windows +
+watermarks for late snapshots, session windows on the events stream,
+stateful dedup via ``dropDuplicatesWithinWatermark``.
 
 All builders accept any streaming DataFrame so tests can feed them from a
 file source and drain synchronously with ``processAllAvailable``.
@@ -16,11 +14,8 @@ file source and drain synchronously with ``processAllAvailable``.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 
 def windowed_event_agg(
@@ -147,33 +142,6 @@ def stream_stream_interval_join(
         & (rw[f"{ts_col}_r"] <= F.col(ts_col) + F.expr(f"INTERVAL {within}"))
     )
     return lw.join(rw, cond, "inner").drop(rw[key])
-
-
-def hourly_snapshot_query(
-    snapshot_batches: DataFrame,
-    sink_path: str,
-    checkpoint: str,
-    build_batch: Callable[[DataFrame, int], DataFrame] | None = None,
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """The T1 scheduler (main.py:353-359) as a streaming query.
-
-    ``foreachBatch`` gives per-cycle isolation (a failing batch can be
-    retried from the checkpoint without killing the query — the engine form
-    of the reference's per-cycle try/except) and lets the batch hook run
-    arbitrary assembly (e.g. plans.build_snapshot) before the append.
-    Default trigger is availableNow (drain-and-stop, driven by an external
-    scheduler); pass ``{"processingTime": "1 hour"}`` for the resident
-    hourly loop.
-    """
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        out = build_batch(batch_df, epoch_id) if build_batch else batch_df
-        out.write.mode("append").parquet(sink_path)
-
-    writer = snapshot_batches.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint)
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
 
 
 def stream_static_enrich(
