@@ -104,8 +104,7 @@ def _bins_rows():
     ]
 
 
-@pytest.fixture(scope="module")
-def snapshot(spark):
+def _fixture_inputs(spark):
     inputs = SnapshotInputs(
         pools_1d=spark.createDataFrame([_pool_row()], POOL_STATS_SCHEMA),
         pools_1h=spark.createDataFrame(
@@ -116,6 +115,12 @@ def snapshot(spark):
         bins=spark.createDataFrame(_bins_rows(), BINS_RESERVE_SCHEMA),
     )
     pairs = spark.createDataFrame([(USER, POOL)], "user_address string, pool_address string")
+    return pairs, inputs
+
+
+@pytest.fixture(scope="module")
+def snapshot(spark):
+    pairs, inputs = _fixture_inputs(spark)
     df = build_snapshot(pairs, inputs, RUN_TS)
     rows = df.collect()
     assert len(rows) == 1
@@ -161,6 +166,27 @@ def test_strict_repr_packed_string(spark):
     row_jvm = build_snapshot(pairs, inputs, RUN_TS).collect()[0].asDict()
     assert row_jvm[fees_col] == "(5: 1.0E16, 1.0E-4)"
     assert row_jvm[bins_col] == "(7: 1.0E16, 1.0E-4)"
+
+
+def test_strict_build_py4j_budget(spark, monkeypatch):
+    """A warm strict build reuses its float renderers instead of rebuilding
+    their expression trees over py4j (6 225 commands when it did)."""
+    from py4j.java_gateway import GatewayClient
+
+    pairs, inputs = _fixture_inputs(spark)
+    build_snapshot(pairs, inputs, RUN_TS, strict_repr=True)
+    sent = []
+    send = GatewayClient.send_command
+
+    def counted(self, command, *args, **kwargs):
+        if not command.startswith("m\n"):  # memory deletes follow Python GC
+            sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    build_snapshot(pairs, inputs, RUN_TS, strict_repr=True)
+    monkeypatch.undo()
+    assert len(sent) <= 3916, len(sent)  # 3 133 measured, + 25 %
 
 
 def test_argmax_tie_sums_all_rows(snapshot):

@@ -91,7 +91,9 @@ def test_worker_pythonpath_prepends_package_root_once():
 
 def test_python_tasks_run_from_any_working_directory(tmp_path):
     """The daemon module imports in workers even when the package is only
-    on the driver's sys.path and the cwd is elsewhere."""
+    on the driver's sys.path and the cwd is elsewhere. The session also
+    carries a 1000-entry codegen cache; vanilla sessions (such as the one
+    ``__spark_entry__`` receives) keep Spark's 100."""
     script = textwrap.dedent(
         f"""
         import sys
@@ -103,6 +105,7 @@ def test_python_tasks_run_from_any_working_directory(tmp_path):
             lambda it: (p.assign(id=p.id + 1) for p in it), "id long"
         )
         print("ROWS", sorted(r.id for r in df.collect()))
+        print("CODEGEN_CACHE", spark.conf.get("spark.sql.codegen.cache.maxEntries"))
         spark.stop()
         """
     )
@@ -117,3 +120,4 @@ def test_python_tasks_run_from_any_working_directory(tmp_path):
         timeout=300,
     )
     assert "ROWS [1, 2, 3]" in out.stdout, out.stderr[-2000:]
+    assert "CODEGEN_CACHE 1000" in out.stdout

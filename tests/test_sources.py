@@ -7,6 +7,8 @@ import json
 import os
 import sys
 import tempfile
+import threading
+import time
 from decimal import Decimal
 
 import pytest
@@ -15,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import types as T
 
-from traderjoe_etl_spark.sources.rest import quarantine, rest_snapshot_source
+from traderjoe_etl_spark.sources.rest import FETCH_CONCURRENCY, quarantine, rest_snapshot_source
 from traderjoe_etl_spark.sources.rpc import rpc_bins_source
 from traderjoe_etl_spark.sources.tables import read_with_schema
 
@@ -144,6 +146,67 @@ def test_sources_fetch_each_key_once(spark):
     assert {r.binId for r in joined} == {1, 2, 3}
     assert all(r.reserveX == Decimal(10**30) and r.totalShares == Decimal(2**91) for r in joined)
     assert rest_calls.value == len(pools) and rpc_calls.value == 6
+
+
+def _in_flight_counter(calls):
+    """A thread-safe stand-in for one endpoint: each call sleeps 20 ms and
+    returns how many of its calls were in flight when it started. The lock
+    cannot be pickled, so the first call on the worker creates it."""
+    state = {"now": 0}
+
+    def call():
+        lock = state.setdefault("lock", threading.Lock())
+        with lock:
+            calls.add(1)
+            state["now"] += 1
+            n = state["now"]
+        time.sleep(0.02)
+        with lock:
+            state["now"] -= 1
+        return n
+
+    return call
+
+
+@pytest.mark.parametrize("kind", ["rest", "rpc"])
+def test_fetch_overlaps_round_trips_within_a_task(spark, kind):
+    """One task overlaps up to FETCH_CONCURRENCY round trips; rows keep key
+    order, each key is fetched once and a failing key still gives one row."""
+    calls = spark.sparkContext.accumulator(0)
+    call = _in_flight_counter(calls)
+    pools = [f"p{i:02d}" for i in range(24)]
+
+    def fetch(url, params):
+        n = call()
+        if url.endswith("p05"):
+            raise RuntimeError("api 500")
+        return [{"v": n}]
+
+    def caller(pool, user, active, plus, minus):
+        n = call()
+        if pool == "p05":
+            raise RuntimeError("rpc revert")
+        return [(active, n, 0, 1, 1)]
+
+    if kind == "rest":
+        keys = spark.createDataFrame([(p,) for p in pools], "pool string").coalesce(1)
+        schema = T.StructType([T.StructField("v", T.LongType())])
+        out = rest_snapshot_source(keys, "https://api/{pool}", schema, fetcher=fetch)
+        pool_col, value_col = "pool", "v"
+    else:
+        keys = spark.createDataFrame(
+            [("u", p, 7) for p in pools], "user_address string, poolAddress string, activeBinId int"
+        ).coalesce(1)
+        out = rpc_bins_source(keys, caller)
+        pool_col, value_col = "poolAddress", "reserveX"
+    assert out.rdd.getNumPartitions() == 1
+    rows = out.collect()
+    assert [r[pool_col] for r in rows] == pools
+    assert calls.value == len(pools)
+    failed = [r for r in rows if r._fetch_error is not None]
+    assert len(failed) == 1 and failed[0][pool_col] == "p05" and failed[0][value_col] is None
+    in_flight = [int(r[value_col]) for r in rows if r._fetch_error is None]
+    assert 1 < max(in_flight) <= FETCH_CONCURRENCY
 
 
 def test_parquet_schema_evolution_mergeschema(spark, tmp_path):

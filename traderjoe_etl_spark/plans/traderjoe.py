@@ -27,9 +27,11 @@ Documented deviations from the reference (SURVEY.md §2C):
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 from datetime import datetime
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -125,7 +127,18 @@ def _history_summary(inputs: SnapshotInputs) -> DataFrame:
     )
 
 
-def _render_float(col: Column, strict_repr: bool) -> Column:
+@functools.cache
+def _strict_render(name: str, gateway: object) -> Column:
+    """The strict renderer of column ``name``, built once per column name
+    and JVM (``gateway``): each tree (about 250 unresolved expression nodes)
+    costs about 770 py4j round trips to build, and a Column is an
+    unresolved expression, safe to share between plans."""
+    from ..functions.pyrepr import py_float_repr_expr
+
+    return py_float_repr_expr(F.col(name))
+
+
+def _render_float(name: str, strict_repr: bool) -> Column:
     """Double → string for the packed bin strings: JVM rendering by default;
     CPython-repr bytes under strict parity mode, where the byte form must
     match the reference's f-strings (§2C.1 deviation closed). Strict mode
@@ -134,19 +147,19 @@ def _render_float(col: Column, strict_repr: bool) -> Column:
     functions.udfs.py_float_repr is the anywhere-exact pandas-UDF form the
     parity tests compare against."""
     if strict_repr:
-        from ..functions.pyrepr import py_float_repr_expr
-
-        return py_float_repr_expr(col)
-    return col.cast("string")
+        return _strict_render(name, SparkContext._gateway)
+    return F.col(name).cast("string")
 
 
-def _packed_bins(bin_id: Column, x: Column, y: Column, strict_repr: bool) -> Column:
+def _packed_bins(bin_id: str, x: str, y: str, strict_repr: bool) -> Column:
     """The packed ``"(binId: x, y; …)"`` aggregate behind both the fees
     and the bin strings (main.py:168-170, 239-244), sorted by binId for
-    determinism (§2C.1; the reference relied on API order)."""
+    determinism (§2C.1; the reference relied on API order). Arguments are
+    column names."""
+    bin_col = F.col(bin_id)
     rendered = F.concat_ws(
         ": ",
-        bin_id.cast("string"),
+        bin_col.cast("string"),
         F.concat_ws(", ", _render_float(x, strict_repr), _render_float(y, strict_repr)),
     )
     return F.concat(
@@ -154,7 +167,7 @@ def _packed_bins(bin_id: Column, x: Column, y: Column, strict_repr: bool) -> Col
         F.concat_ws(
             "; ",
             F.transform(
-                F.array_sort(F.collect_list(F.struct(bin_id.alias("_o0"), rendered.alias("_s")))),
+                F.array_sort(F.collect_list(F.struct(bin_col.alias("_o0"), rendered.alias("_s")))),
                 lambda s: s["_s"],
             ),
         ),
@@ -177,7 +190,7 @@ def _fees_summary(inputs: SnapshotInputs, strict_repr: bool = False) -> DataFram
     return f.groupBy(*PAIR_KEYS).agg(
         F.sum("feesX").alias("accrued_fees_token_x"),
         F.sum("feesY").alias("accrued_fees_token_y"),
-        _packed_bins(F.col("binId"), F.col("feesX"), F.col("feesY"), strict_repr).alias(
+        _packed_bins("binId", "feesX", "feesY", strict_repr).alias(
             "fees_per_bin(bin_id: token_x, token_y_amounts)"
         ),
     )
@@ -225,7 +238,7 @@ def _contract_summary(
     return scaled.groupBy(*PAIR_KEYS).agg(
         (F.sum("ux_raw") / F.pow(F.lit(10.0), F.first("token_x_decimals"))).alias("token_x_amount"),
         (F.sum("uy_raw") / F.pow(F.lit(10.0), F.first("token_y_decimals"))).alias("token_y_amount"),
-        _packed_bins(F.col("binId"), F.col("ux"), F.col("uy"), strict_repr).alias(
+        _packed_bins("binId", "ux", "uy", strict_repr).alias(
             "bin_distribution(bin id: token_x_amount, token_y_amounts)"
         ),
     )

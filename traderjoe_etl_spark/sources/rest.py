@@ -10,18 +10,24 @@ main.py:30-34) stay adapter options.
 The source is eager: it fetches each key exactly once, at call time, and
 pins the rows with ``localCheckpoint(eager=True)``, so every consumer (pool
 dim, bin keys, both ``quarantine`` sides) reads the same rows and none
-re-fetches. Fetch parallelism equals the key relation's partition count.
+re-fetches. Each task (one partition of the key relation) overlaps its
+round trips on up to ``FETCH_CONCURRENCY`` threads, so a source never has
+more than (concurrent tasks × ``FETCH_CONCURRENCY``) calls in flight
+against its endpoint; an upstream rate limit must allow that many.
 Trade-off: pinned rows live on the executors, so a lost executor fails the
 job reading them; the next hourly cycle fetches again.
 
 The HTTP client is injected (``fetcher``), so tests run fixture payloads
-through the identical executor-side code path with zero network.
+through the identical executor-side code path with zero network. Fetchers
+are called from several threads at once: one that keeps state (a call
+counter, a session) must do so thread-safely.
 """
 
 from __future__ import annotations
 
 import json
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,6 +35,11 @@ from pyspark.sql import types as T
 
 # fetcher(url: str, params: dict) -> list[dict]  (parsed JSON rows)
 Fetcher = Callable[[str, dict], list]
+
+# Round trips one task keeps in flight. A key relation can reach a source
+# as a single partition (AQE coalesces the small bin-key join to one), and
+# without overlap all of its calls would run one after another in one task.
+FETCH_CONCURRENCY = 8
 
 
 def _default_fetcher(url: str, params: dict) -> list:
@@ -52,7 +63,8 @@ def _fetch_per_key(
     """The one per-key fetch loop under every source: ``fetch_rows(key)``
     maps one key row (a dict) to its payload rows (dicts), and the result
     is ``schema`` (key columns taken from the key row, payload columns from
-    the payload row) plus ``_fetch_error``, pinned now.
+    the payload row) plus ``_fetch_error``, pinned now. Each batch's keys
+    run on a pool of ``FETCH_CONCURRENCY`` threads; rows keep key order.
 
     A key whose fetch raises yields ONE row: its key columns set, payload
     NULL, ``_fetch_error = "ExcType: msg"`` (per-pair isolation,
@@ -64,21 +76,25 @@ def _fetch_per_key(
     key_cols = set(keys_df.columns)
     names = schema.fieldNames()
 
+    def fetch_one(key: dict) -> list:
+        try:
+            rows, err = fetch_rows(key), None
+        except Exception as exc:
+            rows, err = [{}], f"{type(exc).__name__}: {exc}"
+        recs = []
+        for r in rows:
+            rec = {n: key[n] if n in key_cols else r.get(n) for n in names}
+            rec["_fetch_error"] = err
+            recs.append(rec)
+        return recs
+
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        for pdf in batches:
-            out_rows = []
-            for key in pdf.to_dict("records"):
-                try:
-                    rows, err = fetch_rows(key), None
-                except Exception as exc:
-                    rows, err = [{}], f"{type(exc).__name__}: {exc}"
-                for r in rows:
-                    rec = {n: key[n] if n in key_cols else r.get(n) for n in names}
-                    rec["_fetch_error"] = err
-                    out_rows.append(rec)
-            yield pd.DataFrame(out_rows, columns=out_schema.fieldNames())
+        with ThreadPoolExecutor(FETCH_CONCURRENCY) as pool:
+            for pdf in batches:
+                out_rows = [rec for recs in pool.map(fetch_one, pdf.to_dict("records")) for rec in recs]
+                yield pd.DataFrame(out_rows, columns=out_schema.fieldNames())
 
     return keys_df.mapInPandas(run, schema=out_schema).localCheckpoint(eager=True)
 
@@ -93,7 +109,8 @@ def rest_snapshot_source(
     """Fetch ``url_template.format(**key_row)`` once per key row, now, and
     return the pinned rows: ``row_schema`` plus the key columns and a
     ``_fetch_error`` column (NULL on success). Each partition of ``keys_df``
-    fetches serially in one Python worker (rate-limit friendly).
+    is one task with up to ``FETCH_CONCURRENCY`` calls in flight, so
+    ``fetcher`` runs on several threads at once and must be thread-safe.
     """
     params = dict(params or {})
     fetch = fetcher or _default_fetcher

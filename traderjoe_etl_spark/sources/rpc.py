@@ -6,13 +6,16 @@ engine calls per pair on executors through ``sources.rest``'s per-key
 fetch loop, with the bin-window pushdown (activeBinId ± ``BIN_WINDOW``,
 main.py:213-214) in the call. It is eager and fetch-once like
 ``sources.rest``: one call per key at call time, pinned by a local
-checkpoint. Fetch parallelism equals the key relation's partition count;
-a lost executor fails the job reading the pinned rows, and the next
-hourly cycle fetches again.
+checkpoint. Each task overlaps its calls on up to
+``sources.rest.FETCH_CONCURRENCY`` threads, so calls in flight against the
+node are at most (concurrent tasks × ``FETCH_CONCURRENCY``); a lost
+executor fails the job reading the pinned rows, and the next hourly cycle
+fetches again.
 
 The RPC client is injected; the default web3 client is gated behind an
 import-try (web3 is not a dependency), so tests use fixture callers
-through the identical executor-side code path.
+through the identical executor-side code path. Callers are called from
+several threads at once: one that keeps state must do so thread-safely.
 """
 
 from __future__ import annotations
