@@ -28,6 +28,15 @@ def duck(sf_dir):
     con.close()
 
 
+def test_registry_is_the_round_contract():
+    """The registry is the contract ``__spark_entry__`` exposes; its size
+    is pinned so a change to a module it imports cannot silently grow or
+    drop a query or an oracle."""
+    assert len(QUERIES) == 222
+    assert len(ORACLES) == 216
+    assert set(ORACLES) <= set(QUERIES)
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0

@@ -643,50 +643,6 @@ def test_cosine_near_dup_auto_planes(spark, emb):
     assert all(r.id_a < r.id_b and r.cosine >= 0.35 for r in rows)
 
 
-def test_incremental_dedup_filters_cross_run_near_dups(spark, tmp_path):
-    """Cross-run dedup against the persistent band-hash store: run 1 seeds
-    the store; run 2's near-copies of run-1 docs are dropped while its
-    genuinely novel docs survive, and the store grows by the survivors."""
-    from pyspark.sql import functions as F
-
-    from traderjoe_etl_spark.operators.dedup import incremental_dedup
-    from traderjoe_etl_spark.sources.tables import read_table
-
-    store = str(tmp_path / "fingerprints")
-    batch1 = (
-        read_table(spark, "/root/testdata/sf0.001", "documents")
-        .filter(F.col("doc_id") < 50)
-        .select("doc_id", "text")
-    )
-    out1 = incremental_dedup(batch1, "doc_id", "text", store)
-    assert out1.count() == batch1.count()  # empty store: everything is novel
-
-    # near-copies: one word appended to a run-1 doc (Jaccard ~ 0.97);
-    # novel docs: disjoint synthetic vocabulary (Jaccard ~ 0 vs corpus)
-    near = batch1.filter(F.col("doc_id") < 10).select(
-        (F.col("doc_id") + 10000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" appended")).alias("text"),
-    )
-    novel = spark.createDataFrame(
-        [
-            (
-                20000 + i,
-                " ".join(f"w{i}x{j}" for j in range(30)),
-            )
-            for i in range(10)
-        ],
-        "doc_id long, text string",
-    )
-    out2 = incremental_dedup(near.union(novel), "doc_id", "text", store)
-    kept = {r.doc_id for r in out2.select("doc_id").collect()}
-    assert all(k >= 20000 for k in kept), f"near-dup leaked: {sorted(kept)[:5]}"
-    assert len(kept) == 10, f"novel docs dropped: {sorted(kept)}"
-
-    # store grew: a re-run of the SAME novel docs is now fully filtered
-    out3 = incremental_dedup(novel, "doc_id", "text", store, update_store=False)
-    assert out3.count() == 0
-
-
 def test_batch_topk_arrow_equals_hof_under_rounding(spark, emb):
     """The arrow kernel's in-batch pruning must be invisible: for a batch
     of query vectors with rounded ranking, impl='arrow' and impl='hof'
@@ -902,148 +858,6 @@ def test_gap_fill_horizon_bounds_output(spark):
     u1 = {r["hour"]: (r["observed"], r["filled_value"]) for r in out.filter("user_id = 1").collect()}
     assert u1["2026-01-01 01:00"] == (0, 10.0) and u1["2026-01-01 02:00"] == (0, 10.0)
     assert u1["2026-01-01 00:00"][0] == 1 and u1["2026-01-01 03:00"][0] == 1
-
-
-def test_incremental_embedding_dedup(spark, tmp_path):
-    """Cross-run vector dedup against the persistent bucket store: run 2
-    drops vectors landing in run 1's buckets (near-identical vectors by
-    construction), keeps orthogonal-ish novel ones, and appends only the
-    newly-occupied buckets."""
-    from traderjoe_etl_spark.operators.similarity import (
-        incremental_embedding_dedup,
-        lsh_bucket_key,
-        random_hyperplanes,
-    )
-
-    store = str(tmp_path / "emb_store")
-    dim = 8
-
-    def vec(base, eps):
-        return [float(b) + eps for b in base]
-
-    a, b = [1, 0, 2, 0, 1, 3, 0, 1], [-2, 1, 0, 4, -1, 0, 2, -3]
-    batch1 = spark.createDataFrame(
-        [(1, vec(a, 0.0)), (2, vec(b, 0.0))], "vec_id long, embedding array<double>"
-    )
-    out1 = incremental_embedding_dedup(batch1, store, dim=dim)
-    assert sorted(r["vec_id"] for r in out1.collect()) == [1, 2]  # empty store keeps all
-
-    batch2 = spark.createDataFrame(
-        [
-            (3, vec(a, 1e-6)),   # near-dup of 1 → same sign bucket → dropped
-            (4, vec(b, -1e-6)),  # near-dup of 2 → dropped
-            (5, [float(x) for x in [5, -5, 5, -5, 5, -5, 5, -5]]),  # novel
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    out2 = incremental_embedding_dedup(batch2, store, dim=dim)
-    kept = sorted(r["vec_id"] for r in out2.collect())
-    planes = random_hyperplanes(dim, 12)
-    bkeys = {
-        r["vec_id"]: r["k"]
-        for r in batch1.unionByName(batch2)
-        .select("vec_id", lsh_bucket_key("embedding", planes).alias("k"))
-        .collect()
-    }
-    assert bkeys[3] == bkeys[1] and bkeys[4] == bkeys[2]  # the premise holds
-    expected = [5] if bkeys[5] not in (bkeys[1], bkeys[2]) else []
-    assert kept == expected
-    # store holds exactly the distinct occupied buckets
-    stored = {r["bucket"] for r in spark.read.parquet(store).collect()}
-    assert stored == {bkeys[1], bkeys[2]} | ({bkeys[5]} if expected else set())
-    assert out2.columns == ["vec_id", "embedding"]
-
-
-def test_incremental_embedding_dedup_corrupt_store_raises(spark, tmp_path):
-    """A store path that EXISTS but cannot be read as the bucket schema
-    must raise — silently treating it as 'first run' would skip dedup and
-    append the batch's buckets on top of the broken store (ADVICE r03).
-    A genuinely missing path still means first run."""
-    import pytest
-
-    from traderjoe_etl_spark.operators.similarity import incremental_embedding_dedup
-
-    store = str(tmp_path / "emb_store")
-    import os
-
-    os.makedirs(store)
-    with open(os.path.join(store, "part-00000.parquet"), "wb") as f:
-        f.write(b"this is not parquet")
-    batch = spark.createDataFrame(
-        [(1, [1.0] * 8)], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(Exception):
-        incremental_embedding_dedup(batch, store, dim=8).collect()
-
-
-def test_rekey_store_migration_preserves_dedup(spark, tmp_path):
-    """Grow the corpus past the original plane bank, migrate with
-    rekey_store, and verify dedup behavior under the new bank: previously
-    accepted vectors still collide (dropped), genuinely novel ones
-    survive — and the new store refuses to overwrite an existing path."""
-    import pytest
-
-    from traderjoe_etl_spark.operators.similarity import (
-        incremental_embedding_dedup,
-        lsh_bucket_key,
-        random_hyperplanes,
-        rekey_store,
-    )
-
-    dim = 8
-    old_store = str(tmp_path / "old_store")
-    new_store = str(tmp_path / "new_store")
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    corpus_rows = [
-        (i, [float(x) for x in rng.normal(size=dim)]) for i in range(64)
-    ]
-    corpus = spark.createDataFrame(corpus_rows, "vec_id long, embedding array<double>")
-    # accept the corpus in two runs under a deliberately TOO-SMALL bank
-    # (4 planes = 16 buckets for 64 vectors): run 1 occupies nearly every
-    # bucket, so run 2 over-drops — the saturation that motivates re-keying
-    out1 = incremental_embedding_dedup(
-        corpus.filter("vec_id < 32"), old_store, dim=dim, n_planes=4
-    )
-    out2 = incremental_embedding_dedup(
-        corpus.filter("vec_id >= 32"), old_store, dim=dim, n_planes=4
-    )
-    assert out2.count() < 16  # the small bank is saturating
-    accepted = out1.unionByName(out2)
-    accepted_rows = accepted.collect()
-    assert len(accepted_rows) >= 32
-
-    # migrate: re-key the ACCEPTED vectors under a 12-plane bank
-    rekey_store(accepted, new_store, dim=dim, n_planes=12)
-    planes12 = random_hyperplanes(dim, 12, seed=42)
-    expect_buckets = {
-        r["k"]
-        for r in accepted.select(lsh_bucket_key("embedding", planes12).alias("k")).collect()
-    }
-    assert {r["bucket"] for r in spark.read.parquet(new_store).collect()} == expect_buckets
-
-    # dedup behavior preserved under the new bank: an exact copy of an
-    # accepted vector drops; a fresh vector in an unoccupied bucket stays
-    dup_vec = accepted_rows[0]["embedding"]
-    novel_vec = [float(x) for x in rng.normal(size=dim) * 10]
-    probe = spark.createDataFrame(
-        [(900, [float(x) for x in dup_vec]), (901, novel_vec)],
-        "vec_id long, embedding array<double>",
-    )
-    out = incremental_embedding_dedup(
-        probe, new_store, dim=dim, n_planes=12, update_store=False
-    )
-    kept = {r["vec_id"] for r in out.collect()}
-    assert 900 not in kept
-    nb = probe.filter("vec_id = 901").select(
-        lsh_bucket_key("embedding", planes12).alias("k")
-    ).first()["k"]
-    assert (901 in kept) == (nb not in expect_buckets)
-
-    # refuses to clobber an existing store
-    with pytest.raises(Exception):
-        rekey_store(accepted, new_store, dim=dim, n_planes=12)
 
 
 def test_approx_distinct_counts_error_bound(spark, sf_dir):

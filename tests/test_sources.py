@@ -92,6 +92,21 @@ def test_rest_source_explodes_rows_and_quarantines(spark, make_source):
     assert failed[0]._fetch_error == "RuntimeError: api 500 for boom"
 
 
+def test_rest_source_quarantines_non_object_payload_element(spark):
+    """A payload element that is not a JSON object fails the whole key:
+    one bad row with a TypeError, no ok rows from the partial payload."""
+    keys = spark.createDataFrame([("p1",)], "pool string")
+    schema = T.StructType([T.StructField("v", T.DoubleType())])
+    out = rest_snapshot_source(
+        keys, "https://api/{pool}", schema, fetcher=lambda url, params: [{"v": 1.0}, "oops"]
+    )
+    ok, bad = quarantine(out)
+    assert ok.count() == 0
+    failed = bad.collect()
+    assert len(failed) == 1 and failed[0].pool == "p1" and failed[0].v is None
+    assert failed[0]._fetch_error.startswith("TypeError")
+
+
 def test_rpc_source_decimal_fidelity(spark):
     def caller(pool, user, active, plus, minus):
         return [(active, 10**30, 1, 2**90, 2**91)]

@@ -62,65 +62,6 @@ def test_position_tracker_matches_batch_fold(spark, sf_smoke):
         assert abs(r.net_value - exp_net) < 1e-6, (r.user_id, r.net_value, exp_net)
 
 
-def test_tws_position_tracker_matches_batch_fold(spark, sf_smoke):
-    """transformWithStateInPandas variant must reach the same final state
-    as the batch fold (and therefore as the applyInPandasWithState form).
-
-    The TWS state server speaks protobuf between the JVM and the Python
-    driver worker; skip when the protobuf runtime is absent/broken (this
-    container) — the operator itself is plain pyspark and imports fine."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf runtime unavailable; TWS state server cannot start")
-    from traderjoe_etl_spark.streaming.stateful import running_position_tracker_tws
-
-    d = tempfile.mkdtemp(prefix="tws_src_")
-    events = read_table(spark, sf_smoke, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    events.filter(F.col("event_id") % 2 == 0).write.parquet(d + "/a")
-    events.filter(F.col("event_id") % 2 == 1).write.parquet(d + "/b")
-    schema = spark.read.parquet(d + "/a").schema
-    src = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(d + "/{a,b}")
-
-    q = (
-        running_position_tracker_tws(src)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("positions_tws")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    final = spark.sql(
-        """
-        SELECT user_id, net_value, n_events FROM (
-            SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC) AS rn
-            FROM positions_tws
-        ) WHERE rn = 1
-        """
-    ).collect()
-
-    sign = F.when(F.col("event_type") == "purchase", 1.0).when(
-        F.col("event_type") == "error", -1.0
-    ).otherwise(0.0)
-    expected = {
-        r.user_id: (r.net, r.n)
-        for r in events.groupBy("user_id")
-        .agg(F.sum(F.col("value") * sign).alias("net"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert len(final) == len(expected)
-    for r in final:
-        exp_net, exp_n = expected[r.user_id]
-        assert r.n_events == exp_n, r.user_id
-        assert abs(r.net_value - exp_net) < 1e-6, (r.user_id, r.net_value, exp_net)
-
-
 def test_position_fold_skips_null_values():
     """A null `value` must be SKIPPED (Spark SQL sum semantics), not folded:
     NaN*0.0 is NaN and a plain numpy sum would propagate it, permanently

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from traderjoe_etl_spark.streaming.jobs import (
-    rate_event_source,
     session_window_agg,
     stream_dedup,
     stream_stream_interval_join,
@@ -92,26 +91,6 @@ def test_stream_dedup_drops_watermark_duplicates(spark, event_dir):
     assert n.c == n.d == batch_n
 
 
-def test_rate_source_shapes_events(spark):
-    src = rate_event_source(spark, rows_per_batch=40, n_users=7)
-    assert [f.name for f in src.schema.fields] == [
-        "event_id", "ts", "user_id", "event_type", "value",
-    ]
-    q = (
-        windowed_event_agg(src, window="1 minute", watermark="0 seconds")
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("rate_agg")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT sum(n) AS n FROM rate_agg").collect()[0]
-    assert rows.n is not None and rows.n % 40 == 0 and rows.n > 0
-    types = {r.event_type for r in spark.sql("SELECT DISTINCT event_type FROM rate_agg").collect()}
-    assert types <= {"view", "click", "purchase"}
-
-
 def test_stream_stream_join_matches_batch(spark, event_dir):
     views = spark.readStream.schema(EVENTS_SCHEMA).parquet(event_dir).filter(
         F.col("event_type") == "view"
@@ -136,3 +115,39 @@ def test_stream_stream_join_matches_batch(spark, event_dir):
         "inner",
     ).count()
     assert got == expected and got > 0
+
+
+def test_streaming_foreachbatch_merge(spark, tmp_path):
+    """Streaming SCD1 upsert: each micro-batch merges into the stored
+    table via operators/merge.py inside foreachBatch."""
+    from traderjoe_etl_spark.operators.merge import merge_upsert
+
+    store = str(tmp_path / "state")
+    src_dir = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1, 10.0), (2, 20.0), (1, 15.0), (3, 30.0)], "k long, v double"
+    ).repartition(1).write.parquet(src_dir)
+
+    def upsert(batch, batch_id):
+        batch = (
+            batch.groupBy("k").agg(F.max("v").alias("v"))  # last-write-wins per batch
+        )
+        try:
+            target = batch.sparkSession.read.parquet(store)
+            merged = merge_upsert(target, batch, keys=["k"])
+        except Exception:
+            merged = batch
+        merged.write.mode("overwrite").parquet(store + "_next")
+        next_df = batch.sparkSession.read.parquet(store + "_next")
+        next_df.write.mode("overwrite").parquet(store)
+
+    stream = spark.readStream.schema("k long, v double").parquet(src_dir)
+    q = (
+        stream.writeStream.foreachBatch(upsert)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    final = {r.k: r.v for r in spark.read.parquet(store).collect()}
+    assert final == {1: 15.0, 2: 20.0, 3: 30.0}

@@ -16,13 +16,14 @@ Spark-first operator library:
   driver's documents/embeddings.
 - ``plans``      — the reference pipeline recomposed as one lazy DataFrame DAG,
   plus physical-plan audit helpers (plans/audit.py).
-- ``streaming``  — the hourly scheduler loop (main.py:353-359) generalized to
-  Structured Streaming triggers, watermarks, stream-static enrichment and
-  stateful dedup/position tracking.
+- ``streaming``  — event-time Structured Streaming jobs: windows,
+  watermarks, stream-static enrichment, stateful dedup and position
+  tracking. The reference's hourly loop (main.py:353-359) is the CLI's
+  ``run --loop-seconds``.
 - ``sinks``      — append-mode parquet snapshot sink, range-clustered writes,
   header-once CSV export (main.py:345-351).
-- ``queries``    — the driver-facing registry (124 named queries, DuckDB
-  oracle twins for everything SQL-expressible).
+- ``queries``    — the registry behind ``__spark_entry__`` (222 named
+  queries, DuckDB oracle twins for everything SQL-expressible).
 
 CLI: ``python -m traderjoe_etl_spark run|query|list``.
 

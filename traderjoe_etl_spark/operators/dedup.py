@@ -210,18 +210,15 @@ def minhash_band_entries(
     hash_family: str = "xxhash64",
 ) -> DataFrame:
     """(``__id``, band_idx, band_hash) LSH band entries per document —
-    the shared building block of in-corpus candidate pairing
-    (:func:`minhash_lsh_candidates`) and cross-run filtering
-    (:func:`incremental_dedup`). ``bands`` rows per doc; the band hash is
+    the building block of in-corpus candidate pairing
+    (:func:`minhash_lsh_candidates`). ``bands`` rows per doc; the band hash is
     murmur3 of the signature slice (default family — kept as its native
     INT since r12: the value is only ever an equi-join/group key, and a
     4-byte int in the band exchange and its sort keys replaces the old
     ~11-char decimal string rendering of the SAME value, shuffling ~4x
     fewer key bytes with identical collision behavior) or md5 of the
     decimal mins (portable family — any engine reproduces it, stays
-    STRING). Persistent band stores keep the STRING schema — the store
-    writers cast at their boundary (:func:`incremental_dedup`,
-    streaming/crawl_dedup)."""
+    STRING)."""
     rows_per_band = num_hashes // bands
     with_sig = minhash_signatures(
         df, id_col, text_col, shingle_k, num_hashes, hash_family=hash_family
@@ -248,96 +245,6 @@ def minhash_band_entries(
             )
         ).alias("band"),
     ).select("__id", "band.band_idx", "band.band_hash")
-
-
-def incremental_dedup(
-    new_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    store_path: str,
-    *,
-    shingle_k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    hash_family: str = "xxhash64",
-    update_store: bool = True,
-) -> DataFrame:
-    """Cross-run near-duplicate filter: keep only the documents of a new
-    batch that do NOT collide with the persistent fingerprint store — the
-    "dedup this crawl against the existing corpus" operation, which
-    in-corpus pairing (:func:`minhash_lsh_candidates`) cannot do without
-    re-reading the whole corpus every run.
-
-    The store is an append-only parquet of (band_idx, band_hash) from all
-    prior accepted documents — deliberately text-free and id-free, so it
-    is orders of magnitude smaller than the corpus (``bands`` short rows
-    per document) and shippable to any cluster. A new doc sharing ANY
-    band bucket with the store is dropped (candidate-level semantics:
-    P(drop) ≈ 1−(1−j^r)^b, steep around Jaccard ≈ 0.5 at 64/16; band
-    collisions of genuinely novel text are possible — pipelines that
-    need exactness keep text alongside and verify with
-    :func:`ngram_jaccard_pairs` before dropping).
-
-    Plan shape: new-batch band entries (16 rows/doc) LEFT SEMI the store
-    on (band_idx, band_hash) → distinct colliding ids → LEFT ANTI onto
-    the batch. The store side streams through the join; the batch side
-    carries ids+hashes only, never text. Survivors' entries are appended
-    to the store (one extra write of the already-computed entries), so
-    the next run sees this run's accepted docs. Entries are computed
-    once and persisted across their two consumers, then released."""
-    spark = new_docs.sparkSession
-    entries = minhash_band_entries(
-        new_docs, id_col, text_col, shingle_k, num_hashes, bands, hash_family
-    )
-    # The persistent store's schema is pinned to band_hash STRING (append-
-    # only across runs/engine versions); non-portable families carry the
-    # band hash as INT in-plan since r12, so normalize at this boundary.
-    entries = entries.withColumn("band_hash", F.col("band_hash").cast("string")).persist()
-    try:
-        # Narrow read-failure handling: only a missing path means "first
-        # run"; corrupt/transient store errors must propagate, not
-        # silently skip dedup for the batch (ADVICE r03 — shared with
-        # similarity._read_bucket_store).
-        from pyspark.errors import AnalysisException
-
-        try:
-            store = spark.read.schema("band_idx INT, band_hash STRING").parquet(store_path)
-            have_store = True
-        except AnalysisException as exc:
-            klass = ""
-            try:
-                klass = exc.getErrorClass() or ""
-            except Exception:
-                pass
-            if "PATH_NOT_FOUND" not in klass and "PATH_NOT_FOUND" not in str(exc):
-                raise
-            have_store = False
-        if have_store:
-            hit_ids = (
-                entries.join(store, ["band_idx", "band_hash"], "left_semi")
-                .select(F.col("__id"))
-                .distinct()
-            )
-            novel = new_docs.join(
-                hit_ids, new_docs[id_col] == hit_ids.__id, "left_anti"
-            )
-        else:
-            novel = new_docs
-        # Materialize BEFORE appending to the store: the append changes
-        # what a re-listed store read would return, so a post-append
-        # re-execution of the anti-join could collide the batch with its
-        # own entries (and pays the plan twice). Checkpoint first, write
-        # from the settled result.
-        novel = novel.localCheckpoint(eager=True)
-        if update_store:
-            novel_ids = novel.select(F.col(id_col).alias("__id"))
-            novel_entries = entries.join(novel_ids, "__id", "left_semi").select(
-                "band_idx", "band_hash"
-            )
-            novel_entries.write.mode("append").parquet(store_path)
-        return novel
-    finally:
-        entries.unpersist()
 
 
 def minhash_lsh_candidates(

@@ -881,118 +881,6 @@ def _near_dup_pairs_arrow(
     return small_pairs.unionByName(big_pairs)
 
 
-def incremental_embedding_dedup(
-    new_batch: DataFrame,
-    store_path: str,
-    *,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    seed: int = 42,
-    update_store: bool = True,
-) -> DataFrame:
-    """Cross-run embedding-space near-duplicate filter: keep only the
-    vectors of a new batch whose sign-LSH bucket is NOT already occupied
-    by the persistent store — the vector-side sibling of
-    ``operators.dedup.incremental_dedup`` ("dedup this batch against every
-    embedding ever accepted" without re-scanning the corpus).
-
-    The store is an append-only parquet of occupied bucket keys — one
-    short string per accepted vector, id-free and vector-free, so it is
-    tiny next to the corpus and streams through the join. The plane bank
-    is FIXED by (dim, n_planes, seed) — it must be, for keys to be
-    comparable across runs — so unlike the in-corpus
-    :func:`cosine_near_dup_pairs` it cannot auto-size to the corpus;
-    pick ``n_planes`` for the expected FINAL corpus (buckets ≈ 2^planes)
-    and re-key the store with :func:`rekey_store` if the corpus outgrows
-    it.
-
-    Semantics are candidate-level and conservative, exactly like the
-    minhash store: a bucket collision DROPS the new vector (P(collision)
-    for cosine θ is (1 − θ_angle/π)^planes — steep for near-dups, nonzero
-    for neighbors); pipelines that need exactness keep vectors alongside
-    and verify survivors' cosines before dropping.
-
-    Plan: map-only bucket keys for the batch → LEFT ANTI against the
-    store → the anti-join MATERIALIZES (localCheckpoint) → survivors'
-    keys appended from the checkpointed frame. Materialize-then-write
-    ordering is load-bearing: appending first and checkpointing after
-    would re-execute the anti-join against a store that now contains the
-    batch's own buckets under any file re-listing (catalog refresh,
-    task retry) — returning zero rows — and would pay the plan twice
-    (ADVICE r03).
-    """
-    spark = new_batch.sparkSession
-    planes = random_hyperplanes(dim, n_planes, seed=seed)
-    keyed = new_batch.withColumn("__bucket", lsh_bucket_key(vec_col, planes))
-    store = _read_bucket_store(spark, store_path)
-    if store is not None:
-        novel = keyed.join(
-            store, keyed["__bucket"] == store["bucket"], "left_anti"
-        )
-    else:
-        novel = keyed
-    novel = novel.localCheckpoint(eager=True)
-    if update_store:
-        # distinct: one row per newly-occupied bucket, however many batch
-        # vectors share it (they are each other's dups; first run keeps
-        # them all — in-corpus pairing is the tool for intra-batch dups)
-        novel.select(F.col("__bucket").alias("bucket")).distinct().write.mode(
-            "append"
-        ).parquet(store_path)
-    return novel.drop("__bucket")
-
-
-def _read_bucket_store(spark, store_path: str):
-    """Read the bucket-key store, returning None ONLY when the path does
-    not exist (first run). Any other failure — corrupt parquet, transient
-    IO/permission error — propagates: treating it as 'store missing'
-    would silently skip dedup for the batch and append its buckets anyway,
-    letting duplicates flow downstream with no signal (ADVICE r03)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema("bucket STRING").parquet(store_path)
-    except AnalysisException as exc:
-        klass = ""
-        try:
-            klass = exc.getErrorClass() or ""
-        except Exception:
-            pass
-        if "PATH_NOT_FOUND" in klass or "PATH_NOT_FOUND" in str(exc):
-            return None
-        raise
-
-
-def rekey_store(
-    corpus: DataFrame,
-    new_store_path: str,
-    *,
-    dim: int,
-    vec_col: str = "embedding",
-    n_planes: int,
-    seed: int = 42,
-) -> None:
-    """Rebuild the :func:`incremental_embedding_dedup` bucket store under
-    a LARGER plane bank — the migration path for when the corpus outgrows
-    the bank it started with (expected load is ~|corpus| / 2^planes
-    vectors per bucket; once that climbs, the store over-drops novel
-    vectors because too much of the space shares too few buckets).
-
-    The store itself is deliberately vector-free, so re-keying needs the
-    ACCEPTED corpus vectors (the caller's system of record — e.g. the
-    survivors each run persisted). One map-only pass keys every vector
-    under the new (dim, n_planes, seed) bank and writes the distinct
-    bucket set; subsequent :func:`incremental_embedding_dedup` calls must
-    pass the SAME new parameters. Writes with mode='error' — refusing to
-    clobber an existing store rather than silently mixing banks."""
-    planes = random_hyperplanes(dim, n_planes, seed=seed)
-    corpus.select(
-        lsh_bucket_key(vec_col, planes).alias("bucket")
-    ).distinct().write.mode("error").parquet(new_store_path)
-
-
 def pca_fit(
     emb: DataFrame,
     dim: int,

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from ..functions.casts import lenient_cast
 from ..functions.projection import project_rename, reorder_existing
 from ..functions.scrub import safe_div
-from ..operators.aggregates import argmax_rows
+from ..operators.aggregates import argmax_rows, sorted_string_agg
 from ..schemas import SNAPSHOT_ORDER
 
 PAIR_KEYS = ["user_address", "pool_address"]
@@ -162,17 +162,7 @@ def _packed_bins(bin_id: str, x: str, y: str, strict_repr: bool) -> Column:
         bin_col.cast("string"),
         F.concat_ws(", ", _render_float(x, strict_repr), _render_float(y, strict_repr)),
     )
-    return F.concat(
-        F.lit("("),
-        F.concat_ws(
-            "; ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(bin_col.alias("_o0"), rendered.alias("_s")))),
-                lambda s: s["_s"],
-            ),
-        ),
-        F.lit(")"),
-    )
+    return sorted_string_agg([bin_col], rendered, "; ", ("(", ")"))
 
 
 def _fees_summary(inputs: SnapshotInputs, strict_repr: bool = False) -> DataFrame:

@@ -407,10 +407,9 @@ _STOP_SQL = ", ".join(f"'{s}'" for s in _STOPS)
 
 def gopher_doc_flags(docs: DataFrame, keep: list[str] | None = None) -> DataFrame:
     """Per-document Gopher rule flags (0 = pass, 1 = fail) over a `text`
-    column — the shared rule kernel used by the batch gopher_quality_rules
-    report and the streaming quality-quarantine router.  Map-only: split
-    once, translate-based char-class counts, literal-array stopword
-    membership; no regexp_replace copies, no UDFs, no windows.
+    column — the rule kernel behind the gopher_quality_rules report.
+    Map-only: split once, translate-based char-class counts, literal-array
+    stopword membership; no regexp_replace copies, no UDFs, no windows.
 
     Contracts: "alphabetic" means ASCII a-z by design (the corpus is
     lang-id'd ASCII; a unicode-alpha rule would need a regexp per word);

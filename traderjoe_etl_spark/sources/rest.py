@@ -111,12 +111,20 @@ def rest_snapshot_source(
     ``_fetch_error`` column (NULL on success). Each partition of ``keys_df``
     is one task with up to ``FETCH_CONCURRENCY`` calls in flight, so
     ``fetcher`` runs on several threads at once and must be thread-safe.
+
+    A payload holding any non-object element fails its whole key with a
+    ``TypeError``, as the reference's per-entry ``.get`` does
+    (main.py:107-123): a partial payload must not pass as ok.
     """
     params = dict(params or {})
     fetch = fetcher or _default_fetcher
 
     def rows(key: dict) -> list:
-        return [r if isinstance(r, dict) else {} for r in fetch(url_template.format(**key), params)]
+        payload = fetch(url_template.format(**key), params)
+        for r in payload:
+            if not isinstance(r, dict):
+                raise TypeError(f"payload element is {type(r).__name__}, not an object")
+        return payload
 
     schema = T.StructType([*keys_df.schema.fields, *row_schema.fields])
     return _fetch_per_key(keys_df, schema, rows)

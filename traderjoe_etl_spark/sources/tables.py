@@ -28,11 +28,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor (they grow
-# sublinearly or are fixed-size in TPC-H-like generators).
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
-
 # Columns stored as parquet TIMESTAMP(NANOS): Spark reads them as nanosecond
 # longs (spark.sql.legacy.parquet.nanosAsLong, set in session.RUNTIME_CONFS)
 # and we convert to TimestampType at microsecond precision — identical to how

@@ -83,37 +83,6 @@ def stream_dedup(
     return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
-def rate_event_source(
-    spark,
-    rows_per_batch: int = 100,
-    n_users: int = 50,
-) -> DataFrame:
-    """Synthetic event stream from the built-in rate source (§2B streaming
-    sources: file + rate) — the load-generator / soak-test twin of the
-    file-backed event stream: deterministic event attributes derived from
-    the monotone tick ``value``, shaped to the ``events`` schema so every
-    downstream job (windows, dedup, joins, stateful) accepts it unchanged.
-    ``rate-micro-batch`` emits exactly ``rows_per_batch`` rows per batch
-    (deterministic for tests); swap format to ``rate`` for wall-clock-paced
-    load."""
-    r = (
-        spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", rows_per_batch)
-        .load()
-    )
-    etype = F.element_at(
-        F.array(F.lit("view"), F.lit("click"), F.lit("purchase")),
-        (F.col("value") % 3 + 1).cast("int"),
-    )
-    return r.select(
-        F.col("value").alias("event_id"),
-        F.col("timestamp").alias("ts"),
-        (F.col("value") % n_users).alias("user_id"),
-        etype.alias("event_type"),
-        (F.pmod(F.col("value") * 37, 1000) / 10.0).alias("value"),
-    )
-
-
 def stream_stream_interval_join(
     left: DataFrame,
     right: DataFrame,

@@ -1,25 +1,24 @@
-"""Custom stateful streaming operators (applyInPandasWithState).
+"""Stateful streaming position tracker (applyInPandasWithState).
 
 The reference keeps no state between hourly cycles — each run re-fetches
 everything (main.py:353-359). A streaming-native engine carries per-key
 state across micro-batches instead; this module implements the canonical
 example for the snapshot domain: a running position tracker per user that
-folds each batch of deposit/withdraw events into (net_value, n_events,
-last_ts) state and emits the updated position — i.e. the incremental form
-of the reference's F1→A3 aggregation.
+folds each batch of deposit/withdraw events into (net_value, n_events)
+state and emits the updated position — i.e. the incremental form of the
+reference's F1→A3 aggregation. ``stream_position_tracker`` in the query
+registry runs it against a batch-SQL oracle.
 
-State is bounded: one fixed-width tuple per key, updated with Arrow
-batches (pandas per group), dropped via GroupStateTimeout when keys go
-idle (configurable).
+State per key is one fixed-width (net, n) tuple, updated with Arrow
+batches (pandas per group). Keys never time out (NoTimeout), so state
+grows with the number of distinct users over the life of the query.
 """
-
 from __future__ import annotations
 
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 OUTPUT_SCHEMA = "user_id long, net_value double, n_events long"
 STATE_SCHEMA = "net double, n long"
@@ -58,49 +57,4 @@ def running_position_tracker(events: DataFrame) -> DataFrame:
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class _PositionProcessor(StatefulProcessor):
-    """transformWithStateInPandas form of the position tracker (the Spark 4
-    successor API to applyInPandasWithState): per-key ValueState holds the
-    same (net, n) tuple; handleInputRows folds each Arrow batch and emits
-    the updated position."""
-
-    def init(self, handle):
-        self._state = handle.getValueState("pos", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timer_values):
-        import numpy as np
-        import pandas as pd
-
-        prior = self._state.get() if self._state.exists() else None
-        net, n = prior if prior is not None else (0.0, 0)
-        for pdf in rows:
-            et = pdf["event_type"].to_numpy()
-            sign = np.where(
-                et == "purchase", 1.0, np.where(et == "error", -1.0, 0.0)
-            )
-            # null-skipping fold — see _update_position
-            net += float(np.nansum(pdf["value"].to_numpy() * sign))
-            n += int(len(pdf))
-        self._state.update((net, n))
-        yield pd.DataFrame({"user_id": [key[0]], "net_value": [net], "n_events": [n]})
-
-    def close(self):
-        pass
-
-
-def running_position_tracker_tws(events: DataFrame) -> DataFrame:
-    """Same semantics as :func:`running_position_tracker`, expressed in the
-    transformWithStateInPandas API (Spark 4's StatefulProcessor): typed
-    per-key ValueState instead of the GroupState tuple, explicit time-mode,
-    and room for timers/TTL that the older API lacks. Both forms are tested
-    against the identical batch fold — the state contract, not the API, is
-    the operator."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_PositionProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
