@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from traderjoe_etl_spark.operators.aggregates import argmax_rows
 from traderjoe_etl_spark.operators.similarity import ivf_assign, ivf_topk
-from traderjoe_etl_spark.operators.skew import salted_group_agg, salted_join
+from traderjoe_etl_spark.operators.skew import salted_join
 from traderjoe_etl_spark.sources.tables import read_table
 
 
@@ -74,14 +74,6 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("weight"), 4).alias("w"))
     )
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_group_agg_collects_everything(spark):
-    rows = [("k", float(i)) for i in range(100)] + [("j", 1.0)]
-    df = spark.createDataFrame(rows, "key string, v double")
-    out = {r.key: r for r in salted_group_agg(df, ["key"], "v", salt_buckets=4).collect()}
-    assert out["k"].n == 100 and sorted(out["k"].values) == sorted(float(i) for i in range(100))
-    assert out["j"].n == 1
 
 
 @pytest.mark.parametrize("seed", [7, 42, 1234])

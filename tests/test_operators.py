@@ -13,8 +13,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from traderjoe_etl_spark.operators.dedup import (
-    exact_dedup,
-    hamming_distance,
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
     simhash_fingerprint,
@@ -23,7 +21,6 @@ from traderjoe_etl_spark.operators.joins import asof_join
 from traderjoe_etl_spark.operators.similarity import (
     cosine_near_dup_pairs,
     cosine_topk_brute,
-    lsh_bucket_topk,
 )
 from traderjoe_etl_spark.sources.tables import read_table
 
@@ -36,14 +33,6 @@ def docs(spark, sf_dir):
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
     return read_table(spark, sf_dir, "embeddings")
-
-
-def test_exact_dedup_keeps_min_id(spark):
-    df = spark.createDataFrame(
-        [(1, "aa"), (2, "aa"), (3, "bb"), (4, "aa")], "id long, text string"
-    )
-    kept = exact_dedup(df, ["text"], "id").collect()
-    assert sorted((r.id, r.text) for r in kept) == [(1, "aa"), (3, "bb")]
 
 
 def test_minhash_candidates_are_real_near_dups(spark, docs):
@@ -113,7 +102,7 @@ def test_simhash_near_dups_have_small_hamming(spark):
     )
     fp = {r.doc_id: r.simhash for r in simhash_fingerprint(df, "doc_id", "text").collect()}
     near = spark.createDataFrame([(fp[1], fp[2]), (fp[1], fp[3])], "a long, b long").select(
-        hamming_distance("a", "b").alias("d")
+        F.bit_count(F.col("a").bitwiseXOR(F.col("b"))).alias("d")
     ).collect()
     d_near, d_far = near[0].d, near[1].d
     assert d_near < d_far
@@ -137,23 +126,11 @@ def test_cosine_topk_brute_is_exact(spark, emb):
     qdf = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     got = [
         r.vec_id
-        for r in cosine_topk_brute(emb.filter(F.col("vec_id") != 0), qdf, k=10).collect()
+        for r in cosine_topk_brute(
+            emb.filter(F.col("vec_id") != 0), qdf, k=10, impl="const"
+        ).collect()
     ]
     assert got == expected
-
-
-def test_lsh_bucket_topk_recall(spark, emb):
-    """LSH top-k is approximate; with 8 planes it must still recover a
-    reasonable fraction of the exact top-10 for most queries, and every
-    result must be a genuine corpus vector with valid cosine."""
-    qdf = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    corpus = emb.filter(F.col("vec_id") != 0)
-    exact = {r.vec_id for r in cosine_topk_brute(corpus, qdf, k=10).collect()}
-    approx = lsh_bucket_topk(corpus, qdf, k=10, dim=64, n_planes=6).collect()
-    assert len(approx) > 0
-    got = {r.vec_id for r in approx}
-    assert got & exact, "bucketed search should recover some exact neighbors"
-    assert all(-1.0001 <= r.cosine <= 1.0001 for r in approx)
 
 
 def test_cosine_near_dup_pairs_symmetric_and_thresholded(spark):
@@ -374,15 +351,25 @@ def test_portable_simhash_matches_pure_python(spark):
         assert got[doc_id] == expected, f"doc {doc_id} fingerprint mismatch"
 
 
+def _py_winnow(text: str, k: int, w: int) -> tuple[int, list[int]]:
+    """(n_grams, sorted distinct window minima) of the documented
+    winnowing construction, with plain Python ints."""
+    from traderjoe_etl_spark.operators.text import ROLLING_BASE, ROLLING_MOD
+
+    hashes = []
+    for i in range(len(text) - k + 1):
+        acc = 0
+        for ch in text[i : i + k]:
+            acc = (acc * ROLLING_BASE + ord(ch)) % ROLLING_MOD
+        hashes.append(acc)
+    return len(hashes), sorted({min(hashes[i : i + w]) for i in range(len(hashes) - w + 1)})
+
+
 def test_rolling_hash_fingerprints_match_pure_python(spark):
     """Third-engine reproducibility for the winnowing fingerprints: the
     Rabin–Karp gram hashes and window minima must be recomputable from the
     documented construction with plain Python ints."""
-    from traderjoe_etl_spark.operators.text import (
-        ROLLING_BASE,
-        ROLLING_MOD,
-        rolling_hash_fingerprints,
-    )
+    from traderjoe_etl_spark.operators.text import rolling_hash_fingerprints
 
     k, w = 8, 4
     rows = [(1, "the quick brown fox jumps over the lazy dog"), (2, "abcdefghijk"), (3, "short")]
@@ -396,28 +383,29 @@ def test_rolling_hash_fingerprints_match_pure_python(spark):
     for doc_id, text in rows:
         if len(text) < k + w - 1:
             continue
-        hashes = []
-        for i in range(len(text) - k + 1):
-            acc = 0
-            for ch in text[i : i + k]:
-                acc = (acc * ROLLING_BASE + ord(ch)) % ROLLING_MOD
-            hashes.append(acc)
-        minima = sorted({min(hashes[i : i + w]) for i in range(len(hashes) - w + 1)})
-        assert got[doc_id] == (len(hashes), minima), f"doc {doc_id} fingerprint mismatch"
+        assert got[doc_id] == _py_winnow(text, k, w), f"doc {doc_id} fingerprint mismatch"
 
 
 def test_rolling_hash_arrow_kernel_matches_hof(spark, sf_dir):
-    """The numpy winnowing kernel must emit integer-identical rows to the
-    JVM HOF form on the real corpus (incl. the short-doc filter)."""
+    """On the real corpus the numpy winnowing kernel must emit exactly the
+    rows of the pure-Python construction: one per document long enough
+    for a full window (the short-doc filter), integer-identical values."""
     from traderjoe_etl_spark.operators.text import rolling_hash_fingerprints
     from traderjoe_etl_spark.sources.tables import read_table
 
-    docs = read_table(spark, sf_dir, "documents")
-    hof = rolling_hash_fingerprints(docs, "doc_id", "text", impl="hof")
-    arrow = rolling_hash_fingerprints(docs, "doc_id", "text", impl="arrow")
-    assert hof.count() == arrow.count() > 0
-    assert hof.subtract(arrow).count() == 0
-    assert arrow.subtract(hof).count() == 0
+    k, w = 8, 4
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    expected = {
+        r.doc_id: _py_winnow(r.text, k, w)
+        for r in docs.collect()
+        if r.text is not None and len(r.text) >= k + w - 1
+    }
+    got = {
+        r["doc_id"]: (r["n_grams"], list(r["fingerprints"]))
+        for r in rolling_hash_fingerprints(docs, "doc_id", "text", k=k, window=w).collect()
+    }
+    assert len(expected) > 0
+    assert got == expected
 
 
 def test_rolling_hash_fingerprints_shift_invariance(spark):
@@ -643,52 +631,73 @@ def test_cosine_near_dup_auto_planes(spark, emb):
     assert all(r.id_a < r.id_b and r.cosine >= 0.35 for r in rows)
 
 
+def _np_cosine_topk(corpus_rows, queries, k, digits=None, exclude_self=False):
+    """Reference top-k outside the program: numpy cosine of every (query,
+    corpus vector) pair, optionally rounded HALF_UP to ``digits`` (Spark's
+    ``round``), ranked by score descending then id. Returns
+    [(query_id, vec_id, cosine)]."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    ids = [r.vec_id for r in corpus_rows]
+    A = np.array([r.embedding for r in corpus_rows], dtype=np.float64)
+    out = []
+    for qid, qv in queries:
+        q = np.asarray(qv, dtype=np.float64)
+        sims = (A @ q) / (np.linalg.norm(A, axis=1) * np.linalg.norm(q))
+        scored = []
+        for vid, c in zip(ids, sims.tolist()):
+            if exclude_self and vid == qid:
+                continue
+            if digits is not None:
+                c = float(Decimal(repr(c)).quantize(Decimal(1).scaleb(-digits), ROUND_HALF_UP))
+            scored.append((c, vid))
+        scored.sort(key=lambda t: (-t[0], t[1]))
+        out += [(qid, vid, c) for c, vid in scored[:k]]
+    return out
+
+
 def test_batch_topk_arrow_equals_hof_under_rounding(spark, emb):
     """The arrow kernel's in-batch pruning must be invisible: for a batch
-    of query vectors with rounded ranking, impl='arrow' and impl='hof'
-    (full scoring, pure JVM) must return IDENTICAL result sets — including
-    self-exclusion and id tie-breaks at the rounding grid. Run at several
-    partition counts so the per-batch pruning boundary actually moves."""
+    of query vectors with rounded ranking, the result must equal a full
+    numpy scoring of every pair — including self-exclusion and id
+    tie-breaks at the rounding grid. Run at several partition counts so
+    the per-batch pruning boundary actually moves."""
     from traderjoe_etl_spark.operators.similarity import cosine_topk_batch
 
     queries = (
         emb.filter(F.col("vec_id") % 37 == 1)
         .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
     )
-
-    def rows(df):
-        return sorted(
-            (r.query_id, r.vec_id, r.cosine)
-            for r in df.select("query_id", "vec_id", "cosine").collect()
+    expected = sorted(
+        _np_cosine_topk(
+            emb.collect(), [(r.query_id, r.qv) for r in queries.collect()],
+            k=5, digits=6, exclude_self=True,
         )
-
-    expected = rows(
-        cosine_topk_batch(emb, queries, k=5, round_digits=6, exclude_self=True, impl="hof")
     )
     assert len(expected) > 0
     for parts in (1, 7):
-        got = rows(
-            cosine_topk_batch(
-                emb.repartition(parts), queries, k=5, round_digits=6,
-                exclude_self=True, impl="arrow",
-            )
+        got = sorted(
+            (r.query_id, r.vec_id, r.cosine)
+            for r in cosine_topk_batch(
+                emb.repartition(parts), queries, k=5, round_digits=6, exclude_self=True,
+            ).select("query_id", "vec_id", "cosine").collect()
         )
-        assert got == expected, f"arrow/hof divergence at {parts} partitions"
+        assert got == expected, f"kernel/numpy divergence at {parts} partitions"
 
 
 def test_brute_topk_arrow_equals_hof_raw(spark, emb):
-    """Single-query brute force: arrow pruning with quantum=0 (raw-score
-    ranking) must match the HOF plan exactly."""
+    """Single-query brute force with raw-score ranking (arrow pruning at
+    quantum=0, const as one codegen scan) must match numpy scoring."""
     qdf = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     corpus = emb.filter(F.col("vec_id") != 0)
-    hof = [(r.vec_id, round(r.cosine, 9)) for r in cosine_topk_brute(corpus, qdf, k=10).collect()]
-    arrow = [
-        (r.vec_id, round(r.cosine, 9))
-        for r in cosine_topk_brute(corpus.repartition(5), qdf, k=10, impl="arrow").collect()
-    ]
-    assert [v for v, _ in hof] == [v for v, _ in arrow]
-    for (_, a), (_, b) in zip(hof, arrow):
-        assert abs(a - b) < 1e-9
+    expected = _np_cosine_topk(corpus.collect(), [(0, qdf.first().qv)], k=10)
+    for impl in ("const", "arrow"):
+        got = cosine_topk_brute(corpus.repartition(5), qdf, k=10, impl=impl).collect()
+        assert [r.vec_id for r in got] == [v for _, v, _ in expected], impl
+        for r, (_, _, c) in zip(got, expected):
+            assert abs(r.cosine - c) < 1e-9, impl
 
 
 def test_text_profile_fingerprint_families_exact_dup_classes(spark):
@@ -792,11 +801,19 @@ def test_pca_fit_offset_heavy_corpus_is_stable(spark):
 
 
 def test_winnowed_span_fingerprints_arrow_equals_hof(spark, sf_dir):
-    """The numpy kernel and the JVM HOF form of the winnowing-selected
-    span fingerprints must emit IDENTICAL integers — the modular scheme
-    defines the values, not the loop shape. Includes short docs (< one
-    winnowing window) via the global-min fallback."""
-    from traderjoe_etl_spark.queries.retrieval import _selected_span_fingerprints
+    """The numpy kernel's winnowing-selected span fingerprints must equal
+    a pure-Python double-Horner fold over the same md5-prefix token
+    values — the modular scheme defines the integers, not the loop shape.
+    Includes short docs (< one winnowing window) via the global-min
+    fallback."""
+    from traderjoe_etl_spark.queries.retrieval import (
+        _H_B1,
+        _H_B2,
+        _H_MOD,
+        _SPAN_K,
+        _selected_span_fingerprints,
+        _token_values,
+    )
     from traderjoe_etl_spark.sources.tables import read_table
 
     docs = read_table(spark, sf_dir, "documents")
@@ -806,13 +823,32 @@ def test_winnowed_span_fingerprints_arrow_equals_hof(spark, sf_dir):
         "doc_id long, text string, source string",
     )
     docs = docs.select("doc_id", "text", "source").unionByName(extra)
+
+    def horner(xs, b):
+        acc = 0
+        for v in xs:
+            acc = (acc * b + v) % _H_MOD
+        return acc
+
+    spans = {}
+    for r in _token_values(docs).collect():
+        x = list(r["__x"])
+        spans[r.doc_id] = [
+            horner(x[i : i + _SPAN_K], _H_B1) * (1 << 31) + horner(x[i : i + _SPAN_K], _H_B2)
+            for i in range(len(x) - _SPAN_K + 1)
+        ]
     for window in (8, 1):  # thinned form and the every-span (window=1) form
-        hof = _selected_span_fingerprints(docs, impl="hof", window=window)
-        arrow = _selected_span_fingerprints(docs, impl="arrow", window=window)
-        assert hof.count() > 0, window
-        assert arrow.filter(F.col("doc_id") == 999_000_001).count() == 1, window
-        assert hof.subtract(arrow).count() == 0, window
-        assert arrow.subtract(hof).count() == 0, window
+        expected = sorted(
+            (did, h)
+            for did, sh in spans.items()
+            for h in {min(sh[i : i + window]) for i in range(max(len(sh) - window + 1, 1))}
+        )
+        got = sorted(
+            (r.doc_id, r.h) for r in _selected_span_fingerprints(docs, window=window).collect()
+        )
+        assert len(expected) > 0, window
+        assert sum(d == 999_000_001 for d, _ in got) == 1, window
+        assert got == expected, window
 
 
 def test_revenue_by_region_paths_agree(spark, sf_dir):

@@ -1,0 +1,99 @@
+"""Every package definition is reached from a production root, or is on
+an allow-list with its reason.
+
+A name scan over the ``ast`` of the package (no Spark). Roots: the
+``@query`` functions, ``@atexit.register`` callbacks and module-level code
+of every package module, plus ``__main__.py``, ``__spark_entry__.py``,
+``bench.py``, the non-test ``perfbench/*.py`` and ``tools/*.py``. Tests are
+not roots. From the roots the scan follows every name a reached
+definition mentions, so it over-reaches on shared names: it can miss dead
+code but never reports code that a root calls by name.
+"""
+
+from __future__ import annotations
+
+import ast
+import glob
+import os
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "traderjoe_etl_spark"
+
+# Unreached on purpose, keyed by module (every definition in it) or by
+# module::name.
+ALLOWED = {
+    f"{PKG}/operators/layout.py": "ROADMAP item 4: compaction of closed snapshot days",
+    f"{PKG}/sinks.py::clustered_write": "ROADMAP item 4: range-clustered snapshot writes",
+    f"{PKG}/operators/observability.py": "ROADMAP item 5: observe() gates on the append",
+    f"{PKG}/sources/rpc.py::default_web3_caller": "ROADMAP item 1: the production RPC client",
+    f"{PKG}/plans/audit.py::plan_facts": "plan helper of tests/test_plan_shapes.py",
+    f"{PKG}/plans/audit.py::PlanFacts": "plan helper of tests/test_plan_shapes.py",
+}
+
+
+def _names(node: ast.AST) -> set[str]:
+    return {
+        n.id if isinstance(n, ast.Name)
+        else n.attr if isinstance(n, ast.Attribute)
+        else n.name.rsplit(".", 1)[-1]
+        for n in ast.walk(node)
+        if isinstance(n, (ast.Name, ast.Attribute, ast.alias))
+    }
+
+
+def _is_root_decorator(d: ast.expr) -> bool:
+    target = d.func if isinstance(d, ast.Call) else d
+    return ast.unparse(target) in ("query", "atexit.register")
+
+
+def _parse(rel: str) -> ast.Module:
+    with open(os.path.join(REPO, rel)) as f:
+        return ast.parse(f.read())
+
+
+def unreached() -> set[str]:
+    """``module::name`` of every package definition no root reaches."""
+    pkg = sorted(
+        os.path.relpath(p, REPO)
+        for p in glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True)
+    )
+    roots = [f"{PKG}/__main__.py", "__spark_entry__.py", "bench.py"] + sorted(
+        os.path.relpath(p, REPO)
+        for p in glob.glob(os.path.join(REPO, "perfbench", "*.py"))
+        + glob.glob(os.path.join(REPO, "tools", "*.py"))
+        if not os.path.basename(p).startswith("test_")
+    )
+    defs: dict[tuple[str, str], set[str]] = {}
+    seeds: set[str] = set()
+    for p in pkg:
+        for node in _parse(p).body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                defs[(p, node.name)] = _names(node)
+                if any(_is_root_decorator(d) for d in node.decorator_list):
+                    seeds |= {node.name} | _names(node)
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                seeds |= _names(node)
+    for p in roots:
+        seeds |= _names(_parse(p))
+    reached: set[str] = set()
+    todo = set(seeds)
+    while todo:
+        n = todo.pop()
+        reached.add(n)
+        for (_, d), refs in defs.items():
+            if d == n:
+                todo |= refs - reached
+    return {
+        f"{p}::{d}" for p, d in defs if d not in reached and not d.startswith("__")
+    }
+
+
+def test_every_definition_is_reached_or_allowed():
+    found = unreached()
+    allowed = {
+        key for key in found
+        if key in ALLOWED or key.split("::", 1)[0] in ALLOWED
+    }
+    assert found - allowed == set(), "unreached from every production root"
+    stale = {k for k in ALLOWED if not any(f == k or f.startswith(k + "::") for f in found)}
+    assert stale == set(), "allow-listed but reached (or gone): drop the entry"

@@ -1,12 +1,10 @@
-"""Source-adapter tests: schema-pinned json/csv reads, REST fetcher
-executor path, RPC fetcher with decimal fidelity."""
+"""Source-adapter tests: REST fetcher executor path, RPC fetcher with
+decimal fidelity, parquet schema evolution."""
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import tempfile
 import threading
 import time
 from decimal import Decimal
@@ -19,37 +17,6 @@ from pyspark.sql import types as T
 
 from traderjoe_etl_spark.sources.rest import FETCH_CONCURRENCY, quarantine, rest_snapshot_source
 from traderjoe_etl_spark.sources.rpc import rpc_bins_source
-from traderjoe_etl_spark.sources.tables import read_with_schema
-
-SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("score", T.DoubleType()),
-    ]
-)
-
-
-def test_read_json_permissive_missing_fields(spark):
-    d = tempfile.mkdtemp()
-    p = os.path.join(d, "rows.json")
-    with open(p, "w") as f:
-        f.write(json.dumps({"id": 1, "name": "a", "score": 1.5}) + "\n")
-        f.write(json.dumps({"id": 2}) + "\n")  # missing fields → NULLs
-    rows = {r.id: r for r in read_with_schema(spark, p, "json", SCHEMA).collect()}
-    assert rows[1].score == 1.5
-    assert rows[2].name is None and rows[2].score is None
-
-
-def test_read_csv_with_header_and_bad_cell(spark):
-    d = tempfile.mkdtemp()
-    p = os.path.join(d, "rows.csv")
-    with open(p, "w") as f:
-        f.write("id,name,score\n1,a,1.5\n2,b,not_a_number\n")
-    rows = {r.id: r for r in read_with_schema(spark, p, "csv", SCHEMA).collect()}
-    assert rows[1].score == 1.5
-    assert rows[2].score is None  # PERMISSIVE: bad cell → NULL
-
 
 def _rest_source(spark, payload):
     def fetch(url, params):

@@ -1,14 +1,10 @@
-from .casts import lenient_cast, lenient_cast_cols
-from .projection import flatten_struct, project_rename
-from .scrub import inf_to_null, nan_to_null, safe_div, scrub_nonfinite
+from .casts import lenient_cast
+from .projection import project_rename
+from .scrub import safe_div, scrub_nonfinite
 
 __all__ = [
     "lenient_cast",
-    "lenient_cast_cols",
     "project_rename",
-    "flatten_struct",
-    "inf_to_null",
-    "nan_to_null",
     "scrub_nonfinite",
     "safe_div",
 ]

@@ -11,9 +11,7 @@ constant-folds / prunes around it.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -26,22 +24,4 @@ def lenient_cast(col: Column | str, to: str = "double", default: float | None = 
     out = c.try_cast(to)
     if default is not None:
         out = F.coalesce(out, F.lit(default).cast(to))
-    return out
-
-
-def lenient_cast_cols(
-    df: DataFrame,
-    cols: Iterable[str],
-    to: str = "double",
-    default: float | None = None,
-) -> DataFrame:
-    """Apply :func:`lenient_cast` in-place to each named column (if present).
-
-    Mirrors the reference's batch coercion loop (main.py:185-196) including
-    its tolerance for absent columns.
-    """
-    out = df
-    for name in cols:
-        if name in out.columns:
-            out = out.withColumn(name, lenient_cast(name, to=to, default=default))
     return out

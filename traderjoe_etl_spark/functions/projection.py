@@ -1,4 +1,4 @@
-"""Existence-tolerant projection + struct flattening.
+"""Existence-tolerant projection and renaming.
 
 The reference's schema system is dynamic: it keeps whichever of a fixed set
 of columns the API happened to return, renaming as it goes
@@ -16,8 +16,6 @@ from __future__ import annotations
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def project_rename(df: DataFrame, mapping: Mapping[str, str], tolerate_missing: bool = True) -> DataFrame:
@@ -45,18 +43,3 @@ def reorder_existing(df: DataFrame, desired_order: Sequence[str]) -> DataFrame:
     """Final fixed-order projection keeping only existing columns
     (reference main.py:342-343)."""
     return df.select(*[c for c in desired_order if c in df.columns])
-
-
-def flatten_struct(df: DataFrame, sep: str = "_") -> DataFrame:
-    """Flatten all top-level StructType columns to ``parent{sep}child``
-    columns — the engine's ``pd.json_normalize`` (reference main.py:52, 91;
-    the reference uses ``.`` as separator, which is hostile to SQL
-    identifiers, hence ``_`` by default)."""
-    cols = []
-    for field in df.schema.fields:
-        if isinstance(field.dataType, T.StructType):
-            for sub in field.dataType.fields:
-                cols.append(F.col(f"{field.name}.{sub.name}").alias(f"{field.name}{sep}{sub.name}"))
-        else:
-            cols.append(F.col(field.name))
-    return df.select(*cols)

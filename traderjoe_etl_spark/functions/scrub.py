@@ -19,18 +19,6 @@ _POS_INF = float("inf")
 _NEG_INF = float("-inf")
 
 
-def inf_to_null(col: Column | str) -> Column:
-    """±Infinity → NULL (reference ``.replace([inf, -inf], nan)``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when((c == F.lit(_POS_INF)) | (c == F.lit(_NEG_INF)), F.lit(None)).otherwise(c)
-
-
-def nan_to_null(col: Column | str) -> Column:
-    """NaN → NULL."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.isnan(c), F.lit(None)).otherwise(c)
-
-
 def scrub_nonfinite(col: Column | str) -> Column:
     """NaN and ±Infinity → NULL in one pass."""
     c = F.col(col) if isinstance(col, str) else col

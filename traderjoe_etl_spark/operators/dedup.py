@@ -1,10 +1,8 @@
 """Deduplication operators for large-scale corpus curation
 (SURVEY.md §2B ◆ — the north-star LLM-data-pipeline mandate).
 
-Four tiers, all shuffle-disciplined:
+Three tiers, all shuffle-disciplined:
 
-- exact:   group on a 128-bit content hash (shuffle keys are 16 bytes, not
-           documents);
 - minhash: shingle → minhash signature → LSH band buckets → within-bucket
            pair join (candidate pairs only — never an all-pairs product);
 - simhash: 64-bit sign-of-weighted-sum fingerprint; near-dups share
@@ -21,49 +19,21 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFrame:
-    """Keep one representative (min id) per distinct content.
-
-    Groups on ``md5`` of the content instead of the content itself so the
-    shuffle moves 16-byte keys; the surviving representative rows are
-    re-attached by id (semi-join back). At 100 TB this is the difference
-    between shuffling the corpus and shuffling its fingerprints.
-    """
-    # coalesce each column to a sentinel BEFORE concat: concat_ws drops
-    # NULLs, so ('a', NULL) and (NULL, 'a') would otherwise collide.
-    h = F.md5(
-        F.concat_ws(
-            "\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("\x00∅")) for c in content_cols]
-        )
-    )
-    winners = (
-        df.select(F.col(id_col), h.alias("__h"))
-        .groupBy("__h")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
-    )
-    return df.join(winners, id_col, "left_semi")
+from .text import tokens
 
 
-def _tokens(text_col: str | Column) -> Column:
-    """Lowercased whitespace tokens. ALWAYS project this into its own
-    column before building shingles from it: the shingle expression
-    references the token array three times (size guard, transform source,
-    short-doc fallback), and a Generate node does NOT subexpression-
-    eliminate — inlining the split re-tokenizes every row 3× (measured
-    1.7× slower on the sf1 corpus)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.split(F.lower(F.trim(c)), r"\s+")
-
-
-def _shingles_from_tokens(tokens: Column, k: int = 3) -> Column:
-    """k-word shingles from a pre-projected token-array column."""
-    n = F.size(tokens)
+def _shingles_from_tokens(toks: Column, k: int = 3) -> Column:
+    """k-word shingles from a pre-projected token-array column. ALWAYS
+    project ``tokens(text)`` into its own column before calling this: the
+    shingle expression references the token array three times (size
+    guard, transform source, short-doc fallback), and a Generate node does
+    NOT subexpression-eliminate — inlining the split re-tokenizes every
+    row 3× (measured 1.7× slower on the sf1 corpus)."""
+    n = F.size(toks)
     return F.when(n >= k, F.transform(
         F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.concat_ws(" ", F.slice(tokens, i, k)),
-    )).otherwise(F.array(F.concat_ws(" ", tokens)))
+        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+    )).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
 MERSENNE31 = (1 << 31) - 1
@@ -147,7 +117,7 @@ def minhash_signatures(
         # token hashes projected ONCE (referenced by the guard, the window
         # transform, and the short-doc fallback — CollapseProject keeps a
         # non-cheap alias referenced >1x as a single evaluation)
-        th = df.select(F.col(id_col), _tokens(text_col).alias("__w")).select(
+        th = df.select(F.col(id_col), tokens(text_col).alias("__w")).select(
             F.col(id_col),
             F.transform("__w", lambda t: F.xxhash64(t)).alias("__th"),
         )
@@ -178,7 +148,7 @@ def minhash_signatures(
     else:
         base = F.expr("CAST(conv(substring(md5(__sh), 1, 8), 16, 10) AS BIGINT)")
     exploded = (
-        df.select(F.col(id_col), _tokens(text_col).alias("__w"))
+        df.select(F.col(id_col), tokens(text_col).alias("__w"))
         .select(
             F.col(id_col),
             F.explode(_shingles_from_tokens(F.col("__w"), k=shingle_k)).alias("__sh"),
@@ -361,7 +331,7 @@ def simhash_fingerprint(
     """
     toks = df.select(
         F.col(id_col),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("__tok"),
+        F.explode(tokens(text_col)).alias("__tok"),
     )
     # one F.expr per vote (vs ~6 py4j calls per composed Column: the wide
     # generated expression is built as SQL strings, ~5× faster plan build)
@@ -413,13 +383,6 @@ def simhash_hex_chunks(fp: Column | str, n: int = 4) -> list[Column]:
     (chunk c = hex chars 4c+1..4c+4)."""
     c = F.col(fp) if isinstance(fp, str) else fp
     return [F.conv(F.substring(c, 4 * i + 1, 4), 16, 10).cast("int") for i in range(n)]
-
-
-def hamming_distance(a: Column | str, b: Column | str) -> Column:
-    """Hamming distance between two 64-bit fingerprints (bit_count of XOR)."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    return F.bit_count(ca.bitwiseXOR(cb))
 
 
 def ngram_jaccard_pairs(
@@ -475,8 +438,8 @@ def ngram_jaccard_pairs(
         docs[id_col] == cand_ids["__id"],
         "left_semi",
     )
-    # token hashes projected once (see _tokens / minhash chained family)
-    th = pruned.select(F.col(id_col).alias("__id"), _tokens(text_col).alias("__w")).select(
+    # token hashes projected once (see _shingles_from_tokens / minhash chained family)
+    th = pruned.select(F.col(id_col).alias("__id"), tokens(text_col).alias("__w")).select(
         "__id", F.transform("__w", lambda t: F.xxhash64(t)).alias("__th")
     )
     n = F.size(F.col("__th"))

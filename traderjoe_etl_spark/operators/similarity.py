@@ -1,21 +1,21 @@
 """Similarity search over embedding columns (SURVEY.md §2B ◆).
 
-- ``cosine_topk_brute`` — exact baseline: broadcast the query vector(s),
-  higher-order dot product, TakeOrderedAndProject. Correct at any scale
-  where a full scan is acceptable (it's one pass, no shuffle).
-- ``lsh_bucket_topk`` — the scale path: random-hyperplane LSH buckets
-  (sign bits of dot products with broadcast random planes); candidates =
-  same-bucket rows only, then exact cosine within candidates. Turns the
-  all-pairs scan into a bucket-local one.
+- ``cosine_topk_brute`` — exact single-query top-k: one shuffle-free
+  scan into TakeOrderedAndProject. Correct at any scale where a full
+  scan is acceptable.
+- ``cosine_topk_batch`` — exact per-query top-k for a batch of queries.
+- ``ivf_assign`` / ``ivf_topk`` — the scale path: an IVF coarse
+  quantizer, then exact cosine within the probed clusters only.
+- ``cosine_near_dup_pairs`` — LSH-bucketed near-duplicate pairs.
 
-Vector math comes in two interchangeable forms: ``F.zip_with`` /
-``F.aggregate`` higher-order functions (pure JVM — right for single-query
-scans and Arrow-less environments) and ``mapInArrow`` numpy-GEMM kernels
-(right for batch scoring, assignment, and large corpora: Spark HOFs are
-interpreted per element, so dense dim×k math belongs in one vectorized
+Dense vector math runs in ``mapInArrow`` numpy-GEMM kernels: Spark HOFs
+are interpreted per element, so dim×k math belongs in one vectorized
 matmul per Arrow batch, with zero-copy list buffers and no per-row Python
-objects). Both compute dot-then-normalize in the same operation order, so
-they agree with each other and with the SQL oracles.
+objects. ``F.zip_with`` / ``F.aggregate`` expressions remain where one
+side is a constant vector (the ``const`` single-query scan, the LSH plane
+bank) and in the bucket self-join of ``cosine_near_dup_pairs``. Kernels
+and expressions compute dot-then-normalize in the same operation order,
+so they agree with each other and with the SQL oracles.
 """
 
 from __future__ import annotations
@@ -61,10 +61,10 @@ def cosine_topk_brute(
     corpus: DataFrame,
     query: DataFrame,
     k: int,
+    impl: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_vec_col: str = "qv",
-    impl: str = "hof",
     cache_key: str | None = None,
     round_digits: int | None = None,
 ) -> DataFrame:
@@ -73,32 +73,25 @@ def cosine_topk_brute(
     cross-engine comparisons share one grid; the emitted ``cosine`` stays
     raw (callers round for display).
 
-    Three physical strategies, same result:
+    The query vector is collected once (cached via ``cache_key``); two
+    physical strategies, same result, chosen by the caller from the
+    corpus size (the ``cosine_topk`` query gates on table bytes):
 
-    - ``impl="const"`` — the query vector is collected (cached via
-      ``cache_key``) and INLINED as a constant-array literal, so scoring
-      is one pure-JVM codegen scan into TakeOrderedAndProject: a single
-      job with no broadcast subquery and no Python workers. The fastest
-      small-corpus form (measured sf1: 0.060 s/execution vs 0.122 hof —
-      the hof form pays a second job dispatching the broadcast subquery —
-      vs 0.15 arrow, which pays a Python-worker round trip per task).
-    - ``impl="arrow"`` — numpy GEMM kernel with in-kernel top-k pruning;
-      wins once interpreted-HOF cost dominates dispatch (big corpora,
-      many queries).
-    - ``impl="hof"`` — broadcast-join zip_with/aggregate; the portable
-      fallback (works with a multi-row query relation, no collect).
+    - ``impl="const"`` — the vector is INLINED as a constant-array
+      literal, so scoring is one pure-JVM codegen scan into
+      TakeOrderedAndProject: a single job with no Python workers. The
+      fastest small-corpus form (measured sf1: 0.060 s/execution vs 0.15
+      arrow, which pays a Python-worker round trip per task).
+    - ``impl="arrow"`` — numpy matvec per Arrow batch with in-kernel
+      top-k pruning; wins once interpreted-HOF cost dominates dispatch
+      (big corpora).
 
     The scan stays shuffle-free either way; orderBy + limit plans
     TakeOrderedAndProject (per-partition heaps), deterministic tie-break
-    by id. Default is the pure-JVM zip_with/aggregate form: for ONE query
-    vector the interpreted-HOF cost is dim ops/row and the Python-worker
-    round trip doesn't pay for itself below ~10^6-row corpora (measured:
-    arrow 0.67 vs hof 0.41 s at sf0.1; 0.82 vs 0.96 at sf10).
-    ``impl="arrow"`` scores each Arrow batch with one numpy matvec — use
-    it for big corpora or many queries (cosine_topk_batch defaults to it)."""
+    by id."""
+    q = query.select(F.lit(-1).cast("long").alias("__qid"), F.col(query_vec_col))
+    q_ids, Q = _collect_query_bank(q, "__qid", query_vec_col, cache_key=cache_key)
     if impl == "const":
-        q = query.select(F.lit(-1).cast("long").alias("__qid"), F.col(query_vec_col))
-        q_ids, Q = _collect_query_bank(q, "__qid", query_vec_col, cache_key=cache_key)
         if len(q_ids) != 1:
             raise ValueError(f"impl='const' needs exactly one query row, got {len(q_ids)}")
         qv = [float(x) for x in Q[0]]
@@ -109,18 +102,12 @@ def cosine_topk_brute(
             (dot / F.nullif(_l2(F.col(vec_col)) * F.lit(qn), F.lit(0.0))).alias("cosine"),
         )
     elif impl == "arrow":
-        q = query.select(F.lit(-1).cast("long").alias("__qid"), F.col(query_vec_col))
-        q_ids, Q = _collect_query_bank(q, "__qid", query_vec_col, cache_key=cache_key)
         scored = _topk_scores_arrow(
             corpus, q_ids, Q, k, id_col, vec_col, "__qid",
             quantum=(10.0 ** -round_digits) if round_digits is not None else 0.0,
         ).drop("__qid")
     else:
-        joined = corpus.crossJoin(F.broadcast(query))
-        scored = joined.select(
-            F.col(id_col),
-            cosine(F.col(vec_col), F.col(query_vec_col)).alias("cosine"),
-        )
+        raise ValueError(f"unknown impl {impl!r}")
     rank = (
         F.round("cosine", round_digits) if round_digits is not None else F.col("cosine")
     )
@@ -137,14 +124,13 @@ def cosine_topk_batch(
     query_vec_col: str = "qv",
     round_digits: int | None = None,
     exclude_self: bool = False,
-    impl: str = "arrow",
     cache_key: str | None = None,
 ) -> DataFrame:
     """Exact top-k per query for a BATCH of query vectors (the retrieval /
     dedup-against-a-set shape): score corpus × Q in one shuffle-free scan,
     per-query top-k via row_number.
 
-    ``impl="arrow"`` (default): the query bank is collected (it is small
+    The query bank is collected (it is small
     by contract — a broadcastable set), and a ``mapInArrow`` kernel scores
     each Arrow batch of corpus vectors against ALL queries with one numpy
     GEMM and prunes to the per-batch top-k inside the kernel — this is
@@ -154,8 +140,7 @@ def cosine_topk_batch(
     the corpus×Q product out of the exchange entirely (see
     ``_topk_scores_arrow`` for why the pruning is exact under rounded
     ranking; 20k×64×25 at sf1 measured 11.5 s as a full-scoring pandas
-    UDF vs 0.7 s with the pruning kernel). ``impl="hof"`` keeps
-    everything JVM-side for environments without Arrow.
+    UDF vs 0.7 s with the pruning kernel).
 
     Spark plans the rank≤k filter as WindowGroupLimit (partial → final):
     each map task keeps a k-heap per query BEFORE the exchange, so the
@@ -165,32 +150,21 @@ def cosine_topk_batch(
     deterministic at the rounding grid."""
     from pyspark.sql import Window
 
-    if impl == "arrow":
-        q_ids, Q = _collect_query_bank(
-            queries, query_id_col, query_vec_col, cache_key=cache_key
-        )
-        scored = _topk_scores_arrow(
-            corpus,
-            q_ids,
-            Q,
-            k,
-            id_col,
-            vec_col,
-            query_id_col,
-            quantum=(10.0 ** -round_digits) if round_digits is not None else 0.0,
-            exclude_self=exclude_self,
-        )
-    else:
-        j = corpus.crossJoin(F.broadcast(queries))
-        scored = j.select(
-            F.col(query_id_col),
-            F.col(id_col),
-            cosine(F.col(vec_col), F.col(query_vec_col)).alias("cosine"),
-        )
+    q_ids, Q = _collect_query_bank(queries, query_id_col, query_vec_col, cache_key=cache_key)
+    scored = _topk_scores_arrow(
+        corpus,
+        q_ids,
+        Q,
+        k,
+        id_col,
+        vec_col,
+        query_id_col,
+        quantum=(10.0 ** -round_digits) if round_digits is not None else 0.0,
+        exclude_self=exclude_self,
+    )
     if exclude_self:
-        # drop the trivial self-match BEFORE ranking, else it occupies a
-        # top-k slot for every query that exists in the corpus (the arrow
-        # kernel already dropped them; the filter is then a no-op)
+        # a no-op after the kernel, which already drops self-matches before
+        # ranking; it keeps the exclusion visible in the plan
         scored = scored.filter(F.col(id_col) != F.col(query_id_col))
     if round_digits is not None:
         scored = scored.withColumn("cosine", F.round("cosine", round_digits))
@@ -273,7 +247,7 @@ def _topk_scores_arrow(
     (boundary ties are kept inclusively either way). Arrow list buffers
     feed numpy zero-copy — no Python objects per row in either direction.
     NaN cosines (zero-norm vectors) are emitted as NULL and rank last,
-    matching the HOF form's nullif contract."""
+    matching the nullif contract of :func:`cosine` and the SQL oracles."""
     import numpy as np
     import pyarrow as pa
 
@@ -349,74 +323,21 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     return planes
 
 
-def lsh_bucket_key(vec_col: Column | str, planes: list[list[float]]) -> Column:
-    """Bucket id = sign-bit string of dot products with each plane.
-
-    For a named column the plane bank is generated as ONE SQL expression
-    (n_planes × dim literals via composed Columns would dominate plan-build
-    time); a Column argument falls back to the composed form."""
-    if isinstance(vec_col, str):
-        bits_sql = ", ".join(
-            f"CASE WHEN {_dot_const_sql(f'`{vec_col}`', plane)} >= 0 THEN '1' ELSE '0' END"
-            for plane in planes
-        )
-        return F.expr(f"concat({bits_sql})")
-    bits = [
-        F.when(_dot(vec_col, F.array(*[F.lit(x) for x in plane])) >= 0, F.lit("1")).otherwise(
-            F.lit("0")
-        )
+def lsh_bucket_key(vec_col: str, planes: list[list[float]]) -> Column:
+    """Bucket id = sign-bit string of dot products with each plane, built
+    as ONE SQL expression (n_planes × dim literals via composed Columns
+    would dominate plan-build time)."""
+    bits_sql = ", ".join(
+        f"CASE WHEN {_dot_const_sql(f'`{vec_col}`', plane)} >= 0 THEN '1' ELSE '0' END"
         for plane in planes
-    ]
-    return F.concat(*bits)
-
-
-def lsh_bucket_topk(
-    corpus: DataFrame,
-    query: DataFrame,
-    k: int,
-    dim: int,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "qv",
-    seed: int = 42,
-    n_probe_bits: int = 0,
-) -> DataFrame:
-    """Approximate top-k: only corpus rows in the query's LSH bucket(s) are
-    scored. ``n_probe_bits > 0`` enables multi-probe: also search every
-    bucket within Hamming distance 1 on the first ``n_probe_bits`` plane
-    bits (near-boundary neighbors land there) — recall rises at the cost of
-    probing ``1 + n_probe_bits`` buckets. Candidate set stays
-    ~(1+probes)·n/2^planes of the corpus."""
-    planes = random_hyperplanes(dim, n_planes, seed=seed)
-    c = corpus.withColumn("__bucket", lsh_bucket_key(vec_col, planes))
-    base = query.withColumn("__bucket", lsh_bucket_key(query_vec_col, planes))
-    if n_probe_bits > 0:
-        # expand the query row into its probe buckets (flip one bit each)
-        flips = [F.col("__bucket")]
-        for i in range(min(n_probe_bits, n_planes)):
-            flipped_bit = F.when(F.substring("__bucket", i + 1, 1) == "1", "0").otherwise("1")
-            flips.append(
-                F.concat(
-                    F.substring("__bucket", 1, i),
-                    flipped_bit,
-                    F.substring("__bucket", i + 2, n_planes - i - 1),
-                )
-            )
-        base = base.withColumn("__bucket", F.explode(F.array(*flips)))
-    q = base
-    joined = c.join(F.broadcast(q), "__bucket")
-    scored = joined.select(
-        F.col(id_col),
-        cosine(F.col(vec_col), F.col(query_vec_col)).alias("cosine"),
-    ).dropDuplicates([id_col])  # multi-probe can hit a row via several buckets
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
+    )
+    return F.expr(f"concat({bits_sql})")
 
 
 def _assign_arrow(emb: DataFrame, cents, vec_col: str, unit) -> DataFrame:
     """Nearest-centroid assignment as one numpy GEMM per Arrow batch:
-    ``A @ C.T`` then a ties-to-highest-cluster argmax — the vectorized
-    form of the HOF expression bank (same unit-centroid dot ranking).
+    ``A @ C.T`` against unit centroids (argmax dot == argmax cosine, the
+    row norm being constant per row), ties to the highest cluster id.
     Input columns pass through the kernel zero-copy; only the int32
     cluster column is appended."""
     import numpy as np
@@ -439,8 +360,7 @@ def _assign_arrow(emb: DataFrame, cents, vec_col: str, unit) -> DataFrame:
                 .reshape(n, -1)
             )
             S = A @ C.T
-            # last argmax = highest cluster id on ties, matching the HOF
-            # form's array_max(struct(sim, cluster)) semantics
+            # last argmax = highest cluster id on ties
             idx = (S.shape[1] - 1) - np.argmax(S[:, ::-1], axis=1)
             yield pa.RecordBatch.from_arrays(
                 list(b.columns) + [pa.array(cluster_ids[idx])],
@@ -512,7 +432,6 @@ def ivf_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     lloyd_iters: int = 1,
-    impl: str = "arrow",
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: deterministic seeding (first ``n_centroids``
     rows by id) + ``lloyd_iters`` k-means refinement passes, then assign
@@ -521,12 +440,12 @@ def ivf_assign(
     Returns (assigned, centroids): ``assigned`` = corpus + ``cluster``
     column; ``centroids`` = (cluster, centroid array). Centroids live on
     the driver between iterations (n_centroids × dim floats — kilobytes)
-    and re-enter the plan as a broadcast join; the corpus is never
-    collected.
+    and re-enter the plan as constants of the assignment kernel; the
+    corpus is never collected.
     """
     centroids_df = emb.orderBy(id_col).limit(n_centroids).select(F.col(vec_col).alias("centroid"))
     # stable small collect → cluster id = enumeration order of the
-    # id-ordered seed rows; re-entered as literal expressions each iteration
+    # id-ordered seed rows
     cents = [(i, list(r.centroid)) for i, r in enumerate(centroids_df.collect())]
     spark = emb.sparkSession
 
@@ -534,25 +453,13 @@ def ivf_assign(
         n = math.sqrt(sum(float(x) * float(x) for x in v)) or 1.0
         return [float(x) / n for x in v]
 
-    def assign(cent_rows) -> DataFrame:
-        # map-only nearest-centroid: argmax cosine == argmax dot against
-        # UNIT centroids (row norm is constant per row) — no crossJoin, no
-        # per-id window shuffle; the corpus scan stays pipeline-parallel
-        # at any scale. Default impl is the mapInArrow GEMM kernel
-        # (_assign_arrow): Spark HOFs are interpreted per element, so the
-        # k×dim expression bank costs k·dim interpreted ops/row vs one
-        # numpy matmul per batch (the registered sf1 query dropped
-        # 7.7→0.9 s with the arrow assign+score kernels). impl="hof" keeps the pure-JVM expression
-        # form: ties resolve to the highest cluster id in BOTH forms.
-        if impl == "arrow":
-            return _assign_arrow(emb, cent_rows, vec_col, _unit)
-        terms = ", ".join(
-            f"struct({_dot_const_sql(f'`{vec_col}`', _unit(v))} AS sim, {i} AS cluster)"
-            for i, v in cent_rows
-        )
-        return emb.withColumn("cluster", F.expr(f"array_max(array({terms})).cluster"))
-
-    assigned = assign(cents)
+    # map-only nearest-centroid (the _assign_arrow GEMM kernel): no
+    # crossJoin, no per-id window shuffle; the corpus scan stays
+    # pipeline-parallel at any scale. A k×dim HOF expression bank would
+    # cost k·dim interpreted ops/row against one numpy matmul per batch
+    # (the registered sf1 query dropped 7.7→0.9 s with the arrow
+    # assign+score kernels).
+    assigned = _assign_arrow(emb, cents, vec_col, _unit)
     n_dim = len(cents[0][1]) if cents else 0
     for _ in range(lloyd_iters):
         # centroid update = per-cluster element-wise mean: one groupBy with
@@ -570,7 +477,7 @@ def ivf_assign(
             (r["cluster"], [r[f"__s{i}"] / r["__n"] for i in range(n_dim)])
             for r in sums.collect()
         ]
-        assigned = assign(cents)
+        assigned = _assign_arrow(emb, cents, vec_col, _unit)
     cent_final = spark.createDataFrame(cents, "cluster int, centroid array<float>")
     return assigned, cent_final
 
@@ -584,14 +491,11 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_vec_col: str = "qv",
-    impl: str = "arrow",
 ) -> DataFrame:
     """IVF search for a single query vector: rank centroids against the
     query, probe the ``n_probe`` nearest clusters, exact cosine within
-    them (``impl="arrow"`` scores candidates with the mapInArrow GEMM
-    kernel; ``"hof"`` keeps the JVM higher-order form). Scan cost ≈
-    n_probe/n_centroids of the corpus — the 100-TB ANN path next to the
-    LSH variant.
+    them (scored by the mapInArrow GEMM kernel). Scan cost ≈
+    n_probe/n_centroids of the corpus — the 100-TB ANN path.
 
     Centroid ranking happens on the DRIVER: the coarse quantizer is
     n_centroids × dim floats (kilobytes) by construction, so ranking it is
@@ -600,6 +504,8 @@ def ivf_topk(
     round-trips to save microseconds. The resulting probe set enters the
     plan as an ``isin`` filter pushed into the corpus scan — partition-
     prunable when the index is stored partitioned by ``cluster``."""
+    import numpy as np
+
     cent_rows = centroids.collect()
     qv = [float(x) for x in query.select(query_vec_col).first()[0]]
 
@@ -614,21 +520,15 @@ def ivf_topk(
     )
     probe_ids = [c for c, _ in ranked[:n_probe]]
     cand = corpus_assigned.filter(F.col("cluster").isin(probe_ids))
-    if impl == "arrow":
-        import numpy as np
-
-        scored = _topk_scores_arrow(
-            cand,
-            np.array([-1], dtype=np.int64),
-            np.array([qv], dtype=np.float64),
-            k,
-            id_col,
-            vec_col,
-            "__qid",
-        ).drop("__qid")
-    else:
-        qlit = F.array(*[F.lit(x) for x in qv])
-        scored = cand.select(F.col(id_col), cosine(F.col(vec_col), qlit).alias("cosine"))
+    scored = _topk_scores_arrow(
+        cand,
+        np.array([-1], dtype=np.int64),
+        np.array([qv], dtype=np.float64),
+        k,
+        id_col,
+        vec_col,
+        "__qid",
+    ).drop("__qid")
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
 
 
@@ -655,7 +555,7 @@ def cosine_near_dup_pairs(
     next to the pair join it prevents). More planes lower recall for
     borderline pairs (single-bank sign-LSH AND-amplifies); for high-recall
     retrieval at scale use the banded MinHash family (text) or the IVF
-    path (ivf_assign/ivf_search) instead — this operator targets the
+    path (ivf_assign/ivf_topk) instead — this operator targets the
     near-DUPLICATE regime where cosines are high and bucket collisions
     are likely.
 
@@ -897,7 +797,7 @@ def pca_fit(
     and the dim×dim covariance eigendecomposes THERE — for dim=64 that is
     microseconds, and spinning up a cluster job to avoid a 64×64 ``eigh``
     would cost three scheduling round-trips to save nothing (the same
-    driver-side-small argument as ``ivf_search`` centroid ranking). At
+    driver-side-small argument as ``ivf_topk`` centroid ranking). At
     100 TB the scan is the cost and it is one embarrassingly-parallel
     pass with map-side reduction to constants.
 

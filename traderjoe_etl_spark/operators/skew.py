@@ -1,24 +1,16 @@
-"""Skew-mitigation operators.
+"""Skew mitigation: an explicitly salted join.
 
 AQE's skew-join splitting (`spark.sql.adaptive.skewJoin.enabled`, on by
-default in session.RUNTIME_CONFS) handles most skew at runtime. These
-explicit operators cover the cases AQE can't:
-
-- ``salted_join``: N-way key salting for a shuffle join where ONE hot key
-  dominates (AQE splits oversized partitions, but a single key that hashes
-  to one partition can still exceed memory on the build side);
-- ``salted_group_agg``: two-stage aggregation over a salted key — partial
-  per (key, salt), final per key. For algebraic aggregates Spark's own
-  partial aggregation already does this; the salted form exists for
-  holistic aggregates (collect_list & friends) whose state concentrates on
-  hot keys.
+default in session.RUNTIME_CONFS) handles most skew at runtime.
+``salted_join`` covers the case AQE can't: N-way key salting for a shuffle
+join where ONE hot key dominates (AQE splits oversized partitions, but a
+single key that hashes to one partition can still exceed memory on the
+build side).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -54,28 +46,3 @@ def salted_join(
     out = salted_big.join(replicated_small, [key, "__salt"], how)
     return out.drop("__salt")
 
-
-def salted_group_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Two-stage salted aggregation: collect_list state is built per
-    (key, salt) then flattened per key — bounds any single task's state to
-    ~1/N of the hot key.
-
-    The salt is value-INDEPENDENT (a per-row id hash): salting on the value
-    would collapse a hot key whose rows share one dominant value into a
-    single bucket, defeating the mitigation."""
-    salted = df.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets)).cast("int")
-    )
-    partial = salted.groupBy(*keys, "__salt").agg(
-        F.collect_list(value_col).alias("__part"),
-        F.count(F.lit(1)).alias("__n"),
-    )
-    return partial.groupBy(*keys).agg(
-        F.flatten(F.collect_list("__part")).alias("values"),
-        F.sum("__n").alias("n"),
-    )

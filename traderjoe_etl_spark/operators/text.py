@@ -2,7 +2,8 @@
 language ID, quality scoring, token counting, document fingerprinting.
 
 All pure column expressions / higher-order functions — the scan stays in
-whole-stage codegen; nothing here drops to Python per row.
+whole-stage codegen — except ``rolling_hash_fingerprints``, whose rolling
+hash runs as whole-array numpy ops in one ``mapInPandas`` kernel.
 """
 
 from __future__ import annotations
@@ -124,7 +125,6 @@ def rolling_hash_fingerprints(
     text_col: str,
     k: int = 8,
     window: int = 4,
-    impl: str = "hof",
 ) -> DataFrame:
     """Winnowing document fingerprints over a Rabin–Karp rolling hash
     (SURVEY.md §2B ◆ document fingerprinting).
@@ -138,73 +138,21 @@ def rolling_hash_fingerprints(
 
     Engine-portable by construction: pure modular integer arithmetic, so
     any engine recomputes identical fingerprints (the DuckDB oracle in
-    queries/text_analysis.py replays it value-for-value).
+    queries/text_analysis.py replays it value-for-value, and a pure-Python
+    replay is pinned by test).
 
-    Plan shape: all JVM higher-order functions — the scan never leaves
-    whole-stage codegen. The code-point array and the gram-hash array are
-    each pre-projected into their own select: HOF lambdas are not CSE'd,
-    so inlining them would recompute the array per gram / per window.
-    The expression form is O(n·k) work per document; if ``k`` grows large
-    the O(n) rolling update (h ← (h·B + c_in − c_out·B^k) mod M) drops
-    into a vectorized Pandas UDF with byte-identical outputs — the values
-    are defined by the scheme, not the loop shape.
+    Execution: one ``mapInPandas`` kernel. Per document it decodes code
+    points through a zero-copy utf-32 buffer view, folds the gram hashes
+    as k whole-array (h·B + c) mod M passes (h < M = 2^31−1, so
+    h·257 + c < 2^40 — exact in int64), takes the sliding-window minima
+    with ``np.minimum`` over shifted views and the sorted distinct minima
+    with ``np.unique``: no quadratic substring scans, no per-gram array
+    allocation (measured at 1.3M docs: 80 s as JVM higher-order functions
+    → kernel seconds).
 
     Documents shorter than ``k + window − 1`` chars carry no full window
     and are filtered out (mirror the predicate in any oracle).
-
-    ``impl="arrow"`` is the promised vectorized form: a ``mapInPandas``
-    kernel decodes code points in one shot (utf-32 buffer view), folds the
-    k multiply-add-mod passes and the sliding minima as whole-array numpy
-    int64 ops, and emits identical integers — the values are defined by
-    the modular arithmetic, not the loop shape, so the two impls are
-    byte-equal (pinned by test). Measured at 1.3M docs: 80 s hof → kernel
-    seconds; use arrow for corpus-scale fingerprinting, hof where Python
-    workers are unavailable.
     """
-    if impl == "arrow":
-        return _rolling_fp_arrow(df, id_col, text_col, k, window)
-    c = F.col(text_col)
-    b, m = F.lit(ROLLING_BASE).cast("long"), F.lit(ROLLING_MOD).cast("long")
-    # Code-point extraction via ONE split into a char array: per-position
-    # substring(c, p, 1) is O(p) on UTF8String (it re-scans from the head
-    # for code-point safety), which makes the whole extraction O(n²) per
-    # document — measured 166 s over 1.3M docs vs ~20 s for this O(n) form,
-    # identical values (ascii of each single-char string).
-    with_codes = df.filter(F.length(c) >= k + window - 1).select(
-        F.col(id_col),
-        F.transform(F.split(c, ""), lambda ch: F.ascii(ch).cast("long")).alias("codes"),
-    )
-    gram_hashes = F.transform(
-        F.sequence(F.lit(1), F.size("codes") - (k - 1)),
-        lambda i: F.aggregate(
-            F.slice("codes", i, k),
-            F.lit(0).cast("long"),
-            lambda acc, x: (acc * b + x) % m,
-        ),
-    )
-    with_hashes = with_codes.select(F.col(id_col), gram_hashes.alias("gram_hashes"))
-    window_minima = F.transform(
-        F.sequence(F.lit(1), F.size("gram_hashes") - (window - 1)),
-        lambda i: F.array_min(F.slice("gram_hashes", i, window)),
-    )
-    return with_hashes.select(
-        F.col(id_col),
-        F.size("gram_hashes").alias("n_grams"),
-        F.array_sort(F.array_distinct(window_minima)).alias("fingerprints"),
-    )
-
-
-def _rolling_fp_arrow(
-    df: DataFrame, id_col: str, text_col: str, k: int, window: int
-) -> DataFrame:
-    """Vectorized winnowing kernel (see rolling_hash_fingerprints).
-
-    Per document: code points via a zero-copy utf-32 buffer view, gram
-    hashes via k whole-array (h·B + c) mod M passes (h < M = 2^31−1, so
-    h·257 + c < 2^40 — exact in int64), sliding-window minima via
-    ``np.minimum`` over shifted views, sorted distinct via ``np.unique``.
-    Integer-exact equality with the HOF form; no quadratic substring scans,
-    no per-gram array allocation."""
     import numpy as np
     import pandas as pd
 
@@ -231,7 +179,8 @@ def _rolling_fp_arrow(
                 out_id.append(did)
                 out_ng.append(ng)
                 out_fp.append(np.unique(wm))
-            yield pd.DataFrame({id_col: out_id, "n_grams": out_ng, "fingerprints": out_fp})
+            if out_id:  # an empty frame's object column has no list<long> type for Arrow
+                yield pd.DataFrame({id_col: out_id, "n_grams": out_ng, "fingerprints": out_fp})
 
     src = df.select(id_col, text_col)
     return src.mapInPandas(

@@ -23,6 +23,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import apply_runtime_confs
+from ..sources.tables import read_table
+
 
 @dataclass(frozen=True)
 class QueryDef:
@@ -52,6 +55,13 @@ def query(
         return fn
 
     return deco
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One base table of a query: pin the session's runtime confs, then
+    scan the table lazily."""
+    apply_runtime_confs(spark)
+    return read_table(spark, sf_dir, name)
 
 
 def load_all() -> None:

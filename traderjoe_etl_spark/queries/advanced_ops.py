@@ -435,8 +435,8 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id exactly once. Duplicates share a timestamp, so they are always
     inside the watermark horizon and the dedup guarantee is exact — the
     oracle is simply the original events table. State is bounded: keys
-    older than the watermark are dropped (streaming analog of
-    operators.dedup.exact_dedup)."""
+    older than the watermark are dropped (streaming analog of the
+    ``dedup_exact`` query)."""
     from ..streaming.jobs import stream_dedup
 
     apply_runtime_confs(spark)

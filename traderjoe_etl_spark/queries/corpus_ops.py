@@ -28,16 +28,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.text import tokens
-from ..session import apply_runtime_confs
-from ..sources.tables import read_table
-from . import query
+from . import _t, query
 
 _TOK_SQL = "regexp_split_to_array(lower(trim(text)), '\\s+')"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return read_table(spark, sf_dir, name)
 
 
 _SEG = 16  # tokens per dedup segment

@@ -18,14 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..session import apply_runtime_confs
-from ..sources.tables import read_table
-from . import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return read_table(spark, sf_dir, name)
+from . import _t, query
 
 
 # Packed total-order key for degree orientation: deg * 1e10 + node_id.

@@ -13,14 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import apply_runtime_confs
-from ..sources.tables import read_table
-from . import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return read_table(spark, sf_dir, name)
+from . import _t, query
 
 
 # cosine_topk physical-strategy crossover (the named-knob convention of
@@ -45,7 +38,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: one representative (min doc_id — pinned, unlike
     dropDuplicates' arbitrary pick) per distinct text, with copy counts.
     Hash-groupBy on the text; at 100 TB group on a 128-bit hash of the text
-    instead to shrink shuffle keys (see operators/dedup.py exact_dedup)."""
+    (md5) instead, so the shuffle moves 16-byte keys, not documents."""
     docs = _t(spark, sf_dir, "documents")
     return docs.groupBy("text").agg(
         F.min("doc_id").alias("doc_id"),
@@ -193,9 +186,9 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k against one query vector — the exact
-    baseline; the LSH-bucketed scale path is operators/similarity.py
-    (rows-only). The query vector is collected ONCE per (application,
-    corpus) into the session query-bank cache, so every (re-)execution is
+    baseline; the IVF scale path is ``ivf_cosine_topk``. The query vector
+    is collected ONCE per (application, corpus) into the session
+    query-bank cache, so every (re-)execution is
     a SINGLE shuffle-free job; the prior form (broadcast subquery job +
     scan job per execution) was 6.7× DuckDB at sf1 purely in second-job
     dispatch. Physical strategy is size-gated like a CBO: small corpora

@@ -19,12 +19,7 @@ from ..operators.topk import top_k, top_k_per_group
 from ..operators.windows import moving_agg, sessionize, snapshot_delta
 from ..session import apply_runtime_confs
 from ..sources.tables import read_table, table_bytes
-from . import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return read_table(spark, sf_dir, name)
+from . import _t, query
 
 
 # ---------------------------------------------------------------------------

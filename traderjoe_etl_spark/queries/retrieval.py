@@ -28,16 +28,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.text import tokens
-from ..session import apply_runtime_confs
-from ..sources.tables import read_table
-from . import query
+from . import _t, query
 
 _TOK_SQL = "regexp_split_to_array(lower(trim(text)), '\\s+')"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return read_table(spark, sf_dir, name)
 
 
 def _term_freqs(docs: DataFrame) -> DataFrame:
@@ -307,15 +300,15 @@ def exact_substring_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts distinct shared spans per pair.
 
     Span hashing is the shared polynomial family (per-token md5 values +
-    double Horner fold into a 62-bit BIGINT, numpy kernel with an
-    integer-equal JVM twin — see :func:`_selected_span_fingerprints`
-    with window=1, i.e. every span kept): r3's md5-of-concat form paid
+    double Horner fold into a 62-bit BIGINT in a numpy kernel — see
+    :func:`_selected_span_fingerprints` with window=1, i.e. every span
+    kept): r3's md5-of-concat form paid
     ~100-char CONCAT + md5 per span AND shuffled 32-char strings; the
     62-bit longs shuffle 4× smaller (24.7 → ~9 s at sf10). Collision
     risk at 62 bits is ~1e-4 expected pairs on 26M spans, and the
     oracle replays the identical hashes."""
     docs = _t(spark, sf_dir, "documents")
-    spans = _selected_span_fingerprints(docs, impl="arrow", window=1)
+    spans = _selected_span_fingerprints(docs, window=1)
     buckets = (
         spans.groupBy("h")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
@@ -346,51 +339,15 @@ def _token_values(docs: DataFrame) -> DataFrame:
     )
 
 
-def _selected_span_fingerprints(
-    docs: DataFrame, impl: str = "arrow", window: int = _THIN_P
-) -> DataFrame:
+def _selected_span_fingerprints(docs: DataFrame, window: int = _THIN_P) -> DataFrame:
     """(doc_id, h): the winnowing-selected span fingerprints of each
     document, distinct per document; ``window=1`` keeps EVERY span (the
     un-thinned exact form — the min over a 1-window is the span itself).
-    ``impl="arrow"`` (default) folds the two Horner passes and the
-    sliding minima as whole-array numpy int64 ops in one ``mapInPandas``
-    kernel; ``impl="hof"`` is the pure-JVM higher-order form —
-    byte-identical integers (pinned by pytest), ~6× slower at sf10
-    because HOF lambdas interpret per element."""
-    xs = _token_values(docs)
-    if impl == "hof":
-
-        def horner(sl, b):
-            return F.aggregate(
-                sl,
-                F.lit(0).cast("bigint"),
-                lambda acc, v: (acc * F.lit(b) + v) % F.lit(_H_MOD),
-            )
-
-        sh = xs.select(
-            "doc_id",
-            F.transform(
-                F.sequence(F.lit(1), F.size("__x") - (_SPAN_K - 1)),
-                lambda i: horner(F.slice("__x", i, _SPAN_K), _H_B1) * F.lit(1 << 31)
-                + horner(F.slice("__x", i, _SPAN_K), _H_B2),
-            ).alias("__sh"),
-        )
-        n_sh = F.size(F.col("__sh"))
-        if window == 1:
-            sel_arr = F.array_distinct(F.col("__sh"))
-        else:
-            sel_arr = F.array_distinct(
-                F.when(
-                    n_sh >= window,
-                    F.transform(
-                        F.sequence(F.lit(1), n_sh - (window - 1)),
-                        lambda i: F.array_min(F.slice("__sh", i, window)),
-                    ),
-                ).otherwise(F.array(F.array_min("__sh")))
-            )
-        return sh.select("doc_id", F.explode(sel_arr).alias("h"))
-    if impl != "arrow":
-        raise ValueError(f"unknown impl {impl!r}")
+    One ``mapInPandas`` kernel folds the two Horner passes and the
+    sliding minima as whole-array numpy int64 ops over the JVM-computed
+    token values — the same integers as a per-span Horner fold (pinned by
+    a pure-Python replay in pytest), ~6× faster at sf10 than that fold as
+    JVM higher-order functions, whose lambdas interpret per element."""
     import numpy as np
     import pandas as pd
 
@@ -431,7 +388,7 @@ def _selected_span_fingerprints(
                     {"doc_id": np.concatenate(out_id), "h": np.concatenate(out_h)}
                 )
 
-    return xs.mapInPandas(kernel, "doc_id long, h long")
+    return _token_values(docs).mapInPandas(kernel, "doc_id long, h long")
 
 
 @query(
@@ -490,15 +447,15 @@ def exact_substring_dups_thinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     proxy for shared-span count). Pair expansion reuses the streaming
     two-generator in-bucket form.
 
-    Execution split (pinned integer-equal by pytest): the per-token md5
-    base values stay in JVM codegen (one HOF pass); the polynomial folds
-    and sliding minima run as whole-array numpy int64 ops in a
-    ``mapInPandas`` kernel — the interpreted-HOF Horner form costs ~12 s
-    at sf10 (32 lambda steps × 26M spans), the kernel ~2 s, identical
-    values (the scheme defines the integers, not the loop shape — the
-    same split as operators.text.rolling_hash_fingerprints)."""
+    Execution split (pinned against a pure-Python replay by pytest): the
+    per-token md5 base values stay in JVM codegen (one HOF pass); the
+    polynomial folds and sliding minima run as whole-array numpy int64
+    ops in a ``mapInPandas`` kernel — an interpreted-HOF Horner form
+    costs ~12 s at sf10 (32 lambda steps × 26M spans), the kernel ~2 s,
+    identical values (the scheme defines the integers, not the loop
+    shape)."""
     docs = _t(spark, sf_dir, "documents")
-    sel = _selected_span_fingerprints(docs, impl="arrow")
+    sel = _selected_span_fingerprints(docs)
     buckets = (
         sel.groupBy("h")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))

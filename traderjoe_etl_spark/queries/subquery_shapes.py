@@ -39,14 +39,8 @@ from ..functions.fixedpoint import (
     fixed_sum_value,
     fixed_sum_value_sql,
 )
-from ..session import apply_runtime_confs
 from ..sources.tables import read_table
-from . import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return read_table(spark, sf_dir, name)
+from . import _t, query
 
 
 def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:

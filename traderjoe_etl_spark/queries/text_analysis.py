@@ -13,14 +13,7 @@ from pyspark.sql import functions as F
 
 from ..operators.text import LANG_PROFILES, lang_id, text_profile
 from ..functions import session_cache
-from ..session import apply_runtime_confs
-from ..sources.tables import read_table
-from . import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return read_table(spark, sf_dir, name)
+from . import _t, query
 
 
 def _lang_score_case() -> tuple[str, str]:
@@ -677,10 +670,7 @@ def rolling_hash_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import rolling_hash_fingerprints
 
     docs = _t(spark, sf_dir, "documents")
-    # arrow kernel: integer-exact equal to the HOF form (pinned by test),
-    # ~10× faster at corpus scale — safe to use at ANY sf because the
-    # fingerprints are modular-arithmetic-defined, impl-independent values.
-    fps = rolling_hash_fingerprints(docs, "doc_id", "text", k=8, window=4, impl="arrow")
+    fps = rolling_hash_fingerprints(docs, "doc_id", "text", k=8, window=4)
     return fps.select(
         "doc_id",
         "n_grams",

@@ -16,19 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import apply_runtime_confs
-from ..sources.tables import read_table
-from . import query
+from . import _t, query
 
 CHUNK_CHARS = 500
 CHUNK_STRIDE = 450  # 50-char overlap between consecutive chunks
 PACK_BUCKETS = 16
 PACK_CAPACITY = 2048  # whitespace-token budget per packed sequence
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return read_table(spark, sf_dir, name)
 
 
 @query(

@@ -7,14 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.prefix import global_running_agg
-from ..session import apply_runtime_confs
-from ..sources.tables import read_table
-from . import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return read_table(spark, sf_dir, name)
+from . import _t, query
 
 
 @query(

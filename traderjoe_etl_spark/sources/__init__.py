@@ -1,3 +1,3 @@
-from .tables import TABLE_NAMES, read_table, register_views
+from .tables import TABLE_NAMES, read_table
 
-__all__ = ["TABLE_NAMES", "read_table", "register_views"]
+__all__ = ["TABLE_NAMES", "read_table"]

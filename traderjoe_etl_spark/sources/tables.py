@@ -216,26 +216,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
     return df
 
-
-def read_with_schema(spark: SparkSession, path: str, fmt: str, schema) -> DataFrame:
-    """Schema-pinned reads for json/csv/parquet (SURVEY.md §2B sources).
-
-    PERMISSIVE mode: malformed rows yield NULL fields instead of failing the
-    batch — the engine form of the reference's tolerance for missing API
-    fields (main.py:81-83). Never use inferSchema in production paths: it
-    costs an extra pass and drifts with the data.
-    """
-    reader = spark.read.schema(schema).option("mode", "PERMISSIVE")
-    if fmt == "json":
-        return reader.json(path)
-    if fmt == "csv":
-        return reader.option("header", "true").csv(path)
-    if fmt == "parquet":
-        return reader.parquet(path)
-    raise ValueError(f"unsupported format {fmt!r}")
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for name in TABLE_NAMES:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -78,8 +78,8 @@ def stream_dedup(
     watermark: str = "1 hour",
 ) -> DataFrame:
     """Stateful exact dedup within the watermark horizon
-    (``dropDuplicatesWithinWatermark``) — the streaming analog of
-    operators.dedup.exact_dedup with bounded state."""
+    (``dropDuplicatesWithinWatermark``) — the streaming analog of the
+    ``dedup_exact`` query's batch dedup, with bounded state."""
     return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
