@@ -169,8 +169,9 @@ def test_strict_repr_packed_string(spark):
 
 
 def test_strict_build_py4j_budget(spark, monkeypatch):
-    """A warm strict build reuses its float renderers instead of rebuilding
-    their expression trees over py4j (6 225 commands when it did)."""
+    """A warm strict build is one SQL statement over the inputs, not a
+    plan composed Column by Column over py4j (3 133 commands when it was,
+    6 225 before the float renderers were reused)."""
     from py4j.java_gateway import GatewayClient
 
     pairs, inputs = _fixture_inputs(spark)
@@ -186,7 +187,7 @@ def test_strict_build_py4j_budget(spark, monkeypatch):
     monkeypatch.setattr(GatewayClient, "send_command", counted)
     build_snapshot(pairs, inputs, RUN_TS, strict_repr=True)
     monkeypatch.undo()
-    assert len(sent) <= 3916, len(sent)  # 3 133 measured, + 25 %
+    assert len(sent) <= 21, len(sent)  # 17 measured, + 25 %
 
 
 def test_argmax_tie_sums_all_rows(snapshot):
@@ -309,10 +310,12 @@ def test_missing_api_columns_tolerated(spark):
 
 
 def test_strict_mode_golden_csv(spark, tmp_path):
-    """Full strict-parity byte-golden: pool_name joins + Python-repr packed
-    strings, exported through the pandas CSV sink (the reference's own
-    to_csv path, main.py:345-351), compared byte-for-byte against a row
-    hand-computed from the reference's arithmetic (main.py:130-286)."""
+    """Full strict-parity byte-golden: Python-repr packed strings,
+    exported through the pandas CSV sink (the reference's own to_csv path,
+    main.py:345-351), compared byte-for-byte against a row hand-computed
+    from the reference's arithmetic (main.py:130-286). With a single pool,
+    the address joins give the bytes the reference's pool_name merge
+    (main.py:182-183) gives."""
     import pandas as pd
 
     from traderjoe_etl_spark.sinks import csv_export
@@ -327,7 +330,7 @@ def test_strict_mode_golden_csv(spark, tmp_path):
         bins=spark.createDataFrame(_bins_rows(), BINS_RESERVE_SCHEMA),
     )
     pairs = spark.createDataFrame([(USER, POOL)], "user_address string, pool_address string")
-    df = build_snapshot(pairs, inputs, RUN_TS, strict_repr=True, join_on_pool_name=True)
+    df = build_snapshot(pairs, inputs, RUN_TS, strict_repr=True)
     out = str(tmp_path / "merged_data.csv")
     csv_export(df, out)
 
@@ -392,9 +395,12 @@ def test_strict_mode_golden_csv(spark, tmp_path):
 
 
 def test_pool_name_join_collision_gate(spark):
-    """Two pools sharing a display name: default (address) joins keep the
-    pairs independent; strict pool_name mode reproduces the reference's
-    cross-multiplication hazard — the reason the deviation exists."""
+    """Two pools sharing a display name: the address joins keep the pairs
+    independent, while the reference's merge on ``pool_name``
+    (main.py:182-183, transcribed in pandas below) cross-multiplies them —
+    the reason for the deviation (SURVEY §2C.5)."""
+    import pandas as pd
+
     pool_b = _pool_row(pair="0xpoolB", name="TOKX-TOKY")  # same name as POOL
     inputs = SnapshotInputs(
         pools_1d=spark.createDataFrame([_pool_row(), pool_b], POOL_STATS_SCHEMA),
@@ -406,16 +412,27 @@ def test_pool_name_join_collision_gate(spark):
     pairs = spark.createDataFrame(
         [(USER, POOL), (USER, "0xpoolB")], "user_address string, pool_address string"
     )
-    by_addr = build_snapshot(pairs, inputs, RUN_TS)
-    assert by_addr.count() == 2
+    rows = {r["pool_address"]: r.asDict() for r in build_snapshot(pairs, inputs, RUN_TS).collect()}
+    assert len(rows) == 2
     # poolB has no history of its own → zero deposits under address joins
-    b_row = [r for r in by_addr.collect() if r["pool_address"] == "0xpoolB"][0]
-    assert b_row["total_tokenX_amount_initial_deposit"] == 0.0
-    by_name = build_snapshot(pairs, inputs, RUN_TS, join_on_pool_name=True)
-    b_name = [r.asDict() for r in by_name.collect() if r["pool_address"] == "0xpoolB"][0]
-    # name collision: poolA's history bleeds into poolB — the reference's
-    # merge-on-name behavior, faithfully gated
-    assert b_name["total_tokenX_amount_initial_deposit"] == 6.5
+    assert rows["0xpoolB"]["total_tokenX_amount_initial_deposit"] == 0.0
+    deposit = rows[POOL]["total_tokenX_amount_initial_deposit"]
+    assert deposit == 6.5
+
+    # The reference: each summary carries the pool_name stamped from
+    # df_pools (main.py:138, 176), and the merge keys on that name.
+    pools = pd.DataFrame({"pool_address": [POOL, "0xpoolB"], "pool_name": ["TOKX-TOKY"] * 2})
+    history = pd.DataFrame(
+        {"user_address": [USER], "pool_address": [POOL], "total_tokenX_amount_initial_deposit": [deposit]}
+    ).merge(pools, on="pool_address")
+    merged = (
+        pd.DataFrame({"user_address": [USER, USER], "pool_address": [POOL, "0xpoolB"]})
+        .merge(pools, on="pool_address")
+        .merge(history.drop(columns="pool_address"), on=["user_address", "pool_name"], how="left")
+    )
+    # name collision: poolA's history bleeds into poolB
+    by_name = merged.set_index("pool_address")["total_tokenX_amount_initial_deposit"]
+    assert by_name["0xpoolB"] == by_name[POOL] == 6.5
 
 
 def test_pipeline_observability_metrics(spark):

@@ -975,3 +975,17 @@ def test_source_result_is_a_scan_of_pinned_rows(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Scan ExistingRDD" in plan, plan
         assert "Exchange" not in plan and "MapInPandas" not in plan, plan
+
+
+def test_snapshot_statement_exchanges(spark):
+    """The one-statement ``build_snapshot`` over the parity fixture plans no
+    more shuffle exchanges than the Column-composed plan it replaced (9),
+    with the pool dim still its one broadcast."""
+    from test_pipeline_parity import RUN_TS, _fixture_inputs
+
+    from traderjoe_etl_spark.plans.traderjoe import build_snapshot
+
+    pairs, inputs = _fixture_inputs(spark)
+    f = plan_facts(build_snapshot(pairs, inputs, RUN_TS, strict_repr=True))
+    assert f.n_exchanges <= 9, f.n_exchanges
+    assert f.n_broadcasts == 1, f.n_broadcasts

@@ -15,7 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from traderjoe_etl_spark.functions.pyrepr import py_float_repr_expr
+from traderjoe_etl_spark.functions.pyrepr import py_float_repr_sql
 
 _ADVERSARIAL = [
     0.0, -0.0, 1.0, -1.0, 0.1, 0.5, 2.0,
@@ -50,7 +50,7 @@ def test_py_float_repr_expr(spark):
         vals.append(rng.uniform(0, 1000) / rng.choice([1, 100, 200, 1e6]))
 
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    rows = df.select("x", py_float_repr_expr(F.col("x")).alias("r")).collect()
+    rows = df.select("x", F.expr(py_float_repr_sql("CAST(x AS STRING)")).alias("r")).collect()
     exact_bad, roundtrip_bad = [], []
     for row in rows:
         x, r = row["x"], row["r"]
@@ -68,5 +68,5 @@ def test_py_float_repr_expr(spark):
 
 def test_py_float_repr_expr_null_passthrough(spark):
     df = spark.createDataFrame([(None,), (2.5,)], "x double")
-    got = [r["r"] for r in df.select(py_float_repr_expr(F.col("x")).alias("r")).collect()]
+    got = [r["r"] for r in df.select(F.expr(py_float_repr_sql("CAST(x AS STRING)")).alias("r")).collect()]
     assert got == [None, "2.5"]

@@ -7,14 +7,14 @@ Spark-first operator library:
 - ``sources``    — parquet/JSON readers with explicit schemas, distributed
   REST/RPC snapshot fetchers (reference main.py:36-42, 203-219).
 - ``functions``  — scalar helpers: lenient casts (main.py:125-126, 195-196),
-  inf/NaN scrub (main.py:268-269, 284-286), existence-tolerant projection
-  (main.py:81-83, 342-343).
+  inf/NaN scrub (main.py:268-269, 284-286), Python-repr float rendering
+  (main.py:163-170, 239-244).
 - ``operators``  — the generalized relational surface (joins, aggregates,
   windows, set ops, top-k, MERGE upsert, connected components, skew/salting,
   data layout: z-order + compaction) plus LLM-data-pipeline ops (dedup,
   similarity search, text analysis, multimodal plumbing) exercised on the
   driver's documents/embeddings.
-- ``plans``      — the reference pipeline recomposed as one lazy DataFrame DAG,
+- ``plans``      — the reference pipeline recomposed as one SQL statement,
   plus physical-plan audit helpers (plans/audit.py).
 - ``streaming``  — event-time Structured Streaming jobs: windows,
   watermarks, stream-static enrichment, stateful dedup and position

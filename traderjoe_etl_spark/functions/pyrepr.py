@@ -13,11 +13,13 @@ thresholds: it switches to ``d.dddE±X`` scientific whenever |x| < 1e-3 or
 |x| >= 1e7, and never zero-pads the exponent. So ``0.0001`` renders as
 ``1.0E-4`` and ``5e-05`` as ``5.0E-5``.
 
-:func:`py_float_repr_expr` converts the Java rendering to the CPython one
-with pure string expressions, so strict-parity mode needs no Python worker
-round trip (the pandas-UDF form it replaces cost two ArrowEvalPython
-stages in the snapshot pipeline). Two structural tricks keep the
-expression tree small enough to evaluate fast:
+:func:`py_float_repr_sql` converts the Java rendering to the CPython one
+with pure string expressions, as SQL text that the snapshot statement
+(plans/traderjoe.py) splices in, so strict-parity mode needs no Python
+worker round trip (the pandas-UDF form it replaces cost two
+ArrowEvalPython stages in the snapshot pipeline). A Column is
+``F.expr(py_float_repr_sql("CAST(x AS STRING)"))``. Two structural
+tricks keep the expression tree small enough to evaluate fast:
 
 - the derived parts (digit string, exponent, sign) are bound ONCE per row
   through a single-element ``transform`` lambda — a poor man's LET
@@ -36,7 +38,8 @@ NORMAL double with |x| < 2^53 (~9.0e15). Outside it — |x| >= 2^53 and
 denormals below ~2.2e-308 — Java emits more (still round-tripping) digits
 than CPython's shortest form, so the bytes can differ while the VALUE
 parses identically. The packed-bin strings this feeds render token/fee
-amounts (<= ~1e7 by construction), squarely inside the exact regime; the
+amounts; a per-bin token amount reaches 2^53 when a large uint reserve
+has few decimals (6 or 8), and then only its value matches CPython. The
 pandas-UDF ``py_float_repr`` remains the anywhere-exact fallback.
 
 Scale note: a handful of string primitives inside the scan's projection —
@@ -45,90 +48,62 @@ O(len) per value, no shuffle, no Python worker.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 _MAX = 2147483647
 
 
-def _substr(c: Column, pos: Column, length: Column | None = None) -> Column:
-    if length is None:
-        length = F.lit(_MAX)
-    return F.call_function("substring", c, pos, length)
-
-
-def _render_sci_parts(p: Column) -> Column:
-    """CPython rendering from bound parts struct (d=digits, e=exp, n=neg).
-
-    References to ``p["..."]`` are lambda-variable reads — evaluated parts,
-    not re-spliced subtrees."""
-    d, e, n = p["d"], p["e"], p["n"]
-    ndig = F.length(d)
-
+def _render_parts_sql(p: str) -> str:
+    """CPython rendering from the bound parts struct ``p`` (d=digits,
+    e=exp, n=neg); ``p.d`` etc. are lambda-variable reads, evaluated
+    parts, not re-spliced subtrees."""
+    d, e, n = f"{p}.d", f"{p}.e", f"{p}.n"
+    abs_e = f"CAST(abs({e}) AS STRING)"
     # scientific: d[.rest]e±XX (exponent zero-padded to >= 2 digits;
     # lpad would TRUNCATE 3-digit exponents)
-    abs_e = F.abs(e).cast("string")
-    sci = F.concat(
-        F.when(ndig > 1, F.concat(_substr(d, F.lit(1), F.lit(1)), F.lit("."), _substr(d, F.lit(2)))).otherwise(d),
-        F.lit("e"),
-        F.when(e < 0, F.lit("-")).otherwise(F.lit("+")),
-        F.when(F.length(abs_e) < 2, F.concat(F.lit("0"), abs_e)).otherwise(abs_e),
+    sci = (
+        f"concat(CASE WHEN length({d}) > 1 THEN concat(substring({d}, 1, 1), '.', substring({d}, 2, {_MAX}))"
+        f" ELSE {d} END, 'e', CASE WHEN {e} < 0 THEN '-' ELSE '+' END,"
+        f" CASE WHEN length({abs_e}) < 2 THEN concat('0', {abs_e}) ELSE {abs_e} END)"
     )
-
     # positional, e in [-4, -1]: 0.<zeros><digits>
-    small_pos = F.concat(
-        F.lit("0."), F.call_function("repeat", F.lit("0"), -e - F.lit(1)), d
-    )
-
+    small_pos = f"concat('0.', repeat('0', -{e} - 1), {d})"
     # positional, e in [7, 15]: point after e+1 digits, zero-padded;
     # integral values carry ".0"
-    int_len = e + F.lit(1)
-    big_pos = F.when(
-        ndig <= int_len,
-        F.concat(F.call_function("rpad", d, int_len, F.lit("0")), F.lit(".0")),
-    ).otherwise(
-        F.concat(_substr(d, F.lit(1), int_len), F.lit("."), _substr(d, int_len + F.lit(1)))
+    big_pos = (
+        f"CASE WHEN length({d}) <= {e} + 1 THEN concat(rpad({d}, {e} + 1, '0'), '.0')"
+        f" ELSE concat(substring({d}, 1, {e} + 1), '.', substring({d}, {e} + 2, {_MAX})) END"
     )
-
-    return F.concat(
-        F.when(n, F.lit("-")).otherwise(F.lit("")),
-        F.when((e < -4) | (e >= 16), sci).when(e < 0, small_pos).otherwise(big_pos),
+    return (
+        f"concat(CASE WHEN {n} THEN '-' ELSE '' END,"
+        f" CASE WHEN {e} < -4 OR {e} >= 16 THEN {sci} WHEN {e} < 0 THEN {small_pos} ELSE {big_pos} END)"
     )
 
 
-def py_float_repr_expr(col: Column) -> Column:
-    """Render a double exactly as CPython ``repr`` would, JVM-side.
+def py_float_repr_sql(j: str) -> str:
+    """SQL text rendering a double exactly as CPython ``repr`` would, from
+    ``j``: the text of Spark's own rendering ``CAST(x AS STRING)``, best a
+    column or lambda variable since it is spliced several times.
 
-    Handles NaN/±Infinity (→ ``nan``/``inf``/``-inf``), negative zero,
-    integral doubles, and both scientific-notation regimes. NULL in →
-    NULL out (same contract as the pandas-UDF form it replaces).
+    Handles NaN/±Infinity (Java ``NaN``/``Infinity`` → ``nan``/``inf``),
+    negative zero, integral doubles, and both scientific-notation regimes.
+    NULL in → NULL out (same contract as the pandas-UDF form it replaces).
     """
-    j = col.cast("string")
-
     # Java scientific form "<mant>E<exp>", mant = [-]d.d+ with exactly one
-    # integer digit and shortest fraction (so the only trailing zero is the
-    # integral "d.0" form).
-    mant = F.substring_index(j, "E", 1)
-    exp = F.substring_index(j, "E", -1).cast("int")
-    neg = mant.startswith("-")
-    mant_abs = F.when(neg, _substr(mant, F.lit(2))).otherwise(mant)
-    digits = F.when(
-        mant_abs.endswith(".0"), _substr(mant_abs, F.lit(1), F.lit(1))
-    ).otherwise(F.translate(mant_abs, ".", ""))
-
+    # integer digit and shortest fraction, so the only trailing zero is
+    # the integral "[-]d.0" form, whose digit is third from the end.
+    mant = f"substring_index({j}, 'E', 1)"
+    digits = f"CASE WHEN endswith({mant}, '.0') THEN substring({mant}, -3, 1) ELSE translate({mant}, '-.', '') END"
+    exp = f"CAST(substring_index({j}, 'E', -1) AS INT)"
     # bind (digits, exp, neg) once via a 1-element transform — the lambda
     # body reads them as variables instead of re-evaluating the extraction
     # subtree at every use site
-    parts = F.array(F.struct(digits.alias("d"), exp.alias("e"), neg.alias("n")))
-    from_sci = F.get(F.transform(parts, _render_sci_parts), F.lit(0))
-
+    from_sci = (
+        f"get(transform(array(named_struct('d', {digits}, 'e', {exp}, 'n', startswith({j}, '-'))),"
+        f" p -> {_render_parts_sql('p')}), 0)"
+    )
     return (
-        F.when(F.isnan(col), F.lit("nan"))
-        .when(col == F.lit(float("inf")), F.lit("inf"))
-        .when(col == F.lit(float("-inf")), F.lit("-inf"))
+        f"CASE WHEN {j} = 'NaN' THEN 'nan' WHEN {j} = 'Infinity' THEN 'inf' WHEN {j} = '-Infinity' THEN '-inf'"
         # Java positional regime (1e-3 <= |x| < 1e7, and 0.0): CPython is
         # also positional there (its window is the wider [1e-4, 1e16)) with
         # the same shortest digits — pass through.
-        .when(j.contains("E"), from_sci)
-        .otherwise(j)
+        f" WHEN contains({j}, 'E') THEN {from_sci} ELSE {j} END"
     )

@@ -162,10 +162,6 @@ def cosine_topk_batch(
         quantum=(10.0 ** -round_digits) if round_digits is not None else 0.0,
         exclude_self=exclude_self,
     )
-    if exclude_self:
-        # a no-op after the kernel, which already drops self-matches before
-        # ranking; it keeps the exclusion visible in the plan
-        scored = scored.filter(F.col(id_col) != F.col(query_id_col))
     if round_digits is not None:
         scored = scored.withColumn("cosine", F.round("cosine", round_digits))
     w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))

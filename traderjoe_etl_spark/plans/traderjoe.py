@@ -1,44 +1,43 @@
-"""The reference pipeline recomposed as ONE lazy DataFrame DAG.
+"""The reference pipeline recomposed as ONE SQL statement.
 
 ``process_data`` (reference main.py:20-351) runs S2→K1 eagerly for a single
 (user, pool) pair; here the per-pair driver loop (main.py:11-17) becomes
 data parallelism: every stage is keyed by (user_address, pool_address) and
 the whole batch of pairs flows through one Catalyst-optimized plan
-(SURVEY.md §3 EP2). Stage map (SURVEY.md §2A ids in parens):
+(SURVEY.md §3 EP2). ``build_snapshot`` writes that plan as one
+``spark.sql`` text over ``pairs`` and the five inputs, passed as DataFrame
+arguments, so a build is one parse and one analysis: a few dozen py4j
+round trips where composing Columns cost thousands (a Column's SQL text
+does not parse back, so the text is written here, not generated).
+Stage map (SURVEY.md §2A ids in parens), one CTE per summary:
 
     pools 1d  (P1,P2)  ┐
-    pools 1h  (P3)     ├ join on pool_address → pool dim
-    history (P5-P7, F1, F3/F4 argmax, A1-A3, P8)  → per-pair deposit summary
-    fees    (A4 sums, A5 sorted string_agg)       → per-pair fee summary
-    bins    (P11 pro-rata, P12 decimal scaling)   → per-pair on-chain position
-    assembly: pairs ⟕ pools ⟕ history ⟕ fees ⟕ bins   (J1, J2, P13 keyed)
+    pools 1h  (P3)     ├ pools: flatten/rename, left join on pool_address
+    history (P5-P7, F1, F3/F4 rank() = 1, A1-A3, P8)  → deposits
+    fees    (A4 sums, A5 sorted packed string)        → fee_totals
+    bins    (P11 pro-rata, P12 decimal scaling)       → positions
+    assembly: pairs ⟕ pools ⟕ deposits ⟕ fee_totals ⟕ positions  (J1, J2, P13)
     derive D1-D6 (value_if_held, USD values, IL, share %, APR/APY family)
-    P9 run_ts injection → P14 fixed order
+    P9 run_ts literals → P14 fixed order
 
 Documented deviations from the reference (SURVEY.md §2C):
 - joins are on (user_address, pool_address), not the collision-prone
   ``pool_name`` (§2C.5);
-- per-bin packed strings are sorted by binId (§2C.1) and the structured
-  array columns are kept alongside; float rendering is JVM by default,
-  Python-repr byte-parity under ``build_snapshot(..., strict_repr=True)``;
+- per-bin packed strings are sorted by binId (§2C.1); float rendering is
+  JVM by default, Python-repr byte-parity under
+  ``build_snapshot(..., strict_repr=True)``;
 - wall-clock is an injected ``run_ts`` parameter (§2C.6);
 - ``/0 → inf`` is scrubbed via nullif at derivation time (§2C.2).
 """
 
 from __future__ import annotations
 
-import functools
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark import SparkContext
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from ..functions.casts import lenient_cast
-from ..functions.projection import project_rename, reorder_existing
-from ..functions.scrub import safe_div
-from ..operators.aggregates import argmax_rows, sorted_string_agg
+from ..functions.pyrepr import py_float_repr_sql
 from ..schemas import SNAPSHOT_ORDER
 
 PAIR_KEYS = ["user_address", "pool_address"]
@@ -90,147 +89,26 @@ class SnapshotInputs:
     bins: DataFrame  # BINS_RESERVE_SCHEMA, rows per (user, pool, bin)
 
 
-def _pool_dim(inputs: SnapshotInputs) -> DataFrame:
-    """P1+P2+P3+P4: flatten/rename both pool fetches, key-join the 1h slice
-    (the reference's positional concat at main.py:102 is replaced by an
-    equi-join on pool_address — same result, order-independent)."""
-    p1d = project_rename(inputs.pools_1d, POOL_RENAME_1D)
-    p1h = project_rename(inputs.pools_1h, POOL_RENAME_1H)
-    return p1d.join(p1h, "pool_address", "left")
+def _renames(df: DataFrame, mapping: dict[str, str]) -> dict[str, str]:
+    """dst → source path of the ``mapping`` entries whose top-level column
+    ``df`` has: absent API fields drop their column (main.py:81-83), and
+    dot paths read struct fields (the json_normalize flattening, main.py:52)."""
+    top = set(df.columns)
+    return {
+        dst: ".".join(f"`{p}`" for p in src.split("."))
+        for src, dst in mapping.items()
+        if src.split(".", 1)[0] in top
+    }
 
 
-def _history_summary(inputs: SnapshotInputs) -> DataFrame:
-    """F1→F3/F4→A1-A3→P8 (reference main.py:107-153): deposits only, argmax
-    by (blockNumber, timestamp) keeping ties, sum amounts, format max ts.
-
-    The empty-deposits branch (main.py:143-153) needs no driver-side 'if':
-    pairs with zero surviving rows simply don't appear here and the left
-    join in build_snapshot + coalesce supplies the zero defaults.
-    """
-    h = inputs.history.select(
-        F.col("user_address"),
-        F.col("poolAddress").alias("pool_address"),
-        F.to_timestamp("timestamp").alias("ts"),  # P6 main.py:124
-        F.col("isDeposit"),
-        F.col("blockNumber"),
-        # P5+P7: nested .get with default 0 + to_numeric coerce + fillna(0)
-        # (main.py:115-118, 125-126)
-        lenient_cast(F.col("tokenX.amount"), "double", default=0.0).alias("tokenX_amount"),
-        lenient_cast(F.col("tokenY.amount"), "double", default=0.0).alias("tokenY_amount"),
-    )
-    deposits = h.filter(F.col("isDeposit"))  # F1 main.py:127
-    latest = argmax_rows(deposits, PAIR_KEYS, ["blockNumber", "ts"])  # F3/F4, rank-ties
-    return latest.groupBy(*PAIR_KEYS).agg(
-        F.sum("tokenX_amount").alias("total_tokenX_amount_initial_deposit"),  # A3
-        F.sum("tokenY_amount").alias("total_tokenY_amount_initial_deposit"),
-        F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("MostRecentDepositTime"),  # A2+P8
-    )
-
-
-@functools.cache
-def _strict_render(name: str, gateway: object) -> Column:
-    """The strict renderer of column ``name``, built once per column name
-    and JVM (``gateway``): each tree (about 250 unresolved expression nodes)
-    costs about 770 py4j round trips to build, and a Column is an
-    unresolved expression, safe to share between plans."""
-    from ..functions.pyrepr import py_float_repr_expr
-
-    return py_float_repr_expr(F.col(name))
-
-
-def _render_float(name: str, strict_repr: bool) -> Column:
-    """Double → string for the packed bin strings: JVM rendering by default;
-    CPython-repr bytes under strict parity mode, where the byte form must
-    match the reference's f-strings (§2C.1 deviation closed). Strict mode
-    uses the pure-expression renderer (functions/pyrepr.py) — byte-exact
-    for the packed amount domain (|x| < 2^53) with no Python worker stage;
-    functions.udfs.py_float_repr is the anywhere-exact pandas-UDF form the
-    parity tests compare against."""
-    if strict_repr:
-        return _strict_render(name, SparkContext._gateway)
-    return F.col(name).cast("string")
-
-
-def _packed_bins(bin_id: str, x: str, y: str, strict_repr: bool) -> Column:
-    """The packed ``"(binId: x, y; …)"`` aggregate behind both the fees
-    and the bin strings (main.py:168-170, 239-244), sorted by binId for
-    determinism (§2C.1; the reference relied on API order). Arguments are
-    column names."""
-    bin_col = F.col(bin_id)
-    rendered = F.concat_ws(
-        ": ",
-        bin_col.cast("string"),
-        F.concat_ws(", ", _render_float(x, strict_repr), _render_float(y, strict_repr)),
-    )
-    return sorted_string_agg([bin_col], rendered, "; ", ("(", ")"))
-
-
-def _fees_summary(inputs: SnapshotInputs, strict_repr: bool = False) -> DataFrame:
-    """A4+A5 (reference main.py:158-181): per-pair fee totals plus the
-    packed ``"(binId: feesX, feesY; …)"`` string."""
-    f = inputs.fees.select(
-        F.col("user_address"),
-        F.col("poolAddress").alias("pool_address"),
-        F.col("binId"),
-        lenient_cast(F.col("accruedFeesX"), "double", default=0.0).alias("feesX"),
-        lenient_cast(F.col("accruedFeesY"), "double", default=0.0).alias("feesY"),
-    )
-    # single-pass: totals AND the sorted packed string in ONE groupBy
-    # (two groupBys + self-join would shuffle twice and join for nothing)
-    return f.groupBy(*PAIR_KEYS).agg(
-        F.sum("feesX").alias("accrued_fees_token_x"),
-        F.sum("feesY").alias("accrued_fees_token_y"),
-        _packed_bins("binId", "feesX", "feesY", strict_repr).alias(
-            "fees_per_bin(bin_id: token_x, token_y_amounts)"
-        ),
-    )
-
-
-def _contract_summary(
-    inputs: SnapshotInputs, pool_decimals: DataFrame, strict_repr: bool = False
-) -> DataFrame:
-    """P11+P12 (reference main.py:227-250): per-bin pro-rata share of
-    reserves, decimal-scaled, summed per pair + packed bin string.
-
-    Raw uint128/uint256 arrive as Decimal(38,0); the pro-rata math runs in
-    double like the reference (Python int→float at main.py:232-233) —
-    deviation §7.4.1 (Decimal(38)×Decimal(38) would overflow Spark's
-    precision cap).
-    """
-    b = inputs.bins.select(
-        F.col("user_address"),
-        F.col("poolAddress").alias("pool_address"),
-        F.col("binId"),
-        F.col("reserveX").cast("double").alias("rx"),
-        F.col("reserveY").cast("double").alias("ry"),
-        F.col("shares").cast("double").alias("sh"),
-        F.col("totalShares").cast("double").alias("tsh"),
-    ).join(pool_decimals, "pool_address", "left")
-    scaled = b.select(
-        "user_address",
-        "pool_address",
-        "binId",
-        (F.col("rx") * safe_div(F.col("sh"), F.col("tsh"))).alias("ux_raw"),  # P11
-        (F.col("ry") * safe_div(F.col("sh"), F.col("tsh"))).alias("uy_raw"),
-        (
-            F.col("rx") * safe_div(F.col("sh"), F.col("tsh"))
-            / F.pow(F.lit(10.0), F.col("token_x_decimals"))
-        ).alias("ux"),  # P12 main.py:237-238
-        (
-            F.col("ry") * safe_div(F.col("sh"), F.col("tsh"))
-            / F.pow(F.lit(10.0), F.col("token_y_decimals"))
-        ).alias("uy"),
-        "token_x_decimals",  # kept: the totals agg scales the raw sums once
-        "token_y_decimals",
-    )
-    # single groupBy: raw sums scaled ONCE (main.py:234, 241-242 — not
-    # sum-of-scaled) + the sorted packed bin string, one shuffle total
-    return scaled.groupBy(*PAIR_KEYS).agg(
-        (F.sum("ux_raw") / F.pow(F.lit(10.0), F.first("token_x_decimals"))).alias("token_x_amount"),
-        (F.sum("uy_raw") / F.pow(F.lit(10.0), F.first("token_y_decimals"))).alias("token_y_amount"),
-        _packed_bins("binId", "ux", "uy", strict_repr).alias(
-            "bin_distribution(bin id: token_x_amount, token_y_amounts)"
-        ),
+def _safe_div(num: str, den: str) -> str:
+    """``num / nullif(den, 0)`` with any non-finite quotient scrubbed to
+    NULL (main.py:267-269, 279-286; a NaN operand survives a non-zero
+    denominator)."""
+    q = f"(({num}) / nullif({den}, 0))"
+    return (
+        f"CASE WHEN isnan({q}) OR {q} = CAST('Infinity' AS DOUBLE)"
+        f" OR {q} = CAST('-Infinity' AS DOUBLE) THEN NULL ELSE {q} END"
     )
 
 
@@ -239,7 +117,6 @@ def build_snapshot(
     inputs: SnapshotInputs,
     run_ts: datetime,
     strict_repr: bool = False,
-    join_on_pool_name: bool = False,
 ) -> DataFrame:
     """Assemble the 46-column snapshot for every (user, pool) pair at once.
 
@@ -247,106 +124,142 @@ def build_snapshot(
     (reference main.py:11-12), now a relation. ``run_ts``: injected wall
     clock (replaces main.py:171, 271 — §2C.6). ``strict_repr``: render the
     packed-string floats with Python ``repr`` for byte-parity with the
-    reference's f-strings (default: JVM rendering, documented deviation).
-    ``join_on_pool_name``: strict-parity J1/J2 — the reference merges
-    history and fees onto pools by the human-readable ``pool_name``
-    (main.py:182-183), the name having been stamped onto each summary from
-    ``df_pools`` itself (main.py:138, 176). Faithfully reproduced here:
-    summaries pick up their name through the pool dim, then join on
-    ``(user_address, pool_name)`` — INCLUDING the hazard that two pools
-    sharing a display name cross-multiply rows, which is exactly why the
-    default joins on ``pool_address`` (SURVEY §2C.5 deviation, gated)."""
-    pools = _pool_dim(inputs)
-    history = _history_summary(inputs)
-    fees = _fees_summary(inputs, strict_repr)
-    decimals = pools.select("pool_address", "token_x_decimals", "token_y_decimals")
-    contract = _contract_summary(inputs, decimals, strict_repr)
+    reference's f-strings (default: JVM rendering, documented deviation)."""
+    p1d = _renames(inputs.pools_1d, POOL_RENAME_1D)
+    p1h = _renames(inputs.pools_1h, POOL_RENAME_1H)
 
-    # J1/J2/P13 as keyed left joins; pool dim is broadcast (tiny at any SF).
-    if join_on_pool_name:
-        name_map = F.broadcast(pools.select("pool_address", "pool_name"))
-        df = (
-            pairs.join(F.broadcast(pools), "pool_address", "left")
-            .join(
-                history.join(name_map, "pool_address").drop("pool_address"),
-                ["user_address", "pool_name"],
-                "left",
-            )
-            .join(
-                fees.join(name_map, "pool_address").drop("pool_address"),
-                ["user_address", "pool_name"],
-                "left",
-            )
-            # P13 (contract concat) is positional in the reference, not a
-            # name merge — stays keyed by address even in strict mode.
-            .join(contract, PAIR_KEYS, "left")
-        )
-    else:
-        df = (
-            pairs.join(F.broadcast(pools), "pool_address", "left")
-            .join(history, PAIR_KEYS, "left")
-            .join(fees, PAIR_KEYS, "left")
-            .join(contract, PAIR_KEYS, "left")
+    def select(cols: dict[str, str]) -> str:
+        return ", ".join(f"{src} AS `{dst}`" for dst, src in cols.items())
+
+    def packed(x: str, y: str) -> str:
+        # "(binId: x, y; …)" sorted by binId (§2C.1; the reference relied
+        # on API order): collect (binId, item) structs, sort, join. Strict
+        # mode renders both floats through one CPython-repr lambda.
+        xy = f"array(CAST({x} AS STRING), CAST({y} AS STRING))"
+        if strict_repr:
+            xy = f"transform({xy}, j -> {py_float_repr_sql('j')})"
+        item = f"concat_ws(': ', CAST(binId AS STRING), concat_ws(', ', {xy}))"
+        return (
+            "concat('(', concat_ws('; ', transform(array_sort(collect_list("
+            f"named_struct('bin', binId, 'item', {item}))), s -> s.item)), ')')"
         )
 
-    # Every withColumn re-analyzes the (growing) plan — a chain of ~20 was
-    # >1 s of pure driver time on this DAG. Batched withColumns calls keep
-    # it to three analysis passes; intra-batch dependencies are expressed by
-    # sharing the Column expression objects (codegen CSEs the duplicates).
+    fees_str = "fees_per_bin(bin_id: token_x, token_y_amounts)"
+    bins_str = "bin_distribution(bin id: token_x_amount, token_y_amounts)"
+    # D1-D6 (main.py:198-201, 257-269, 275-286) over the joined row, and
+    # P9's injected wall clock (main.py:171, 271-273).
+    total_usd = "(`token_x(USD)` + `token_y(USD)`)"
+    fees_1d, liq = "`pool[total_fees(USD)](1d)`", "`pool[liquidity]`"
+    derived = {
+        "current_unix_timestamp": str(int(run_ts.timestamp())),
+        "timestamp(datetime_pst)": f"'{run_ts.strftime('%Y-%m-%d %H:%M:%S')}'",
+        "total_token_value(USD)": total_usd,
+        "accrued_fees_token_x(USD)": "accrued_fees_token_x * token_x_price",
+        "accrued_fees_token_y(USD)": "accrued_fees_token_y * token_y_price",
+        "impermanent_loss(USD)": f"`value_if_held(USD)` - {total_usd}",
+        "user_%_of_pool_liquidity": f"{_safe_div(total_usd, liq)} * 100",
+        "fees_annual": f"{fees_1d} * 365",
+        "APR%": f"{_safe_div(f'{fees_1d} * 365', liq)} * 100",
+        "APY%": f"(pow(1 + {_safe_div(fees_1d, liq)}, 365) - 1) * 100",
+        "APR_1d%": f"{_safe_div(fees_1d, liq)} * 100",
+    }
+    pool_cols = ", ".join(f"`{c}`" for c in {**p1d, **p1h} if c != "pool_address")
+    absent = {*POOL_RENAME_1D.values(), *POOL_RENAME_1H.values()} - {*p1d, *p1h}
+    out = ", ".join(f"{derived.get(c, f'`{c}`')} AS `{c}`" for c in SNAPSHOT_ORDER if c not in absent)
 
-    # Empty-branch defaults (main.py:143-153, 159-170, 227-244): zeros for
-    # amounts, "()" packed strings, NULL time — the reference's loops over
-    # empty lists, supplied here by coalesce after the left joins.
-    df = df.withColumns(
-        {
-            "total_tokenX_amount_initial_deposit": F.coalesce(
-                "total_tokenX_amount_initial_deposit", F.lit(0.0)
-            ),
-            "total_tokenY_amount_initial_deposit": F.coalesce(
-                "total_tokenY_amount_initial_deposit", F.lit(0.0)
-            ),
-            "accrued_fees_token_x": F.coalesce("accrued_fees_token_x", F.lit(0.0)),
-            "accrued_fees_token_y": F.coalesce("accrued_fees_token_y", F.lit(0.0)),
-            "fees_per_bin(bin_id: token_x, token_y_amounts)": F.coalesce(
-                F.col("`fees_per_bin(bin_id: token_x, token_y_amounts)`"), F.lit("()")
-            ),
-            "token_x_amount": F.coalesce("token_x_amount", F.lit(0.0)),
-            "token_y_amount": F.coalesce("token_y_amount", F.lit(0.0)),
-            "bin_distribution(bin id: token_x_amount, token_y_amounts)": F.coalesce(
-                F.col("`bin_distribution(bin id: token_x_amount, token_y_amounts)`"),
-                F.lit("()"),
-            ),
-        }
+    # Empty branches (main.py:143-153, 159-170, 227-244) are pairs absent
+    # from a summary: the left joins plus coalesce give zeros, "()" and a
+    # NULL deposit time, the reference's loops over empty lists.
+    sql = f"""
+    WITH pools AS (
+        SELECT * FROM (SELECT {select(p1d)} FROM {{pools_1d}})
+        LEFT JOIN (SELECT {select(p1h)} FROM {{pools_1h}}) USING (pool_address)
+    ),
+    deposits AS (
+        SELECT user_address, pool_address,
+            sum(tokenX_amount) AS total_tokenX_amount_initial_deposit,
+            sum(tokenY_amount) AS total_tokenY_amount_initial_deposit,
+            date_format(max(ts), 'yyyy-MM-dd HH:mm:ss') AS MostRecentDepositTime
+        FROM (
+            SELECT *, rank() OVER (PARTITION BY user_address, pool_address
+                                   ORDER BY blockNumber DESC, ts DESC) AS rk
+            FROM (
+                SELECT user_address, poolAddress AS pool_address, to_timestamp(`timestamp`) AS ts,
+                    blockNumber,
+                    coalesce(try_cast(tokenX.amount AS DOUBLE), 0D) AS tokenX_amount,
+                    coalesce(try_cast(tokenY.amount AS DOUBLE), 0D) AS tokenY_amount
+                FROM {{history}} WHERE isDeposit
+            )
+        )
+        WHERE rk = 1
+        GROUP BY user_address, pool_address
+    ),
+    fee_totals AS (
+        SELECT user_address, pool_address,
+            sum(feesX) AS accrued_fees_token_x, sum(feesY) AS accrued_fees_token_y,
+            {packed("feesX", "feesY")} AS `{fees_str}`
+        FROM (
+            SELECT user_address, poolAddress AS pool_address, binId,
+                coalesce(try_cast(accruedFeesX AS DOUBLE), 0D) AS feesX,
+                coalesce(try_cast(accruedFeesY AS DOUBLE), 0D) AS feesY
+            FROM {{fees}}
+        )
+        GROUP BY user_address, pool_address
+    ),
+    positions AS (
+        -- raw sums scaled ONCE (main.py:234, 241-242), per-bin amounts
+        -- scaled for the packed string (main.py:237-238)
+        SELECT user_address, pool_address,
+            sum(ux_raw) / pow(10D, first(token_x_decimals)) AS token_x_amount,
+            sum(uy_raw) / pow(10D, first(token_y_decimals)) AS token_y_amount,
+            {packed("ux", "uy")} AS `{bins_str}`
+        FROM (
+            SELECT *, ux_raw / pow(10D, token_x_decimals) AS ux, uy_raw / pow(10D, token_y_decimals) AS uy
+            FROM (
+                SELECT user_address, poolAddress AS pool_address, binId, token_x_decimals, token_y_decimals,
+                    CAST(reserveX AS DOUBLE) * {_safe_div("CAST(shares AS DOUBLE)", "CAST(totalShares AS DOUBLE)")}
+                        AS ux_raw,
+                    CAST(reserveY AS DOUBLE) * {_safe_div("CAST(shares AS DOUBLE)", "CAST(totalShares AS DOUBLE)")}
+                        AS uy_raw
+                FROM {{bins}} b
+                LEFT JOIN (SELECT pool_address, token_x_decimals, token_y_decimals FROM pools) d
+                    ON d.pool_address = b.poolAddress
+            )
+        )
+        GROUP BY user_address, pool_address
+    ),
+    joined AS (
+        SELECT /*+ BROADCAST(pools) */ user_address, pool_address, {pool_cols}, h.MostRecentDepositTime,
+            coalesce(h.total_tokenX_amount_initial_deposit, 0D) AS total_tokenX_amount_initial_deposit,
+            coalesce(h.total_tokenY_amount_initial_deposit, 0D) AS total_tokenY_amount_initial_deposit,
+            coalesce(f.accrued_fees_token_x, 0D) AS accrued_fees_token_x,
+            coalesce(f.accrued_fees_token_y, 0D) AS accrued_fees_token_y,
+            coalesce(f.`{fees_str}`, '()') AS `{fees_str}`,
+            coalesce(c.token_x_amount, 0D) AS token_x_amount,
+            coalesce(c.token_y_amount, 0D) AS token_y_amount,
+            coalesce(c.`{bins_str}`, '()') AS `{bins_str}`
+        FROM {{pairs}}
+        LEFT JOIN pools USING (pool_address)
+        LEFT JOIN deposits h USING (user_address, pool_address)
+        LEFT JOIN fee_totals f USING (user_address, pool_address)
+        LEFT JOIN positions c USING (user_address, pool_address)
     )
-
-    # D1-D6 (main.py:198-201, 257-269, 275-286) + P9 injected wall clock
-    # (main.py:171, 271-273); nullif (safe_div) replaces divide-then-scrub.
-    vih = (
-        F.col("total_tokenX_amount_initial_deposit") * F.col("token_x_price")
-        + F.col("total_tokenY_amount_initial_deposit") * F.col("token_y_price")
+    SELECT {out}
+    FROM (
+        SELECT *,
+            total_tokenX_amount_initial_deposit * token_x_price
+                + total_tokenY_amount_initial_deposit * token_y_price AS `value_if_held(USD)`,
+            token_x_price * token_x_amount AS `token_x(USD)`,
+            token_y_price * token_y_amount AS `token_y(USD)`
+        FROM joined
     )
-    tx_usd = F.col("token_x_price") * F.col("token_x_amount")
-    ty_usd = F.col("token_y_price") * F.col("token_y_amount")
-    total_usd = tx_usd + ty_usd
-    fees_1d = F.col("`pool[total_fees(USD)](1d)`")
-    liq = F.col("`pool[liquidity]`")
-    df = df.withColumns(
-        {
-            "value_if_held(USD)": vih,
-            "token_x(USD)": tx_usd,
-            "token_y(USD)": ty_usd,
-            "total_token_value(USD)": total_usd,
-            "accrued_fees_token_x(USD)": F.col("accrued_fees_token_x") * F.col("token_x_price"),
-            "accrued_fees_token_y(USD)": F.col("accrued_fees_token_y") * F.col("token_y_price"),
-            "impermanent_loss(USD)": vih - total_usd,
-            "user_%_of_pool_liquidity": safe_div(total_usd, liq) * 100,
-            "fees_annual": fees_1d * 365,
-            "APR%": safe_div(fees_1d * 365, liq) * 100,
-            "APY%": (F.pow(1 + safe_div(fees_1d, liq), 365) - 1) * 100,
-            "APR_1d%": safe_div(fees_1d, liq) * 100,
-            "current_unix_timestamp": F.lit(int(run_ts.timestamp())),
-            "timestamp(datetime_pst)": F.lit(run_ts.strftime("%Y-%m-%d %H:%M:%S")),
-        }
+    """
+    return pairs.sparkSession.sql(
+        sql,
+        pairs=pairs,
+        pools_1d=inputs.pools_1d,
+        pools_1h=inputs.pools_1h,
+        history=inputs.history,
+        fees=inputs.fees,
+        bins=inputs.bins,
     )
-    # P14 (main.py:293-343)
-    return reorder_existing(df, SNAPSHOT_ORDER)

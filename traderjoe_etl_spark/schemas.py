@@ -13,7 +13,7 @@ Derived field-by-field from the reference (FIXTURES.md §A):
 
 Schema philosophy (SURVEY.md §1.3): sources get explicit schemas and
 PERMISSIVE reads (missing → NULL); the reference's "keep whichever columns
-exist" behavior is reproduced by functions.projection.project_rename.
+exist" behavior is reproduced by plans/traderjoe.py::build_snapshot.
 """
 
 from __future__ import annotations
@@ -108,7 +108,7 @@ BINS_RESERVE_SCHEMA = T.StructType(
 
 # The reference's fixed output order (main.py:293-340), '1h'/'1d' suffixes
 # resolved per main.py:46, 85. Emission is existence-tolerant
-# (projection.reorder_existing ≡ main.py:342-343).
+# (build_snapshot drops absent pool columns ≡ main.py:342-343).
 SNAPSHOT_ORDER = [
     "current_unix_timestamp",
     "timestamp(datetime_pst)",
