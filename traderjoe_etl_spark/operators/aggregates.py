@@ -74,38 +74,20 @@ def argmax_rows(df: DataFrame, keys: Sequence[str], order_cols: Sequence[str | C
     )
 
 
-def sorted_string_agg(
-    order_by: Sequence[Column], expr: Column, sep: str, wrap: tuple[str, str] | None
-) -> Column:
-    """Aggregate Column joining ``expr`` over the group's rows, sorted by
-    ``order_by`` (left to right) and optionally wrapped — the one place
-    the packed per-bin strings ``"(binId: x, y; …)"`` (main.py:163-170,
-    239-244) are built. The reference relies on API response order; distributed
+def packed_string_sql(key: str, item: str) -> str:
+    """SQL text of the aggregate joining ``item`` over the group's rows,
+    sorted by ``key``, as ``"(item; item; …)"`` — the one place the packed
+    per-bin strings ``"(binId: x, y; …)"`` (main.py:163-170, 239-244) are
+    built. The reference relies on API response order; distributed
     collection has no such order, so rows are sorted inside the group
     (SURVEY.md §2C.1).
 
-    Implementation: ``collect_list(struct(order_by…, rendered))`` →
-    ``array_sort`` (sorts by struct fields left-to-right) → ``transform`` to
-    the rendered string → ``concat_ws``. All higher-order built-ins; being
-    a Column, it shares its ``groupBy`` with any sibling aggregates.
-    """
-    packed = F.struct(*[c.alias(f"_o{i}") for i, c in enumerate(order_by)], expr.alias("_s"))
-    joined = F.concat_ws(sep, F.transform(F.array_sort(F.collect_list(packed)), lambda s: s["_s"]))
-    if wrap:
-        joined = F.concat(F.lit(wrap[0]), joined, F.lit(wrap[1]))
-    return joined
-
-
-def string_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    expr: Column,
-    order_by: Sequence[str],
-    sep: str = "; ",
-    out: str = "agg_string",
-    wrap: tuple[str, str] | None = ("(", ")"),
-) -> DataFrame:
-    """Deterministic per-group string aggregation: one row per ``keys``
-    group holding :func:`sorted_string_agg` of ``expr`` as ``out``."""
-    joined = sorted_string_agg([F.col(c) for c in order_by], expr, sep, wrap)
-    return df.groupBy(*keys).agg(joined.alias(out))
+    ``collect_list(named_struct(key, item))`` → ``array_sort`` (sorts by
+    the key, then the item) → ``transform`` to the item → ``concat_ws``.
+    All higher-order built-ins; spliced into SQL text (``build_snapshot``)
+    or made a Column with ``F.expr``, it shares its ``GROUP BY`` with any
+    sibling aggregates."""
+    return (
+        "concat('(', concat_ws('; ', transform(array_sort(collect_list("
+        f"named_struct('bin', {key}, 'item', {item}))), s -> s.item)), ')')"
+    )

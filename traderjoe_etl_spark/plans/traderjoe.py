@@ -38,6 +38,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame
 
 from ..functions.pyrepr import py_float_repr_sql
+from ..operators.aggregates import packed_string_sql
 from ..schemas import SNAPSHOT_ORDER
 
 PAIR_KEYS = ["user_address", "pool_address"]
@@ -132,17 +133,12 @@ def build_snapshot(
         return ", ".join(f"{src} AS `{dst}`" for dst, src in cols.items())
 
     def packed(x: str, y: str) -> str:
-        # "(binId: x, y; …)" sorted by binId (§2C.1; the reference relied
-        # on API order): collect (binId, item) structs, sort, join. Strict
-        # mode renders both floats through one CPython-repr lambda.
+        # "(binId: x, y; …)" sorted by binId (§2C.1). Strict mode renders
+        # both floats through one CPython-repr lambda.
         xy = f"array(CAST({x} AS STRING), CAST({y} AS STRING))"
         if strict_repr:
             xy = f"transform({xy}, j -> {py_float_repr_sql('j')})"
-        item = f"concat_ws(': ', CAST(binId AS STRING), concat_ws(', ', {xy}))"
-        return (
-            "concat('(', concat_ws('; ', transform(array_sort(collect_list("
-            f"named_struct('bin', binId, 'item', {item}))), s -> s.item)), ')')"
-        )
+        return packed_string_sql("binId", f"concat_ws(': ', CAST(binId AS STRING), concat_ws(', ', {xy}))")
 
     fees_str = "fees_per_bin(bin_id: token_x, token_y_amounts)"
     bins_str = "bin_distribution(bin id: token_x_amount, token_y_amounts)"

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.aggregates import argmax_rows, string_agg
+from ..operators.aggregates import argmax_rows, packed_string_sql
 from ..session import apply_runtime_confs
 from ..sources.tables import read_table
 from . import query
@@ -95,15 +95,15 @@ def latest_deposit_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fees_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The packed per-bin fee string ``"(binId: feesX, feesY; …)"``
-    (reference main.py:163-170) as a deterministic distributed string_agg:
+    (reference main.py:163-170) through the snapshot's packed-string builder:
     event_id plays binId, value plays the fee amount. Sorted by bin id
     inside the group (SURVEY.md §2C.1) — the reference relied on API order.
     """
     apply_runtime_confs(spark)
     events = read_table(spark, sf_dir, "events").filter(F.col("event_type") == "click")
-    rendered = F.concat_ws(": ", F.col("event_id").cast("string"), F.round(F.col("value"), 4).cast("string"))
-    packed = string_agg(
-        events, keys=["user_id"], expr=rendered, order_by=["event_id"], out="fees_per_bin"
+    rendered = "concat_ws(': ', CAST(event_id AS STRING), CAST(round(value, 4) AS STRING))"
+    packed = events.groupBy("user_id").agg(
+        F.expr(packed_string_sql("event_id", rendered)).alias("fees_per_bin")
     )
     totals = events.groupBy("user_id").agg(F.round(F.sum("value"), 4).alias("total_accrued"))
     return packed.join(totals, "user_id")
