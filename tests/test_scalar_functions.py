@@ -1,6 +1,6 @@
 """functions/pyrepr.py: the JVM CPython-repr renderer — byte equality with
 repr() over adversarial + random doubles inside its documented exact
-regime (normal doubles with |x| < 2^53, plus 0 / nan / ±inf), and
+regime (normal doubles with |x| < 2^63, plus 0 / nan / ±inf), and
 value-level round-trip everywhere."""
 
 from __future__ import annotations
@@ -35,7 +35,17 @@ def _in_exact_regime(x: float) -> bool:
     if x != x or math.isinf(x) or x == 0.0:
         return True
     ax = abs(x)
-    return 2.3e-308 < ax < 2.0**53
+    return 2.3e-308 < ax < 2.0**63
+
+
+def _integral_regime(rng: random.Random, n: int) -> list[float]:
+    """2^53 <= |x| < 2^63, where JDK 17's ``Double.toString`` prints the
+    integer's digits: both ends, every power of two, the powers of ten,
+    and ``n`` log-uniform values."""
+    vals = [2.0**53, 2.0**53 + 2, 2.0**63 - 1024, 1e16, 1e17, 1e18, 9.999999999999999e17]
+    vals += [2.0**e for e in range(53, 63)]
+    vals += [float(int(2.0 ** rng.uniform(53, 63))) for _ in range(n)]
+    return vals + [-v for v in vals[: len(vals) // 2]]
 
 
 def test_py_float_repr_expr(spark):
@@ -48,9 +58,10 @@ def test_py_float_repr_expr(spark):
             vals.append(x)
     for _ in range(5000):  # money-like domain the packed strings render
         vals.append(rng.uniform(0, 1000) / rng.choice([1, 100, 200, 1e6]))
+    vals += _integral_regime(rng, 12000)  # per-bin token amounts of uint reserves
 
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    rows = df.select("x", F.expr(py_float_repr_sql("CAST(x AS STRING)")).alias("r")).collect()
+    rows = df.select("x", F.expr(py_float_repr_sql("x")).alias("r")).collect()
     exact_bad, roundtrip_bad = [], []
     for row in rows:
         x, r = row["x"], row["r"]
@@ -68,5 +79,5 @@ def test_py_float_repr_expr(spark):
 
 def test_py_float_repr_expr_null_passthrough(spark):
     df = spark.createDataFrame([(None,), (2.5,)], "x double")
-    got = [r["r"] for r in df.select(F.expr(py_float_repr_sql("CAST(x AS STRING)")).alias("r")).collect()]
+    got = [r["r"] for r in df.select(F.expr(py_float_repr_sql("x")).alias("r")).collect()]
     assert got == [None, "2.5"]

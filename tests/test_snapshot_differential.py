@@ -11,9 +11,9 @@ packed strings. The SQL shares no text with the program or with the
 registry's ``snapshot_pipeline`` oracle, so neither can check itself.
 
 Floats compare at relative 1e-9 (sum order differs between engines);
-packed strings, ``MostRecentDepositTime`` and every non-float column
-compare exactly, except that a packed float at or above 2^53 only has to
-parse to the same double (see ``_same_packed``). Two pairs are edited into edge cases: one whose latest
+packed strings (byte for byte, including the per-bin amounts at or above
+2^53), ``MostRecentDepositTime`` and every non-float column compare
+exactly. Two pairs are edited into edge cases: one whose latest
 deposits tie on (blockNumber, timestamp) and one with no deposit, no fee
 and no bin.
 """
@@ -288,33 +288,9 @@ def _oracle(u, pools, hist, fees, bins):
     return cols, [dict(zip(cols, r)) for r in cur.fetchall()]
 
 
-def _packed_items(s: str) -> list[list[str]]:
-    """``"(bin: x, y; …)"`` → [[bin, x, y], …]."""
-    body = s[1:-1]
-    return [item.replace(":", ",").split(", ") for item in body.split("; ")] if body else []
-
-
-def _same_packed(got: str, want: str) -> bool:
-    """Byte-equal packed strings, except that a float at or above 2^53 may
-    carry more digits than CPython's shortest repr when it parses to the
-    same double: the strict renderer's documented exact regime is
-    |x| < 2^53 (functions/pyrepr.py), and JDK 17's ``Double.toString``
-    is not always shortest above it."""
-    if got == want:
-        return True
-    g, w = _packed_items(got), _packed_items(want)
-    return len(g) == len(w) and all(
-        gi[0] == wi[0]
-        and all(a == b or (float(a) == float(b) and abs(float(b)) >= 2.0**53) for a, b in zip(gi[1:], wi[1:]))
-        for gi, wi in zip(g, w)
-    )
-
-
 def _same(a, b, is_double: bool) -> bool:
     if a is None or b is None:
         return a is None and b is None
-    if isinstance(a, str) and a.startswith("("):
-        return _same_packed(a, b)
     if is_double:
         if math.isnan(a) or math.isnan(b):
             return math.isnan(a) and math.isnan(b)

@@ -18,8 +18,8 @@ with pure string expressions, as SQL text that the snapshot statement
 (plans/traderjoe.py) splices in, so strict-parity mode needs no Python
 worker round trip (the pandas-UDF form it replaces cost two
 ArrowEvalPython stages in the snapshot pipeline). A Column is
-``F.expr(py_float_repr_sql("CAST(x AS STRING)"))``. Two structural
-tricks keep the expression tree small enough to evaluate fast:
+``F.expr(py_float_repr_sql("x"))``. Two structural tricks keep the
+expression tree small enough to evaluate fast:
 
 - the derived parts (digit string, exponent, sign) are bound ONCE per row
   through a single-element ``transform`` lambda — a poor man's LET
@@ -34,16 +34,20 @@ Byte equality with CPython over adversarial + random values is pinned by
 tests/test_scalar_functions.py::test_py_float_repr_expr.
 
 Exact regime: byte-identical to CPython repr for 0, ±nan/inf, and every
-NORMAL double with |x| < 2^53 (~9.0e15). Outside it — |x| >= 2^53 and
-denormals below ~2.2e-308 — Java emits more (still round-tripping) digits
-than CPython's shortest form, so the bytes can differ while the VALUE
-parses identically. The packed-bin strings this feeds render token/fee
-amounts; a per-bin token amount reaches 2^53 when a large uint reserve
-has few decimals (6 or 8), and then only its value matches CPython. The
-pandas-UDF ``py_float_repr`` remains the anywhere-exact fallback.
+NORMAL double with |x| < 2^63 (~9.2e18). JDK 17's ``Double.toString`` is
+not always shortest for |x| >= 2^53 (it prints the integer's digits), so
+in 2^53 <= |x| < 2^63 the renderer rebuilds the shortest digits from the
+exact integer ``CAST(abs(x) AS BIGINT)`` — the per-bin token amounts of
+the packed strings reach this range when a large uint reserve has few
+decimals (6 or 8). Outside the regime — |x| >= 2^63 and denormals below
+~2.2e-308 — Java can emit more (still round-tripping) digits than
+CPython's shortest form, so the bytes can differ while the VALUE parses
+identically. The pandas-UDF ``py_float_repr`` remains the anywhere-exact
+fallback.
 
 Scale note: a handful of string primitives inside the scan's projection —
-O(len) per value, no shuffle, no Python worker.
+O(len) per value, no shuffle, no Python worker; a value in 2^53 <= |x| <
+2^63 also parses up to 34 candidate digit strings back to doubles.
 """
 
 from __future__ import annotations
@@ -78,14 +82,12 @@ def _render_parts_sql(p: str) -> str:
     )
 
 
-def py_float_repr_sql(j: str) -> str:
-    """SQL text rendering a double exactly as CPython ``repr`` would, from
-    ``j``: the text of Spark's own rendering ``CAST(x AS STRING)``, best a
-    column or lambda variable since it is spliced several times.
+def _from_java_sql(j: str) -> str:
+    """CPython rendering from ``j``, a lambda variable holding Java's
+    shortest rendering of the double.
 
     Handles NaN/±Infinity (Java ``NaN``/``Infinity`` → ``nan``/``inf``),
     negative zero, integral doubles, and both scientific-notation regimes.
-    NULL in → NULL out (same contract as the pandas-UDF form it replaces).
     """
     # Java scientific form "<mant>E<exp>", mant = [-]d.d+ with exactly one
     # integer digit and shortest fraction, so the only trailing zero is
@@ -107,3 +109,54 @@ def py_float_repr_sql(j: str) -> str:
         # the same shortest digits — pass through.
         f" WHEN contains({j}, 'E') THEN {from_sci} ELSE {j} END"
     )
+
+
+def _shortest_integral_sql(x: str) -> str:
+    """Java's ``d.dddE<e>`` form of ``|x|`` with the shortest round-trip
+    digits, for 2^53 <= |x| < 2^63, where every double is an integer and
+    ``CAST(abs(x) AS BIGINT)`` holds its exact digits ``d``.
+
+    For n = 1, 2, … the two n-digit neighbours of ``d`` (truncated, and
+    truncated + 1) are candidates; the nearer one (ties to even: the
+    half-even rounding of ``d``) is tried first, the other second, and the
+    first that parses back to ``|x|`` wins — CPython's shortest, nearest
+    digits. Rounding works on the digit string (``bround`` needs a
+    foldable scale). The ``aggregate`` stops evaluating candidates once
+    one is found (``coalesce`` is lazy)."""
+    p, r = "substring(d, 1, n)", "substring(d, n + 1)"
+    k = "(length(d) - n)"
+    half = f"rpad('5', {k}, '0')"
+    up = f"({r} > {half} OR ({r} = {half} AND {k} > 0 AND substring({p}, n, 1) IN ('1', '3', '5', '7', '9')))"
+    hi = f"CAST(CAST({p} AS BIGINT) + 1 AS STRING)"
+    near, far = f"CASE WHEN {up} THEN {hi} ELSE {p} END", f"CASE WHEN {up} THEN {p} ELSE {hi} END"
+
+    def hit(m: str) -> str:
+        return f"WHEN CAST(concat({m}, 'E', {k}) AS DOUBLE) = abs({x}) THEN named_struct('m', {m}, 'k', {k})"
+
+    found = f"CASE {hit(near)} {hit(far)} END"
+    # m may end in zeros only by a carry ("10"): trim them, and place the
+    # point after the first digit
+    s = "trim(TRAILING '0' FROM c.m)"
+    java = f"concat(substring({s}, 1, 1), '.', coalesce(nullif(substring({s}, 2), ''), '0'), 'E', length(c.m) - 1 + c.k)"
+    return (
+        f"get(transform(array(CAST(CAST(abs({x}) AS BIGINT) AS STRING)), d -> aggregate(sequence(1, 17),"
+        f" CAST(NULL AS STRUCT<m: STRING, k: INT>), (c, n) -> coalesce(c, {found}), c -> {java})), 0)"
+    )
+
+
+def py_float_repr_sql(x: str) -> str:
+    """SQL text rendering the double ``x`` exactly as CPython ``repr``
+    would; ``x`` is best a column or lambda variable, since it is spliced
+    several times. NULL in → NULL out (same contract as the pandas-UDF
+    form it replaces).
+
+    The Java rendering is bound once, through a 1-element ``transform``:
+    Spark's own ``CAST(x AS STRING)``, except for 2^53 <= |x| < 2^63,
+    where JDK 17 prints the integer's digits rather than the shortest
+    ones, and :func:`_shortest_integral_sql` rebuilds it."""
+    java = (
+        f"CASE WHEN abs({x}) >= 9007199254740992D AND abs({x}) < 9223372036854775808D"
+        f" THEN concat(CASE WHEN {x} < 0 THEN '-' ELSE '' END, {_shortest_integral_sql(x)})"
+        f" ELSE CAST({x} AS STRING) END"
+    )
+    return f"get(transform(array({java}), j -> {_from_java_sql('j')}), 0)"

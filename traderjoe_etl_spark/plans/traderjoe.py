@@ -137,7 +137,7 @@ def build_snapshot(
         # both floats through one CPython-repr lambda.
         xy = f"array(CAST({x} AS STRING), CAST({y} AS STRING))"
         if strict_repr:
-            xy = f"transform({xy}, j -> {py_float_repr_sql('j')})"
+            xy = f"transform(array({x}, {y}), v -> {py_float_repr_sql('v')})"
         return packed_string_sql("binId", f"concat_ws(': ', CAST(binId AS STRING), concat_ws(', ', {xy}))")
 
     fees_str = "fees_per_bin(bin_id: token_x, token_y_amounts)"
