@@ -48,15 +48,6 @@ def test_bloom_prefilter_join_equals_plain_join(spark, sf_dir):
     assert got.count() == want.count()
 
 
-def test_bloom_semi_join_mode(spark, sf_dir):
-    orders = read_table(spark, sf_dir, "orders")
-    cust = read_table(spark, sf_dir, "customer").where(F.col("c_acctbal") > 9000.0)
-    got = bloom_prefilter_join(orders, cust, "o_custkey", "c_custkey", how="semi")
-    want = orders.join(cust, orders.o_custkey == cust.c_custkey, "left_semi")
-    assert sorted(c for c in got.columns) == sorted(orders.columns)
-    assert got.count() == want.count()
-
-
 def test_bloom_filter_sits_on_probe_scan_before_exchange(spark, sf_dir):
     """The membership test must be a plain Filter in the probe branch —
     no UDF, no extra join, evaluated before any Exchange so the probe
@@ -71,31 +62,21 @@ def test_bloom_filter_sits_on_probe_scan_before_exchange(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_bloom_rejects_outer_joins(spark):
-    import pytest
-
-    df = spark.range(5).select(F.col("id").alias("k"))
-    with pytest.raises(ValueError):
-        bloom_prefilter_join(df, df, "k", "k", how="left")
-
-
 def test_bloom_native_big_build_path(spark, sf_dir):
-    """Forcing the big-build regime (tiny fpp → bitmap above the literal
+    """The big-build regime (a key bound whose bitmap exceeds the literal
     ceiling) must (a) produce a plan WITHOUT the giant literal array —
-    the sketch rides a broadcast value via bloom_filter_agg — and
-    (b) return exactly the plain-join result."""
+    the bitmap rides a broadcast value — and (b) return exactly the
+    plain-join result."""
     from traderjoe_etl_spark.operators.bloom import MAX_LITERAL_BITS, _optimal_bits
 
     orders = read_table(spark, sf_dir, "orders")
     cust = read_table(spark, sf_dir, "customer").where(F.col("c_acctbal") > 9000.0)
-    # force the big-build regime on the small fixture by dropping the
-    # literal ceiling below the sized bitmap (equivalent to a 10^8-key
-    # build crossing the real MAX_LITERAL_BITS)
-    n_keys = cust.select("c_custkey").distinct().count()
-    ceiling = _optimal_bits(n_keys, 0.01) - 1
-    assert ceiling < MAX_LITERAL_BITS
+    # an overestimated key bound (exact either way) sizes the bitmap the
+    # way a 10^5-key build would, past MAX_LITERAL_BITS
+    bound = 300_000
+    assert _optimal_bits(bound, 0.01) > MAX_LITERAL_BITS
     got = bloom_prefilter_join(
-        orders, cust, "o_custkey", "c_custkey", max_literal_bits=ceiling
+        orders, cust, "o_custkey", "c_custkey", expected_keys=bound
     ).select("o_orderkey", "c_custkey")
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "__bloom_words" in plan  # bitmap rides a broadcast column

@@ -1,4 +1,4 @@
-"""Deterministic media balancing and media decoding."""
+"""Media decoding."""
 
 from __future__ import annotations
 
@@ -6,36 +6,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import functions as F
-
-from traderjoe_etl_spark.operators.multimodal import MEDIA_SCHEMA, media_repartition
-
-
-def test_media_repartition_deterministic_balances_bytes(spark):
-    rows = [
-        (i, "image", bytearray(b"x" * (500_000 if i < 4 else 1_000)), ("m", 1, 1, 10))
-        for i in range(100)
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    rp = media_repartition(media, target_bytes=600_000, deterministic=True)
-    per_part = (
-        rp.withColumn("p", F.spark_partition_id())
-        .groupBy("p")
-        .agg(F.sum(F.length("content")).alias("b"))
-        .collect()
-    )
-    sizes = sorted(r.b for r in per_part)
-    # LPT round-robin: the 4 big blobs (500k each) must not co-locate —
-    # every partition stays under max_blob + total/n
-    total = 4 * 500_000 + 96 * 1_000
-    n = len(sizes)
-    assert n == 3  # exact bucket→partition map: no merged/empty partitions
-    assert sizes[-1] <= 500_000 + total // n + 1_000, sizes
-    # two-level LPT: the ranking window is salted, never a global sort
-    # (a SinglePartition exchange would be the 100-TB scale-killer)
-    plan = rp._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan
 
 
 def test_real_ppm_decode_roundtrip():

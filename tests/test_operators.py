@@ -100,11 +100,8 @@ def test_simhash_near_dups_have_small_hamming(spark):
     df = spark.createDataFrame(
         [(1, base), (2, variant), (3, other)], "doc_id long, text string"
     )
-    fp = {r.doc_id: r.simhash for r in simhash_fingerprint(df, "doc_id", "text").collect()}
-    near = spark.createDataFrame([(fp[1], fp[2]), (fp[1], fp[3])], "a long, b long").select(
-        F.bit_count(F.col("a").bitwiseXOR(F.col("b"))).alias("d")
-    ).collect()
-    d_near, d_far = near[0].d, near[1].d
+    fp = {r.doc_id: int(r.simhash, 16) for r in simhash_fingerprint(df, "doc_id", "text").collect()}
+    d_near, d_far = (fp[1] ^ fp[2]).bit_count(), (fp[1] ^ fp[3]).bit_count()
     assert d_near < d_far
     assert d_near <= 8  # one word in 60 flips few bits
 
@@ -166,11 +163,11 @@ def test_cosine_near_dup_arrow_matches_hof(spark, sf_dir):
     assert arrow.subtract(hof).count() == 0
 
 
-def test_cosine_near_dup_degenerate_bucket_bounded(spark):
+def test_cosine_near_dup_degenerate_bucket_bounded(spark, monkeypatch):
     """A degenerate all-identical-embedding cluster — unsplittable by ANY
     extra hyperplane, since identical vectors share every sign bit — must
     flow through the bounded block-pair path when its bucket exceeds
-    max_bucket_rows: no kernel group materializes more than ~2 blocks of
+    MAX_BUCKET_ROWS: no kernel group materializes more than ~2 blocks of
     rows, and the pair output is identical to the HOF join (every
     unordered pair scored exactly once)."""
     import math
@@ -178,6 +175,7 @@ def test_cosine_near_dup_degenerate_bucket_bounded(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
+    from traderjoe_etl_spark.operators import similarity
     from traderjoe_etl_spark.operators.similarity import (
         _block_assignments,
         lsh_bucket_key,
@@ -191,13 +189,14 @@ def test_cosine_near_dup_degenerate_bucket_bounded(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cap = 32
 
-    def run(**kw):
+    def run(impl):
         return cosine_near_dup_pairs(
-            emb, threshold=0.9, dim=8, n_planes=4, seed=42, **kw
+            emb, threshold=0.9, dim=8, n_planes=4, impl=impl
         ).select("id_a", "id_b", F.round("cosine", 6).alias("c"))
 
-    arrow = run(impl="arrow", max_bucket_rows=cap)
-    hof = run(impl="hof")
+    monkeypatch.setattr(similarity, "MAX_BUCKET_ROWS", cap)  # the 200-row bucket goes over
+    arrow = run("arrow")
+    hof = run("hof")
     n_pairs = arrow.count()
     assert n_pairs >= 200 * 199 // 2 + 10  # both identical clusters fully paired
     assert hof.subtract(arrow).count() == 0
@@ -226,11 +225,14 @@ def test_cosine_near_dup_degenerate_bucket_bounded(spark):
     assert max(r.n for r in sizes) < 200  # strictly below the bucket size
 
 
-def test_cosine_near_dup_arrow_string_ids(spark):
+def test_cosine_near_dup_arrow_string_ids(spark, monkeypatch):
     """The arrow kernel must carry NON-integral ids end-to-end (output
     schema follows the id type; numpy code-point comparisons == Spark's
     UTF8_BINARY byte order), through BOTH the per-bucket path and the
-    over-cap block-pair path (cap=8 forces it for the duplicate cluster)."""
+    over-cap block-pair path (a cap of 8 forces it for the duplicate
+    cluster)."""
+    from traderjoe_etl_spark.operators import similarity
+
     import numpy as np
 
     rng = np.random.default_rng(3)
@@ -240,13 +242,14 @@ def test_cosine_near_dup_arrow_string_ids(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
 
-    def run(**kw):
+    def run(impl):
         return cosine_near_dup_pairs(
-            emb, threshold=0.9, dim=8, n_planes=4, **kw
+            emb, threshold=0.9, dim=8, n_planes=4, impl=impl
         ).select("id_a", "id_b", F.round("cosine", 6).alias("c"))
 
-    hof = run(impl="hof")
-    arrow = run(impl="arrow", max_bucket_rows=8)
+    hof = run("hof")
+    monkeypatch.setattr(similarity, "MAX_BUCKET_ROWS", 8)
+    arrow = run("arrow")
     assert dict(arrow.dtypes)["id_a"] == "string"
     assert arrow.count() >= 30 * 29 // 2
     assert hof.subtract(arrow).count() == 0
@@ -333,7 +336,7 @@ def test_portable_simhash_matches_pure_python(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: r["simhash"]
-        for r in simhash_fingerprint(df, "doc_id", "text", hash_family="md5").collect()
+        for r in simhash_fingerprint(df, "doc_id", "text").collect()
     }
     for doc_id, text in rows:
         votes = [0] * 64
@@ -593,29 +596,6 @@ def test_hll_sketch_rollup_query(spark, sf_dir):
     assert "ALL" in rows and len(rows) >= 5
     detail_n = sum(r.n_orders for k, r in rows.items() if k != "ALL")
     assert rows["ALL"].n_orders == detail_n
-
-
-def test_merge_upsert_delete_arm(spark):
-    """MERGE delete arm: a matched source row marked for deletion drops
-    the target row; unmatched rows behave as update/insert/carry."""
-    from traderjoe_etl_spark.operators.merge import merge_upsert
-
-    target = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "k long, s string, v double"
-    )
-    source = spark.createDataFrame(
-        [(2, "B", 25.0, False), (3, None, None, True), (4, "d", 40.0, False)],
-        "k long, s string, v double, is_deleted boolean",
-    )
-    out = {
-        r.k: (r.s, r.v)
-        for r in merge_upsert(target, source.drop("is_deleted"), keys=["k"]).collect()
-    }
-    assert out[2] == ("B", 25.0) and out[4] == ("d", 40.0) and out[1] == ("a", 10.0)
-
-    deleted = merge_upsert(target, source, keys=["k"], delete_col="is_deleted")
-    keys = {r.k for r in deleted.collect()}
-    assert keys == {1, 2, 4}  # 3 deleted; 1 carried; 2 updated; 4 inserted
 
 
 def test_cosine_near_dup_auto_planes(spark, emb):

@@ -420,7 +420,7 @@ _FORCED_BROADCAST_WHITELIST = {
 }
 
 
-def test_forced_broadcast_lint_unit(spark):
+def test_forced_broadcast_lint_unit(spark, monkeypatch):
     """The lint itself: flags a pinned corpus dim; accepts aggregated /
     limit-capped / fixed-cardinality build sides; and gated_broadcast
     declines (= lint-clean) past its byte cap."""
@@ -472,11 +472,15 @@ def test_forced_broadcast_lint_unit(spark):
         orders.o_orderkey == F.col("l_orderkey"),
     )
     assert forced_broadcast_violations(hinted)
-    # ...and DECLINED past the cap (cap_bytes=1 forces the at-scale branch)
-    declined = orders.join(
-        gated_broadcast(li.select("l_orderkey"), sf, "lineitem", cap_bytes=1),
-        orders.o_orderkey == F.col("l_orderkey"),
-    )
+    # ...and DECLINED past the cap (a 1-byte cap forces the at-scale branch)
+    from traderjoe_etl_spark.operators import joins
+
+    with monkeypatch.context() as m:
+        m.setattr(joins, "GATED_BROADCAST_CAP", 1)
+        declined = orders.join(
+            gated_broadcast(li.select("l_orderkey"), sf, "lineitem"),
+            orders.o_orderkey == F.col("l_orderkey"),
+        )
     assert not forced_broadcast_violations(declined)
     # unknown table stat -> conservative: no hint
     unknown = orders.join(

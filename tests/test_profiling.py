@@ -1,4 +1,4 @@
-"""profile_columns: one-scan shape, approx vs exact distinct, null math."""
+"""profile_columns: exact distinct counts without an Expand, null math."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ def test_profile_values(spark, sf_dir):
         "event_id", "event_type",
         F.when(F.col("value") >= 10, F.col("value")).alias("value_nullable"),
     )
-    rows = {r["column"]: r for r in profile_columns(ev, distinct="exact").collect()}
+    rows = {r["column"]: r for r in profile_columns(ev).collect()}
     n = ev.count()
     assert rows["event_id"]["n_nonnull"] == n and rows["event_id"]["null_frac"] == 0.0
     assert rows["event_id"]["n_distinct"] == n  # unique key
@@ -25,30 +25,13 @@ def test_profile_values(spark, sf_dir):
     assert et["n_distinct"] == 5 and et["min_num"] is None and et["min_str"] == "click"
 
 
-def test_profile_single_scan(spark, sf_dir):
-    ev = read_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    plan = (
-        profile_columns(ev, distinct="approx")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("Scan parquet") == 1
-    assert "Expand" not in plan  # HLL mode: no row multiplication
-
-
-def test_profile_approx_close_to_exact(spark, sf_dir):
-    ev = read_table(spark, sf_dir, "events").select("user_id")
-    exact = {r["column"]: r["n_distinct"] for r in profile_columns(ev, distinct="exact").collect()}
-    approx = {r["column"]: r["n_distinct"] for r in profile_columns(ev, distinct="approx").collect()}
-    assert abs(approx["user_id"] - exact["user_id"]) <= 0.15 * exact["user_id"]
-
-
 def test_profile_exact_mode_has_no_expand(spark, sf_dir):
     """Exact-distinct mode must NOT plan the N-distinct Expand (it
     replicates every row N times); each distinct count is its own narrow
     two-phase aggregate stitched on with broadcast joins."""
     ev = read_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     plan = (
-        profile_columns(ev, distinct="exact")
+        profile_columns(ev)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Expand" not in plan

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from traderjoe_etl_spark.operators.sampling import (
     hash_sample,
     rate_threshold_hex,
+    sample_bucket,
     stratified_hash_sample,
 )
 from traderjoe_etl_spark.sources.tables import read_table
@@ -41,8 +42,9 @@ def test_samples_nest_by_threshold_prefix(spark, sf_dir):
 
 def test_seed_changes_membership(spark, sf_dir):
     orders = read_table(spark, sf_dir, "orders")
-    a = _keys(hash_sample(orders, "o_orderkey", 0.1, seed="42"), "o_orderkey")
-    b = _keys(hash_sample(orders, "o_orderkey", 0.1, seed="43"), "o_orderkey")
+    thr = F.lit(rate_threshold_hex(0.1))
+    a = _keys(orders.filter(sample_bucket("o_orderkey", "42") < thr), "o_orderkey")
+    b = _keys(orders.filter(sample_bucket("o_orderkey", "43") < thr), "o_orderkey")
     assert a != b and abs(len(a) - len(b)) < 0.05 * len(a) + 50
 
 

@@ -57,19 +57,19 @@ def test_corpus_width_formula(tmp_path):
     """corpus_width pins the shared reduce-side width formula (one helper,
     three call sites: Q16 distinct, pagerank edge dedup, sparse-cosine
     postings join — VERDICT r8 item 3): bytes x selectivity // bytes_per_part,
-    clamped to [lo, hi]; unknown table -> floor (conservative small plan)."""
+    clamped to [32, 1024]; unknown table -> floor (conservative small plan)."""
     from traderjoe_etl_spark.sources.tables import corpus_width
 
     p = tmp_path / "fact.parquet"
     p.mkdir()
     (p / "part-0.parquet").write_bytes(b"x" * 10240)  # 10 KB
     sf = str(tmp_path)
-    # mid-range: 10240 * 1.0 // 1024 = 10
-    assert corpus_width(sf, "fact", bytes_per_part=1024, lo=2, hi=64) == 10
+    # mid-range: 10240 * 1.0 // 128 = 80
+    assert corpus_width(sf, "fact", bytes_per_part=128) == 80
     # selectivity scales the byte estimate (pagerank's 1/7-year edge slice)
-    assert corpus_width(sf, "fact", bytes_per_part=1024, lo=2, hi=64, selectivity=0.5) == 5
+    assert corpus_width(sf, "fact", bytes_per_part=128, selectivity=0.5) == 40
     # clamps: floor when tiny, ceiling when huge
-    assert corpus_width(sf, "fact", bytes_per_part=10**9, lo=32, hi=1024) == 32
-    assert corpus_width(sf, "fact", bytes_per_part=1, lo=32, hi=1024) == 1024
+    assert corpus_width(sf, "fact", bytes_per_part=10**9) == 32
+    assert corpus_width(sf, "fact", bytes_per_part=1) == 1024
     # unknown table -> table_bytes 0 -> floor
-    assert corpus_width(sf, "missing", bytes_per_part=1024, lo=32, hi=1024) == 32
+    assert corpus_width(sf, "missing", bytes_per_part=1024) == 32

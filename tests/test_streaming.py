@@ -98,9 +98,7 @@ def test_stream_stream_join_matches_batch(spark, event_dir):
     buys = spark.readStream.schema(EVENTS_SCHEMA).parquet(event_dir).filter(
         F.col("event_type") == "purchase"
     )
-    joined = stream_stream_interval_join(
-        views, buys, key="user_id", ts_col="ts", within="1 hour", watermark="0 seconds"
-    )
+    joined = stream_stream_interval_join(views, buys, within="1 hour")
     _drain(joined.select("user_id", "event_id", "event_id_r"), "ssjoin")
     got = spark.sql("SELECT count(*) AS c FROM ssjoin").collect()[0].c
 

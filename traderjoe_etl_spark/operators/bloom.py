@@ -14,7 +14,7 @@ tunable, and usable on any key expression.
 
 Construction is fully distributed and uses only built-ins:
 
-1. per-key bit positions: k = ``num_hashes`` probes, position_i =
+1. per-key bit positions: k = ``BLOOM_HASHES`` probes, position_i =
    ``xxhash64(key, seed=i) mod m`` (one ``explode`` of a small literal
    seed array — no Python),
 2. bitmap words: ``groupBy(position / 64)`` + ``bit_or(1 << (position %
@@ -53,6 +53,10 @@ import warnings
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Probes per key: the k of the standard sizing (k = 5 is near-optimal
+# at the 1 % fpp every caller asks for).
+BLOOM_HASHES = 5
+
 
 def _optimal_bits(n_keys: int, fpp: float) -> int:
     """Standard Bloom sizing: m = -n ln(p) / (ln 2)^2, rounded up to a
@@ -77,11 +81,10 @@ def build_bloom(
     *,
     expected_keys: int | None = None,
     fpp: float = 0.01,
-    num_hashes: int = 5,
 ) -> tuple[list[int], int, int]:
     """Aggregate the build side into a Bloom bitmap.
 
-    Returns ``(words, m_bits, num_hashes)`` where ``words`` is the dense
+    Returns ``(words, m_bits, BLOOM_HASHES)`` where ``words`` is the dense
     ``m_bits / 64``-long bitmap. The only driver-side data is the bitmap
     itself (sub-MB by sizing); build rows never leave the executors
     un-aggregated — the shuffle after the partial ``bit_or`` carries at
@@ -95,7 +98,7 @@ def build_bloom(
     m_bits = _optimal_bits(max(1, expected_keys), fpp)
 
     pos = build.select(
-        F.explode(_positions(key_col, num_hashes, m_bits)).alias("pos")
+        F.explode(_positions(key_col, BLOOM_HASHES, m_bits)).alias("pos")
     )
     # shiftleft with a *column* bit count needs call_function — the
     # python wrapper only takes a literal int.
@@ -110,7 +113,7 @@ def build_bloom(
     dense = [0] * (m_bits // 64)
     for row in words:
         dense[row["word_idx"]] = row["word"]
-    return dense, m_bits, num_hashes
+    return dense, m_bits, BLOOM_HASHES
 
 
 def might_contain(key: Column, words: list[int], m_bits: int, num_hashes: int) -> Column:
@@ -160,7 +163,6 @@ def native_bloom_prefilter(
     *,
     expected_keys: int,
     fpp: float = 0.01,
-    num_hashes: int = 5,
 ) -> DataFrame:
     """Big-build Bloom prefilter with the bitmap as a broadcast VALUE — a
     1-row ``array<long>`` aggregate joined with a broadcast hint — never a
@@ -184,7 +186,7 @@ def native_bloom_prefilter(
     m_bits = _optimal_bits(max(1, expected_keys), fpp)
     n_words = m_bits // 64
     key_col = F.col(build_key)
-    pos = build.select(F.explode(_positions(key_col, num_hashes, m_bits)).alias("pos"))
+    pos = build.select(F.explode(_positions(key_col, BLOOM_HASHES, m_bits)).alias("pos"))
     one_hot = F.call_function(
         "shiftleft", F.lit(1).cast("long"), F.pmod("pos", F.lit(64)).cast("int")
     )
@@ -212,7 +214,7 @@ def native_bloom_prefilter(
     joined = probe.join(F.broadcast(bf))
     test = F.col(probe_key).isNotNull()
     bitmap = F.col("__bloom_words")
-    for i in range(num_hashes):
+    for i in range(BLOOM_HASHES):
         p = F.pmod(F.xxhash64(F.col(probe_key), F.lit(i)), F.lit(m_bits))
         word = F.element_at(
             bitmap, F.call_function("shiftright", p, F.lit(6)).cast("int") + F.lit(1)
@@ -249,20 +251,17 @@ def bloom_prefilter_join(
     probe_key: str,
     build_key: str,
     *,
-    how: str = "inner",
     fpp: float = 0.01,
-    num_hashes: int = 5,
-    max_literal_bits: int = MAX_LITERAL_BITS,
     expected_keys: int | None = None,
 ) -> DataFrame:
-    """Exact equi-join with a Bloom prefilter on the probe side.
+    """Exact inner equi-join with a Bloom prefilter on the probe side.
 
-    Semantically identical to ``probe.join(build, on, how)`` for
-    ``how in ("inner", "semi" / "left_semi")`` — the bloom admits false
-    positives, and the exact join removes them; true matches always pass
-    (no false negatives). The win is that the probe's shuffle (or its
-    semi-join scan) only carries rows whose key is plausibly present:
-    at fpp=1% a 99%-selective join moves ~1% of the fact table plus noise.
+    Semantically identical to ``probe.join(build, on)`` — the bloom admits
+    false positives, and the exact join removes them; true matches always
+    pass (no false negatives). The win is that the probe's shuffle only
+    carries rows whose key is plausibly present: at fpp=1% a
+    99%-selective join moves ~1% of the fact table plus noise. A bitmap
+    above ``MAX_LITERAL_BITS`` takes the broadcast-value path.
 
     ``expected_keys`` (r12, guide §5 — keep plan construction off the
     driver's critical path): an UPPER BOUND on the build side's distinct
@@ -281,26 +280,17 @@ def bloom_prefilter_join(
     when the built bitmap's effective fpp exceeds twice ``fpp``. ``0`` or
     ``None`` falls back to the ``approx_count_distinct`` scan.
     """
-    if how not in ("inner", "semi", "left_semi", "leftsemi"):
-        raise ValueError(f"bloom prefilter preserves exactness only for inner/semi joins, got {how!r}")
     key_col = F.col(build_key)
     n_keys = expected_keys
     if not n_keys:
         n_keys = build.select(key_col.alias("k")).agg(
             F.approx_count_distinct("k").alias("n")
         ).collect()[0]["n"]
-    if _optimal_bits(max(1, n_keys), fpp) > max_literal_bits:
+    if _optimal_bits(max(1, n_keys), fpp) > MAX_LITERAL_BITS:
         # big build: bitmap as a broadcast value, not a plan literal
-        pref = native_bloom_prefilter(
-            probe, build, probe_key, build_key,
-            expected_keys=n_keys, fpp=fpp, num_hashes=num_hashes,
-        )
+        pref = native_bloom_prefilter(probe, build, probe_key, build_key, expected_keys=n_keys, fpp=fpp)
     else:
-        words, m_bits, k = build_bloom(
-            build, build_key, expected_keys=n_keys, fpp=fpp, num_hashes=num_hashes
-        )
+        words, m_bits, k = build_bloom(build, build_key, expected_keys=n_keys, fpp=fpp)
         _warn_if_underfilled(words, m_bits, k, fpp, n_keys)
         pref = probe.where(might_contain(F.col(probe_key), words, m_bits, k))
-    if how in ("semi", "left_semi", "leftsemi"):
-        return pref.join(build, pref[probe_key] == build[build_key], "left_semi")
     return pref.join(build, pref[probe_key] == build[build_key], "inner")

@@ -20,12 +20,10 @@ def save_bucketed(
     table_name: str,
     bucket_key: str,
     num_buckets: int = 16,
-    sorted_by: str | None = None,
 ) -> None:
-    """Persist as a bucketed (optionally sort-bucketed) managed table.
+    """Persist as a bucketed managed table.
 
-    Sorting within buckets additionally enables merge-join without a sort
-    step. Drops any previous table AND scrubs an orphaned local warehouse
+    Drops any previous table AND scrubs an orphaned local warehouse
     location (a dropped-catalog/leftover-dir combination otherwise fails
     with LOCATION_ALREADY_EXISTS)."""
     spark = df.sparkSession
@@ -33,13 +31,10 @@ def save_bucketed(
     wh = spark.conf.get("spark.sql.warehouse.dir", "")
     if wh.startswith("file:"):
         shutil.rmtree(os.path.join(wh[len("file:"):], table_name.lower()), ignore_errors=True)
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, bucket_key)
-    if sorted_by:
-        writer = writer.sortBy(sorted_by)
-    writer.saveAsTable(table_name)
+    df.write.mode("overwrite").bucketBy(num_buckets, bucket_key).saveAsTable(table_name)
 
 
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner") -> DataFrame:
-    """Join two same-bucketed tables on their bucket key — plan shows no
-    Exchange on either side (verify with .explain)."""
-    return spark.table(left_table).join(spark.table(right_table), key, how)
+def bucketed_join(spark: SparkSession, left_table: str, right_table: str, key: str) -> DataFrame:
+    """Inner-join two same-bucketed tables on their bucket key — plan shows
+    no Exchange on either side (verify with .explain)."""
+    return spark.table(left_table).join(spark.table(right_table), key, "inner")

@@ -11,7 +11,7 @@ distinct hash set broadcasts and the whole check is:
     train scan → explode n-grams → hash → broadcast-semi/inner join → count
 
 One exchange (the per-doc count), no all-pairs product, and the train-side
-shuffle carries 16-byte md5 prefixes, not documents. At 100 TB the cost is
+shuffle carries 8-byte n-gram hashes, not documents. At 100 TB the cost is
 the tokenize+explode map pass — linear, partition-parallel.
 """
 
@@ -29,24 +29,16 @@ def tokens(text_col: str | Column) -> Column:
     return F.filter(F.split(F.lower(F.trim(c)), r"\s+"), lambda w: w != F.lit(""))
 
 
-def ngram_hashes(tokens_col: Column, n: int, hasher: str = "md5") -> Column:
-    """Hashes of the word n-grams of a pre-projected token array.
-    Documents shorter than ``n`` words contribute no n-grams (no
-    fallback — a short doc cannot be contaminated at this n). The token
-    array MUST be a projected column: Generate does not CSE its child
-    (see dedup._tokens).
+def ngram_hashes(token_hashes: Column, n: int) -> Column:
+    """Hashes of the word n-grams of a document, from a pre-projected
+    array of its TOKEN hashes (``transform(tokens, t -> xxhash64(t))``):
+    each n-gram hash combines the n consecutive token hashes in one
+    codegen'd xxhash64, so no n-gram STRING is ever built and the exploded
+    stream carries 8-byte longs. Documents shorter than ``n`` words
+    contribute no n-grams (no fallback — a short doc cannot be
+    contaminated at this n). The array MUST be a projected column:
+    Generate does not CSE its child (see dedup._tokens).
 
-    ``hasher``: ``"md5"`` (default) is engine-portable — DuckDB/Trino/
-    BigQuery compute the same digest, which is what makes the op oracle-
-    checkable and lets a benchmark hash list be produced by any tool.
-    ``"xxhash64"`` is the cheap JVM-native path for engine-internal runs
-    at corpus scale (the digest is Spark-specific). ``"chained"`` (r12)
-    never builds the n-gram STRING at all: pass a pre-projected array of
-    TOKEN hashes (``transform(tokens, t -> xxhash64(t))``) instead of the
-    token array, and each n-gram hash combines the n consecutive token
-    hashes in one codegen'd xxhash64 — the concat+digest per position
-    (the measured floor of the string hashers) disappears and the
-    exploded stream carries 8-byte longs instead of 32-char digests.
     Hash equality ⟺ n-gram string equality up to 64-bit collisions (the
     repo's surrogate-key convention — the hash itself never reaches any
     output). The 64-bit bound: N distinct n-grams (corpus plus benchmark)
@@ -54,29 +46,16 @@ def ngram_hashes(tokens_col: Column, n: int, hasher: str = "md5") -> Column:
     expected collision at N ≈ 2³²·⁵ ≈ 6·10⁹. A collision can add a false
     match or merge two shared n-grams into one count, but never unflags a
     contaminated document; the token-hash level adds V²/2⁶⁵ for a V-token
-    vocabulary, negligible beside it."""
-    if hasher == "chained":
-        # tokens_col here is the array of token HASHES (array<bigint>)
-        return F.when(
-            F.size(tokens_col) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(tokens_col) - (n - 1)),
-                lambda i: F.xxhash64(
-                    *[F.element_at(tokens_col, i + F.lit(j)) for j in range(n)]
-                ),
-            ),
-        ).otherwise(F.array().cast("array<bigint>"))
-    hash_one = {
-        "md5": lambda c: F.md5(c),
-        "xxhash64": lambda c: F.xxhash64(c).cast("string"),
-    }[hasher]
+    vocabulary, negligible beside it. The hashes are Spark-specific; the
+    DuckDB oracle recomputes the shared-n-gram counts independently over
+    md5 digests of the n-gram strings."""
     return F.when(
-        F.size(tokens_col) >= n,
+        F.size(token_hashes) >= n,
         F.transform(
-            F.sequence(F.lit(1), F.size(tokens_col) - (n - 1)),
-            lambda i: hash_one(F.concat_ws(" ", F.slice(tokens_col, i, n))),
+            F.sequence(F.lit(1), F.size(token_hashes) - (n - 1)),
+            lambda i: F.xxhash64(*[F.element_at(token_hashes, i + F.lit(j)) for j in range(n)]),
         ),
-    ).otherwise(F.array().cast("array<string>"))
+    ).otherwise(F.array().cast("array<bigint>"))
 
 
 def contamination_report(
@@ -85,7 +64,6 @@ def contamination_report(
     text_col: str,
     id_col: str,
     n: int = 8,
-    hasher: str = "md5",
 ) -> DataFrame:
     """Per-training-document count of distinct n-gram hashes shared with
     the benchmark set → ``(id_col, n_shared_ngrams)``, contaminated docs
@@ -100,16 +78,12 @@ def contamination_report(
     the 500k-doc bench scale, 38→12 s (a full-corpus shuffle that the
     filter then throws away)."""
     def explode_hashes(df: DataFrame) -> DataFrame:
-        toks = df.select(id_col, tokens(text_col).alias("__toks"))
-        if hasher == "chained":
-            # hash each token once, chain windows over the hash array —
-            # no n-gram string, no digest (see ngram_hashes)
-            toks = toks.select(
-                id_col, F.transform("__toks", lambda t: F.xxhash64(t)).alias("__toks")
-            )
-        return toks.select(
-            id_col, F.explode(ngram_hashes(F.col("__toks"), n, hasher)).alias("__h")
+        # hash each token once, chain windows over the hash array — no
+        # n-gram string, no digest (see ngram_hashes)
+        toks = df.select(id_col, tokens(text_col).alias("__toks")).select(
+            id_col, F.transform("__toks", lambda t: F.xxhash64(t)).alias("__toks")
         )
+        return toks.select(id_col, F.explode(ngram_hashes(F.col("__toks"), n)).alias("__h"))
 
     bench_hashes = explode_hashes(benchmark).select("__h").distinct()
     return (

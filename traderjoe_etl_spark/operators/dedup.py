@@ -10,8 +10,8 @@ Three tiers, all shuffle-disciplined:
 - ngram Jaccard: exact similarity for a given candidate-pair set (the
            verifier behind minhash).
 
-Everything is built-in expressions (xxhash64, higher-order array fns) —
-no Python UDFs anywhere in the hot path.
+Everything is built-in expressions (xxhash64, md5, higher-order array
+fns) — no Python UDFs anywhere in the hot path.
 """
 
 from __future__ import annotations
@@ -21,8 +21,12 @@ from pyspark.sql import functions as F
 
 from .text import tokens
 
+# k-word shingles, 64 MinHash permutations in 16 LSH bands of 4 rows:
+# P(candidate) ≈ 1-(1-j⁴)¹⁶, steep around Jaccard ≈ 0.5.
+SHINGLE_K, NUM_HASHES, LSH_BANDS = 3, 64, 16
 
-def _shingles_from_tokens(toks: Column, k: int = 3) -> Column:
+
+def _shingles_from_tokens(toks: Column, k: int = SHINGLE_K) -> Column:
     """k-word shingles from a pre-projected token-array column. ALWAYS
     project ``tokens(text)`` into its own column before calling this: the
     shingle expression references the token array three times (size
@@ -59,11 +63,10 @@ def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_k: int = 3,
-    num_hashes: int = 64,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
-    """MinHash signature per document: (id, sig array<long>).
+    """MinHash signature per document: (id, sig array<long>) of
+    ``NUM_HASHES`` mins over ``SHINGLE_K``-word shingles.
 
     Plan shape matters here: explode shingles → hash each shingle string
     ONCE → 64 min-aggregates per doc. The k 'independent permutations' are
@@ -113,7 +116,7 @@ def minhash_signatures(
     if 0 < n_files < sc.defaultParallelism:
         df = df.repartition(sc.defaultParallelism)
     if hash_family == "chained":
-        k = shingle_k
+        k = SHINGLE_K
         # token hashes projected ONCE (referenced by the guard, the window
         # transform, and the short-doc fallback — CollapseProject keeps a
         # non-cheap alias referenced >1x as a single evaluation)
@@ -139,7 +142,7 @@ def minhash_signatures(
             F.col(id_col),
             F.explode(F.when(n >= k, window_hashes).otherwise(short_doc)).alias("__h"),
         )
-        terms = [f"min(xxhash64(__h, {i}))" for i in range(num_hashes)]
+        terms = [f"min(xxhash64(__h, {i}))" for i in range(NUM_HASHES)]
         return exploded.groupBy(id_col).agg(
             F.expr("array(" + ", ".join(terms) + ") AS sig")
         )
@@ -151,7 +154,7 @@ def minhash_signatures(
         df.select(F.col(id_col), tokens(text_col).alias("__w"))
         .select(
             F.col(id_col),
-            F.explode(_shingles_from_tokens(F.col("__w"), k=shingle_k)).alias("__sh"),
+            F.explode(_shingles_from_tokens(F.col("__w"))).alias("__sh"),
         )
         .select(F.col(id_col), base.alias("__h"))
     )
@@ -161,11 +164,11 @@ def minhash_signatures(
     # (profiled; same plan either way — aggregates inside array() are still
     # independent partial-agg min()s, the array assembles post-aggregation).
     if hash_family == "xxhash64":
-        terms = [f"min(xxhash64(__h, {i}))" for i in range(num_hashes)]
+        terms = [f"min(xxhash64(__h, {i}))" for i in range(NUM_HASHES)]
     else:
         terms = [
             f"min(({a} * __h + {b}) % {MERSENNE31})"
-            for (a, b) in minhash_coeffs(num_hashes)
+            for (a, b) in minhash_coeffs(NUM_HASHES)
         ]
     return exploded.groupBy(id_col).agg(F.expr("array(" + ", ".join(terms) + ") AS sig"))
 
@@ -174,14 +177,11 @@ def minhash_band_entries(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
     """(``__id``, band_idx, band_hash) LSH band entries per document —
     the building block of in-corpus candidate pairing
-    (:func:`minhash_lsh_candidates`). ``bands`` rows per doc; the band hash is
+    (:func:`minhash_lsh_candidates`). ``LSH_BANDS`` rows per doc; the band hash is
     murmur3 of the signature slice (default family — kept as its native
     INT since r12: the value is only ever an equi-join/group key, and a
     4-byte int in the band exchange and its sort keys replaces the old
@@ -189,10 +189,8 @@ def minhash_band_entries(
     fewer key bytes with identical collision behavior) or md5 of the
     decimal mins (portable family — any engine reproduces it, stays
     STRING)."""
-    rows_per_band = num_hashes // bands
-    with_sig = minhash_signatures(
-        df, id_col, text_col, shingle_k, num_hashes, hash_family=hash_family
-    ).select(F.col(id_col).alias("__id"), F.col("sig").alias("__sig"))
+    rows_per_band = NUM_HASHES // LSH_BANDS
+    with_sig = minhash_signatures(df, id_col, text_col, hash_family=hash_family).select(F.col(id_col).alias("__id"), F.col("sig").alias("__sig"))
 
     def band_key(b):
         if hash_family == "portable":
@@ -210,7 +208,7 @@ def minhash_band_entries(
             F.array(
                 *[
                     F.struct(F.lit(b).alias("band_idx"), band_key(b).alias("band_hash"))
-                    for b in range(bands)
+                    for b in range(LSH_BANDS)
                 ]
             )
         ).alias("band"),
@@ -221,16 +219,14 @@ def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
     hash_family: str = "xxhash64",
     pair_strategy: str = "self_join",
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash + LSH banding.
 
-    signature (num_hashes mins) → ``bands`` bands of ``num_hashes/bands``
-    values → hash each band → explode → same-bucket pair generation.
+    signature (``NUM_HASHES`` mins) → ``LSH_BANDS`` bands of
+    ``NUM_HASHES/LSH_BANDS`` values → hash each band → explode →
+    same-bucket pair generation.
     Two docs collide in ≥1 band ⇒ candidate pair. With 64 hashes / 16
     bands (r=4): P(collide) ≈ 1-(1-j⁴)¹⁶ — steep around Jaccard ≈ 0.5.
 
@@ -259,9 +255,7 @@ def minhash_lsh_candidates(
     the all-pairs O(n²) product never materializes. Returns distinct
     (id_a, id_b, n_bands_shared).
     """
-    band_entries = minhash_band_entries(
-        df, id_col, text_col, shingle_k, num_hashes, bands, hash_family
-    )
+    band_entries = minhash_band_entries(df, id_col, text_col, hash_family)
     if pair_strategy == "bucket_agg":
         # sort_array pins collect_list's nondeterministic order; pairing
         # each id with only its successors yields id_a < id_b exactly once.
@@ -307,51 +301,27 @@ def minhash_lsh_candidates(
         band_entries.unpersist()
 
 
-def simhash_fingerprint(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bits: int = 64,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
-    """64-bit SimHash per document.
+def simhash_fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """64-bit SimHash per document, rendered as 16 hex chars.
 
     explode tokens → hash → per-bit signed vote (+1/-1) summed per doc →
     sign → reassembled fingerprint. One shuffle on the doc id; the 64
     conditional sums are one partial-aggregated pass.
 
-    Default family: ``xxhash64`` → (id, simhash BIGINT). ``hash_family=
-    "md5"`` is the engine-portable family: the token hash is the first 16
-    hex chars of md5, read as four 16-bit chunks (chunk c = hex chars
-    4c+1..4c+4, bit i = (chunk[i//16] >> (i%16)) & 1), and the fingerprint
-    is rendered as a 16-hex-char string ``%04x`` per chunk left-to-right —
-    every step is exact integer arithmetic any engine reproduces, so the
-    fingerprints (and everything derived from them) can be verified
-    outside Spark. Same plan shape; ~2× the per-token hash cost.
+    The token hash is the first 16 hex chars of md5, read as four 16-bit
+    chunks (chunk c = hex chars 4c+1..4c+4, bit i = (chunk[i//16] >>
+    (i%16)) & 1), and the fingerprint is rendered ``%04x`` per chunk
+    left-to-right — every step is exact integer arithmetic any engine
+    reproduces, so the fingerprints (and everything derived from them) can
+    be verified outside Spark.
     """
     toks = df.select(
         F.col(id_col),
         F.explode(tokens(text_col)).alias("__tok"),
     )
-    # one F.expr per vote (vs ~6 py4j calls per composed Column: the wide
-    # generated expression is built as SQL strings, ~5× faster plan build)
     # Fused expression banks: ONE array(sum(...)×64) aggregate + ONE
     # projection expr — 2 py4j round trips / SQL parses instead of ~65
     # (see minhash_signatures; measured ~0.3 s of plan build per query).
-    if hash_family == "xxhash64":
-        toks = toks.withColumn("__h", F.xxhash64("__tok"))
-        votes = ", ".join(
-            f"sum(CASE WHEN (shiftright(__h, {i}) & 1) = 1 THEN 1 ELSE -1 END)"
-            for i in range(bits)
-        )
-        per_doc = toks.groupBy(id_col).agg(F.expr(f"array({votes}) AS __v"))
-        fp_sql = " | ".join(
-            f"shiftleft(CAST(CASE WHEN __v[{i}] > 0 THEN 1 ELSE 0 END AS BIGINT), {i})"
-            for i in range(bits)
-        )
-        return per_doc.select(F.col(id_col), F.expr(f"({fp_sql}) AS simhash"))
-    if bits != 64:
-        raise ValueError("md5 family is fixed at 64 bits")
     votes = ", ".join(
         f"sum(CASE WHEN (shiftright(__c{i // 16}, {i % 16}) & 1) = 1 THEN 1 ELSE -1 END)"
         for i in range(64)
@@ -378,22 +348,10 @@ def simhash_fingerprint(
     return per_doc.select(F.col(id_col), F.expr(f"{fp} AS simhash"))
 
 
-def simhash_hex_chunks(fp: Column | str, n: int = 4) -> list[Column]:
-    """The four 16-bit band keys of an md5-family hex fingerprint
-    (chunk c = hex chars 4c+1..4c+4)."""
-    c = F.col(fp) if isinstance(fp, str) else fp
-    return [F.conv(F.substring(c, 4 * i + 1, 4), 16, 10).cast("int") for i in range(n)]
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for given candidate pairs
-    (``pairs``: columns id_a, id_b). |A∩B| / |A∪B| via array set ops after
+def ngram_jaccard_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Exact ``SHINGLE_K``-gram Jaccard similarity for given candidate pairs
+    (``pairs``: columns id_a, id_b) over ``docs`` (doc_id, text).
+    |A∩B| / |A∪B| via array set ops after
     joining each side's distinct shingle set — only candidate pairs pay the
     set-intersection cost.
 
@@ -427,7 +385,7 @@ def ngram_jaccard_pairs(
     size threshold and ship it to every task — AQE picks broadcast vs
     shuffle from the measured size instead. Results are identical —
     pairs only ever reference their own ids."""
-    k = shingle_k
+    k = SHINGLE_K
     cand_ids = (
         pairs.select(F.col("id_a").alias("__id"))
         .union(pairs.select(F.col("id_b").alias("__id")))
@@ -435,11 +393,11 @@ def ngram_jaccard_pairs(
     )
     pruned = docs.join(
         cand_ids,
-        docs[id_col] == cand_ids["__id"],
+        docs["doc_id"] == cand_ids["__id"],
         "left_semi",
     )
     # token hashes projected once (see _shingles_from_tokens / minhash chained family)
-    th = pruned.select(F.col(id_col).alias("__id"), tokens(text_col).alias("__w")).select(
+    th = pruned.select(F.col("doc_id").alias("__id"), tokens("text").alias("__w")).select(
         "__id", F.transform("__w", lambda t: F.xxhash64(t)).alias("__th")
     )
     n = F.size(F.col("__th"))

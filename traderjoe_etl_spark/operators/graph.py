@@ -29,6 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Rounds before giving up; near-dup graphs converge in 2-4.
+MAX_ROUNDS = 20
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every strictly-larger neighbor of u to min(Γ(u) ∪ {u})."""
@@ -66,9 +69,7 @@ def _signature(edges: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-def connected_components(
-    pairs: DataFrame, src: str, dst: str, max_iter: int = 20
-) -> DataFrame:
+def connected_components(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     """Components of the undirected graph given by ``pairs`` → one row per
     non-isolated node: (node, component) with component = min node id of
     the component. Isolated nodes (no pairs) are their own trivial cluster
@@ -81,7 +82,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     sig = _signature(edges)
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
         new_sig = _signature(new_edges)
         edges.unpersist()
@@ -90,7 +91,7 @@ def connected_components(
             break
         sig = new_sig
     else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        raise RuntimeError(f"connected_components did not converge in {MAX_ROUNDS} rounds")
     # Converged star forest: every edge is (node → component root). Roots
     # appear only on the dst side; emit them mapped to themselves.
     nodes = edges.select(F.col("src").alias("node"), F.col("dst").alias("component"))

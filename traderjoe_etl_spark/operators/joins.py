@@ -19,14 +19,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Equi-join with an explicit broadcast hint on the dimension side.
+def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on) -> DataFrame:
+    """Inner equi-join with an explicit broadcast hint on the dimension side.
 
     At 100 TB the fact side must not shuffle for a kilobyte-scale dim;
     ``F.broadcast`` pins ``BroadcastHashJoinExec`` regardless of stats
     (AQE would usually get this right, but stats can be missing on fresh
     files)."""
-    return fact.join(F.broadcast(dim), on, how)
+    return fact.join(F.broadcast(dim), on, "inner")
 
 
 # Cap on the ESTIMATED on-disk-equivalent bytes a gated broadcast may pin.
@@ -38,8 +38,7 @@ def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on, how: str = "inner") 
 GATED_BROADCAST_CAP = 64 * 1024 * 1024
 
 
-def gated_broadcast(df: DataFrame, sf_dir: str, table: str, selectivity: float = 1.0,
-                    cap_bytes: int = GATED_BROADCAST_CAP) -> DataFrame:
+def gated_broadcast(df: DataFrame, sf_dir: str, table: str, selectivity: float = 1.0) -> DataFrame:
     """Broadcast hint that DECLINES itself when the relation scales past a
     byte cap — the sanctioned form for pinning a CORPUS-SCALED build side
     (the q18 lesson, VERDICT r8: an unconditional ``F.broadcast`` over a
@@ -58,7 +57,7 @@ def gated_broadcast(df: DataFrame, sf_dir: str, table: str, selectivity: float =
     so a call site that later widens its projection automatically widens
     the estimate instead of silently under-sizing the gate (ADVICE r9).
     The estimate needs only order-of-magnitude accuracy against a cap with
-    ~10x headroom. Below the cap: ``F.broadcast(df)`` (the measured
+    ~10x headroom. Below ``GATED_BROADCAST_CAP``: ``F.broadcast(df)`` (the measured
     bench/audit-scale win). At or above — or when ``table_bytes`` is
     unknown (0) — returns ``df`` unhinted: the plan degrades to the
     shuffle join + AQE runtime stats, never a failure.
@@ -77,7 +76,7 @@ def gated_broadcast(df: DataFrame, sf_dir: str, table: str, selectivity: float =
     ncols = table_ncols(sf_dir, table)
     col_fraction = min(1.0, len(df.columns) / ncols) if ncols else 1.0
     est = table_bytes(sf_dir, table) * selectivity * col_fraction
-    if 0 < est < cap_bytes:
+    if 0 < est < GATED_BROADCAST_CAP:
         return F.broadcast(df)
     return df
 
@@ -89,7 +88,6 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_cols: Sequence[str] | None = None,
-    tolerance: str | None = None,
 ) -> DataFrame:
     """For each left row, attach the latest right row with
     ``right_ts <= left_ts`` within the same key group (backward as-of join,
@@ -147,12 +145,5 @@ def asof_join(
 
     out = filled.filter(F.col("__side") == 1)
     left_cols = [F.col(f"__lrow.{c}").alias(c) for c in left.columns]
-    if tolerance is not None:
-        # Null the match when the right row is older than left_ts - tolerance.
-        ok = F.col("__f___asof_ts") >= F.col("__ts") - F.expr(f"INTERVAL {tolerance}")
-        rcols = [F.when(ok, F.col(f"__f_{c}")).alias(c) for c in right_cols]
-        asof_ts = F.when(ok, F.col("__f___asof_ts")).alias(f"asof_{right_ts}")
-    else:
-        rcols = [F.col(f"__f_{c}").alias(c) for c in right_cols]
-        asof_ts = F.col("__f___asof_ts").alias(f"asof_{right_ts}")
-    return out.select(*left_cols, *rcols, asof_ts)
+    rcols = [F.col(f"__f_{c}").alias(c) for c in right_cols]
+    return out.select(*left_cols, *rcols, F.col("__f___asof_ts").alias(f"asof_{right_ts}"))

@@ -5,9 +5,7 @@ forward. For history-preserving versions use operators/scd.py (SCD2);
 this is the overwrite flavor every warehouse MERGE defaults to.
 
 Scale shape: ONE co-keyed shuffle join (both sides hash on the merge
-key); per-column resolution is a map-side coalesce. Optional
-`delete_col`: a boolean marker on the source that drops matched rows
-(the MERGE ... WHEN MATCHED AND cond THEN DELETE arm).
+key); per-column resolution is a map-side coalesce.
 """
 
 from __future__ import annotations
@@ -20,12 +18,11 @@ def merge_upsert(
     target: DataFrame,
     source: DataFrame,
     keys: list[str],
-    delete_col: str | None = None,
 ) -> DataFrame:
     """SCD1 MERGE of ``source`` into ``target`` on ``keys``.
 
-    Column set = target's columns; source must carry the same names
-    (plus optionally ``delete_col``). Returns the merged relation.
+    Column set = target's columns; source must carry the same names.
+    Returns the merged relation.
     """
     data_cols = [c for c in target.columns if c not in keys]
     s = source
@@ -33,10 +30,6 @@ def merge_upsert(
     s = s.withColumn(marker, F.lit(True))
     t = target
     joined = t.alias("t").join(s.alias("s"), on=keys, how="full_outer")
-    if delete_col is not None:
-        joined = joined.filter(
-            ~F.coalesce(F.col(f"s.{delete_col}"), F.lit(False))
-        )
     out_cols = [F.col(k) for k in keys]
     for c in data_cols:
         out_cols.append(F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")).alias(c))

@@ -42,6 +42,10 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
+# Blob bytes per partition, and rows per Arrow batch handed to a decoder.
+MEDIA_PARTITION_BYTES = 64 * 1024 * 1024
+BATCH_ROWS = 64
+
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -160,79 +164,22 @@ def _real_features(blob: bytes, mime: str, dim: int) -> list[float]:
     return (out + [0.0] * dim)[:dim]
 
 
-def media_repartition(
-    df: DataFrame, target_bytes: int = 64 * 1024 * 1024, deterministic: bool = False
-) -> DataFrame:
-    """Size the partition COUNT by total bytes, then spread rows across
-    partitions.
-
-    - default: hash-spread on media_id — uniform in expectation, no extra
-      pass; a couple of large blobs can still land together (birthday).
-    - ``deterministic=True``: two-level LPT round-robin. A single global
-      ``Window.orderBy`` would rank every row through ONE task — the r01
-      version did exactly that and is a scale-killer at 100 TB (VERDICT
-      r01 wrong #3). Instead: salt rows into ``n_parts`` hash groups,
-      rank by descending blob size WITHIN each group (parallel window,
-      one task per group), and round-robin each group's ranking across
-      the output buckets with a per-group staggered start (group g's
-      biggest blob lands in bucket g, not bucket 0 for every group).
-      Each (group, bucket) cell carries ≤ group_total/n + group_max
-      bytes, so a bucket totals ≤ total/n + max_blob + lower-order wrap
-      terms — the same additive LPT bound, with no single-task stage.
-
-    (Range-partitioning by blob size would do the opposite of either —
-    co-locate all the biggest blobs in the top range.)"""
-    from pyspark.sql import Window
-
+def media_repartition(df: DataFrame) -> DataFrame:
+    """Size the partition COUNT by total bytes (one partition per
+    ``MEDIA_PARTITION_BYTES``), then hash-spread rows on media_id —
+    uniform in expectation, no extra pass; a couple of large blobs can
+    still land together (birthday). (Range-partitioning by blob size
+    would do the opposite — co-locate all the biggest blobs in the top
+    range.)"""
     total = df.agg(F.sum(F.length("content"))).collect()[0][0] or 0
-    n_parts = max(1, int(total / target_bytes))
-    if not deterministic:
-        return df.repartition(n_parts, F.xxhash64("media_id"))
-    grp = F.pmod(F.xxhash64("media_id"), F.lit(n_parts))
-    w = Window.partitionBy("__grp").orderBy(F.length("content").desc(), "media_id")
-    tokens = _bucket_tokens(df.sparkSession, n_parts)
-    return (
-        df.withColumn("__grp", grp)
-        .withColumn(
-            "__bucket",
-            F.pmod(F.row_number().over(w) - 1 + F.col("__grp"), F.lit(n_parts)),
-        )
-        # Exact bucket→partition routing. Neither hash repartition (murmur
-        # collisions merge two buckets into one task) nor repartitionByRange
-        # (sampled boundaries merge adjacent bucket ids — observed with 3
-        # buckets) preserves the 1:1 map the byte bound needs; routing by a
-        # per-bucket token whose murmur3 lands exactly on the bucket's
-        # partition id does, because HashPartitioning places rows with
-        # pmod(murmur3(col), n) — the same expression F.hash exposes.
-        .join(F.broadcast(tokens), "__bucket")
-        .repartition(n_parts, "__tok")
-        .drop("__grp", "__bucket", "__tok")
-    )
-
-
-def _bucket_tokens(spark, n_parts: int):
-    """(bucket, token) pairs with ``pmod(murmur3(token), n_parts) == bucket``
-    for every bucket — computed distributively over a candidate ``range``
-    (coupon-collector: ~n·ln n candidates fill all n slots; the window
-    widens geometrically in the rare undershoot). Tiny result (one long per
-    partition), always broadcastable."""
-    width = 32
-    while True:
-        cand = spark.range(width * n_parts).select(
-            F.col("id").alias("__tok"),
-            F.pmod(F.hash("id"), F.lit(n_parts)).alias("__bucket"),
-        )
-        toks = cand.groupBy("__bucket").agg(F.min("__tok").alias("__tok"))
-        if toks.count() == n_parts:
-            return toks
-        width *= 4
+    n_parts = max(1, int(total / MEDIA_PARTITION_BYTES))
+    return df.repartition(n_parts, F.xxhash64("media_id"))
 
 
 def extract_features(
     df: DataFrame,
     dim: int = 16,
     decoder: str = "fake",
-    batch_rows: int = 64,
 ) -> DataFrame:
     """Decode/feature-extract media blobs via ``mapInPandas``.
 
@@ -252,8 +199,8 @@ def extract_features(
         import pandas as pd
 
         for pdf in batches:
-            for start in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[start : start + batch_rows]
+            for start in range(0, len(pdf), BATCH_ROWS):
+                chunk = pdf.iloc[start : start + BATCH_ROWS]
                 if decoder == "real":
                     feats = [
                         _real_features(b, m["mime"], dim)
@@ -300,7 +247,6 @@ def resize_images(
     out_w: int = 8,
     out_h: int = 8,
     resizer: str = "fake",
-    batch_rows: int = 64,
 ) -> DataFrame:
     """Image resize via ``mapInPandas`` (SURVEY.md §2B ◆ multimodal:
     decode / feature-extract / RESIZE / frame-sample).
@@ -324,8 +270,8 @@ def resize_images(
         import pandas as pd
 
         for pdf in batches:
-            for start in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[start : start + batch_rows]
+            for start in range(0, len(pdf), BATCH_ROWS):
+                chunk = pdf.iloc[start : start + BATCH_ROWS]
                 if resizer == "real":
                     import numpy as np
 

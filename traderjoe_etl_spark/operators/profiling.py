@@ -1,24 +1,22 @@
 """One-pass column profiling (data-quality summary for pipeline intake).
 
-``profile_columns`` computes, for every requested column, in ONE aggregate
-over ONE scan: non-null count, null fraction, distinct count, min/max
-(numeric columns as doubles, everything else as strings), and numeric mean.
-The result is unpivoted to long format (one row per column) driver-side —
-the exploded array is a single row, so the unpivot is free.
+``profile_columns`` computes, for every column, in ONE aggregate over ONE
+scan: non-null count, null fraction, min/max (numeric columns as doubles,
+everything else as strings), and numeric mean; the exact distinct counts
+join it as one narrow aggregate per column. The result is unpivoted to
+long format (one row per column) driver-side — the exploded array is a
+single row, so the unpivot is free.
 
 Scale notes:
-- ``distinct="approx"`` (default) uses HyperLogLog sketches — all columns
-  in one pass, no row multiplication. This is the 100-TB path.
-- ``distinct="exact"`` computes each column's exact distinct count as its
-  OWN two-phase aggregate (partial distinct map-side, one narrow column
-  through each shuffle) and stitches the 1-row results onto the main
-  aggregate with broadcast joins. N single-column passes beat the
-  textbook alternative — N distinct aggregates in one pass — because
-  Spark plans that as an Expand that replicates EVERY row N times with
-  all-but-one column nulled before a single fat shuffle (measured 33 s at
-  sf10 on events; the per-column form shuffles only distinct values).
-- Everything else (count/min/max/avg) is partial-aggregated map-side
-  regardless of the distinct mode.
+- each column's exact distinct count is its OWN two-phase aggregate
+  (partial distinct map-side, one narrow column through each shuffle),
+  stitched onto the main aggregate with broadcast joins. N single-column
+  passes beat the textbook alternative — N distinct aggregates in one
+  pass — because Spark plans that as an Expand that replicates EVERY row
+  N times with all-but-one column nulled before a single fat shuffle
+  (measured 33 s at sf10 on events; the per-column form shuffles only
+  distinct values).
+- Everything else (count/min/max/avg) is partial-aggregated map-side.
 """
 
 from __future__ import annotations
@@ -33,31 +31,22 @@ _NUMERIC = (
 )
 
 
-def profile_columns(
-    df: DataFrame,
-    columns: list[str] | None = None,
-    distinct: str = "approx",
-    rsd: float = 0.05,
-) -> DataFrame:
+def profile_columns(df: DataFrame) -> DataFrame:
     """Long-format per-column profile: one row per column with
     (column, n_rows, n_nonnull, null_frac, n_distinct, min_num, max_num,
     avg_num, min_str, max_str)."""
-    cols = columns or df.columns
+    cols = df.columns
     types = {f.name: f.dataType for f in df.schema.fields}
     aggs = [F.count(F.lit(1)).alias("__n_rows")]
-    exact = distinct != "approx"
     for c in cols:
         col = F.col(c)
         is_num = isinstance(types[c], _NUMERIC)
-        # exact mode: a countDistinct here would join the N-distinct Expand
-        # plan (see module docstring); the exact counts are computed as
-        # separate single-column aggregates below and broadcast-joined in.
-        nd = (
-            F.lit(None).cast("long") if exact else F.approx_count_distinct(c, rsd)
-        )
         aggs += [
             F.count(col).alias(f"__cnt_{c}"),
-            nd.alias(f"__nd_{c}"),
+            # a countDistinct here would join the N-distinct Expand plan
+            # (see module docstring); the exact counts are computed as
+            # separate single-column aggregates below and broadcast-joined in
+            F.lit(None).cast("long").alias(f"__nd_{c}"),
             (F.min(col).cast("double") if is_num else F.lit(None).cast("double")).alias(
                 f"__minn_{c}"
             ),
@@ -75,15 +64,14 @@ def profile_columns(
             ),
         ]
     one = df.agg(*aggs)
-    if exact:
-        # one narrow two-phase distinct aggregate per column (partial
-        # distinct map-side → tiny final), stitched onto the main 1-row
-        # aggregate as broadcast joins, replacing the NULL placeholders
-        for c in cols:
-            one = one.join(F.broadcast(df.agg(F.countDistinct(c).alias(f"__xnd_{c}"))))
-        one = one.withColumns({f"__nd_{c}": F.col(f"__xnd_{c}") for c in cols}).drop(
-            *[f"__xnd_{c}" for c in cols]
-        )
+    # one narrow two-phase distinct aggregate per column (partial distinct
+    # map-side → tiny final), stitched onto the main 1-row aggregate as
+    # broadcast joins, replacing the NULL placeholders
+    for c in cols:
+        one = one.join(F.broadcast(df.agg(F.countDistinct(c).alias(f"__xnd_{c}"))))
+    one = one.withColumns({f"__nd_{c}": F.col(f"__xnd_{c}") for c in cols}).drop(
+        *[f"__xnd_{c}" for c in cols]
+    )
     entries = F.array(
         *[
             F.struct(

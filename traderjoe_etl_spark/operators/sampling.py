@@ -40,18 +40,19 @@ def rate_threshold_hex(rate: float) -> str:
 
 
 def sample_bucket(key: Column | str, seed: str = "42") -> Column:
-    """The 8-hex-char bucket string a key falls in (uniform on [0, 2^32))."""
+    """The 8-hex-char bucket string a key falls in (uniform on [0, 2^32));
+    the samplers below use the default seed."""
     c = F.col(key) if isinstance(key, str) else key
     return F.substring(F.md5(F.concat(F.lit(seed), F.lit(":"), c.cast("string"))), 1, 8)
 
 
-def hash_sample(df: DataFrame, key: str, rate: float, seed: str = "42") -> DataFrame:
+def hash_sample(df: DataFrame, key: str, rate: float) -> DataFrame:
     """Keep a deterministic ``rate`` fraction of rows, keyed on ``key``.
 
     Map-only: the predicate is a scalar expression on the key column, so it
     fuses into the scan stage (and with parquet bloom/dictionary filters
     upstream of it when the key is also a filter column)."""
-    return df.filter(sample_bucket(key, seed) < F.lit(rate_threshold_hex(rate)))
+    return df.filter(sample_bucket(key) < F.lit(rate_threshold_hex(rate)))
 
 
 def stratified_hash_sample(
@@ -60,7 +61,6 @@ def stratified_hash_sample(
     strata: str,
     rates: dict[str, float],
     default_rate: float = 0.0,
-    seed: str = "42",
 ) -> DataFrame:
     """Per-stratum deterministic rates (e.g. downsample the dominant
     language, keep all of a rare one). Still map-only: the per-row
@@ -69,7 +69,7 @@ def stratified_hash_sample(
     thr: Column = F.lit(rate_threshold_hex(default_rate))
     for value, rate in rates.items():
         thr = F.when(F.col(strata) == value, F.lit(rate_threshold_hex(rate))).otherwise(thr)
-    return df.filter(sample_bucket(key, seed) < thr)
+    return df.filter(sample_bucket(key) < thr)
 
 
 def runtime_rate_threshold_hex(rate: Column) -> Column:
@@ -109,13 +109,13 @@ def sqrt_temperature_mix(
     )
 
 
-def weighted_sample_key(key: Column | str, weight: Column, seed: str = "42") -> Column:
+def weighted_sample_key(key: Column | str, weight: Column) -> Column:
     """Efraimidis–Spirakis weighted-reservoir sort key: ``u^(1/w)`` with a
     deterministic hash-uniform ``u`` in (0, 1). Taking the k LARGEST keys
     per group draws a without-replacement sample where P(selection) is
     proportional to ``weight`` — the quality-weighted corpus-selection
     primitive ("sample 1M docs, better docs more often") — and because u
-    is a pure function of (seed, key), the SAME rows are selected under
+    is a pure function of the key, the SAME rows are selected under
     any partitioning, engine, or re-run.
 
     Map-only; combine with a per-group window top-k (the k-heap rides
@@ -124,6 +124,6 @@ def weighted_sample_key(key: Column | str, weight: Column, seed: str = "42") -> 
     c = F.col(key) if isinstance(key, str) else key
     # u = (bucket + 1) / (2^32 + 1)  — strictly inside (0, 1) so ln/pow are finite
     u = (
-        F.conv(sample_bucket(c, seed), 16, 10).cast("double") + F.lit(1.0)
+        F.conv(sample_bucket(c), 16, 10).cast("double") + F.lit(1.0)
     ) / F.lit(float(_SPAN + 1))
     return F.when(weight > 0, F.pow(u, F.lit(1.0) / weight))

@@ -26,6 +26,13 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Column names of the embedding tables: the corpus (vec_id, embedding)
+# and the query bank (query_id, qv).
+ID_COL, VEC_COL, QUERY_ID_COL, QUERY_VEC_COL = "vec_id", "embedding", "query_id", "qv"
+# Rows one near-dup kernel group may hold before a bucket is
+# block-partitioned (see _near_dup_pairs_arrow).
+MAX_BUCKET_ROWS = 4096
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -62,9 +69,6 @@ def cosine_topk_brute(
     query: DataFrame,
     k: int,
     impl: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "qv",
     cache_key: str | None = None,
     round_digits: int | None = None,
 ) -> DataFrame:
@@ -89,21 +93,21 @@ def cosine_topk_brute(
     The scan stays shuffle-free either way; orderBy + limit plans
     TakeOrderedAndProject (per-partition heaps), deterministic tie-break
     by id."""
-    q = query.select(F.lit(-1).cast("long").alias("__qid"), F.col(query_vec_col))
-    q_ids, Q = _collect_query_bank(q, "__qid", query_vec_col, cache_key=cache_key)
+    q = query.select(F.lit(-1).cast("long").alias("__qid"), F.col(QUERY_VEC_COL))
+    q_ids, Q = _collect_query_bank(q, "__qid", QUERY_VEC_COL, cache_key=cache_key)
     if impl == "const":
         if len(q_ids) != 1:
             raise ValueError(f"impl='const' needs exactly one query row, got {len(q_ids)}")
         qv = [float(x) for x in Q[0]]
         qn = math.sqrt(sum(x * x for x in qv))
-        dot = F.expr(_dot_const_sql(vec_col, qv))
+        dot = F.expr(_dot_const_sql(VEC_COL, qv))
         scored = corpus.select(
-            F.col(id_col),
-            (dot / F.nullif(_l2(F.col(vec_col)) * F.lit(qn), F.lit(0.0))).alias("cosine"),
+            F.col(ID_COL),
+            (dot / F.nullif(_l2(F.col(VEC_COL)) * F.lit(qn), F.lit(0.0))).alias("cosine"),
         )
     elif impl == "arrow":
         scored = _topk_scores_arrow(
-            corpus, q_ids, Q, k, id_col, vec_col, "__qid",
+            corpus, q_ids, Q, k, ID_COL, VEC_COL, "__qid",
             quantum=(10.0 ** -round_digits) if round_digits is not None else 0.0,
         ).drop("__qid")
     else:
@@ -111,17 +115,13 @@ def cosine_topk_brute(
     rank = (
         F.round("cosine", round_digits) if round_digits is not None else F.col("cosine")
     )
-    return scored.orderBy(rank.desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(rank.desc(), F.col(ID_COL)).limit(k)
 
 
 def cosine_topk_batch(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qv",
     round_digits: int | None = None,
     exclude_self: bool = False,
     cache_key: str | None = None,
@@ -150,21 +150,21 @@ def cosine_topk_batch(
     deterministic at the rounding grid."""
     from pyspark.sql import Window
 
-    q_ids, Q = _collect_query_bank(queries, query_id_col, query_vec_col, cache_key=cache_key)
+    q_ids, Q = _collect_query_bank(queries, QUERY_ID_COL, QUERY_VEC_COL, cache_key=cache_key)
     scored = _topk_scores_arrow(
         corpus,
         q_ids,
         Q,
         k,
-        id_col,
-        vec_col,
-        query_id_col,
+        ID_COL,
+        VEC_COL,
+        QUERY_ID_COL,
         quantum=(10.0 ** -round_digits) if round_digits is not None else 0.0,
         exclude_self=exclude_self,
     )
     if round_digits is not None:
         scored = scored.withColumn("cosine", F.round("cosine", round_digits))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
+    w = Window.partitionBy(QUERY_ID_COL).orderBy(F.col("cosine").desc(), F.col(ID_COL))
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
@@ -291,10 +291,10 @@ def _topk_scores_arrow(
     return src.mapInArrow(score, f"{query_id_col} long, {id_col} long, cosine double")
 
 
-def adaptive_n_planes(n: int, target_bucket: int = 64, floor: int = 4) -> int:
+def adaptive_n_planes(n: int, target_bucket: int = 64) -> int:
     """Corpus-adaptive sign-LSH plane count: the smallest bank whose
     EXPECTED bucket load is ≤ ``target_bucket`` (2^planes ≥ n/target + 1),
-    floored at ``floor`` so tiny corpora keep a few buckets.
+    floored at 4 so tiny corpora keep a few buckets.
 
     Why adaptive: in-bucket pair work is ~n²/2^planes, so a PINNED bank
     silently goes quadratic as the corpus grows (a 4-plane bank at sf10's
@@ -304,7 +304,7 @@ def adaptive_n_planes(n: int, target_bucket: int = 64, floor: int = 4) -> int:
     tests/test_operators.py::test_adaptive_lsh_regime_pair_volume_linear."""
     import math
 
-    return max(floor, math.ceil(math.log2(max(n, 1) / target_bucket + 1)))
+    return max(4, math.ceil(math.log2(max(n, 1) / target_bucket + 1)))
 
 
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -425,8 +425,6 @@ def l2_assign_arrow(
 def ivf_assign(
     emb: DataFrame,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     lloyd_iters: int = 1,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: deterministic seeding (first ``n_centroids``
@@ -439,7 +437,7 @@ def ivf_assign(
     and re-enter the plan as constants of the assignment kernel; the
     corpus is never collected.
     """
-    centroids_df = emb.orderBy(id_col).limit(n_centroids).select(F.col(vec_col).alias("centroid"))
+    centroids_df = emb.orderBy(ID_COL).limit(n_centroids).select(F.col(VEC_COL).alias("centroid"))
     # stable small collect → cluster id = enumeration order of the
     # id-ordered seed rows
     cents = [(i, list(r.centroid)) for i, r in enumerate(centroids_df.collect())]
@@ -455,7 +453,7 @@ def ivf_assign(
     # cost k·dim interpreted ops/row against one numpy matmul per batch
     # (the registered sf1 query dropped 7.7→0.9 s with the arrow
     # assign+score kernels).
-    assigned = _assign_arrow(emb, cents, vec_col, _unit)
+    assigned = _assign_arrow(emb, cents, VEC_COL, _unit)
     n_dim = len(cents[0][1]) if cents else 0
     for _ in range(lloyd_iters):
         # centroid update = per-cluster element-wise mean: one groupBy with
@@ -465,7 +463,7 @@ def ivf_assign(
         sums = assigned.groupBy("cluster").agg(
             F.count(F.lit(1)).alias("__n"),
             *[
-                F.sum(F.element_at(F.col(vec_col), i + 1).cast("double")).alias(f"__s{i}")
+                F.sum(F.element_at(F.col(VEC_COL), i + 1).cast("double")).alias(f"__s{i}")
                 for i in range(n_dim)
             ],
         )
@@ -473,7 +471,7 @@ def ivf_assign(
             (r["cluster"], [r[f"__s{i}"] / r["__n"] for i in range(n_dim)])
             for r in sums.collect()
         ]
-        assigned = _assign_arrow(emb, cents, vec_col, _unit)
+        assigned = _assign_arrow(emb, cents, VEC_COL, _unit)
     cent_final = spark.createDataFrame(cents, "cluster int, centroid array<float>")
     return assigned, cent_final
 
@@ -484,9 +482,6 @@ def ivf_topk(
     query: DataFrame,
     k: int,
     n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "qv",
 ) -> DataFrame:
     """IVF search for a single query vector: rank centroids against the
     query, probe the ``n_probe`` nearest clusters, exact cosine within
@@ -503,7 +498,7 @@ def ivf_topk(
     import numpy as np
 
     cent_rows = centroids.collect()
-    qv = [float(x) for x in query.select(query_vec_col).first()[0]]
+    qv = [float(x) for x in query.select(QUERY_VEC_COL).first()[0]]
 
     def _cos(a: list[float], b: list[float]) -> float:
         num = sum(x * y for x, y in zip(a, b))
@@ -521,11 +516,11 @@ def ivf_topk(
         np.array([-1], dtype=np.int64),
         np.array([qv], dtype=np.float64),
         k,
-        id_col,
-        vec_col,
+        ID_COL,
+        VEC_COL,
         "__qid",
     ).drop("__qid")
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col(ID_COL)).limit(k)
 
 
 def cosine_near_dup_pairs(
@@ -533,11 +528,7 @@ def cosine_near_dup_pairs(
     threshold: float,
     dim: int,
     n_planes: int | None = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
     impl: str = "hof",
-    max_bucket_rows: int = 4096,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: LSH-bucket self-join, then
     exact cosine filter ≥ threshold. The bucket join bounds the pair count;
@@ -576,7 +567,7 @@ def cosine_near_dup_pairs(
     strings is code-point order — identical to Spark's UTF8_BINARY byte
     order, because UTF-8 byte order preserves code-point order.
 
-    ``max_bucket_rows`` bounds what a single Python worker materializes on
+    ``MAX_BUCKET_ROWS`` bounds what a single Python worker materializes on
     the arrow path: buckets over the cap are block-partitioned (see
     :func:`_near_dup_pairs_arrow`) so a degenerate duplicate cluster —
     which extra hyperplanes can NEVER split, identical vectors share every
@@ -585,17 +576,15 @@ def cosine_near_dup_pairs(
     scored in exactly one block-pair group."""
     if n_planes is None:
         n_planes = adaptive_n_planes(emb.count(), target_bucket=32)
-    planes = random_hyperplanes(dim, n_planes, seed=seed)
+    planes = random_hyperplanes(dim, n_planes)
     b = emb.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__v"),
-        lsh_bucket_key(vec_col, planes).alias("__bucket"),
+        F.col(ID_COL).alias("__id"),
+        F.col(VEC_COL).alias("__v"),
+        lsh_bucket_key(VEC_COL, planes).alias("__bucket"),
     )
     if impl == "arrow":
-        id_type = dict(emb.dtypes)[id_col]
-        return _near_dup_pairs_arrow(
-            b, threshold, max_bucket_rows=max_bucket_rows, id_type=id_type
-        )
+        id_type = dict(emb.dtypes)[ID_COL]
+        return _near_dup_pairs_arrow(b, threshold, MAX_BUCKET_ROWS, id_type)
     a = b.select(F.col("__id").alias("id_a"), F.col("__v").alias("v_a"), "__bucket")
     c = b.select(F.col("__id").alias("id_b"), F.col("__v").alias("v_b"), "__bucket")
     pairs = a.join(c, "__bucket").filter(F.col("id_a") < F.col("id_b"))
@@ -697,8 +686,8 @@ def _block_assignments(big: DataFrame, max_bucket_rows: int) -> DataFrame:
 def _near_dup_pairs_arrow(
     bucketed: DataFrame,
     threshold: float,
-    max_bucket_rows: int = 4096,
-    id_type: str = "bigint",
+    max_bucket_rows: int,
+    id_type: str,
 ) -> DataFrame:
     """Per-bucket blocked-GEMM pair scoring for ``cosine_near_dup_pairs``,
     with a bounded-peak path for skewed buckets.
@@ -781,7 +770,6 @@ def pca_fit(
     emb: DataFrame,
     dim: int,
     k: int,
-    vec_col: str = "embedding",
     pivot_order_col: str | None = None,
 ):
     """Distributed PCA fit: ``(mean, components[dim×k], explained_ratio)``.
@@ -823,9 +811,9 @@ def pca_fit(
     # minimum-key row — a TakeOrderedAndProject one-row job, bit-stable
     # for a given corpus regardless of layout.
     if pivot_order_col is not None:
-        pivot_row = emb.orderBy(pivot_order_col).select(vec_col).first()
+        pivot_row = emb.orderBy(pivot_order_col).select(VEC_COL).first()
     else:
-        pivot_row = emb.select(vec_col).first()
+        pivot_row = emb.select(VEC_COL).first()
     if pivot_row is None:
         raise ValueError("pca_fit: empty input corpus (no vectors to fit)")
     pivot = np.asarray(
@@ -857,7 +845,7 @@ def pca_fit(
             )
 
     parts = (
-        emb.select(vec_col)
+        emb.select(VEC_COL)
         .mapInArrow(partials, "n long, s array<double>, g array<double>")
         .collect()
     )
@@ -887,8 +875,6 @@ def pca_project(
     emb: DataFrame,
     mean: list[float],
     components: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Map-only PCA projection ``(X − mean) @ components`` via one
     ``mapInArrow`` GEMM per batch — no shuffle, no Python objects per
@@ -915,10 +901,10 @@ def pca_project(
             )
             P = (X - mu) @ C
             yield pa.RecordBatch.from_arrays(
-                [b.column(0), pa.array(P.tolist())], names=[id_col, "proj"]
+                [b.column(0), pa.array(P.tolist())], names=[ID_COL, "proj"]
             )
 
-    id_type = dict(emb.dtypes)[id_col]
-    return emb.select(id_col, vec_col).mapInArrow(
-        proj, f"{id_col} {id_type}, proj array<double>"
+    id_type = dict(emb.dtypes)[ID_COL]
+    return emb.select(ID_COL, VEC_COL).mapInArrow(
+        proj, f"{ID_COL} {id_type}, proj array<double>"
     )

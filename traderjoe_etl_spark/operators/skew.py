@@ -19,30 +19,22 @@ def salted_join(
     small: DataFrame,
     key: str,
     salt_buckets: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with the big side salted and the small side replicated.
+    """Inner equi-join with the big side salted and the small side replicated.
 
     big gets ``salt = pmod(hash(whole row), N)`` (deterministic, so tests
     are stable); small is exploded ×N. The join key becomes (key, salt): a
     hot key now spreads over N shuffle partitions. Cost: small side ×N
     (only viable when small is genuinely small — which is also when the
-    skew hurts most).
-
-    Only ``inner`` and ``left`` are valid: an outer-preserved small side
-    would emit its unmatched rows once per salt replica.
+    skew hurts most). An outer-preserved small side would emit its
+    unmatched rows once per salt replica, so the join is inner.
     """
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"salted_join supports inner/left only (got {how!r}): replicated "
-            "small-side rows would duplicate under right/full outer preservation"
-        )
     salted_big = big.withColumn(
         "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(salt_buckets)).cast("int")
     )
     replicated_small = small.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
     )
-    out = salted_big.join(replicated_small, [key, "__salt"], how)
+    out = salted_big.join(replicated_small, [key, "__salt"], "inner")
     return out.drop("__salt")
 

@@ -35,18 +35,14 @@ def token_count(text_col: str | Column, toks: Column | None = None) -> Column:
     return F.size(tokens(text_col) if toks is None else toks)
 
 
-def lang_id(
-    text_col: str | Column,
-    profiles: dict[str, list[str]] | None = None,
-    toks: Column | None = None,
-) -> Column:
-    """Heuristic language ID: per language, count stopword hits among the
-    tokens; emit the argmax language or 'und' when nothing scores.
+def lang_id(text_col: str | Column, toks: Column | None = None) -> Column:
+    """Heuristic language ID: per language of ``LANG_PROFILES``, count
+    stopword hits among the tokens; emit the argmax language or 'und' when
+    nothing scores.
 
     Implemented as a greatest-of-struct trick: build (score, lang) structs,
     take ``greatest`` (lexicographic → max score wins, ties break on lang
     reverse-alphabetically), unwrap."""
-    profs = profiles or LANG_PROFILES
     if toks is None:
         toks = tokens(text_col)
     scored = [
@@ -54,9 +50,9 @@ def lang_id(
             F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words]))).alias("s"),
             F.lit(lang).alias("l"),
         )
-        for lang, words in profs.items()
+        for lang, words in LANG_PROFILES.items()
     ]
-    best = F.greatest(*scored) if len(scored) > 1 else scored[0]
+    best = F.greatest(*scored)
     return F.when(best["s"] > 0, best["l"]).otherwise(F.lit("und"))
 
 
@@ -87,12 +83,11 @@ def quality_score(text_col: str | Column, toks: Column | None = None) -> Column:
 
 def doc_fingerprint(
     text_col: str | Column,
-    window: int = 8,
     hash_fn: str = "xxhash64",
     toks: Column | None = None,
 ) -> Column:
-    """Winnowing-style document fingerprint: hash every ``window``-token
-    shingle, keep the MINIMUM hash — a single stable fingerprint robust to
+    """Winnowing-style document fingerprint: hash every 8-token shingle,
+    keep the MINIMUM hash — a single stable fingerprint robust to
     local edits outside the minimizing window.
 
     ``hash_fn``: ``"xxhash64"`` (default — fastest, JVM-side, 64-bit long)
@@ -106,7 +101,7 @@ def doc_fingerprint(
     the cheap per-doc fingerprint column.)"""
     if toks is None:
         toks = tokens(text_col)
-    n = F.size(toks)
+    n, window = F.size(toks), 8
     hasher = F.xxhash64 if hash_fn == "xxhash64" else F.md5
     shingle_hashes = F.transform(
         F.sequence(F.lit(1), F.greatest(n - (window - 1), F.lit(1))),

@@ -34,10 +34,10 @@ def top_k_per_group(
     keys: Sequence[str],
     order_by: Sequence[str | Column],
     k: int,
-    out: str = "rn",
     keep_rank: bool = False,
 ) -> DataFrame:
-    """Top-k rows per key group via ``row_number`` over a descending window."""
+    """Top-k rows per key group via ``row_number`` over a descending
+    window; ``keep_rank`` keeps the rank as column ``rn``."""
     w = Window.partitionBy(*keys).orderBy(*_desc_order(order_by))
-    ranked = df.withColumn(out, F.row_number().over(w)).filter(F.col(out) <= k)
-    return ranked if keep_rank else ranked.drop(out)
+    ranked = df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+    return ranked if keep_rank else ranked.drop("rn")

@@ -63,10 +63,10 @@ def sessionize(
     ts_col: str,
     gap_seconds: int,
     tie_break: Sequence[str] = (),
-    out: str = "session_id",
 ) -> DataFrame:
-    """Assign batch session ids: a new session starts when the gap since the
-    previous event in the key group exceeds ``gap_seconds``.
+    """Assign batch session ids (column ``session_id``): a new session
+    starts when the gap since the previous event in the key group exceeds
+    ``gap_seconds``.
 
     lag + conditional cumsum — the standard two-window single-shuffle plan
     (both windows share partitioning/ordering, so Catalyst plans ONE
@@ -78,4 +78,4 @@ def sessionize(
     gap = F.col(ts_col).cast("long") - F.lag(F.col(ts_col).cast("long")).over(w)
     is_new = F.when(gap.isNull() | (gap > gap_seconds), F.lit(1)).otherwise(F.lit(0))
     cum = Window.partitionBy(*keys).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn(out, F.sum(is_new).over(cum))
+    return df.withColumn("session_id", F.sum(is_new).over(cum))

@@ -71,9 +71,7 @@ def benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     train = docs.filter(F.col("doc_id") % 97 != 0)
-    return contamination_report(
-        train, bench, text_col="text", id_col="doc_id", n=4, hasher="chained"
-    )
+    return contamination_report(train, bench, text_col="text", id_col="doc_id", n=4)
 
 
 @query(

@@ -311,7 +311,7 @@ def column_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("value") >= 10, F.col("value")).alias("value_nullable"),
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts_str"),
     )
-    return profile_columns(ev, distinct="exact")
+    return profile_columns(ev)
 
 
 @query(

@@ -212,7 +212,6 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") != 0),
         qv,
         k=10,
-        id_col="vec_id",
         impl="const" if 0 < eb <= _CONST_IMPL_BYTES else "arrow",
         cache_key=f"{sf_dir}::{fp}::cosine_topk",
         round_digits=6,
@@ -266,7 +265,7 @@ def cosine_topk_batch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash_sig_sql() -> str:
     """DuckDB CTE chain computing md5-family SimHash fingerprints
     (``fp(doc_id, simhash)``) exactly as operators/dedup.py's
-    ``simhash_fingerprint(hash_family='md5')``: token md5 → four 16-bit
+    ``simhash_fingerprint``: token md5 → four 16-bit
     chunks → 64 signed bit votes → sign → ``%04x``×4 hex fingerprint."""
     chunk = lambda c: f"('0x' || substr(md5(tok), {4 * c + 1}, 4))::BIGINT AS c{c}"
     votes = ",\n               ".join(
@@ -339,7 +338,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~n/2^16 of the pair space per band. The fingerprint table (one short
     string per doc) is persisted so the self-join doesn't recompute the
     token pass."""
-    from ..operators.dedup import simhash_fingerprint, simhash_hex_chunks
+    from ..operators.dedup import simhash_fingerprint
 
     docs = _t(spark, sf_dir, "documents")
     # Bucket-collect pairing (same shape as minhash's bucket_agg): bands
@@ -350,8 +349,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token pass per side). Bucket width is ~n/2^16 per band by pigeonhole,
     # so the collected lists stay small; a degenerate fingerprint cluster
     # is the same skew ceiling the minhash docstring documents.
-    fp = simhash_fingerprint(docs, "doc_id", "text", hash_family="md5")
-    chunks = simhash_hex_chunks("simhash")
+    fp = simhash_fingerprint(docs, "doc_id", "text")
     # parse the hex fingerprint into its four 16-bit chunk INTS once per
     # document and carry those through banding — the per-PAIR Hamming then
     # costs 4 int xor+bit_counts instead of 8 conv(substring(hex)) string
@@ -359,7 +357,9 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # synthetic simhashes collide heavily on 16-bit keys), so per-pair
     # constant factors are the whole game.
     withc = fp.select(
-        "doc_id", *[chunks[i].alias(f"c{i}") for i in range(4)]
+        "doc_id",
+        # chunk c = hex chars 4c+1..4c+4
+        *[F.conv(F.substring("simhash", 4 * i + 1, 4), 16, 10).cast("int").alias(f"c{i}") for i in range(4)],
     )
     bands = withc.select(
         "doc_id",

@@ -184,12 +184,11 @@ def _simhash_fp_oracle() -> str:
 @query("simhash_fingerprints", oracle=_simhash_fp_oracle())
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document 64-bit SimHash fingerprint in the portable md5 family
-    (hex-string rendering) — the DuckDB oracle recomputes every bit vote.
-    The xxhash64 BIGINT family stays the scale default (pytest-covered)."""
+    (hex-string rendering) — the DuckDB oracle recomputes every bit vote."""
     from ..operators.dedup import simhash_fingerprint
 
     docs = _t(spark, sf_dir, "documents")
-    return simhash_fingerprint(docs, "doc_id", "text", hash_family="md5")
+    return simhash_fingerprint(docs, "doc_id", "text")
 
 
 @query(

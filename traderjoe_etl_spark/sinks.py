@@ -34,22 +34,23 @@ def append_snapshot(df: DataFrame, path: str) -> None:
 CSV_EXPORT_MAX_ROWS = 1_000_000
 
 
-def csv_export(df: DataFrame, path: str, max_rows: int = CSV_EXPORT_MAX_ROWS) -> None:
+def csv_export(df: DataFrame, path: str) -> None:
     """Header-once single-file CSV append (reference main.py:345-351).
 
     A deliberate driver-side convenience for small exports (the reference's
     output volume is one row per pair per hour — tiny); the distributed
-    path is ``append_snapshot``. Guarded: refuses above ``max_rows`` so a
-    100-TB relation can never be collect()ed onto the driver by accident —
-    the probe and the collect are ONE job — limit(max_rows+1).toPandas() —
+    path is ``append_snapshot``. Guarded: refuses above
+    ``CSV_EXPORT_MAX_ROWS`` so a 100-TB relation can never be collect()ed
+    onto the driver by accident — the probe and the collect are ONE job —
+    limit(CSV_EXPORT_MAX_ROWS+1).toPandas() —
     so a changing/non-deterministic source can't pass a separate count
     probe and then collect more (and the input plan runs once, not twice).
     """
-    pdf = df.limit(max_rows + 1).toPandas()
-    if len(pdf) > max_rows:
+    pdf = df.limit(CSV_EXPORT_MAX_ROWS + 1).toPandas()
+    if len(pdf) > CSV_EXPORT_MAX_ROWS:
         raise ValueError(
             f"csv_export is a driver-side small-export sink: input exceeds "
-            f"{max_rows} rows; use append_snapshot (distributed) instead"
+            f"{CSV_EXPORT_MAX_ROWS} rows; use append_snapshot (distributed) instead"
         )
     exists = os.path.isfile(path) and os.path.getsize(path) > 0
     pdf.to_csv(path, mode="a" if exists else "w", index=False, header=not exists)

@@ -142,8 +142,6 @@ def corpus_width(
     sf_dir: str,
     name: str,
     bytes_per_part: int = 2 << 20,
-    lo: int = 32,
-    hi: int = 1024,
     selectivity: float = 1.0,
 ) -> int:
     """Shuffle/repartition width that FOLLOWS THE DATA — the shared formula
@@ -151,7 +149,7 @@ def corpus_width(
     pagerank's edge dedup, the sparse-cosine postings join). At or below the
     session default (32) the repartition IS the operation's own exchange;
     at 160 GB the same 32 partitions would put ~5 GB through each reducer,
-    so width must scale with table bytes. Clamped to [lo, hi]: the floor
+    so width must scale with table bytes. Clamped to [32, 1024]: the floor
     keeps small-SF plans at the session width (no extra exchange cost), the
     ceiling bounds task-scheduling overhead (at true 100 TB a cluster's
     AQE coalescing governs instead — these queries only PIN width in
@@ -162,7 +160,7 @@ def corpus_width(
     edge input ~ 1/7 of lineitem) — an overestimate is harmless (more,
     smaller reducers) but drifts the width away from the data it actually
     carries (ADVICE r8)."""
-    return max(lo, min(hi, int(table_bytes(sf_dir, name) * selectivity) // bytes_per_part))
+    return max(32, min(1024, int(table_bytes(sf_dir, name) * selectivity) // bytes_per_part))
 
 
 def table_fingerprint(sf_dir: str, name: str) -> str:
