@@ -1,5 +1,6 @@
-"""Every package definition is reached from a production root, or is on
-an allow-list with its reason.
+"""Every package definition is reached from a production root, and every
+option of a public function is set by a production caller, or is on an
+allow-list with its reason.
 
 A name scan over the ``ast`` of the package (no Spark). Roots: the
 ``@query`` functions, ``@atexit.register`` callbacks and module-level code
@@ -31,6 +32,24 @@ ALLOWED = {
 }
 
 
+# Defaulted parameters no production call sets, kept on purpose, keyed
+# module::function(param) or by module (every option in it).
+OPTIONS_ALLOWED = {
+    f"{PKG}/operators/layout.py": "ROADMAP item 4 decides its options",
+    f"{PKG}/operators/observability.py": "ROADMAP item 5 decides its options",
+    f"{PKG}/sinks.py::clustered_write(mode)": "ROADMAP item 4 decides its options",
+    f"{PKG}/sinks.py::clustered_write(n_files)": "ROADMAP item 4 decides its options",
+    f"{PKG}/session.py::get_spark(master)": "deployment setting: the cluster master",
+    f"{PKG}/sources/rest.py::rest_snapshot_source(params)":
+        "deployment setting: API key header and time window (main.py:30-34)",
+    f"{PKG}/__main__.py::main(argv)": "seam: tests drive the CLI with an argv list",
+    f"{PKG}/operators/prefix.py::global_running_agg(checkpoint)":
+        "seam: tests/test_plan_shapes.py lints the checkpoint-free plan",
+    f"{PKG}/operators/prefix.py::global_running_agg(n_parts)":
+        "seam: tests/test_plan_shapes.py lints the checkpoint-free plan",
+}
+
+
 def _names(node: ast.AST) -> set[str]:
     return {
         n.id if isinstance(n, ast.Name)
@@ -51,18 +70,25 @@ def _parse(rel: str) -> ast.Module:
         return ast.parse(f.read())
 
 
-def unreached() -> set[str]:
-    """``module::name`` of every package definition no root reaches."""
-    pkg = sorted(
+def _package() -> list[str]:
+    return sorted(
         os.path.relpath(p, REPO)
         for p in glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True)
     )
-    roots = [f"{PKG}/__main__.py", "__spark_entry__.py", "bench.py"] + sorted(
+
+
+def _roots() -> list[str]:
+    return [f"{PKG}/__main__.py", "__spark_entry__.py", "bench.py"] + sorted(
         os.path.relpath(p, REPO)
         for p in glob.glob(os.path.join(REPO, "perfbench", "*.py"))
         + glob.glob(os.path.join(REPO, "tools", "*.py"))
         if not os.path.basename(p).startswith("test_")
     )
+
+
+def unreached() -> set[str]:
+    """``module::name`` of every package definition no root reaches."""
+    pkg, roots = _package(), _roots()
     defs: dict[tuple[str, str], set[str]] = {}
     seeds: set[str] = set()
     for p in pkg:
@@ -97,3 +123,48 @@ def test_every_definition_is_reached_or_allowed():
     assert found - allowed == set(), "unreached from every production root"
     stale = {k for k in ALLOWED if not any(f == k or f.startswith(k + "::") for f in found)}
     assert stale == set(), "allow-listed but reached (or gone): drop the entry"
+
+
+def unset_options() -> set[str]:
+    """``module::function(param)`` of every defaulted parameter of a public
+    top-level package function that no call in the package or the roots
+    sets, by keyword or by position. Calls match by name, like
+    :func:`unreached`, so a shared name over-counts as set."""
+    options: dict[tuple[str, str], int | None] = {}  # (function, param) -> position
+    where: dict[tuple[str, str], str] = {}
+    for p in _package():
+        for fn in _parse(p).body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            defaulted = [(x, i) for i, x in enumerate(pos)][len(pos) - len(a.defaults):]
+            defaulted += [(x, None) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            for arg, i in defaulted:
+                options[(fn.name, arg.arg)] = i
+                where[(fn.name, arg.arg)] = p
+    set_: set[tuple[str, str]] = set()
+    for p in _package() + _roots():
+        for call in ast.walk(_parse(p)):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+            n_pos = len(call.args)
+            for (fn, param), i in options.items():
+                if fn != name:
+                    continue
+                if any(k.arg in (param, None) for k in call.keywords) or (
+                    i is not None and (i < n_pos or any(isinstance(x, ast.Starred) for x in call.args))
+                ):
+                    set_.add((fn, param))
+    return {f"{where[k]}::{k[0]}({k[1]})" for k in options if k not in set_}
+
+
+def test_every_option_is_set_by_a_caller():
+    found = unset_options()
+    allowed = {k for k in found if k in OPTIONS_ALLOWED or k.split("::", 1)[0] in OPTIONS_ALLOWED}
+    unset = sorted(found - allowed)
+    assert not unset, "options no production caller sets (make them constants):\n" + "\n".join(unset)
+    stale = {k for k in OPTIONS_ALLOWED if not any(f == k or f.startswith(k + "::") for f in found)}
+    assert stale == set(), "allow-listed but set by a caller (or gone): drop the entry"

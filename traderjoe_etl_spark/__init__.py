@@ -18,8 +18,8 @@ Spark-first operator library:
   plus physical-plan audit helpers (plans/audit.py).
 - ``streaming``  — event-time Structured Streaming jobs: windows,
   watermarks, stream-static enrichment, stateful dedup and position
-  tracking. The reference's hourly loop (main.py:353-359) is the CLI's
-  ``run --loop-seconds``.
+  tracking. The reference's hourly loop (main.py:353-359) has no
+  scheduler here yet: CLI ``run`` runs one cycle.
 - ``sinks``      — append-mode parquet snapshot sink, range-clustered writes,
   header-once CSV export (main.py:345-351).
 - ``queries``    — the registry behind ``__spark_entry__`` (222 named

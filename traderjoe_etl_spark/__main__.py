@@ -4,10 +4,11 @@ The reference runs one hard-coded pipeline in an hourly sleep loop
 (main.py:353-359). The engine exposes the same two verbs a user
 actually needs, over the whole query registry:
 
-  python -m traderjoe_etl_spark run   --sf-dir DIR --out PATH [--strict]
+  python -m traderjoe_etl_spark run   --sf-dir DIR --out PATH
       one snapshot-pipeline cycle appended to the partitioned parquet
-      sink (add --csv FILE for the reference's header-once CSV form;
-      --loop-seconds N to keep cycling like the reference's scheduler)
+      sink (add --csv FILE for the reference's header-once CSV form).
+      There is no scheduler yet: the registry pipeline stamps a fixed
+      run time, so repeating it would append the same rows again.
 
   python -m traderjoe_etl_spark query NAME --sf-dir DIR [--limit N]
       run any registered query and print the result
@@ -31,10 +32,6 @@ def _build_parser() -> argparse.ArgumentParser:
     run.add_argument("--sf-dir", required=True)
     run.add_argument("--out", required=True, help="parquet sink directory")
     run.add_argument("--csv", default=None, help="also append the reference-style CSV")
-    run.add_argument(
-        "--loop-seconds", type=int, default=0,
-        help="re-run every N seconds (reference scheduler loop); 0 = once",
-    )
 
     q = sub.add_parser("query", help="run one registered query")
     q.add_argument("name")
@@ -70,17 +67,13 @@ def main(argv: list[str] | None = None) -> int:
     # prepared-plan cache makes repeat cycles analysis-free.
     from .sinks import append_snapshot, csv_export
 
-    pipeline = queries()["snapshot_pipeline"]
-    while True:
-        started = time.time()
-        snap = pipeline(spark, args.sf_dir)
-        append_snapshot(snap, args.out)
-        if args.csv:
-            csv_export(snap, args.csv)
-        print(f"cycle done in {time.time() - started:.1f}s -> {args.out}")
-        if not args.loop_seconds:
-            return 0
-        time.sleep(args.loop_seconds)
+    started = time.time()
+    snap = queries()["snapshot_pipeline"](spark, args.sf_dir)
+    append_snapshot(snap, args.out)
+    if args.csv:
+        csv_export(snap, args.csv)
+    print(f"cycle done in {time.time() - started:.1f}s -> {args.out}")
+    return 0
 
 
 if __name__ == "__main__":
