@@ -26,14 +26,14 @@ from .text import tokens
 SHINGLE_K, NUM_HASHES, LSH_BANDS = 3, 64, 16
 
 
-def _shingles_from_tokens(toks: Column, k: int = SHINGLE_K) -> Column:
-    """k-word shingles from a pre-projected token-array column. ALWAYS
+def _shingles_from_tokens(toks: Column) -> Column:
+    """``SHINGLE_K``-word shingles from a pre-projected token-array column. ALWAYS
     project ``tokens(text)`` into its own column before calling this: the
     shingle expression references the token array three times (size
     guard, transform source, short-doc fallback), and a Generate node does
     NOT subexpression-eliminate — inlining the split re-tokenizes every
     row 3× (measured 1.7× slower on the sf1 corpus)."""
-    n = F.size(toks)
+    n, k = F.size(toks), SHINGLE_K
     return F.when(n >= k, F.transform(
         F.sequence(F.lit(1), n - (k - 1)),
         lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
@@ -190,7 +190,9 @@ def minhash_band_entries(
     decimal mins (portable family — any engine reproduces it, stays
     STRING)."""
     rows_per_band = NUM_HASHES // LSH_BANDS
-    with_sig = minhash_signatures(df, id_col, text_col, hash_family=hash_family).select(F.col(id_col).alias("__id"), F.col("sig").alias("__sig"))
+    with_sig = minhash_signatures(df, id_col, text_col, hash_family=hash_family).select(
+        F.col(id_col).alias("__id"), F.col("sig").alias("__sig")
+    )
 
     def band_key(b):
         if hash_family == "portable":

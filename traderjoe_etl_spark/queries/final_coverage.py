@@ -264,8 +264,8 @@ def scd2_snapshot_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _profile_oracle() -> str:
-    """DuckDB twin of operators.profiling.profile_columns (exact-distinct
-    mode) over the derived events frame: one UNION ALL block per column."""
+    """DuckDB twin of operators.profiling.profile_columns over the derived
+    events frame: one UNION ALL block per column."""
     ev = """(SELECT event_id, user_id, event_type, value,
                     CASE WHEN value >= 10 THEN value END AS value_nullable,
                     strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str
@@ -298,9 +298,9 @@ FROM {ev}"""
 def column_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column data-quality profile over events (+ a deterministically
     nullified value column so the null-counting path has real evidence —
-    the raw tables carry no NULLs): non-null/null-frac/distinct/min/max/avg
-    in ONE aggregate over ONE scan (operators/profiling.py). Exact-distinct
-    mode here for the oracle; the 100-TB default is HLL sketches."""
+    the raw tables carry no NULLs): non-null/null-frac/min/max/avg in ONE
+    aggregate over ONE scan plus one narrow exact-distinct aggregate per
+    column (operators/profiling.py)."""
     from ..operators.profiling import profile_columns
 
     ev = _t(spark, sf_dir, "events").select(
