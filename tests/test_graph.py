@@ -48,7 +48,7 @@ def _check(spark, edges: list[tuple[int, int]]) -> None:
 
 def test_chain_multi_round(spark):
     # a 64-node path: naive propagation needs 64 rounds; star-contraction
-    # must converge inside the operator's max_iter=20
+    # must converge inside the operator's MAX_ROUNDS = 20
     _check(spark, [(i, i + 1) for i in range(64)])
 
 

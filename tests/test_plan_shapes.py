@@ -522,7 +522,7 @@ def test_gated_broadcasts_decline_at_scale(spark, qs):
     estimate crossed the cap. q5 and revenue_by_region go fully clean; q7's
     2-of-25-nation cohort stays legitimately under cap (its estimate scales
     with customer/orders bytes, so it declines at larger corpora — the
-    mechanism is covered by the cap_bytes=1 arm of the unit test)."""
+    mechanism is covered by the 1-byte-cap arm of the unit test)."""
     from traderjoe_etl_spark.plans.audit import forced_broadcast_violations
 
     sf100 = "benchdata/sf100"
@@ -741,7 +741,7 @@ def test_broadcast_lint_sees_subquery_plans(spark):
     assert bad, "hint inside a scalar subquery must be visible to the lint"
 
 
-def test_gated_broadcast_derives_column_fraction(spark):
+def test_gated_broadcast_derives_column_fraction(spark, monkeypatch):
     """ADVICE r9: the gate's column fraction is DERIVED from the frame
     (len(df.columns) / parquet-footer ncols), not hand-maintained — so a
     widened projection automatically widens the byte estimate. Pinned by
@@ -750,6 +750,7 @@ def test_gated_broadcast_derives_column_fraction(spark):
     selectivity stays caller-owned and must be a fraction."""
     import pytest as _pytest
 
+    from traderjoe_etl_spark.operators import joins
     from traderjoe_etl_spark.operators.joins import gated_broadcast
     from traderjoe_etl_spark.plans.audit import forced_broadcast_violations
     from traderjoe_etl_spark.sources.tables import read_table, table_bytes, table_ncols
@@ -759,18 +760,18 @@ def test_gated_broadcast_derives_column_fraction(spark):
     ncols = table_ncols(SF, "lineitem")
     assert ncols == 11  # parquet footer, FIXTURES.md §B
     # cap between the 2/11 estimate and the full-width estimate
-    cap = int(table_bytes(SF, "lineitem") * (5 / 11))
+    monkeypatch.setattr(joins, "GATED_BROADCAST_CAP", int(table_bytes(SF, "lineitem") * (5 / 11)))
 
     narrow = li.select("l_orderkey", "l_quantity")
     hinted = orders.join(
-        gated_broadcast(narrow, SF, "lineitem", cap_bytes=cap),
+        gated_broadcast(narrow, SF, "lineitem"),
         orders.o_orderkey == narrow.l_orderkey,
     )
     assert forced_broadcast_violations(hinted), "2/11-width estimate must pass the gate"
 
     wide = li  # full width: estimate = table_bytes > cap — gate declines
     declined = orders.join(
-        gated_broadcast(wide, SF, "lineitem", cap_bytes=cap),
+        gated_broadcast(wide, SF, "lineitem"),
         orders.o_orderkey == wide.l_orderkey,
     )
     assert forced_broadcast_violations(declined) == []

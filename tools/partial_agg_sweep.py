@@ -93,9 +93,8 @@ ADJUDICATIONS: dict[str, dict[str, str]] = {
     },
     "column_profile_events": {
         "code": "bounded-slice",
-        "why": "the event_id hit is count(DISTINCT event_id)'s phase-1 in "
-        "EXACT mode, which exists for the DuckDB oracle; the documented "
-        "100-TB default is distinct='hll' (no per-key map at all). events "
+        "why": "the event_id hit is count(DISTINCT event_id)'s phase-1, "
+        "one narrow exact-distinct aggregate per profiled column. events "
         "is also the 1.6 GB sf100 table (7x under lineitem); in-sweep "
         "survivor of every sf100 audit.",
     },

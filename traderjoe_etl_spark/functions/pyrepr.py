@@ -18,8 +18,8 @@ with pure string expressions, as SQL text that the snapshot statement
 (plans/traderjoe.py) splices in, so strict-parity mode needs no Python
 worker round trip (the pandas-UDF form it replaces cost two
 ArrowEvalPython stages in the snapshot pipeline). A Column is
-``F.expr(py_float_repr_sql("x"))``. Two structural tricks keep the
-expression tree small enough to evaluate fast:
+``F.expr(py_float_repr_sql("x") + "[0]")``. Two structural tricks keep
+the expression tree small enough to evaluate fast:
 
 - the derived parts (digit string, exponent, sign) are bound ONCE per row
   through a single-element ``transform`` lambda — a poor man's LET
@@ -47,7 +47,7 @@ fallback.
 
 Scale note: a handful of string primitives inside the scan's projection —
 O(len) per value, no shuffle, no Python worker; a value in 2^53 <= |x| <
-2^63 also parses up to 34 candidate digit strings back to doubles.
+2^63 also parses a few candidate digit strings back to doubles.
 """
 
 from __future__ import annotations
@@ -116,47 +116,46 @@ def _shortest_integral_sql(x: str) -> str:
     digits, for 2^53 <= |x| < 2^63, where every double is an integer and
     ``CAST(abs(x) AS BIGINT)`` holds its exact digits ``d``.
 
-    For n = 1, 2, … the two n-digit neighbours of ``d`` (truncated, and
-    truncated + 1) are candidates; the nearer one (ties to even: the
-    half-even rounding of ``d``) is tried first, the other second, and the
-    first that parses back to ``|x|`` wins — CPython's shortest, nearest
-    digits. Rounding works on the digit string (``bround`` needs a
-    foldable scale). The ``aggregate`` stops evaluating candidates once
-    one is found (``coalesce`` is lazy)."""
-    p, r = "substring(d, 1, n)", "substring(d, n + 1)"
-    k = "(length(d) - n)"
+    For n = 1, 2, … the half-even rounding of ``d`` to n digits is the
+    n-digit decimal nearest to ``|x|``; the first that parses back to
+    ``|x|`` is CPython's shortest, nearest repr. Only at a power of two
+    is the rounding interval lopsided, so that the farther neighbour
+    could round-trip where the nearer does not; the ten powers of two in
+    the range are in the renderer test. Rounding works on the digit
+    string (``bround`` needs a foldable scale). An n-digit decimal is at
+    most one ulp (<= 1024) from ``|x|`` only when the digits it drops
+    beyond the last four are all 0 or all 9, so the search starts past
+    them, and ``coalesce`` (lazy) stops it at the first hit."""
+    p, r, k = "substring(d, 1, n)", "substring(d, n + 1)", "(length(d) - n)"
     half = f"rpad('5', {k}, '0')"
     up = f"({r} > {half} OR ({r} = {half} AND {k} > 0 AND substring({p}, n, 1) IN ('1', '3', '5', '7', '9')))"
-    hi = f"CAST(CAST({p} AS BIGINT) + 1 AS STRING)"
-    near, far = f"CASE WHEN {up} THEN {hi} ELSE {p} END", f"CASE WHEN {up} THEN {p} ELSE {hi} END"
-
-    def hit(m: str) -> str:
-        return f"WHEN CAST(concat({m}, 'E', {k}) AS DOUBLE) = abs({x}) THEN named_struct('m', {m}, 'k', {k})"
-
-    found = f"CASE {hit(near)} {hit(far)} END"
-    # m may end in zeros only by a carry ("10"): trim them, and place the
+    m = f"CASE WHEN {up} THEN CAST(CAST({p} AS BIGINT) + 1 AS STRING) ELSE {p} END"
+    hit = f"get(filter(array(named_struct('m', {m}, 'k', {k})), t -> CAST(concat(t.m, 'E', t.k) AS DOUBLE) = abs({x})), 0)"
+    start = "greatest(1, length(d) - 4 - length(regexp_extract(substring(d, 1, length(d) - 4), '(0*|9*)$', 1)))"
+    # m ends in zeros only by a carry ("10"): trim them, and place the
     # point after the first digit
     s = "trim(TRAILING '0' FROM c.m)"
     java = f"concat(substring({s}, 1, 1), '.', coalesce(nullif(substring({s}, 2), ''), '0'), 'E', length(c.m) - 1 + c.k)"
     return (
-        f"get(transform(array(CAST(CAST(abs({x}) AS BIGINT) AS STRING)), d -> aggregate(sequence(1, 17),"
-        f" CAST(NULL AS STRUCT<m: STRING, k: INT>), (c, n) -> coalesce(c, {found}), c -> {java})), 0)"
+        f"get(transform(array(CAST(CAST(abs({x}) AS BIGINT) AS STRING)), d -> aggregate(sequence({start}, 17),"
+        f" CAST(NULL AS STRUCT<m: STRING, k: INT>), (c, n) -> coalesce(c, {hit}), c -> {java})), 0)"
     )
 
 
-def py_float_repr_sql(x: str) -> str:
-    """SQL text rendering the double ``x`` exactly as CPython ``repr``
-    would; ``x`` is best a column or lambda variable, since it is spliced
-    several times. NULL in → NULL out (same contract as the pandas-UDF
-    form it replaces).
+def py_float_repr_sql(*xs: str) -> str:
+    """SQL text of the array of CPython ``repr`` renderings of the doubles
+    ``xs``. NULL in → NULL out (same contract as the pandas-UDF form it
+    replaces); one double's rendering is ``py_float_repr_sql(x)[0]``.
 
-    The Java rendering is bound once, through a 1-element ``transform``:
-    Spark's own ``CAST(x AS STRING)``, except for 2^53 <= |x| < 2^63,
-    where JDK 17 prints the integer's digits rather than the shortest
-    ones, and :func:`_shortest_integral_sql` rebuilds it."""
+    A first ``transform`` renders each double as Java does — Spark's own
+    ``CAST(v AS STRING)``, except for 2^53 <= |v| < 2^63, where JDK 17
+    prints the integer's digits rather than the shortest ones and
+    :func:`_shortest_integral_sql` rebuilds them; a second converts each
+    Java string. Each lambda variable is bound once per element, and the
+    SQL text holds one copy of each step however many doubles there are."""
     java = (
-        f"CASE WHEN abs({x}) >= 9007199254740992D AND abs({x}) < 9223372036854775808D"
-        f" THEN concat(CASE WHEN {x} < 0 THEN '-' ELSE '' END, {_shortest_integral_sql(x)})"
-        f" ELSE CAST({x} AS STRING) END"
+        "CASE WHEN abs(v) >= 9007199254740992D AND abs(v) < 9223372036854775808D"
+        f" THEN concat(CASE WHEN v < 0 THEN '-' ELSE '' END, {_shortest_integral_sql('v')})"
+        " ELSE CAST(v AS STRING) END"
     )
-    return f"get(transform(array({java}), j -> {_from_java_sql('j')}), 0)"
+    return f"transform(transform(array({', '.join(xs)}), v -> {java}), j -> {_from_java_sql('j')})"
