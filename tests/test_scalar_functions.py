@@ -61,7 +61,7 @@ def test_py_float_repr_expr(spark):
     vals += _integral_regime(rng, 12000)  # per-bin token amounts of uint reserves
 
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    rows = df.select("x", F.expr(py_float_repr_sql("x") + "[0]").alias("r")).collect()
+    rows = df.select("x", F.expr(py_float_repr_sql("CAST(x AS STRING)")).alias("r")).collect()
     exact_bad, roundtrip_bad = [], []
     for row in rows:
         x, r = row["x"], row["r"]
@@ -79,5 +79,5 @@ def test_py_float_repr_expr(spark):
 
 def test_py_float_repr_expr_null_passthrough(spark):
     df = spark.createDataFrame([(None,), (2.5,)], "x double")
-    got = [r["r"] for r in df.select(F.expr(py_float_repr_sql("x") + "[0]").alias("r")).collect()]
+    got = [r["r"] for r in df.select(F.expr(py_float_repr_sql("CAST(x AS STRING)")).alias("r")).collect()]
     assert got == [None, "2.5"]

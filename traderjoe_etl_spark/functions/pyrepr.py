@@ -18,8 +18,8 @@ with pure string expressions, as SQL text that the snapshot statement
 (plans/traderjoe.py) splices in, so strict-parity mode needs no Python
 worker round trip (the pandas-UDF form it replaces cost two
 ArrowEvalPython stages in the snapshot pipeline). A Column is
-``F.expr(py_float_repr_sql("x") + "[0]")``. Two structural tricks keep
-the expression tree small enough to evaluate fast:
+``F.expr(py_float_repr_sql("CAST(x AS STRING)"))``. Two structural
+tricks keep the expression tree small enough to evaluate fast:
 
 - the derived parts (digit string, exponent, sign) are bound ONCE per row
   through a single-element ``transform`` lambda — a poor man's LET
@@ -82,41 +82,13 @@ def _render_parts_sql(p: str) -> str:
     )
 
 
-def _from_java_sql(j: str) -> str:
-    """CPython rendering from ``j``, a lambda variable holding Java's
-    shortest rendering of the double.
+def _shortest_integral_sql(j: str) -> str:
+    """The parts struct (d=digits, e=exp, n=neg) of the shortest
+    round-trip digits of the double ``j`` renders, for 2^53 <= |x| < 2^63,
+    where every double is an integer and ``CAST(abs(x) AS BIGINT)`` holds
+    its exact digits ``q.d``.
 
-    Handles NaN/±Infinity (Java ``NaN``/``Infinity`` → ``nan``/``inf``),
-    negative zero, integral doubles, and both scientific-notation regimes.
-    """
-    # Java scientific form "<mant>E<exp>", mant = [-]d.d+ with exactly one
-    # integer digit and shortest fraction, so the only trailing zero is
-    # the integral "[-]d.0" form, whose digit is third from the end.
-    mant = f"substring_index({j}, 'E', 1)"
-    digits = f"CASE WHEN endswith({mant}, '.0') THEN substring({mant}, -3, 1) ELSE translate({mant}, '-.', '') END"
-    exp = f"CAST(substring_index({j}, 'E', -1) AS INT)"
-    # bind (digits, exp, neg) once via a 1-element transform — the lambda
-    # body reads them as variables instead of re-evaluating the extraction
-    # subtree at every use site
-    from_sci = (
-        f"get(transform(array(named_struct('d', {digits}, 'e', {exp}, 'n', startswith({j}, '-'))),"
-        f" p -> {_render_parts_sql('p')}), 0)"
-    )
-    return (
-        f"CASE WHEN {j} = 'NaN' THEN 'nan' WHEN {j} = 'Infinity' THEN 'inf' WHEN {j} = '-Infinity' THEN '-inf'"
-        # Java positional regime (1e-3 <= |x| < 1e7, and 0.0): CPython is
-        # also positional there (its window is the wider [1e-4, 1e16)) with
-        # the same shortest digits — pass through.
-        f" WHEN contains({j}, 'E') THEN {from_sci} ELSE {j} END"
-    )
-
-
-def _shortest_integral_sql(x: str) -> str:
-    """Java's ``d.dddE<e>`` form of ``|x|`` with the shortest round-trip
-    digits, for 2^53 <= |x| < 2^63, where every double is an integer and
-    ``CAST(abs(x) AS BIGINT)`` holds its exact digits ``d``.
-
-    For n = 1, 2, … the half-even rounding of ``d`` to n digits is the
+    For n = 1, 2, … the half-even rounding of ``q.d`` to n digits is the
     n-digit decimal nearest to ``|x|``; the first that parses back to
     ``|x|`` is CPython's shortest, nearest repr. Only at a power of two
     is the rounding interval lopsided, so that the farther neighbour
@@ -126,36 +98,54 @@ def _shortest_integral_sql(x: str) -> str:
     most one ulp (<= 1024) from ``|x|`` only when the digits it drops
     beyond the last four are all 0 or all 9, so the search starts past
     them, and ``coalesce`` (lazy) stops it at the first hit."""
-    p, r, k = "substring(d, 1, n)", "substring(d, n + 1)", "(length(d) - n)"
+    d, p, r, k = "q.d", "substring(q.d, 1, n)", "substring(q.d, n + 1)", "(length(q.d) - n)"
     half = f"rpad('5', {k}, '0')"
     up = f"({r} > {half} OR ({r} = {half} AND {k} > 0 AND substring({p}, n, 1) IN ('1', '3', '5', '7', '9')))"
     m = f"CASE WHEN {up} THEN CAST(CAST({p} AS BIGINT) + 1 AS STRING) ELSE {p} END"
-    hit = f"get(filter(array(named_struct('m', {m}, 'k', {k})), t -> CAST(concat(t.m, 'E', t.k) AS DOUBLE) = abs({x})), 0)"
-    start = "greatest(1, length(d) - 4 - length(regexp_extract(substring(d, 1, length(d) - 4), '(0*|9*)$', 1)))"
-    # m ends in zeros only by a carry ("10"): trim them, and place the
-    # point after the first digit
-    s = "trim(TRAILING '0' FROM c.m)"
-    java = f"concat(substring({s}, 1, 1), '.', coalesce(nullif(substring({s}, 2), ''), '0'), 'E', length(c.m) - 1 + c.k)"
+    hit = f"get(filter(array(named_struct('m', {m}, 'k', {k})), t -> CAST(concat(t.m, 'E', t.k) AS DOUBLE) = q.a), 0)"
+    start = f"greatest(1, length({d}) - 4 - length(regexp_extract(substring({d}, 1, length({d}) - 4), '(0*|9*)$', 1)))"
+    # m ends in zeros only by a carry ("10")
+    parts = f"named_struct('d', trim(TRAILING '0' FROM c.m), 'e', length(c.m) - 1 + c.k, 'n', startswith({j}, '-'))"
+    bound = f"named_struct('d', CAST(CAST(abs(CAST({j} AS DOUBLE)) AS BIGINT) AS STRING), 'a', abs(CAST({j} AS DOUBLE)))"
     return (
-        f"get(transform(array(CAST(CAST(abs({x}) AS BIGINT) AS STRING)), d -> aggregate(sequence({start}, 17),"
-        f" CAST(NULL AS STRUCT<m: STRING, k: INT>), (c, n) -> coalesce(c, {hit}), c -> {java})), 0)"
+        f"get(transform(array({bound}), q -> aggregate(sequence({start}, 17),"
+        f" CAST(NULL AS STRUCT<m: STRING, k: INT>), (c, n) -> coalesce(c, {hit}), c -> {parts})), 0)"
     )
 
 
-def py_float_repr_sql(*xs: str) -> str:
-    """SQL text of the array of CPython ``repr`` renderings of the doubles
-    ``xs``. NULL in → NULL out (same contract as the pandas-UDF form it
-    replaces); one double's rendering is ``py_float_repr_sql(x)[0]``.
+def py_float_repr_sql(j: str) -> str:
+    """SQL text rendering a double exactly as CPython ``repr`` would, from
+    ``j``: the text of Spark's own rendering ``CAST(x AS STRING)``, best a
+    column or lambda variable since it is spliced several times.
 
-    A first ``transform`` renders each double as Java does — Spark's own
-    ``CAST(v AS STRING)``, except for 2^53 <= |v| < 2^63, where JDK 17
-    prints the integer's digits rather than the shortest ones and
-    :func:`_shortest_integral_sql` rebuilds them; a second converts each
-    Java string. Each lambda variable is bound once per element, and the
-    SQL text holds one copy of each step however many doubles there are."""
-    java = (
-        "CASE WHEN abs(v) >= 9007199254740992D AND abs(v) < 9223372036854775808D"
-        f" THEN concat(CASE WHEN v < 0 THEN '-' ELSE '' END, {_shortest_integral_sql('v')})"
-        " ELSE CAST(v AS STRING) END"
+    Handles NaN/±Infinity (Java ``NaN``/``Infinity`` → ``nan``/``inf``),
+    negative zero, integral doubles, and both scientific-notation regimes.
+    NULL in → NULL out (same contract as the pandas-UDF form it replaces).
+    """
+    # Java scientific form "<mant>E<exp>", mant = [-]d.d+ with exactly one
+    # integer digit and shortest fraction, so the only trailing zero is
+    # the integral "[-]d.0" form, whose digit is third from the end.
+    mant = f"substring_index({j}, 'E', 1)"
+    digits = f"CASE WHEN endswith({mant}, '.0') THEN substring({mant}, -3, 1) ELSE translate({mant}, '-.', '') END"
+    exp = f"CAST(substring_index({j}, 'E', -1) AS INT)"
+    # JDK 17 prints the integer's digits, not the shortest ones, for
+    # 2^53 <= |x| < 2^63 (exponents 15-18): rebuild them there
+    regime = (
+        f"{exp} BETWEEN 15 AND 18 AND abs(CAST({j} AS DOUBLE)) >= 9007199254740992D"
+        f" AND abs(CAST({j} AS DOUBLE)) < 9223372036854775808D"
     )
-    return f"transform(transform(array({', '.join(xs)}), v -> {java}), j -> {_from_java_sql('j')})"
+    parts = (
+        f"CASE WHEN {regime} THEN {_shortest_integral_sql(j)}"
+        f" ELSE named_struct('d', {digits}, 'e', {exp}, 'n', startswith({j}, '-')) END"
+    )
+    # bind (digits, exp, neg) once via a 1-element transform — the lambda
+    # body reads them as variables instead of re-evaluating the extraction
+    # subtree at every use site
+    from_sci = f"get(transform(array({parts}), p -> {_render_parts_sql('p')}), 0)"
+    return (
+        f"CASE WHEN {j} = 'NaN' THEN 'nan' WHEN {j} = 'Infinity' THEN 'inf' WHEN {j} = '-Infinity' THEN '-inf'"
+        # Java positional regime (1e-3 <= |x| < 1e7, and 0.0): CPython is
+        # also positional there (its window is the wider [1e-4, 1e16)) with
+        # the same shortest digits — pass through.
+        f" WHEN contains({j}, 'E') THEN {from_sci} ELSE {j} END"
+    )

@@ -135,7 +135,9 @@ def build_snapshot(
     def packed(x: str, y: str) -> str:
         # "(binId: x, y; …)" sorted by binId (§2C.1). Strict mode renders
         # both floats through one CPython-repr lambda.
-        xy = py_float_repr_sql(x, y) if strict_repr else f"array(CAST({x} AS STRING), CAST({y} AS STRING))"
+        xy = f"array(CAST({x} AS STRING), CAST({y} AS STRING))"
+        if strict_repr:
+            xy = f"transform({xy}, j -> {py_float_repr_sql('j')})"
         return packed_string_sql("binId", f"concat_ws(': ', CAST(binId AS STRING), concat_ws(', ', {xy}))")
 
     fees_str = "fees_per_bin(bin_id: token_x, token_y_amounts)"
