@@ -5,9 +5,11 @@ from __future__ import annotations
 import io
 import contextlib
 import os
+import subprocess
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -47,3 +49,21 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
 
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_customer")
+
+
+def test_bucketed_query_leaves_no_tables_in_working_dir(tmp_path, sf_smoke):
+    """``bucketed_colocated_join`` run from a fresh working directory writes
+    no table there. Spark's in-memory catalog creates the default
+    database's ``spark-warehouse/`` on first use, so the directory may
+    exist, but it must stay empty: the bucketed tables live in a private
+    scratch directory."""
+    code = (
+        f"import sys; sys.path.insert(0, {ROOT!r})\n"
+        "from traderjoe_etl_spark.queries.final_coverage import bucketed_colocated_join\n"
+        "from traderjoe_etl_spark.session import get_spark\n"
+        f"assert bucketed_colocated_join(get_spark(), {sf_smoke!r}).count() > 0\n"
+    )
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    subprocess.run([sys.executable, "-c", code], cwd=tmp_path, env=env, check=True, timeout=600)
+    wh = tmp_path / "spark-warehouse"
+    assert not wh.exists() or not any(wh.iterdir()), sorted(p.name for p in wh.iterdir())

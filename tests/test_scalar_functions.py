@@ -1,7 +1,7 @@
 """functions/pyrepr.py: the JVM CPython-repr renderer — byte equality with
 repr() over adversarial + random doubles inside its documented exact
-regime (normal doubles with |x| < 2^63, plus 0 / nan / ±inf), and
-value-level round-trip everywhere."""
+regime (every normal double, plus 0 / nan / ±inf), and value-level
+round-trip everywhere."""
 
 from __future__ import annotations
 
@@ -27,6 +27,8 @@ _ADVERSARIAL = [
     1e16, 1e22, 1.2345e100, 9.87e-100, 1e306, -1e306, 4.9e-300,
     # classic float artifacts
     0.1 + 0.2, 3.0000000000000004, 1.0 / 3.0, 123456.789,
+    # smallest normal and denormals
+    2.2250738585072014e-308, 2.225073858507201e-308, 5e-324, 1e-310,
     float("nan"), float("inf"), float("-inf"),
 ]
 
@@ -34,17 +36,18 @@ _ADVERSARIAL = [
 def _in_exact_regime(x: float) -> bool:
     if x != x or math.isinf(x) or x == 0.0:
         return True
-    ax = abs(x)
-    return 2.3e-308 < ax < 2.0**63
+    return abs(x) >= sys.float_info.min
 
 
 def _integral_regime(rng: random.Random, n: int) -> list[float]:
-    """2^53 <= |x| < 2^63, where JDK 17's ``Double.toString`` prints the
-    integer's digits: both ends, every power of two, the powers of ten,
-    and ``n`` log-uniform values."""
+    """Integral doubles from 2^53 up, where JDK 17's ``Double.toString``
+    prints the integer's digits, not the shortest ones: both ends of
+    [2^53, 2^63), every power of two and ten there, values past 2^63
+    (1e23 among them) and ``n`` log-uniform values in [2^53, 2^80)."""
     vals = [2.0**53, 2.0**53 + 2, 2.0**63 - 1024, 1e16, 1e17, 1e18, 9.999999999999999e17]
-    vals += [2.0**e for e in range(53, 63)]
-    vals += [float(int(2.0 ** rng.uniform(53, 63))) for _ in range(n)]
+    vals += [2.0**e for e in range(53, 80)]
+    vals += [2.0**63, 2.0**63 + 2048, 1e19, 1e20, 1e21, 1e23, 9.999999999999999e22, 2.0**64 - 2048]
+    vals += [float(int(2.0 ** rng.uniform(53, 80))) for _ in range(n)]
     return vals + [-v for v in vals[: len(vals) // 2]]
 
 
@@ -61,7 +64,7 @@ def test_py_float_repr_expr(spark):
     vals += _integral_regime(rng, 12000)  # per-bin token amounts of uint reserves
 
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    rows = df.select("x", F.expr(py_float_repr_sql("CAST(x AS STRING)")).alias("r")).collect()
+    rows = df.select("x", F.expr(py_float_repr_sql("x")).alias("r")).collect()
     exact_bad, roundtrip_bad = [], []
     for row in rows:
         x, r = row["x"], row["r"]
@@ -69,8 +72,8 @@ def test_py_float_repr_expr(spark):
             if r != repr(x):
                 exact_bad.append((x, r))
         else:
-            # outside the regime Java may emit longer (still round-tripping)
-            # digits; the parsed VALUE must be identical
+            # denormals: the Java form keeps two digits (4.9E-324 for
+            # 5e-324); the parsed VALUE must be identical
             if not (x != x) and float(r) != x:
                 roundtrip_bad.append((x, r))
     assert not exact_bad, f"byte mismatches in exact regime: {exact_bad[:5]}"
@@ -79,5 +82,5 @@ def test_py_float_repr_expr(spark):
 
 def test_py_float_repr_expr_null_passthrough(spark):
     df = spark.createDataFrame([(None,), (2.5,)], "x double")
-    got = [r["r"] for r in df.select(F.expr(py_float_repr_sql("CAST(x AS STRING)")).alias("r")).collect()]
+    got = [r["r"] for r in df.select(F.expr(py_float_repr_sql("x")).alias("r")).collect()]
     assert got == [None, "2.5"]

@@ -152,3 +152,14 @@ def test_windowed_agg_on_rocksdb_state_store(spark, sf_smoke):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prior)
+
+
+def test_stream_position_tracker_keeps_one_scratch_feed(spark, sf_smoke, tmp_path, monkeypatch):
+    """Each call writes its events feed to a scratch directory and reaps the
+    previous call's, so repeated calls leave at most one behind."""
+    from traderjoe_etl_spark.queries.stateful_queries import stream_position_tracker
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for _ in range(2):
+        assert stream_position_tracker(spark, sf_smoke).count() > 0
+    assert len(list(tmp_path.glob("stateful_q_*"))) <= 1

@@ -12,27 +12,8 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
-
-
-@pandas_udf(T.DoubleType())
-def big_decimal_ratio(raw: pd.Series, scale_digits: pd.Series) -> pd.Series:
-    """Arbitrary-precision decimal scaling: value / 10**digits computed with
-    Python ints (exact beyond float64 and beyond Decimal(38) products) then
-    emitted as double — the fallback for on-chain uint256 math when
-    DecimalType(38,0) would overflow (SURVEY.md §7.4.1; reference drops to
-    float64 at main.py:232-233)."""
-    out = []
-    for v, d in zip(raw, scale_digits):
-        if v is None or d is None:
-            out.append(None)
-        else:
-            # single correctly-rounded int/int division — rounding each
-            # operand to float64 first would double-round
-            out.append(int(v) / (10 ** int(d)))
-    return pd.Series(out, dtype="float64")
 
 
 @pandas_udf(T.DoubleType())
@@ -55,19 +36,6 @@ def gini_impurity(counts: pd.Series) -> pd.Series:
     return counts.map(one)
 
 
-@pandas_udf(T.StringType())
-def py_float_repr(v: pd.Series) -> pd.Series:
-    """Python ``repr`` rendering of doubles (shortest round-trip form:
-    ``0.0001`` / ``1e+16``), for strict byte-parity with the reference's
-    f-string packing (main.py:168, 239) where Spark's JVM rendering
-    (``1.0E-4`` / ``1.0E16``) differs. Formatting is presentation-layer
-    only, so this UDF sits at the final projection — never in a hot
-    aggregation path."""
-    return pd.Series(
-        [None if x is None or pd.isna(x) else repr(float(x)) for x in v], dtype="object"
-    )
-
-
 @pandas_udf(T.DoubleType())
 def median_abs_deviation(v: pd.Series) -> float:
     """Grouped-agg pandas UDAF (Series → scalar): robust spread measure
@@ -82,8 +50,6 @@ def median_abs_deviation(v: pd.Series) -> float:
 
 
 def register_udfs(spark: SparkSession) -> None:
-    """Expose the UDF surface to SQL (`SELECT big_decimal_ratio(...)`)."""
-    spark.udf.register("big_decimal_ratio", big_decimal_ratio)
+    """Expose the UDF surface to SQL (`SELECT gini_impurity(...)`)."""
     spark.udf.register("gini_impurity", gini_impurity)
     spark.udf.register("median_abs_deviation", median_abs_deviation)
-    spark.udf.register("py_float_repr", py_float_repr)

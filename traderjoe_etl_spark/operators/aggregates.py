@@ -74,20 +74,27 @@ def argmax_rows(df: DataFrame, keys: Sequence[str], order_cols: Sequence[str | C
     )
 
 
-def packed_string_sql(key: str, item: str) -> str:
-    """SQL text of the aggregate joining ``item`` over the group's rows,
-    sorted by ``key``, as ``"(item; item; …)"`` — the one place the packed
-    per-bin strings ``"(binId: x, y; …)"`` (main.py:163-170, 239-244) are
-    built. The reference relies on API response order; distributed
-    collection has no such order, so rows are sorted inside the group
-    (SURVEY.md §2C.1).
+def packed_string_sql(key: str, values: Sequence[str], render: str = "CAST(v AS STRING)") -> str:
+    """SQL text of the aggregate joining one ``"key: value, value"`` item
+    per row of the group, sorted by ``key``, as ``"(item; item; …)"`` —
+    the one place the packed per-bin strings ``"(binId: x, y; …)"``
+    (main.py:163-170, 239-244) are built. The reference relies on API
+    response order; distributed collection has no such order, so rows are
+    sorted inside the group (SURVEY.md §2C.1).
 
-    ``collect_list(named_struct(key, item))`` → ``array_sort`` (sorts by
-    the key, then the item) → ``transform`` to the item → ``concat_ws``.
+    ``collect_list`` gathers the raw ``(bin, v0, v1, …)`` structs. Each
+    item is rendered after the aggregate, all its values through one
+    lambda; ``render`` is SQL text over the lambda variable ``v``. (The
+    strict renderer calls ``reflect``, which is nondeterministic, and the
+    analyzer refuses that inside an aggregate function's arguments.) Then
+    ``array_sort`` (by the key, then the item) → the items → ``concat_ws``.
     All higher-order built-ins; spliced into SQL text (``build_snapshot``)
     or made a Column with ``F.expr``, it shares its ``GROUP BY`` with any
     sibling aggregates."""
+    fields = "".join(f", 'v{i}', {v}" for i, v in enumerate(values))
+    vals = ", ".join(f"s.v{i}" for i in range(len(values)))
+    item = f"concat_ws(': ', CAST(s.bin AS STRING), concat_ws(', ', transform(array({vals}), v -> {render})))"
     return (
-        "concat('(', concat_ws('; ', transform(array_sort(collect_list("
-        f"named_struct('bin', {key}, 'item', {item}))), s -> s.item)), ')')"
+        f"concat('(', concat_ws('; ', transform(array_sort(transform(collect_list(named_struct('bin', {key}{fields})),"
+        f" s -> named_struct('bin', s.bin, 'item', {item}))), s -> s.item)), ')')"
     )

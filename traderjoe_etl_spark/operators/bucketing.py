@@ -9,10 +9,9 @@ table for every join) into a one-time write-side cost.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
+
+from ..scratch import scratch_dir
 
 
 def save_bucketed(
@@ -21,17 +20,15 @@ def save_bucketed(
     bucket_key: str,
     num_buckets: int = 16,
 ) -> None:
-    """Persist as a bucketed managed table.
-
-    Drops any previous table AND scrubs an orphaned local warehouse
-    location (a dropped-catalog/leftover-dir combination otherwise fails
-    with LOCATION_ALREADY_EXISTS)."""
+    """Persist as a bucketed catalog table whose files sit in a private
+    scratch directory (``scratch.py``), not in the session's warehouse —
+    by default ``spark-warehouse/`` under the working directory, shared by
+    every session started there. Drops any previous table of the name
+    first; a new directory per call means no leftover location can clash."""
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    if wh.startswith("file:"):
-        shutil.rmtree(os.path.join(wh[len("file:"):], table_name.lower()), ignore_errors=True)
-    df.write.mode("overwrite").bucketBy(num_buckets, bucket_key).saveAsTable(table_name)
+    path = scratch_dir(f"bucketed_{table_name.lower()}_")
+    df.write.mode("overwrite").bucketBy(num_buckets, bucket_key).option("path", path).saveAsTable(table_name)
 
 
 def bucketed_join(spark: SparkSession, left_table: str, right_table: str, key: str) -> DataFrame:

@@ -133,12 +133,11 @@ def build_snapshot(
         return ", ".join(f"{src} AS `{dst}`" for dst, src in cols.items())
 
     def packed(x: str, y: str) -> str:
-        # "(binId: x, y; …)" sorted by binId (§2C.1). Strict mode renders
-        # both floats through one CPython-repr lambda.
-        xy = f"array(CAST({x} AS STRING), CAST({y} AS STRING))"
+        # "(binId: x, y; …)" sorted by binId (§2C.1); strict mode renders
+        # the floats with CPython repr
         if strict_repr:
-            xy = f"transform({xy}, j -> {py_float_repr_sql('j')})"
-        return packed_string_sql("binId", f"concat_ws(': ', CAST(binId AS STRING), concat_ws(', ', {xy}))")
+            return packed_string_sql("binId", [x, y], py_float_repr_sql("v"))
+        return packed_string_sql("binId", [x, y])
 
     fees_str = "fees_per_bin(bin_id: token_x, token_y_amounts)"
     bins_str = "bin_distribution(bin id: token_x_amount, token_y_amounts)"

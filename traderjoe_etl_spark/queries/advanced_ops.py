@@ -3,14 +3,11 @@ streaming rollup surfaced as a batch-checkable query."""
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import session_cache
+from ..scratch import scratch_dir
 from ..session import apply_runtime_confs
 from ..sources.tables import read_table
 from . import query
@@ -105,7 +102,7 @@ def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import windowed_event_agg
 
     apply_runtime_confs(spark)
-    d = _scratch_dir("stream_src_")
+    d = scratch_dir("stream_src_")
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -129,34 +126,10 @@ def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Scratch dirs created by the streaming drains, keyed by prefix. Without
-# bookkeeping a sf10 audit leaves O(events) of parquet under /tmp PER QUERY
-# PER INVOCATION (ADVICE r02): creating a new drain dir reaps the previous
-# one for the same prefix (the only live reference pattern — callers build
-# a fresh plan per invocation), and whatever remains is removed at exit.
-_SCRATCH: dict[str, str] = {}
-
-
-def _scratch_dir(prefix: str) -> str:
-    old = _SCRATCH.pop(prefix, None)
-    if old:
-        shutil.rmtree(old, ignore_errors=True)
-    d = tempfile.mkdtemp(prefix=prefix)
-    _SCRATCH[prefix] = d
-    return d
-
-
-@atexit.register
-def _reap_scratch() -> None:
-    for d in _SCRATCH.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _SCRATCH.clear()
-
-
 def _events_stream(spark: SparkSession, sf_dir: str, prefix: str):
     """events table → file-backed streaming source (availableNow drains it
     deterministically; the same builders run against live sources)."""
-    d = _scratch_dir(prefix + "src-")
+    d = scratch_dir(prefix + "src-")
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -210,7 +183,7 @@ def _drain_to_files(out: DataFrame, prefix: str, rocksdb: bool = False) -> str:
     (e.g. one entry per event_id in a dedup) lives on local disk instead
     of executor heap — the 100-TB state backend. Returns the output dir."""
     spark = out.sparkSession
-    d = _scratch_dir(prefix)
+    d = scratch_dir(prefix)
     key = "spark.sql.streaming.stateStore.providerClass"
     prior = spark.conf.get(key, None)
     if rocksdb:
@@ -253,7 +226,7 @@ def _drain_complete_to_files(agg: DataFrame, prefix: str, rocksdb: bool = False)
     of per-user sessions; caught by the r7 full-registry audit). Returns
     the output dir."""
     spark = agg.sparkSession
-    d = _scratch_dir(prefix)
+    d = scratch_dir(prefix)
     key = "spark.sql.streaming.stateStore.providerClass"
     prior = spark.conf.get(key, None)
     if rocksdb:
@@ -440,7 +413,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import stream_dedup
 
     apply_runtime_confs(spark)
-    d = _scratch_dir("stream_dedup_")
+    d = scratch_dir("stream_dedup_")
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -714,7 +687,7 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot take a struct ordering key), proving stream == batch — the
     Kappa-architecture parity check."""
     apply_runtime_confs(spark)
-    d = _scratch_dir("stream_ohlc_")
+    d = scratch_dir("stream_ohlc_")
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )

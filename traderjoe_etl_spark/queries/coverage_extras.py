@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..scratch import scratch_dir
 from ..sources.tables import read_table
 from . import _t, query
 
@@ -441,14 +442,11 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     xml_parsing — DuckDB reads the parquet original, Spark the ORC copy,
     so the check isolates the format codec). ORC carries the same
     pushdown/pruning contract as parquet in Spark's DataSource V2, so the
-    engine's scan discipline transfers unchanged; a fixed overwrite path
-    keeps repeated driver/bench invocations from accumulating files."""
-    import os
-    import tempfile
-
+    engine's scan discipline transfers unchanged. The copy goes to a
+    private scratch directory (``scratch.py``) that the next invocation
+    reaps, so repeated invocations do not accumulate files and concurrent
+    processes do not overwrite each other's copy."""
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    path = os.path.join(
-        tempfile.gettempdir(), f"traderjoe_orc_roundtrip_{os.path.basename(sf_dir)}"
-    )
+    path = scratch_dir("orc_roundtrip_")
     nation.write.format("orc").mode("overwrite").save(path)
     return spark.read.schema("n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT").orc(path)

@@ -101,9 +101,8 @@ def fees_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     apply_runtime_confs(spark)
     events = read_table(spark, sf_dir, "events").filter(F.col("event_type") == "click")
-    rendered = "concat_ws(': ', CAST(event_id AS STRING), CAST(round(value, 4) AS STRING))"
     packed = events.groupBy("user_id").agg(
-        F.expr(packed_string_sql("event_id", rendered)).alias("fees_per_bin")
+        F.expr(packed_string_sql("event_id", ["round(value, 4)"])).alias("fees_per_bin")
     )
     totals = events.groupBy("user_id").agg(F.round(F.sum("value"), 4).alias("total_accrued"))
     return packed.join(totals, "user_id")

@@ -2,11 +2,10 @@
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_dir
 from ..session import apply_runtime_confs
 from ..sources.tables import read_table
 from . import query
@@ -44,7 +43,7 @@ def stream_position_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import running_position_tracker
 
     apply_runtime_confs(spark)
-    d = tempfile.mkdtemp(prefix="stateful_q_")
+    d = scratch_dir("stateful_q_")
     # r12 (guide §4 — pass only the columns the function needs): the
     # stateful fold reads exactly (user_id, event_type, value), so only
     # those three cross the temp-parquet write, the state-store shuffle,
