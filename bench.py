@@ -124,8 +124,8 @@ def _duck_conn(sf_dir: str):
 def _bench_dir(spark, qs, osql, sf_dir: str) -> dict:
     # r12 measurement-bug fix (VERDICT r11 scaling-probe item): the old
     # sf<=0.5 "tiny-input sizing" block (8 shuffle partitions / 8 MB open
-    # cost) was PROVABLY INERT — every query build calls
-    # session.apply_runtime_confs, which in local mode resets
+    # cost) was PROVABLY INERT — every registry query applies
+    # session.apply_runtime_confs at entry, which in local mode resets
     # shuffle.partitions to defaultParallelism and openCostInBytes to 1 MB
     # before any plan is constructed (verified: conf read back 32/1048576
     # after building a query with the pin set; committed sf0.1 plans show

@@ -114,3 +114,32 @@ def test_argmax_differential_vs_pandas(spark, seed):
     assert set(got) == set(expected)
     for k in got:
         assert got[k] == pytest.approx(expected[k]), k
+
+
+def test_state_store_scope_restores_provider(spark):
+    """The RocksDB state-store provider is scoped to one streaming drain:
+    set inside, and afterwards the prior value comes back (or the key is
+    unset when there was none), also when the drain raises."""
+    from traderjoe_etl_spark.queries.advanced_ops import _state_store
+
+    key = "spark.sql.streaming.stateStore.providerClass"
+    rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    heap = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    original = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        unset_value = spark.conf.get(key, None)
+        with _state_store(spark, True):
+            assert spark.conf.get(key) == rocks
+        assert spark.conf.get(key, None) == unset_value
+        spark.conf.set(key, heap)
+        with pytest.raises(RuntimeError), _state_store(spark, True):
+            raise RuntimeError("drain failed")
+        assert spark.conf.get(key) == heap
+        with _state_store(spark, False):
+            assert spark.conf.get(key) == heap
+    finally:
+        if original is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, original)

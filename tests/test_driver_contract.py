@@ -132,3 +132,88 @@ def test_runtime_confs_pinned(spark):
         "spark.sql.session.timeZone",
     ):
         assert spark.conf.get(key) == RUNTIME_CONFS[key]
+
+
+def test_query_entry_pins_runtime_confs(spark):
+    """``@query`` is where a registry entry gets its confs: the registered
+    callable applies them once, at entry, before the body runs."""
+    from traderjoe_etl_spark.queries import REGISTRY, query
+
+    seen = {}
+
+    @query("__conf_probe__")
+    def probe(s, sf_dir):
+        seen["tz"] = s.conf.get("spark.sql.session.timeZone")
+        return s.range(1)
+
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        REGISTRY["__conf_probe__"].fn(spark, "unused")
+        assert seen["tz"] == "UTC"
+    finally:
+        REGISTRY.pop("__conf_probe__", None)
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_read_table_sets_no_conf(spark, sf_smoke):
+    """The table reader leaves the caller's confs as they are."""
+    from traderjoe_etl_spark.session import RUNTIME_CONFS
+    from traderjoe_etl_spark.sources.tables import read_table
+
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    spark.conf.set(key, "true")
+    try:
+        read_table(spark, sf_smoke, "region")  # no timestamp columns
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.conf.set(key, RUNTIME_CONFS[key])
+
+
+def test_runtime_conf_policy_has_one_home():
+    """Pure ``ast``: ``apply_runtime_confs`` is called only in session.py
+    and in ``query``'s wrapper, and no other package module sets a conf
+    the policy sets (``RUNTIME_CONFS`` and the local-mode sizing)."""
+    import ast
+    import glob
+
+    from traderjoe_etl_spark.session import RUNTIME_CONFS
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "traderjoe_etl_spark")
+
+    def parse(rel):
+        with open(os.path.join(pkg, rel)) as f:
+            return ast.parse(f.read())
+
+    def calls(node, name):
+        return [
+            c for c in ast.walk(node)
+            if isinstance(c, ast.Call)
+            and getattr(c.func, "id", getattr(c.func, "attr", None)) == name
+        ]
+
+    def conf_set_keys(node):
+        return {
+            c.args[0].value for c in calls(node, "set")
+            if isinstance(c.func, ast.Attribute) and ast.unparse(c.func.value).endswith(".conf")
+            and c.args and isinstance(c.args[0], ast.Constant)
+        }
+
+    def top(tree, name):
+        return next(n for n in tree.body if getattr(n, "name", "") == name)
+
+    policy = set(RUNTIME_CONFS) | conf_set_keys(top(parse("session.py"), "apply_runtime_confs"))
+    assert "spark.sql.shuffle.partitions" in policy
+
+    assert len(calls(top(parse("queries/__init__.py"), "query"), "apply_runtime_confs")) == 1
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        if rel == "session.py":
+            continue
+        tree = parse(rel)
+        n = len(calls(tree, "apply_runtime_confs"))
+        n -= rel == os.path.join("queries", "__init__.py")  # the wrapper, checked above
+        offenders += [f"{rel}: apply_runtime_confs"] * n
+        offenders += [f"{rel}: conf.set({k!r})" for k in sorted(conf_set_keys(tree) & policy)]
+    assert offenders == []

@@ -866,7 +866,7 @@ def test_gap_fill_horizon_bounds_output(spark):
     )
     import unittest.mock as um
 
-    with um.patch.object(ws, "_t", lambda *_a, **_k: df):
+    with um.patch.object(ws, "read_table", lambda *_a, **_k: df):
         out = ws.gap_fill_hourly(spark, "ignored")
     per_user = {r["user_id"]: r["n"] for r in out.groupBy("user_id").agg(F.count("*").alias("n")).collect()}
     assert per_user[1] == 4  # 00:00,01:00,02:00 filled + 03:00 observed

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -20,8 +19,8 @@ def _batch(spark, ts, vals):
     )
 
 
-def test_append_snapshot_partitions_and_accumulates(spark):
-    d = tempfile.mkdtemp(prefix="sink_parquet_")
+def test_append_snapshot_partitions_and_accumulates(spark, tmp_path):
+    d = str(tmp_path)
     day1 = 1767225600  # 2026-01-01 UTC
     day2 = day1 + 86400
     append_snapshot(_batch(spark, day1, [1, 2]), d)
@@ -41,8 +40,8 @@ def test_append_snapshot_partitions_and_accumulates(spark):
     assert pruned.count() == 2
 
 
-def test_csv_export_header_once(spark):
-    d = tempfile.mkdtemp(prefix="sink_csv_")
+def test_csv_export_header_once(spark, tmp_path):
+    d = str(tmp_path)
     path = os.path.join(d, "snap.csv")
     csv_export(_batch(spark, 1767225600, [1, 2]), path)
     csv_export(_batch(spark, 1767225600, [3]), path)

@@ -15,8 +15,8 @@ from traderjoe_etl_spark.sources.tables import read_table
 from traderjoe_etl_spark.streaming.stateful import running_position_tracker
 
 
-def test_position_tracker_matches_batch_fold(spark, sf_smoke):
-    d = tempfile.mkdtemp(prefix="stateful_src_")
+def test_position_tracker_matches_batch_fold(spark, sf_smoke, tmp_path):
+    d = str(tmp_path)
     events = read_table(spark, sf_smoke, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -98,7 +98,7 @@ def test_position_fold_skips_null_values():
     assert st.val == (8.5, 5)
 
 
-def test_windowed_agg_on_rocksdb_state_store(spark, sf_smoke):
+def test_windowed_agg_on_rocksdb_state_store(spark, sf_smoke, tmp_path):
     """The scale-grade state backend: the same tumbling-window aggregation
     must produce batch-identical results with RocksDB state (the provider
     a 100-TB deployment runs — state spills to local disk instead of
@@ -113,7 +113,7 @@ def test_windowed_agg_on_rocksdb_state_store(spark, sf_smoke):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        d = tempfile.mkdtemp(prefix="rocksdb_src_")
+        d = str(tmp_path)
         events = read_table(spark, sf_smoke, "events").select(
             "event_id", "ts", "user_id", "event_type", "value"
         )

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 
 import pytest
 
@@ -34,11 +33,11 @@ EVENTS_SCHEMA = T.StructType(
 
 
 @pytest.fixture(scope="module")
-def event_dir(spark, sf_smoke):
+def event_dir(spark, sf_smoke, tmp_path_factory):
     """Materialize sf0.001 events as micro-ts parquet for the stream source."""
     from traderjoe_etl_spark.sources.tables import read_table
 
-    d = tempfile.mkdtemp(prefix="stream_events_")
+    d = str(tmp_path_factory.mktemp("stream_events_"))
     read_table(spark, sf_smoke, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     ).write.mode("overwrite").parquet(d)

@@ -4,7 +4,7 @@ Usage: python tools/dump_plans.py <suffix> [query ...]
 With no query names, dumps the bench HEADLINE set. Plans are captured at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) under the same session
 confs the bench runs with (bench.py's old sf<=0.5 tiny-input pin was inert
-— apply_runtime_confs resets the confs during every query build — and was
+— every registry query applies apply_runtime_confs at entry — and was
 removed in r12, so no extra conf mirroring is needed here).
 Output dir: $PLANS_OUT (default plans/r12).
 """

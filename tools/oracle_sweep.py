@@ -28,7 +28,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     # Vanilla session, like the driver builds — runtime confs must come
-    # from the package itself (apply_runtime_confs inside the queries).
+    # from the package itself (the @query wrapper applies them at entry).
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
         .config("spark.sql.shuffle.partitions", "8")

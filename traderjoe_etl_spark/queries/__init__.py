@@ -5,6 +5,13 @@ Each engine operator from SURVEY.md §2B ships as a named query: a callable
 ANSI-SQL oracle string for DuckDB. Registration is decorator-based so each
 category module stays self-contained.
 
+Runtime confs: ``@query`` registers (and returns) a wrapper that applies
+``session.apply_runtime_confs`` to the caller's session once, at entry,
+then builds the query, so a vanilla session such as the driver's runs every
+query under the engine's confs (UTC, nanos-as-long parquet reads,
+local-mode split and shuffle sizing). Query bodies set no conf themselves
+and read their base tables with the one reader, ``sources.tables.read_table``.
+
 Oracle-parity rules (SURVEY.md §5.1, driver contract):
 - alias every computed column IDENTICALLY in Spark and SQL;
 - round double aggregates on BOTH sides (float sums are order-dependent
@@ -18,6 +25,7 @@ Oracle-parity rules (SURVEY.md §5.1, driver contract):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -48,20 +56,25 @@ def query(
     oracle: str | None = None,
     oracle_gate: Callable[[str], bool] | None = None,
 ):
-    """Register an engine query (decorator)."""
+    """Register an engine query (decorator). The registered and returned
+    callable pins the session's runtime confs, then builds the query."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        REGISTRY[name] = QueryDef(name, fn, oracle, oracle_gate)
-        return fn
+        @functools.wraps(fn)
+        def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            apply_runtime_confs(spark)
+            return fn(spark, sf_dir)
+
+        REGISTRY[name] = QueryDef(name, pinned, oracle, oracle_gate)
+        return pinned
 
     return deco
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """One base table of a query: pin the session's runtime confs, then
-    scan the table lazily."""
-    apply_runtime_confs(spark)
-    return read_table(spark, sf_dir, name)
+def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
+    """Register the testdata tables as temp views for spark.sql queries."""
+    for n in names:
+        read_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
 def load_all() -> None:

@@ -3,12 +3,13 @@ streaming rollup surfaced as a batch-checkable query."""
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import session_cache
 from ..scratch import scratch_dir
-from ..session import apply_runtime_confs
 from ..sources.tables import read_table
 from . import query
 
@@ -39,7 +40,6 @@ def ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     down per-corpus against the full-probe twin."""
     from ..operators.similarity import ivf_assign, ivf_topk
 
-    apply_runtime_confs(spark)
     emb = read_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") != 0)
     qdf = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
@@ -69,7 +69,6 @@ def salted_hot_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to the plain join — which is exactly what the oracle checks."""
     from ..operators.skew import salted_join
 
-    apply_runtime_confs(spark)
     events = read_table(spark, sf_dir, "events")
     dim = spark.createDataFrame(
         [("view", 1.0), ("click", 2.0), ("purchase", 5.0), ("signup", 3.0), ("error", 0.5)],
@@ -101,7 +100,6 @@ def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same rollup as the batch SQL."""
     from ..streaming.jobs import windowed_event_agg
 
-    apply_runtime_confs(spark)
     d = scratch_dir("stream_src_")
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -174,6 +172,28 @@ def _rocksdb_state(sf_dir: str) -> bool:
     return eb == 0 or eb > (200 << 20)
 
 
+@contextlib.contextmanager
+def _state_store(spark: SparkSession, rocksdb: bool):
+    """Scope the RocksDB state-store provider to one drain when ``rocksdb``;
+    the session's prior provider (or none, then the key is unset) comes
+    back afterwards."""
+    if not rocksdb:
+        yield
+        return
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(
+        key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
 def _drain_to_files(out: DataFrame, prefix: str, rocksdb: bool = False) -> str:
     """Drain an append-mode stream to a parquet directory — the DISTRIBUTED
     sink: emitted rows go executor→files, never collecting on the driver
@@ -182,16 +202,8 @@ def _drain_to_files(out: DataFrame, prefix: str, rocksdb: bool = False) -> str:
     RocksDB state-store provider to this drain, so large keyed state
     (e.g. one entry per event_id in a dedup) lives on local disk instead
     of executor heap — the 100-TB state backend. Returns the output dir."""
-    spark = out.sparkSession
     d = scratch_dir(prefix)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(key, None)
-    if rocksdb:
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-    try:
+    with _state_store(out.sparkSession, rocksdb):
         q = (
             out.writeStream.outputMode("append")
             .format("parquet")
@@ -203,12 +215,6 @@ def _drain_to_files(out: DataFrame, prefix: str, rocksdb: bool = False) -> str:
         if not q.awaitTermination(600):
             q.stop()
             raise RuntimeError(f"streaming file drain {prefix!r} exceeded 600s; query stopped")
-    finally:
-        if rocksdb:
-            if prior is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prior)
     return d + "/data"
 
 
@@ -225,20 +231,12 @@ def _drain_complete_to_files(agg: DataFrame, prefix: str, rocksdb: bool = False)
     triggers, which heap-OOM'd the 8 GB JVM at sf100 (~100M events' worth
     of per-user sessions; caught by the r7 full-registry audit). Returns
     the output dir."""
-    spark = agg.sparkSession
     d = scratch_dir(prefix)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(key, None)
-    if rocksdb:
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
 
     def write_batch(batch_df: DataFrame, _epoch: int) -> None:
         batch_df.write.mode("overwrite").parquet(d + "/data")
 
-    try:
+    with _state_store(agg.sparkSession, rocksdb):
         q = (
             agg.writeStream.outputMode("complete")
             .foreachBatch(write_batch)
@@ -249,12 +247,6 @@ def _drain_complete_to_files(agg: DataFrame, prefix: str, rocksdb: bool = False)
         if not q.awaitTermination(600):
             q.stop()
             raise RuntimeError(f"complete-mode drain {prefix!r} exceeded 600s; query stopped")
-    finally:
-        if rocksdb:
-            if prior is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prior)
     return d + "/data"
 
 
@@ -285,7 +277,6 @@ def stream_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same phase as Spark's window())."""
     from ..streaming.jobs import windowed_event_agg
 
-    apply_runtime_confs(spark)
     src = _events_stream(spark, sf_dir, "stream_slide_")
     agg = windowed_event_agg(src, window="1 hour", slide="30 minutes", watermark="0 seconds")
     _drain(agg, "__stream_sliding_rollup")
@@ -331,7 +322,6 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     duration — both mirrored exactly."""
     from ..streaming.jobs import session_window_agg
 
-    apply_runtime_confs(spark)
     src = _events_stream(spark, sf_dir, "stream_sess_")
     agg = session_window_agg(src, gap="30 minutes", watermark="0 seconds")
     # Complete mode is semantics (trailing sessions never pass the final
@@ -371,7 +361,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch interval join over the same events."""
     from ..streaming.jobs import stream_stream_interval_join
 
-    apply_runtime_confs(spark)
     purchases = _events_stream(spark, sf_dir, "stream_ij_l_").filter(
         F.col("event_type") == "purchase"
     )
@@ -412,7 +401,6 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_exact`` query)."""
     from ..streaming.jobs import stream_dedup
 
-    apply_runtime_confs(spark)
     d = scratch_dir("stream_dedup_")
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -465,7 +453,6 @@ def ivf_full_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays covered by ivf_cosine_topk (rows-only by design)."""
     from ..operators.similarity import ivf_assign, ivf_topk
 
-    apply_runtime_confs(spark)
     emb = read_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") != 0)
     qdf = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
@@ -491,7 +478,6 @@ def hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeability law (union-of-sketches tracks sketch-of-union within
     estimator noise, both within rsd of exact) is pytest-asserted in
     tests/test_operators.py."""
-    apply_runtime_confs(spark)
     orders = read_table(spark, sf_dir, "orders")
     per = orders.groupBy("o_orderpriority").agg(
         F.hll_sketch_agg("o_custkey").alias("sk"),
@@ -529,7 +515,6 @@ def stream_static_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     enrichment plan computes exactly the batch semantics."""
     from ..streaming.jobs import stream_static_enrich
 
-    apply_runtime_confs(spark)
     src = _events_stream(spark, sf_dir, "stream_static_")
     dim = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("tier")
@@ -578,7 +563,6 @@ def session_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics (window end = last event + gap) against first principles.
     Complements `sessionization` (the island form as an engine query)
     and the streaming session_window in streaming/jobs.py."""
-    apply_runtime_confs(spark)
     events = read_table(spark, sf_dir, "events")
     return (
         events.groupBy(
@@ -628,7 +612,6 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     textbook FULL JOIN + COALESCE expansion of the same MERGE."""
     from ..operators.merge import merge_upsert
 
-    apply_runtime_confs(spark)
     orders = read_table(spark, sf_dir, "orders")
     target = orders.select(
         "o_orderkey", "o_orderstatus", F.round("o_totalprice", 2).alias("o_totalprice")
@@ -686,7 +669,6 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same semantics in the batch window form (arg_min in DuckDB 1.0
     cannot take a struct ordering key), proving stream == batch — the
     Kappa-architecture parity check."""
-    apply_runtime_confs(spark)
     d = scratch_dir("stream_ohlc_")
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"

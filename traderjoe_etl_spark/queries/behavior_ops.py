@@ -15,7 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import _t, query
+from ..sources.tables import read_table
+from . import query
 
 
 @query(
@@ -50,7 +51,7 @@ def markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a broadcast-sized per-state total joined back. At 100 TB the only
     corpus-scale operation is the user-key shuffle the window needs;
     everything after is |event-type-vocabulary|-sized."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         F.col("event_type").alias("cur"),
@@ -109,7 +110,7 @@ def funnel_progression(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans each stage as one fact-scan + user-keyed shuffle; nothing is
     ever per-event-pair. The three scalar counts collapse to 1-row
     aggregates cross-joined onto a 3-row literal — broadcast by size."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
 
     def stage(prev: DataFrame | None, etype: str) -> DataFrame:
         src = ev.filter(F.col("event_type") == etype)
@@ -166,7 +167,7 @@ def ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Welford vs naive partials) — ulp-level drift only, absorbed by the
     6-dp rounding on every emitted statistic (the repo-wide accepted
     class); counts are exact."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     a = F.col("user_id") % 2 == 0
     b = F.col("user_id") % 2 == 1
     va = F.when(a, F.col("value"))
@@ -229,7 +230,7 @@ def ewma_last_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-ulp wobble sits inside a 6-dp-rounded normalized sum (the accepted
     class); the (ts DESC, event_id DESC) rank makes the selected window
     and its order engine-exact."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     recent = (
         ev.select("user_id", "value", F.row_number().over(w).alias("rn"))
@@ -284,7 +285,7 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     one final partial-agg count. Both sides of the join are
     user-cardinality relations; at 100 TB the events table is touched
     exactly twice, both embarrassingly parallel."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     first = ev.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cw")
     )
@@ -351,7 +352,7 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-exact), revenue is summed in cents (exact int64), so the
     oracle matches bit-for-bit. After the window, one map-combinable
     |campaigns|-key aggregate."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     base = ev.select(
         "user_id",
         "ts",
@@ -425,7 +426,7 @@ def event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     global rank window.  Ordering ties inside a user are broken by the
     unique event_id, so the trigram multiset — and therefore the counts —
     are partition- and engine-invariant."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         "event_type",
@@ -519,7 +520,7 @@ def multi_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id window exchange + the 3-row final-agg exchange). The credit
     expression stays map-only CASE arithmetic and the rollup a
     map-combinable per-type sum."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w_epoch = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -612,7 +613,7 @@ def cumulative_unique_users_daily(spark: SparkSession, sf_dir: str) -> DataFrame
     the calendar ever weren't tiny.  Integer-exact throughout."""
     from ..operators.prefix import global_running_agg
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     first_day = ev.groupBy("user_id").agg(
         F.date_trunc("day", F.min("ts")).cast("date").alias("day")
     )
@@ -665,7 +666,7 @@ def interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the OHLC shape. Gaps are integer epoch seconds (both engines FLOOR
     the timestamp — the twap_daily rounding lesson); μ and σ are the
     only floats, rounded on both sides."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sec = F.col("ts").cast("long")
     g = ev.select(

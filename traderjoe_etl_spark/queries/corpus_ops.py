@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.text import tokens
-from . import _t, query
+from ..sources.tables import read_table
+from . import query
 
 _TOK_SQL = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 
@@ -89,7 +90,7 @@ def segment_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
       doc length) and re-slices the token array map-side.
     The packed key bounds documents at 100k segments = 1.6M tokens; the
     judge-visible contract for longer docs is a wider multiplier."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("w"))
     nseg = F.ceil(F.size("w") / F.lit(float(_SEG))).cast("int")
     segs = toks.select(
@@ -192,7 +193,7 @@ def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches. No windows, no skew; ranking is on the 6-dp-rounded weight
     with doc_id tie-break (ln's 1-ulp cross-libm wobble cannot reorder
     a rounded key)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     per = (
         docs.select(
             "doc_id",
@@ -316,7 +317,7 @@ def kmeans_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-dp-rounded distance in BOTH engines."""
     from ..operators.similarity import l2_assign_arrow
 
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     seeds = [
         (i, [float(x) for x in r.embedding])
         for i, r in enumerate(emb.orderBy("vec_id").limit(_KM_K).collect())
@@ -407,7 +408,7 @@ def logreg_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     On this synthetic corpus length barely predicts source, so the
     learned weights are small — the determinism contract, not the AUC,
     is what the oracle pins."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     feats = docs.select(
         "doc_id",
         (F.length("text") / F.lit(500.0)).alias("x1"),
@@ -492,7 +493,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys and broadcasts the two 1-row totals. No window touches an
     unaggregated partition; ranking is on the 6-dp-rounded score
     (tfidf/bigram-surprisal discipline)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("w")).filter(F.size("w") >= 2)
     bg = toks.select(
         F.explode(
@@ -695,7 +696,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     (w, wc, s) with all merges applied). See bpe_merge_training for the
     scale shape; bpe_encode_corpus reuses the final vocab as the
     word → subword-segmentation map."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     # repartition before the checkpoint: AQE coalesces the tiny vocab
     # aggregate to ~1 post-shuffle partition, which would serialize every
     # later fold pass onto one task (observed at sf100: 30k words in one
@@ -779,7 +780,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact with no float discipline."""
     _, vocab = _bpe_train(spark, sf_dir)
     wordmap = vocab.select(F.col("w").alias("word"), F.size("s").alias("n_sub"))
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     words = (
         docs.select("doc_id", F.explode(tokens("text")).alias("word"))
         .filter(F.col("word") != "")
@@ -907,7 +908,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TakeOrderedAndProject, no global window)."""
     from ..operators.similarity import l2_assign_arrow
 
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     seed_rows = emb.orderBy("vec_id").limit(_PQ_K).collect()
     seed_vecs = [[float(x) for x in r.embedding] for r in seed_rows]
     qfull = [float(x) for x in seed_rows[0].embedding]  # vec_id 0 = first seed

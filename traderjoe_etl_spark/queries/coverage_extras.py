@@ -10,7 +10,7 @@ from pyspark.sql import types as T
 
 from ..scratch import scratch_dir
 from ..sources.tables import read_table
-from . import _t, query
+from . import query
 
 
 @query(
@@ -26,7 +26,7 @@ from . import _t, query
 )
 def full_outer_nation_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER join of two aggregates (both-sides-preserved semantics)."""
-    cust = _t(spark, sf_dir, "customer").groupBy(F.col("c_nationkey").alias("n")).agg(
+    cust = read_table(spark, sf_dir, "customer").groupBy(F.col("c_nationkey").alias("n")).agg(
         F.count(F.lit(1)).alias("n_cust")
     )
     supp = read_table(spark, sf_dir, "supplier").groupBy(F.col("s_nationkey").alias("n")).agg(
@@ -52,7 +52,7 @@ def full_outer_nation_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def right_join_parts_in_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RIGHT outer join (parts preserved even when never ordered)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     part = read_table(spark, sf_dir, "part")
     return (
         li.join(part, li.l_partkey == part.p_partkey, "right")
@@ -78,7 +78,7 @@ def grouping_sets_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expand (×3 grouping sets) then processes the handful of pre-summed
     rows. Exact: l_quantity is integral, so the double partials re-sum
     without reassociation error (and far below 2^53)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     li.groupBy("l_returnflag", "l_linestatus").agg(
         F.sum("l_quantity").alias("__q")
     ).createOrReplaceTempView("__li_gs")
@@ -107,7 +107,7 @@ def grouping_sets_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def range_frame_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frame (value-based, not row-based): trailing 1-hour sum per
     user — duplicate timestamps share the same frame, unlike ROWS."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.col("ts").cast("long"))
@@ -132,7 +132,7 @@ def range_frame_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def from_json_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """from_json with an explicit schema (P1 generalized — the engine's
     json_normalize; struct field access after parse)."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     parsed = events.select(
         "event_id",
         F.from_json("props", T.StructType([T.StructField("k", T.LongType())])).alias("p"),
@@ -170,7 +170,7 @@ def pandas_udf_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.udfs import gini_impurity, register_udfs
 
     register_udfs(spark)
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     counts = events.groupBy("user_id").agg(
         F.array(
             *[
@@ -206,7 +206,7 @@ def stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-size moment sketch per group; the shuffle carries one row
     per (group, aggregate), so this scales like any hash aggregate).
     median is the one exception: exact-sort based in both engines."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.corr("l_extendedprice", "l_quantity"), 6).alias("corr_price_qty"),
         F.round(F.covar_samp("l_extendedprice", "l_quantity"), 4).alias("covar_s"),
@@ -241,7 +241,7 @@ def bag_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a single aggregate over a union with per-side counts — no O(n²)
     anti-join; the follow-up count-rollup makes the result deterministic
     regardless of which physical duplicate survives."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     hi = orders.filter(F.col("o_totalprice") > 100000).select("o_custkey")
     ur = orders.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     both = (
@@ -281,7 +281,7 @@ def conditional_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and < 2^53, so the double ranking is exact). All single-pass partial
     aggregates except sum(DISTINCT), which Spark plans as the standard
     two-phase expand."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     rank = F.col("l_extendedprice") * 100000 + F.col("l_orderkey")
     return li.groupBy("l_returnflag").agg(
         F.count_if(F.col("l_discount") > 0.05).alias("n_discounted"),
@@ -315,7 +315,7 @@ def map_collection_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (which has no portable MAP literal) checks the same values.
     The map is built from pre-aggregated (type, month) counts — collect
     over ≤12 entries per group, never over raw events."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     counts = events.groupBy(
         "event_type", F.month("ts").alias("mon")
     ).agg(F.count(F.lit(1)).alias("cnt"))
@@ -362,7 +362,7 @@ def constraint_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     violation counts and an overall verdict."""
     from ..sources.tables import corpus_width
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     cust = read_table(spark, sf_dir, "customer").select("c_custkey")
     # customer is unhinted (q18 rule: it scales with the corpus, so a
     # broadcast pin is a scale bug) — the planner's estimate for the
@@ -410,7 +410,7 @@ def xml_parsing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the source columns, so the check isolates the parser itself (a
     DuckDB XML twin does not exist). Parse runs in the JVM inside the
     scan projection; no UDF."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     xml = F.concat(
         F.lit("<cust><id>"), F.col("c_custkey"),
         F.lit("</id><seg>"), F.col("c_mktsegment"),
@@ -446,7 +446,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     private scratch directory (``scratch.py``) that the next invocation
     reaps, so repeated invocations do not accumulate files and concurrent
     processes do not overwrite each other's copy."""
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
+    nation = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     path = scratch_dir("orc_roundtrip_")
     nation.write.format("orc").mode("overwrite").save(path)
     return spark.read.schema("n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT").orc(path)

@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.text import tokens
-from . import _t, query
+from ..sources.tables import read_table
+from . import query
 
 _TOK_SQL = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 
@@ -77,7 +78,7 @@ def bigram_surprisal_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     timed runs pay the full honest cost. Ranking is on the ROUNDED score
     (ln is the only transcendental; 1-ulp libm differences across
     engines cannot reorder a 6-dp-rounded key) with doc_id tie-break."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("w")).filter(F.size("w") >= 2)
 
     def bigrams(src: DataFrame) -> DataFrame:
@@ -188,7 +189,7 @@ def prototype_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-order-dependent avg) cannot flip a membership."""
     from ..operators.similarity import cosine
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     cent = (
         emb.select("label", F.posexplode("embedding").alias("pos", "v"))
         .groupBy("label", "pos")
@@ -312,8 +313,8 @@ def pagerank_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     local disk read doesn't."""
     from ..sources.tables import corpus_width
 
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     # The edge distinct runs REDUCE-SIDE over a corpus-scaled key
     # repartition (the Q16 pattern, subquery_shapes.py): (src, dst) pairs
     # barely deduplicate (~1.2:1 — a customer rarely repeats the same
@@ -431,7 +432,7 @@ def corpus_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     over those counts. Binning is min(floor(x/width), NB) — floor before
     any cast, because DuckDB CAST(double AS INT) rounds half-away while
     Spark truncates (the repo-wide rule)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     nb = F.lit(_PSI_NB)
     len_b = F.least(F.floor(F.length("text") / F.lit(50.0)).cast("int"), nb)
     tok_b = F.least(F.floor(F.size(tokens("text")) / F.lit(10.0)).cast("int"), nb)
@@ -481,7 +482,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartitionings is pinned in the partition-invariance suite."""
     from ..operators.similarity import pca_fit, pca_project
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     mean, comps, _ = pca_fit(emb, dim=64, k=8, pivot_order_col="vec_id")
     out = pca_project(emb, mean, comps)
     return out.select(
@@ -559,7 +560,7 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.prefix import global_running_agg
     from ..operators.text import text_profile
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     prof = text_profile(docs, "doc_id", "text", fingerprint_hash="xxhash64").select(
         "doc_id", F.col("n_tokens").cast("long").alias("n_tokens"), "quality"
     )

@@ -16,14 +16,8 @@ from pyspark.sql import functions as F
 
 from ..operators.contamination import contamination_report
 from ..operators.sampling import sample_bucket, sqrt_temperature_mix
-from ..session import apply_runtime_confs
 from ..sources.tables import read_table
 from . import query
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return read_table(spark, sf_dir, "documents")
 
 
 _TOK_SQL = "list_filter(string_split_regex(lower(trim(text)), '\\s+'), w -> w <> '')"
@@ -68,7 +62,7 @@ def benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     both seeds. Measured sf10 (one session, min-of-3 noop, outputs
     collected equal — 31,868 rows both ways): 10.08 → 2.17 s (the
     concat+md5 over ~50M 4-gram strings WAS the query)."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     train = docs.filter(F.col("doc_id") % 97 != 0)
     return contamination_report(train, bench, text_col="text", id_col="doc_id", n=4)
@@ -101,7 +95,7 @@ def temperature_mix_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical cross-engine (sqrt is IEEE-correctly-rounded — see
     operators/sampling.sqrt_temperature_mix; a pow()-based α would not
     survive the value-hash gate)."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     kept = (
         sqrt_temperature_mix(docs, group_col="source", key="doc_id", scale=2.0, seed="mix")
         .groupBy("source")
@@ -140,7 +134,7 @@ def train_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.8·2³² = cccccccc and 0.9·2³² = e6666666; the per-lang breakdown
     doubles as a stratification sanity check. Pure map-side CASE + one
     partial-agg groupBy."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     bucket = sample_bucket("doc_id", seed="split")
     split = (
         F.when(bucket < "cccccccc", F.lit("train"))
@@ -199,7 +193,6 @@ def gdpr_erase_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast vs shuffle from actual sizes (a forced broadcast would hit
     the 8 GB cap on a 100-TB cohort).  Every count is a map-combinable
     conditional aggregate."""
-    apply_runtime_confs(spark)
     cust = read_table(spark, sf_dir, "customer")
     orders = read_table(spark, sf_dir, "orders")
     li = read_table(spark, sf_dir, "lineitem")

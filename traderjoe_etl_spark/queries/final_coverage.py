@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import read_table, table_bytes
-from . import _t, query
+from . import query
 
 
 def _exact_percentile_regime(sf_dir: str) -> bool:
@@ -34,7 +34,7 @@ def percentiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact median + continuous percentiles (both engines interpolate
     identically — verified). The approx_percentile variant is the scale
     path (single-pass sketch) and is rows-only by nature."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.median("l_quantity").alias("med_qty"),
         F.round(F.percentile("l_quantity", 0.9), 6).alias("p90_qty"),
@@ -65,7 +65,7 @@ def nulls_ordering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit NULLS LAST ordering — a cross-engine trap pinned down:
     Spark defaults nulls FIRST on desc, DuckDB nulls LAST; both sides say
     it explicitly so the result sets agree."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     gaps = orders.select(
         "o_custkey",
@@ -92,7 +92,7 @@ def nulls_ordering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def array_scalar_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array scalar surface: size / element_at (positive + negative index) /
     slice + aggregate / array_max (SURVEY.md §2B array fns)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     return emb.select(
         "vec_id",
         F.size("embedding").alias("dim"),
@@ -158,7 +158,7 @@ def approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed prefix scan — the weighted_quantiles_price query is
     that path; the sketch is the right tool when values are continuous
     and any per-value pre-agg would not shrink the relation."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     lb = table_bytes(sf_dir, "lineitem")
     acc = 100000 if 0 < lb <= (4 << 20) else (10000 if lb <= (2 << 30) else 1000)
     return li.groupBy("l_returnflag").agg(
@@ -186,7 +186,7 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r01 next-step #2)."""
     from ..operators.bucketing import bucketed_join, save_bucketed
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     cust = read_table(spark, sf_dir, "customer")
     save_bucketed(orders.withColumnRenamed("o_custkey", "custkey"), "q_b_orders", "custkey", 8)
     save_bucketed(cust.withColumnRenamed("c_custkey", "custkey"), "q_b_customer", "custkey", 8)
@@ -232,7 +232,7 @@ def scd2_snapshot_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     versions open at 01:00, untouched keys keep their original row."""
     from ..operators.scd import scd2_init, scd2_merge
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     base = orders.groupBy(F.col("o_custkey").alias("pair_key")).agg(
         F.round(F.sum("o_totalprice"), 2).alias("position_value"),
         F.max("o_orderdate").alias("ts"),
@@ -303,7 +303,7 @@ def column_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     column (operators/profiling.py)."""
     from ..operators.profiling import profile_columns
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         "event_type",
@@ -334,7 +334,7 @@ def fuzzy_name_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate (|len diff| ≤ 3 is a necessary condition of lev ≤ 3) so the
     quadratic levenshtein only runs inside bands — the same
     block-then-verify discipline as the MinHash/SimHash dedup family."""
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     names = part.select("p_name").distinct()
     a = names.select(F.col("p_name").alias("name_a"))
     b = names.select(F.col("p_name").alias("name_b"))
@@ -376,7 +376,7 @@ def array_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect_set results (suppliers per order vs suppliers with returned
     lines), rendered as sorted CSV so the oracle's list functions check
     the same values. One groupBy; the set ops are per-row JVM HOFs."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     per_order = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_suppkey")).alias("all_supps"),
         F.array_sort(
@@ -415,7 +415,7 @@ def nested_collections(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus to_json struct serialization, checked byte-for-byte against a
     string-constructed oracle twin. The exploded array comes from a
     collect_set aggregate, so the Generate runs over per-order rows."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     per = li.groupBy("l_orderkey").agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.array_sort(

@@ -18,7 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from . import _t, query
+from ..sources.tables import read_table
+from . import query
 
 
 # Packed total-order key for degree orientation: deg * 1e10 + node_id.
@@ -35,7 +36,7 @@ _CP_LO, _CP_HI = "1996-01-01", "1997-01-01"
 
 def co_purchase_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (orderkey, partkey) pairs in the one-year slice."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit(_CP_LO))

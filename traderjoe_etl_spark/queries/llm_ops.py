@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _t, query
+from ..sources.tables import read_table
+from . import query
 
 
 # cosine_topk physical-strategy crossover (the named-knob convention of
@@ -39,7 +40,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicates' arbitrary pick) per distinct text, with copy counts.
     Hash-groupBy on the text; at 100 TB group on a 128-bit hash of the text
     (md5) instead, so the shuffle moves 16-byte keys, not documents."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.groupBy("text").agg(
         F.min("doc_id").alias("doc_id"),
         F.count(F.lit(1)).alias("n_copies"),
@@ -61,7 +62,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus statistics per (lang, source) — the aggregate shape of corpus
     curation dashboards."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.round(F.avg("n_chars"), 4).alias("avg_chars"),
@@ -89,7 +90,7 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     space-prefixed) — the cheap proxy for real tokenizer counts that
     data-mixing pipelines budget with. Pure column expressions — no UDF,
     stays in codegen."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     bpe = " ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+"
     return docs.filter(F.length(F.trim("text")) > 0).select(
         "doc_id",
@@ -123,7 +124,7 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (length/punct/stopword-ratio family, SURVEY.md §2B ◆). All built-ins."""
     from ..functions.scrub import safe_div
 
-    docs = _t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
+    docs = read_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     n_tokens = F.size(F.split(F.trim("text"), r"\s+"))
     n_chars = F.length("text")
     n_stop = F.size(F.split(F.lower("text"), r"\bthe\b")) - 1
@@ -156,7 +157,7 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2 norms over the embedding array column via higher-order functions
     (aggregate/transform) — JVM-side vector math, no Python UDF."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     sq_sum = F.aggregate(
         "embedding", F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
     )
@@ -201,7 +202,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import cosine_topk_brute
     from ..sources.tables import table_bytes, table_fingerprint
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     eb = table_bytes(sf_dir, "embeddings")
     # fingerprinted key: the bank pins collected DATA, so a regenerated
@@ -246,7 +247,7 @@ def cosine_topk_batch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the rank filter map-side (shuffle ≤ k·partitions rows/query)."""
     from ..operators.similarity import cosine_topk_batch
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
@@ -340,7 +341,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     token pass."""
     from ..operators.dedup import simhash_fingerprint
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     # Bucket-collect pairing (same shape as minhash's bucket_agg): bands
     # group to (band, key) buckets whose member list explodes to in-bucket
     # pairs — the fingerprint pass is consumed ONCE, so the whole query is
@@ -459,7 +460,7 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers it against exact Jaccard."""
     from ..operators.dedup import minhash_lsh_candidates
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     # bucket_agg pairing: the whole query is ONE lazy plan (signatures →
     # band buckets → in-bucket pairs, each band entry consumed once), so
     # re-executing the returned DataFrame re-runs the full pipeline — no
@@ -494,7 +495,7 @@ def minhash_near_dup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     proof)."""
     from ..operators.dedup import minhash_lsh_candidates
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return minhash_lsh_candidates(
         docs,
         id_col="doc_id",
@@ -524,7 +525,7 @@ def hash_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-only; the predicate fuses into the scan."""
     from ..operators.sampling import hash_sample
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return hash_sample(orders, "o_orderkey", 0.1).select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("o_totalprice")
     )
@@ -553,7 +554,7 @@ def stratified_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     strata column, no per-stratum pass."""
     from ..operators.sampling import stratified_hash_sample
 
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     sampled = stratified_hash_sample(
         cust, key="c_custkey", strata="c_mktsegment",
         rates={"BUILDING": 0.5, "AUTOMOBILE": 0.2}, default_rate=0.05,
@@ -627,7 +628,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     language keys."""
     from ..operators.text import lang_id
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.unionAll(
         docs.filter(F.col("doc_id") % 7 == 0).select(
             (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
@@ -699,7 +700,7 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     full code vector is hash-verified, plus reconstruction RMSE. All JVM
     higher-order functions (transform/aggregate/zip_with) — map-only, no
     shuffle, no Python in the row path."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     ve = F.transform("embedding", lambda x: x.cast("double"))
     v = emb.select("vec_id", ve.alias("ve"))
     rng = v.select(

@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import _t, query
+from ..sources.tables import read_table
+from . import query
 
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -61,7 +62,7 @@ def ohlc_hourly_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     is reused by the agg: one shuffle total). At 100 TB this is the
     canonical "resample a firehose" plan: linear scan, one bounded-key
     shuffle, output |instruments|x|hours| rows."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     bar = F.date_trunc("hour", F.col("ts"))
     w = (
         Window.partitionBy("event_type", "bar")
@@ -132,7 +133,7 @@ def vwap_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     (instrument, hour) key, no window, no join. The ratio happens on the
     combined partials, so at 100 TB each executor ships exactly
     |local bars| rows of partial state."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     qty = F.get_json_object("props", "$.k").cast("long")
     return (
         ev.select(
@@ -191,7 +192,7 @@ def realized_volatility_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle total). Float discipline: summands are bounded (|ln ratio|²
     over a bounded price range), so cross-engine partial-sum reorder
     drifts ~1e-12 relative — far inside the 6 dp rounding."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("value") > 0)
+    ev = read_table(spark, sf_dir, "events").filter(F.col("value") > 0)
     day = F.date_trunc("day", F.col("ts"))
     w = Window.partitionBy("event_type", "d").orderBy("ts", "event_id")
     r = ev.withColumn("d", day).select(
@@ -249,7 +250,7 @@ def max_drawdown_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 (no full sort). Running float sums evaluate in the identical
     (ts, event_id) sequence on both engines, so the prefix values agree
     to the last ulp and the 6 dp rounding is safe."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    ev = read_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     wseq = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -318,7 +319,7 @@ def rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 4 dp BEFORE the median, so threshold comparisons are exact on
     both engines (quantile_cont == Spark percentile: both linear
     interpolation at (n-1)p)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     pur = ev.filter(F.col("event_type") == "purchase")
     max_ts = pur.agg(F.max("ts").alias("gmax"))
     base = (
@@ -387,7 +388,7 @@ def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates a per-type value multiset — for a true firehose you'd
     swap `percentile_approx`; the exact form is kept here because the
     oracle (quantile_cont) must match to the interpolation."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     th = ev.groupBy("event_type").agg(
         F.expr("percentile(value, 0.05D)").alias("lo"),
         F.expr("percentile(value, 0.95D)").alias("hi"),
@@ -461,7 +462,7 @@ def bollinger_breakouts(spark: SparkSession, sf_dir: str) -> DataFrame:
     trivially one task, no matter how many trades fed it. Breach
     comparison uses the unrounded band on both sides (identical inputs →
     identical doubles; the displayed band is rounded separately)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     wb = (
         Window.partitionBy("event_type", "bar")
         .orderBy("ts", "event_id")
@@ -549,7 +550,7 @@ def cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines accumulate the identical doubles in the identical day order —
     the prefix sums match to the bit, and the argmax day needs no
     tolerance (ties break to the earliest day)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     daily = (
         ev.select("event_type", F.date_trunc("day", F.col("ts")).alias("d"), "value")
         .groupBy("event_type", "d")
@@ -621,7 +622,7 @@ def impermanent_loss_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     |instruments|×|days| output rows; the IL algebra is map-only on the
     aggregated relation. sqrt's cross-libm 1-ulp wobble sits under the
     6-dp rounding (the accepted class)."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("value") > 0)
+    ev = read_table(spark, sf_dir, "events").filter(F.col("value") > 0)
     w = (
         Window.partitionBy("event_type", "d")
         .orderBy("ts", "event_id")
@@ -689,7 +690,7 @@ def twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one lead() window over bounded (instrument, day)
     partitions, then a map-combinable agg on the same keys — the OHLC
     shuffle-reuse shape, one corpus-scale shuffle total."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     wl = Window.partitionBy("event_type", "d").orderBy("ts", "event_id")
     t = ev.withColumn("d", F.date_trunc("day", F.col("ts"))).select(
         "event_type",
@@ -764,7 +765,7 @@ def linear_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     |instruments| rows of identical integers — both engines divide the
     same exact numerators. Headroom: Σxy ≲ 2e15 at sf100, inside int64.
     Never a per-row model, never a window, never a driver fit."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     daily = (
         ev.select(
             "event_type",
@@ -827,7 +828,7 @@ def seasonality_hour_of_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     instrument totals derived FROM that aggregate (no second scan), and
     a broadcast join for the ratio. Both engines build the index from
     identical exact integers; one division each, rounded 6 dp."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     hourly = (
         ev.select(
             "event_type",
@@ -887,7 +888,7 @@ def rolling_median_revenue_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-relation argument as the gap-fill queries. All arithmetic in
     integer cents; the even-count median is the mean of the two middle
     values — exact on the 0.5-cent grid, so no rounding is applied."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     daily = (
         orders.select(
             F.datediff(F.to_date("o_orderdate"), F.lit("1995-01-01").cast("date")).alias(

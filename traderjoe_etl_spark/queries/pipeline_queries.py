@@ -22,7 +22,6 @@ from ..schemas import (
     USER_HISTORY_SCHEMA,
 )
 from ..functions import session_cache
-from ..session import apply_runtime_confs
 from ..sources.tables import read_table
 from . import query
 
@@ -291,7 +290,6 @@ def snapshot_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's hash check covers all 46 columns — packed-bin strings
     included, because strict_repr renders floats with Python repr, which is
     byte-identical to DuckDB's DOUBLE::VARCHAR shortest-round-trip form."""
-    apply_runtime_confs(spark)
     # Prepared-plan cache: the reference re-runs the IDENTICAL pipeline
     # every hour (main.py:353-359); re-analyzing the same 46-column DAG per
     # cycle is ~1s of pure driver time. DataFrames are immutable — reusing

@@ -15,7 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import _t, query
+from ..sources.tables import read_table
+from . import query
 
 
 @query(
@@ -60,7 +61,7 @@ def benford_digit_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one map-combinable 9-key aggregate over the scan; the
     expectation/statistic algebra runs on 9 rows. Output is 9 rows at
     any corpus size."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     cents = orders.filter(F.col("o_totalprice") > 0).select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("c")
     )
@@ -134,7 +135,7 @@ def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     is equivalent SQL, but the engine plan reads the fact table exactly
     once — the difference between a 5×-cost QA gate and a free one.
     Integer counts throughout; no float discipline needed."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     viol = orders.agg(
         F.sum((F.col("o_totalprice") <= 0).cast("int")).alias("v1"),
         F.sum((~F.col("o_orderstatus").isin("O", "F", "P")).cast("int")).alias("v2"),
@@ -198,7 +199,7 @@ def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expected counts derive from identical integers on both engines; the
     20-term float sum rounds to 4 dp — far above the reassociation
     drift."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     obs = (
         ev.select("event_type", (F.col("user_id") % _CHI2_BUCKETS).alias("bucket"))
         .groupBy("event_type", "bucket")
@@ -260,7 +261,7 @@ def clamped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     All-integer cents arithmetic → bit-exact on any engine; the oracle
     replays the identical fold with DuckDB's list_reduce (0-prepended,
     since list_reduce seeds from the first element)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     moves = ev.filter(F.col("event_type").isin("purchase", "error")).select(
         "user_id",
         "ts",
@@ -332,8 +333,8 @@ def order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — co-partitioned at scale; a bucketed layout makes it
     shuffle-free), then TakeOrderedAndProject for the global top-20 (no
     full sort)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
     term = (
         F.round(F.col("l_extendedprice") * 100).cast("long")
         * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
@@ -382,7 +383,7 @@ def source_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast per-source total. Probabilities derive from identical
     integers on both engines; ln/exp 1-ulp wobble sits under the 6/4-dp
     rounding (the accepted libm class)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     c = docs.groupBy("source", "lang").agg(F.count(F.lit(1)).cast("long").alias("n"))
     tot = c.groupBy("source").agg(F.sum("n").alias("nt"))
     p = F.col("n") * F.lit(1.0) / F.col("nt")
@@ -448,7 +449,7 @@ def key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     specs = [("lineitem", "l_partkey"), ("lineitem", "l_suppkey"), ("orders", "o_custkey")]
     parts = []
     for table, col in specs:
-        t = _t(spark, sf_dir, table)
+        t = read_table(spark, sf_dir, table)
         counts = (
             t.groupBy(F.col(col).alias("k"))
             .agg(F.count(F.lit(1)).cast("long").alias("n"))

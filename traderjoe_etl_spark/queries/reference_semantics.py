@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import argmax_rows, packed_string_sql
-from ..session import apply_runtime_confs
 from ..sources.tables import read_table
 from . import query
 
@@ -40,7 +39,6 @@ def latest_deposit_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax by (blockNumber, timestamp) keeping ties → sum amounts + max ts
     (reference main.py:127-136). Global argmax (the reference runs one
     (user, pool) pair at a time, so its argmax has no partition key)."""
-    apply_runtime_confs(spark)
     events = read_table(spark, sf_dir, "events")
     deposits = events.filter(F.col("event_type") == "purchase")
     latest = argmax_rows(deposits, keys=[], order_cols=["event_id", "ts"])
@@ -71,7 +69,6 @@ def latest_deposit_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the reference's per-pair driver loop (main.py:11-17) becomes when
     the loop is turned into data parallelism (SURVEY.md §3 EP2): one window
     shuffle on user_id instead of N sequential pipeline runs."""
-    apply_runtime_confs(spark)
     events = read_table(spark, sf_dir, "events")
     deposits = events.filter(F.col("event_type") == "purchase")
     latest = argmax_rows(deposits, keys=["user_id"], order_cols=["event_id", "ts"])
@@ -99,7 +96,6 @@ def fees_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id plays binId, value plays the fee amount. Sorted by bin id
     inside the group (SURVEY.md §2C.1) — the reference relied on API order.
     """
-    apply_runtime_confs(spark)
     events = read_table(spark, sf_dir, "events").filter(F.col("event_type") == "click")
     packed = events.groupBy("user_id").agg(
         F.expr(packed_string_sql("event_id", ["round(value, 4)"])).alias("fees_per_bin")
@@ -125,7 +121,6 @@ def empty_group_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL when no rows survive the filter), distributed: left-join the key
     universe against the filtered stream and coalesce defaults — no
     driver-side ``if df.empty`` branch."""
-    apply_runtime_confs(spark)
     events = read_table(spark, sf_dir, "events")
     universe = events.select("user_id").distinct()
     big_deposits = events.filter((F.col("event_type") == "purchase") & (F.col("value") > 900))
@@ -163,7 +158,6 @@ def derived_metrics_scrubbed(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL scrub pinned as ``nullif(denom, 0)`` on both engines
     (SURVEY.md §2C.2). fees/liquidity are synthesized per user from the
     events stream."""
-    apply_runtime_confs(spark)
     from ..functions.scrub import safe_div
 
     events = read_table(spark, sf_dir, "events")

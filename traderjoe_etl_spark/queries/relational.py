@@ -17,9 +17,8 @@ from ..functions.fixedpoint import fixed_sum_aggs, fixed_sum_sql, fixed_sum_valu
 from ..operators.joins import broadcast_dim_join, gated_broadcast
 from ..operators.topk import top_k, top_k_per_group
 from ..operators.windows import moving_agg, sessionize, snapshot_delta
-from ..session import apply_runtime_confs
 from ..sources.tables import read_table, table_bytes
-from . import _t, query
+from . import query
 
 
 # ---------------------------------------------------------------------------
@@ -55,7 +54,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation — measured 2.1× faster on this query at sf0.1 with
     bit-identical results; the hi/lo split keeps partial sums overflow-safe
     past 10^12 rows. Oracle mirrors the identical integer sums + recombine."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     grouped = (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -96,7 +95,7 @@ def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """count_distinct per group (SURVEY.md §2B aggregations ◆). Exact
     distinct = expand+two-phase agg in Spark; the approx_ variant is the
     scale path (see approx_distinct_counts, rows-only)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -120,7 +119,7 @@ def approx_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     every group's estimate within 3·rsd of the exact distinct count (the
     estimate is deterministic for fixed data, so the bound is a stable
     regression check, not a flaky statistical one)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.approx_count_distinct("o_custkey", rsd=0.02).alias("approx_customers"),
     )
@@ -144,7 +143,7 @@ def rollup_fees_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets ◆, origin A3/A4). grouping() columns disambiguate NULL-as-subtotal
     from NULL data. Money sums via functions/fixedpoint.py (exact long
     arithmetic in codegen; see pricing_summary)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     # Two-level rollup: aggregate to the FINEST grouping once (|flags|×
     # |statuses| rows), then ROLLUP the long partials of that tiny result.
     # A direct rollup Expands every fact row ×3 (one copy per grouping
@@ -192,7 +191,7 @@ def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouping aggregates the fact rows once, then the CUBE Expand (×4
     grouping sets) runs over |statuses|×|priorities| pre-summed rows —
     exact, since decimal sums are associative."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     base = orders.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.sum(F.col("o_totalprice").cast("decimal(30,6)")).alias("__t"),
         F.count(F.lit(1)).alias("__n"),
@@ -240,7 +239,7 @@ def revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation/region broadcast; decimal sums are exact (reassociation-proof),
     so the regrouping cannot change results. Generalizes J1/J2
     (main.py:182-183)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     orders = read_table(spark, sf_dir, "orders")
     cust = read_table(spark, sf_dir, "customer")
     nation = read_table(spark, sf_dir, "nation")
@@ -331,7 +330,7 @@ def left_join_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join preserving customers with no orders (J1 semantics,
     main.py:182: unmatched left rows get NULLs → coalesced defaults, the
     distributed form of the empty-branch at main.py:143-153)."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     orders = read_table(spark, sf_dir, "orders")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
@@ -355,7 +354,7 @@ def semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI join (EXISTS): customers with at least one big order.
     Semi joins ship only the join key of the right side — no row
     multiplication, safe on skew."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     big = read_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)
     return cust.join(big, cust.c_custkey == big.o_custkey, "left_semi").select("c_custkey", "c_name")
 
@@ -376,7 +375,7 @@ def anti_join_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r01 #1); the threshold leaves ~200 dormant rows at sf0.01 so
     the hash match is real evidence. The filter lands on the build side
     BEFORE the anti-join, shrinking the broadcast/shuffle."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     big = read_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
     return cust.join(big, cust.c_custkey == big.o_custkey, "left_anti").select("c_custkey", "c_name")
 
@@ -405,7 +404,7 @@ def asof_join_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the equivalent correlated scalar subquery."""
     from ..operators.joins import asof_join
 
-    events = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    events = read_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     orders = read_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("user_id"), "o_orderdate"
     )
@@ -446,7 +445,7 @@ def range_join_price_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta/range join against a small banding relation — broadcast the
     band table so the theta predicate evaluates map-side
     (BroadcastNestedLoopJoin over 3 rows, never a cartesian shuffle)."""
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     bands = spark.createDataFrame(
         [("low", 0.0, 1000.0), ("mid", 1000.0, 1500.0), ("high", 1500.0, 100000.0)],
         "band string, lo double, hi double",
@@ -479,7 +478,7 @@ def snapshot_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag() snapshot-over-snapshot delta per user — the hourly-growth
     analytics the reference's append-only CSV exists to serve (SURVEY.md §2B
     windows; K1 main.py:345-351). event_id breaks ts ties deterministically."""
-    events = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    events = read_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     out = snapshot_delta(events, keys=["user_id"], order_by=["ts", "event_id"], value_col="value")
     return out.select("user_id", "event_id", F.round("delta", 4).alias("delta"))
 
@@ -495,7 +494,7 @@ def snapshot_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     """7-row moving average per user (frame window, SURVEY.md §2B)."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     out = moving_agg(
         events, keys=["user_id"], order_by=["ts", "event_id"], value_col="value", preceding=6, fn="avg", out="ma7"
     )
@@ -517,7 +516,7 @@ def moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
 def top3_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group (ranking window). Unique o_orderkey tie-breaker →
     deterministic result set."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     cust = read_table(spark, sf_dir, "customer")
     joined = orders.join(cust, orders.o_custkey == cust.c_custkey).select(
         "c_mktsegment", "o_orderkey", "o_totalprice"
@@ -552,7 +551,7 @@ def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization (30-min gap) via lag + conditional cumsum —
     single shuffle (SURVEY.md §2B streaming ◆; the batch twin of
     session_window)."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     sess = sessionize(events, keys=["user_id"], ts_col="ts", gap_seconds=1800, tie_break=["event_id"])
     return sess.groupBy("user_id", "session_id").agg(F.count(F.lit(1)).alias("n_events"))
 
@@ -572,7 +571,7 @@ def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k → TakeOrderedAndProject (per-partition heaps, k·p rows
     to the driver — no global sort at 100 TB)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     out = top_k(orders, order_by=["o_totalprice", "o_orderkey"], k=10)
     return out.select("o_orderkey", F.round("o_totalprice", 2).alias("o_totalprice"))
 
@@ -591,7 +590,7 @@ def union_nations_with_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL of two semi-joined branches (SURVEY.md §2B set ops — the
     vertical analog of the reference's CSV append-across-runs,
     main.py:347)."""
-    nation = _t(spark, sf_dir, "nation")
+    nation = read_table(spark, sf_dir, "nation")
     cust = read_table(spark, sf_dir, "customer")
     supp = read_table(spark, sf_dir, "supplier")
     a = nation.join(cust, nation.n_nationkey == cust.c_nationkey, "left_semi").select(
@@ -617,7 +616,7 @@ def union_nations_with_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def intersect_except_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT / EXCEPT (distinct set semantics)."""
-    cust = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("n_nationkey"))
+    cust = read_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("n_nationkey"))
     supp = read_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("n_nationkey"))
     both = cust.intersect(supp).select("n_nationkey", F.lit("both").alias("membership"))
     only = cust.subtract(supp).select("n_nationkey", F.lit("customer_only").alias("membership"))
@@ -653,7 +652,7 @@ def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-second). High-cardinality props degrades gracefully — the extra
     shuffle carries per-partition distinct combos, never more than the
     original rows, and the parse count never exceeds |rows|."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     per = events.groupBy("event_type", "props").agg(F.count(F.lit(1)).alias("nn"))
     k = F.get_json_object("props", "$.k").cast("double")
     return per.groupBy("event_type").agg(
@@ -688,7 +687,7 @@ def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side projection feeds every extraction; the shredded binary form
     is what a 100-TB lakehouse stores instead of JSON text. The DuckDB
     twin reads the same values through its native JSON extraction."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     k = F.expr("variant_get(__v, '$.k', 'int')")
     parsed = events.select("event_type", F.parse_json("props").alias("__v")).select(
         "event_type", k.alias("k")
@@ -715,7 +714,7 @@ def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Timestamp functions: date_trunc + date_format (P6/P8 generalized,
     reference main.py:124, 136, 171)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.groupBy(
         F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM-dd").alias("order_month")
     ).agg(
@@ -740,7 +739,7 @@ def lenient_cast_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     per main.py:115-118)."""
     from ..functions.casts import lenient_cast
 
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     k = lenient_cast(F.get_json_object("props", "$.k"), "double", default=0.0)
     missing = lenient_cast(F.get_json_object("props", "$.missing"), "double", default=0.0)
     return events.groupBy("event_type").agg(
@@ -762,7 +761,7 @@ def lenient_cast_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pivot_status_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot linestatus into columns (SURVEY.md §2B; fixed pivot values so
     the plan is a single pass, no value-discovery job)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     out = li.groupBy("l_returnflag").pivot("l_linestatus", ["O", "F"]).sum("l_quantity")
     return out.select("l_returnflag", F.round("O", 2).alias("O"), F.round("F", 2).alias("F"))
 
@@ -801,7 +800,6 @@ def share_of_parent_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation) grain — ~125 rows — then parent levels derive from it;
     dimension joins are broadcast.  Shares are single divisions of exact
     integers, rounded 6 dp on both sides."""
-    apply_runtime_confs(spark)
     orders = read_table(spark, sf_dir, "orders")
     cust = read_table(spark, sf_dir, "customer")
     nation = read_table(spark, sf_dir, "nation")

@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.text import tokens
-from . import _t, query
+from ..sources.tables import read_table
+from . import query
 
 _TOK_SQL = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 
@@ -76,7 +77,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary) break on the term itself, so the result set is
     deterministic; ln() is the only transcendental and both engines round
     it away at 6 dp."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     tf = _term_freqs(docs)
     # Document frequency rides its OWN partial-aggregated pass: explode
     # array_distinct(tokens) -> groupBy(term).count(). Map-side combine
@@ -159,7 +160,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan and the whole score pipeline shuffles |matching (doc, term)|
     rows, not the corpus. Per-term partials sum per doc (BM25 is additive
     over query terms); ties break on doc_id."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("w"))
     dl = toks.select("doc_id", F.size("w").alias("dl"))
     stats = toks.agg(
@@ -237,7 +238,7 @@ def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     full posting list for a stopword-like term at 100 TB is the corpus
     itself, so an indexer materializes postings to a sink in shards; this
     query is the per-term statistics + head-sample form of that build."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     tf = _term_freqs(docs)
     return (
         tf.groupBy("term")
@@ -307,7 +308,7 @@ def exact_substring_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     62-bit longs shuffle 4× smaller (24.7 → ~9 s at sf10). Collision
     risk at 62 bits is ~1e-4 expected pairs on 26M spans, and the
     oracle replays the identical hashes."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     spans = _selected_span_fingerprints(docs, window=1)
     buckets = (
         spans.groupBy("h")
@@ -454,7 +455,7 @@ def exact_substring_dups_thinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs ~12 s at sf10 (32 lambda steps × 26M spans), the kernel ~2 s,
     identical values (the scheme defines the integers, not the loop
     shape)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     sel = _selected_span_fingerprints(docs)
     buckets = (
         sel.groupBy("h")
@@ -501,7 +502,7 @@ def source_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     break on doc_id."""
     from ..operators.text import quality_score
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     scored = docs.select("doc_id", "source", quality_score("text").alias("qs"))
     w = Window.partitionBy("source").orderBy(F.desc("qs"), "doc_id")
     return (
@@ -543,7 +544,7 @@ def corpus_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical derivation. Fingerprints (16-byte md5) ride the shuffle, not
     document text — at 100 TB the diff moves hashes, and only the
     'changed'/'added' partitions are re-read downstream."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     v1 = docs.select("doc_id", F.md5("text").alias("h"))
     max_id = docs.agg((F.max("doc_id") + 1).alias("m"))
     v2 = (
@@ -614,7 +615,7 @@ def quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import weighted_sample_key
     from ..operators.text import quality_score
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     # round the quality term to 6 dp BEFORE the floor, exactly like the
     # oracle's weight expression: the E-S sort key u^(1/w) is continuous
     # in w, so a full-precision w here vs a rounded w there makes
@@ -745,7 +746,7 @@ def sparse_shingle_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Below _SPARSE_PIN_BYTES the repartition takes the session width (the
     exchange is the plan's one required shuffle anyway; a forced 32-way
     would only add task dispatch at 5k-doc scale)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     # postings-exchange width scales with the corpus via a FILESYSTEM
     # stat (no Spark job — the plan stays fully lazy, preserving bench
     # headline eligibility; an eager docs.count() at build was hidden

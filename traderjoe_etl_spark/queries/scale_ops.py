@@ -18,7 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.bloom import bloom_prefilter_join
-from . import _t, query
+from ..sources.tables import read_table
+from . import query
 
 
 @query(
@@ -64,8 +65,8 @@ def bloom_prefilter_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     join removes whatever false positives the bloom admits."""
     from ..sources.tables import table_rows
 
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").where(F.col("c_acctbal") > 9000.0)
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer").where(F.col("c_acctbal") > 9000.0)
     joined = bloom_prefilter_join(
         orders, cust, "o_custkey", "c_custkey", fpp=0.01,
         expected_keys=table_rows(sf_dir, "customer"),
@@ -101,7 +102,7 @@ def theta_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain at oracle scale) theta sketches retain every hashed key, so the
     estimates are EXACT and the set-algebra SQL oracle is valid; at 100 TB
     the identical plan degrades to a ~2% relative-error estimate."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     sk = ev.agg(
         F.theta_sketch_agg(F.when(F.col("event_type").isin("purchase", "signup"), F.col("user_id"))).alias("hi"),
         F.theta_sketch_agg(F.when(F.col("event_type").isin("click", "view"), F.col("user_id"))).alias("lo"),
@@ -144,7 +145,7 @@ def kll_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the value at 1-indexed position ceil(q·n) of the sorted group
     (verified empirically against the datasketches inclusive-rank rule);
     beyond capacity the same plan yields bounded-error quantiles."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     partial = (
         cust.groupBy(
             F.col("c_nationkey").cast("long").alias("nationkey"),
@@ -187,7 +188,7 @@ def topk_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts are exact (5 event types ≪ 100), so the plain GROUP BY oracle
     holds; at real cardinalities the identical plan returns approximate
     heavy hitters."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     ev.createOrReplaceTempView("events_for_topk")
     return spark.sql(
         """

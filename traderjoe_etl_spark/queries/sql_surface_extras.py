@@ -16,12 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import read_table
-from . import _t, query
-
-
-def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    for n in names:
-        _t(spark, sf_dir, n).createOrReplaceTempView(n)
+from . import _views, query
 
 
 @query(
@@ -95,7 +90,7 @@ def posexplode_outer_order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups — TPC-H orders have ≤7 lines), the join co-keys two
     |orders|-sized streams, and the explode is map-side. Nothing here
     materializes unbounded state."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     li = read_table(spark, sf_dir, "lineitem")
     arrs = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_list(F.struct("l_linenumber", "l_quantity"))).alias("items")
@@ -142,7 +137,7 @@ def bitwise_flag_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mask column + bitwise partial aggregates move ONE int per row through
     the shuffle instead of four boolean columns, and all three aggregates
     are associative+commutative so map-side combine applies."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     # Column.__or__ is BOOLEAN or; integer bit-merge is bitwiseOR.
     flags = (
         F.when(F.col("value") > 100, F.lit(1))
@@ -189,7 +184,7 @@ def width_bucket_quantity_histogram(spark: SparkSession, sf_dir: str) -> DataFra
     (small integers in double — associative), min/max are
     order-independent; bucketing is a map-only expression feeding one
     partial+final hash aggregate over ≤11 groups."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy(
             F.width_bucket("l_quantity", F.lit(0.0), F.lit(50.0), F.lit(10)).alias("bucket")
@@ -302,7 +297,7 @@ def try_arithmetic_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
     when most rows are expected to fail). The oracle emulates each with
     CASE (DuckDB HUGEINT for the overflow window); the try_to_number
     DECIMAL result is cast to DOUBLE on both sides."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     big_or_2 = F.when(
         F.col("l_orderkey") % 997 == 0, F.lit(9000000000000000000)
     ).otherwise(F.lit(2)).cast("long")

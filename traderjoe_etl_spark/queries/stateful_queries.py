@@ -6,7 +6,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..scratch import scratch_dir
-from ..session import apply_runtime_confs
 from ..sources.tables import read_table
 from . import query
 
@@ -42,7 +41,6 @@ def stream_position_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries the numbers."""
     from ..streaming.stateful import running_position_tracker
 
-    apply_runtime_confs(spark)
     d = scratch_dir("stateful_q_")
     # r12 (guide §4 — pass only the columns the function needs): the
     # stateful fold reads exactly (user_id, event_type, value), so only

@@ -31,7 +31,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.storagelevel import StorageLevel
 from pyspark.sql import functions as F
 
-from . import _t, query
+from ..sources.tables import read_table
+from . import query
 
 
 # --------------------------------------------------------------------------
@@ -102,7 +103,7 @@ def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.prefix import global_running_agg
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     pts = orders.filter(F.col("o_orderpriority").isin(_KS_A, _KS_B)).select(
         F.col("o_totalprice").alias("v"),
         F.when(F.col("o_orderpriority") == _KS_A, 1).otherwise(0).alias("ia"),
@@ -180,7 +181,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     in both engines.  Daily sums rounded to 2 dp on both sides before the
     centered products so the series the two engines correlate is identical.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     daily = (
         orders.groupBy(
             F.date_trunc("day", F.col("o_orderdate")).cast("date").alias("day")
@@ -322,7 +323,7 @@ def naive_bayes_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     the arithmetic (priors, smoothing, log-likelihoods, argmax), not model
     quality.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
         "lang",
@@ -520,7 +521,7 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules from the paper are omitted — the synthetic corpus is single-line,
     so they would be constants (documented, not hidden).
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     rules = gopher_doc_flags(docs, keep=["source"])
     return (
         rules.groupBy("source")
@@ -733,7 +734,7 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics, so the CI rank picks (2nd / 63rd of the 64 sorted means ~
     2.5/97.5 pct) are replayable across engines.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     groups = spark.range(0, _GROUPS).select(F.col("id").cast("int").alias("g"))
     hashed = orders.crossJoin(F.broadcast(groups)).select(
         "g",
@@ -855,8 +856,8 @@ def pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.prefix import global_running_agg
 
-    part = _t(spark, sf_dir, "part")
-    li = _t(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
     pv = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         F.round(F.sum("l_quantity")).cast("long").alias("vol")
     )
@@ -925,7 +926,7 @@ def weighted_quantiles_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.prefix import global_running_agg
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     agg = li.groupBy(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("price_cents")
     ).agg(F.round(F.sum("l_quantity")).cast("long").alias("w"))

@@ -40,13 +40,7 @@ from ..functions.fixedpoint import (
     fixed_sum_value_sql,
 )
 from ..sources.tables import read_table
-from . import _t, query
-
-
-def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register the testdata tables as temp views for spark.sql queries."""
-    for n in names:
-        _t(spark, sf_dir, n).createOrReplaceTempView(n)
+from . import _views, query
 
 
 # ---------------------------------------------------------------------------
@@ -112,7 +106,7 @@ def exists_priority_counts_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
             GROUP BY o_orderpriority
             """
         )
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     w = corpus_width(sf_dir, "lineitem", selectivity=0.25)
     r_keys = (
         li.filter(F.col("l_returnflag") == "R")
@@ -210,7 +204,7 @@ def notin_supplier_variety_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts = pairs.groupBy("bk").agg(F.count("l_suppkey").alias("supplier_cnt"))
     btsdim = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .filter(F.col("p_brand") != "Brand#1")
         .select("p_brand", "p_type", "p_size")
         .distinct()
@@ -244,7 +238,7 @@ def correlated_avg_small_orders_q17(spark: SparkSession, sf_dir: str) -> DataFra
     re-scans lineitem per row. avg(qty) is a sum of small integers in double
     (exact, order-independent), so the 0.2·avg threshold is bit-identical
     across engines and the filter is deterministic."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     part = read_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
     per_part = li.groupBy("l_partkey").agg(F.avg("l_quantity").alias("avg_qty"))
     return (
@@ -293,7 +287,7 @@ def having_in_large_orders_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     Quantities are small integers — double sums are exact, the 300
     threshold and the output value are engine-stable."""
     large = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("sum_qty"))
         .filter(F.col("sum_qty") > 300)
@@ -393,7 +387,7 @@ def exists_sole_blame_suppliers_q21(spark: SparkSession, sf_dir: str) -> DataFra
 
     from ..sources.tables import corpus_width, table_bytes
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     li_bytes = table_bytes(sf_dir, "lineitem")
     at_scale = li_bytes == 0 or li_bytes > _Q21_MAPSIDE_CAP_BYTES
     src = (
@@ -454,7 +448,7 @@ def scalar_anti_dormant_wealthy_q22(spark: SparkSession, sf_dir: str) -> DataFra
     uses; both engines sum the identical doubles in any order within 1e-10
     of each other, and no customer balance sits that close to the threshold
     (min gap is ~0.01)."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     nation = read_table(spark, sf_dir, "nation")
     recent = (
         read_table(spark, sf_dir, "orders")
@@ -506,7 +500,7 @@ def top_revenue_suppliers_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     `=` flaky); decimal cost is irrelevant at |suppliers| rows. The per-
     supplier aggregate is computed once (cached lineage is tiny), max() is a
     1-row broadcast, supplier is a broadcast dim — no extra fact scans."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     revenue = (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -557,7 +551,7 @@ def having_value_parts_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     |parts| rows, NOT a second fact scan) and broadcasts the 1-row result.
     Exact decimal sums make the 0.0007·total threshold deterministic; the
     comparison happens in decimal before the double cast-out."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     per_part = li.groupBy("l_partkey").agg(
         F.sum(F.col("l_extendedprice").cast("decimal(30,6)")).alias("val_dec")
     )
@@ -593,7 +587,7 @@ def count_distribution_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     lives in the join condition, not WHERE — customers with zero qualifying
     orders must survive with c_count=0). First agg groups on custkey (the
     join key — reuses the exchange), second agg is over |customers| rows."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     orders = read_table(spark, sf_dir, "orders")
     joined = cust.join(
         orders,
@@ -630,7 +624,7 @@ def promo_revenue_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue for one ship month). part broadcasts; both sums ride the same
     partial aggregate (one pass); fixedpoint longs keep the ratio bit-stable
     cross-engine."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-02-01 00:00:00").cast("timestamp"))
     )
@@ -673,7 +667,7 @@ def disjunctive_revenue_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     them to the scans (part: brand IN (…); lineitem: quantity ranges) so the
     join inputs shrink before the broadcast hash join; the residual mixed
     predicate evaluates post-join in codegen."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     part = read_table(spark, sf_dir, "part")
     cond = (
         ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 15) & F.col("l_quantity").between(1, 11))

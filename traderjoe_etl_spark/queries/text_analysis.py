@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 
 from ..operators.text import LANG_PROFILES, lang_id, text_profile
 from ..functions import session_cache
-from . import _t, query
+from ..sources.tables import read_table
+from . import query
 
 
 def _lang_score_case() -> tuple[str, str]:
@@ -58,7 +59,7 @@ def lang_id_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID heuristic (stopword voting) rolled up to corpus counts.
     Pure column expressions; the oracle replicates score + tie-break
     exactly."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.select(lang_id("text").alias("lang_detected")).groupBy("lang_detected").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
@@ -105,7 +106,7 @@ def text_profile_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     default is :func:`text_profile_fast` below (xxhash64 family, ~2.5×
     cheaper per shingle at sf10); same min-over-shingles structure either
     way."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return text_profile(docs, "doc_id", "text", fingerprint_hash="md5")
 
 
@@ -125,7 +126,7 @@ def text_profile_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_text_profile_fast_equals_full_on_non_hash_columns pinning every
     non-fingerprint column byte-equal to the oracle-checked twin per doc
     at sf0.01."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return text_profile(docs, "doc_id", "text", fingerprint_hash="xxhash64")
 
 
@@ -141,7 +142,7 @@ def text_profile_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def regexp_extract_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """regexp_extract (SURVEY.md §2B scalar string fns ◆)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.groupBy(
         F.regexp_extract("source", r"src([0-9]+)", 1).cast("long").alias("src_num")
     ).agg(
@@ -167,7 +168,7 @@ def regexp_extract_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid, one row per (label, dimension) — posexplode +
     two-key groupBy (partial agg; shuffle carries |labels|×dim rows)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     return (
         emb.select("label", F.posexplode("embedding").alias("pos", "v"))
         .groupBy("label", "pos")
@@ -187,7 +188,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hex-string rendering) — the DuckDB oracle recomputes every bit vote."""
     from ..operators.dedup import simhash_fingerprint
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return simhash_fingerprint(docs, "doc_id", "text")
 
 
@@ -242,7 +243,7 @@ def ngram_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle hash-passes at all three driver SFs on both seeds."""
     from ..operators.dedup import minhash_lsh_candidates, ngram_jaccard_pairs
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     cand = minhash_lsh_candidates(docs, "doc_id", "text", hash_family="chained")
     return ngram_jaccard_pairs(docs, cand).filter(F.col("jaccard") >= 0.8)
 
@@ -310,7 +311,7 @@ def embedding_cosine_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair correctness: emitted cosines are always exact."""
     from ..operators.similarity import adaptive_n_planes, cosine_near_dup_pairs
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     n = emb.count()
     n_planes = adaptive_n_planes(n, target_bucket=64)
     # Physical strategy by corpus size, AQE-style: the JVM HOF pair join at
@@ -352,7 +353,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     to CSV on both sides; round-4 sits far from the float32 error bound)."""
     from ..operators.multimodal import extract_features, media_repartition
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
         F.when(F.col("doc_id") % 3 == 0, "image")
@@ -403,7 +404,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stubbed (operators/multimodal.py)."""
     from ..operators.multimodal import media_repartition, resize_images
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
         F.lit("image").alias("kind"),
@@ -527,7 +528,7 @@ def multimodal_real_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
         media_repartition,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     is_img = F.col("doc_id") % 2 == 0
     ppm_blob = F.concat(
         F.encode(F.lit(_PPM_HEADER), "UTF-8"),
@@ -596,7 +597,7 @@ def multimodal_real_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (byte-aware repartition, Arrow batching, map-only)."""
     from ..operators.multimodal import PPM_MIME, media_repartition, resize_images
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
         F.lit("image").alias("kind"),
@@ -668,7 +669,7 @@ def rolling_hash_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     value vector is hash-verified without shipping wide rows."""
     from ..operators.text import rolling_hash_fingerprints
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     fps = rolling_hash_fingerprints(docs, "doc_id", "text", k=8, window=4)
     return fps.select(
         "doc_id",
@@ -700,7 +701,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-frame edge on the oracle side."""
     from ..operators.multimodal import frame_sample_plan
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
         F.when(F.col("doc_id") % 3 == 0, "image")
@@ -777,7 +778,7 @@ def _verified_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_lsh_candidates, ngram_jaccard_pairs
 
     def _build() -> DataFrame:
-        docs = _t(spark, sf_dir, "documents")
+        docs = read_table(spark, sf_dir, "documents")
         # chained candidate family + hashed verifier (r12) — same
         # output-preserving pipeline as ngram_jaccard_near_dups, which
         # carries the measurements and the equivalence proof.
@@ -838,7 +839,7 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF, fully pipelined inside one WholeStageCodegen over the scan; the
     regex patterns stay in the RE2/Java-regex common subset so both
     engines agree byte-for-byte."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     raw = F.concat(
         F.lit("reach "), F.col("c_name"), F.lit(" at "),
         F.lower(F.replace(F.col("c_name"), F.lit("#"), F.lit("."))),
@@ -894,7 +895,7 @@ def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic list scan is exactly the non-distributed form this
     replaces). Unigram and bigram branches reuse one tokenized scan and
     rejoin on doc_id (co-partitioned: both aggregates hash on doc_id)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w")
     ).filter(F.size("w") >= 2)
@@ -956,7 +957,7 @@ def dedup_canonical_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_clusters."""
     from ..operators.graph import dedup_cluster_assignments
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     near = _verified_near_dup_pairs(spark, sf_dir)
     assigned = dedup_cluster_assignments(near, "id_a", "id_b")
     rank = (F.col("n_chars") * 10000000 - F.col("doc_id")).cast("long")
@@ -1027,7 +1028,7 @@ def distinct_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     anatomy of the string form: 1.66 s = tokenize 0.19 + gram-string
     build 0.39 + explode 0.20 + distinct agg 0.77 + final 0.10; the
     hash family removes most of the build and agg terms."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     # empty-token filter — zipf_slope_by_source's convention, both engines
     toks = docs.select(
         "source",
@@ -1115,7 +1116,7 @@ def zipf_slope_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocab ≥ 2, both engines): one rank gives Sxx = 0 and 0/0 diverges
     across engines (Spark NULL vs DuckDB IEEE NaN). ln() is the only
     transcendental — 6-dp rounding on both sides absorbs libm ulps."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
     tf = (

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from ..operators.joins import gated_broadcast
 from ..sources.tables import read_table
-from . import _t, query
+from . import query
 
 
 @query(
@@ -33,7 +33,7 @@ def shipping_priority_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective filters on three tables BEFORE the joins
     (Catalyst pushes all three to the scans), aggregate, global top-10 →
     TakeOrderedAndProject. Decimal revenue, double at the boundary."""
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    cust = read_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = read_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1995-03-15 00:00:00").cast("timestamp")
     )
@@ -79,7 +79,7 @@ def shipping_priority_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 def returned_item_report_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: returned-items revenue per customer, nation dim
     broadcast, top-20."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     orders = read_table(spark, sf_dir, "orders")
     li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     nation = read_table(spark, sf_dir, "nation")
@@ -114,7 +114,7 @@ def unpivot_liquidity_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (wide→long melt via stack) — the inverse of the pivot
     surface; the reference's wide 46-col snapshot row is exactly the shape
     this melts for metric-per-row analytics."""
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
         F.expr(
@@ -147,7 +147,7 @@ def local_supplier_volume_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lineitem ⋈ orders) shuffles on orderkey once; supplier/nation/region
     are broadcast dims, so the nation restriction never reshuffles the
     fact side. Orderdate filter is pushed to the orders scan."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     orders = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
@@ -212,7 +212,7 @@ def forecast_revenue_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates push to the parquet scan (row-group pruning on shipdate at
     scale); the aggregate is a single partial/final pair with no keys —
     the cheapest possible distributed plan, bottlenecked on scan IO."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
@@ -250,7 +250,7 @@ def volume_shipping_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     roles with a disjunctive cross-role predicate. Both nation joins are
     broadcasts, so the OR filter evaluates map-side after two cheap hash
     probes — the fact tables still shuffle only on their equi keys."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
     )
@@ -334,7 +334,7 @@ def market_share_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     one aggregate (single shuffle; no self-join, no second pass). The part
     filter prunes the fact rows before any wide join; both nation roles
     and region broadcast."""
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
+    part = read_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
     li = read_table(spark, sf_dir, "lineitem")
     supp = read_table(spark, sf_dir, "supplier")
     orders = read_table(spark, sf_dir, "orders")
@@ -389,7 +389,7 @@ def product_profit_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     supply cost is proxied as p_retailprice·quantity/100). Profit per
     supplier-nation per year; part filter prunes before the orders join;
     part/supplier/nation broadcast, one fact shuffle on orderkey."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     part = read_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
     supp = read_table(spark, sf_dir, "supplier")
     orders = read_table(spark, sf_dir, "orders")
@@ -433,7 +433,7 @@ def late_shipment_priority_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     The year filter still pushes to the lineitem scan; the lateness
     predicate can't push down (references both sides) and correctly stays
     a post-join filter — at scale this is a single orderkey shuffle."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
@@ -473,7 +473,7 @@ ps AS (
 
 
 def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     supp = read_table(spark, sf_dir, "supplier")
     sc = supp.agg(F.count(F.lit(1)).alias("__n"))
     pre = part.select("p_partkey", F.sequence(F.lit(0), F.lit(3)).alias("__idxs"))

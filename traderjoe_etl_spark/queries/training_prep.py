@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import _t, query
+from ..sources.tables import read_table
+from . import query
 
 CHUNK_CHARS = 500
 CHUNK_STRIDE = 450  # 50-char overlap between consecutive chunks
@@ -49,7 +50,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     Chunks are emitted as (length, md5) rather than raw text so the
     result stays compact; at 100 TB this plan is a single Generate+Project
     over the scan — no shuffle, no state, linear in input bytes."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     n_last = F.greatest(
         F.lit(0),
         F.ceil((F.length("text") - F.lit(CHUNK_CHARS)) / F.lit(float(CHUNK_STRIDE))).cast("int"),
@@ -106,7 +107,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     own window; bucket count scales with the cluster, so no task ever
     sees more than 1/N of the corpus. The oracle mirrors the identical
     bucket + window arithmetic."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     t = docs.filter(F.length(F.trim("text")) > 0).select(
         "doc_id",
         (F.col("doc_id") % PACK_BUCKETS).cast("int").alias("bucket"),
@@ -153,7 +154,7 @@ def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single-partition window over {VOCAB_K} rows, never over the
     unbounded vocabulary. Ties at the cut break lexicographically so the
     selected set is deterministic."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     pre = docs.filter(F.length(F.trim("text")) > 0).select(
         F.split(F.lower(F.trim("text")), r"\s+").alias("__words")
     )
@@ -215,7 +216,7 @@ def feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     is 256 rows regardless of corpus size."""
     from ..operators.text import tokens
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(tokens("text")).alias("w")
     ).filter(F.col("w") != "")
@@ -270,7 +271,7 @@ def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     "aggregate once, broadcast, subtract self" pattern that scales to
     any corpus (contrast the naive per-row correlated subquery, which is
     a corpus² join)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     y = orders.select(
         "o_orderkey",
         F.col("o_orderpriority").alias("cat"),
@@ -328,7 +329,7 @@ def epoch_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     one range-partitioned file run: this is exactly a distributed
     shuffle-write). Epochs re-key everything, so consecutive epochs are
     independent permutations; integer-exact, no RNG state anywhere."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     e = docs.select(
         "doc_id", F.explode(F.array(F.lit(0), F.lit(1))).alias("epoch")
     )
@@ -405,9 +406,9 @@ def contrastive_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     With expected |positives per customer| ≪ |parts|, rejection is rare
     and 4 candidates almost always yield 2 negatives — the standard
     oversample-then-filter trade, all integer-exact."""
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    orders = read_table(spark, sf_dir, "orders")
+    lineitem = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     maxp = part.agg(F.max("p_partkey").alias("maxp"))
     anchors = (
         orders.filter(F.col("o_orderkey") % 100 == 0)

@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import apply_runtime_confs
 from ..sources.tables import read_table
 from . import query
 
@@ -33,7 +32,6 @@ def udtf_token_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordinal)."""
     from ..functions.udtfs import register_udtfs
 
-    apply_runtime_confs(spark)
     register_udtfs(spark)
     read_table(spark, sf_dir, "documents").createOrReplaceTempView("__docs_udtf")
     return spark.sql(
@@ -66,7 +64,6 @@ def mad_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     built-in aggregates in one ``agg``, so the UDAF stands alone here.)"""
     from ..functions.udfs import median_abs_deviation
 
-    apply_runtime_confs(spark)
     events = read_table(spark, sf_dir, "events")
     return events.groupBy("event_type").agg(
         F.round(median_abs_deviation(F.col("value")), 6).alias("mad_value"),

@@ -7,7 +7,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.prefix import global_running_agg
-from . import _t, query
+from ..sources.tables import read_table
+from . import query
 
 
 @query(
@@ -22,7 +23,7 @@ from . import _t, query
 )
 def dense_rank_price_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank vs dense_rank side by side (ties collapse tiers but gap ranks)."""
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     w = Window.partitionBy("p_brand").orderBy(F.col("p_retailprice").desc())
     return part.select(
         "p_brand",
@@ -45,7 +46,7 @@ def dense_rank_price_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lead_next_order_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lead() — days until the customer's next order."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     nxt = F.lead("o_orderdate").over(w)
     return orders.select(
@@ -67,7 +68,7 @@ def lead_next_order_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running (cumulative) sum per customer — unbounded-preceding frame."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -122,7 +123,7 @@ def ntile_customer_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     latent — the generators never emit NULL balances).
     greatest(q,1) guards the ANSI div in the otherwise-branch that is
     unreachable when q=0 (N<4 puts every row in the r<=cut branch)."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     counts = cust.groupBy("c_acctbal").agg(F.count(F.lit(1)).alias("__cnt"))
     pref = global_running_agg(
         counts, "c_acctbal", {"__below": ("__cnt", "sum")}, inclusive=False
@@ -176,7 +177,7 @@ def ntile_customer_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def string_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar string function coverage (upper/lower/substring/length/
     concat/replace/trim) — SURVEY.md §2B scalar fns."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     return cust.select(
         "c_custkey",
         F.upper("c_name").alias("name_upper"),
@@ -205,7 +206,7 @@ def string_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def math_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar math coverage (abs/sqrt/ln/exp/floor/ceil/mod)."""
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
         F.round(F.abs(F.col("p_retailprice") - 1000), 4).alias("abs_diff"),
@@ -233,7 +234,7 @@ def math_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_pivot_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot with fixed values (single pass, no discovery job)."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     out = (
         events.groupBy("user_id")
         .pivot("event_type", ["view", "click", "purchase", "signup", "error"])
@@ -278,7 +279,7 @@ def distribution_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution statistics over low-cardinality partitions at scale,
     use approx_percentile/ntile buckets instead; this query exists to
     pin the exact built-ins' semantics."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return orders.select(
@@ -337,7 +338,7 @@ def gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     For series whose every gap is within the horizon the result is
     row-identical to the unbounded gap-fill."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     actual = events.groupBy(
         "user_id", F.date_trunc("hour", "ts").alias("hour")
     ).agg(F.round(F.sum("value"), 4).alias("hour_value"))
@@ -386,7 +387,7 @@ def date_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
     handled: Spark dayofweek() is Sunday-based while DuckDB's isodow is
     ISO — Spark weekday()+1 == isodow; both engines' weekofyear are ISO
     weeks. All JVM scalar expressions, fully codegen'd in the scan."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
         F.date_format(F.last_day("o_orderdate"), "yyyy-MM-dd").alias("month_end"),

@@ -43,25 +43,31 @@ NANOS_TS_COLS = {"events": ("ts",)}
 _SCHEMA_CACHE: dict[tuple[str, str], object] = {}
 
 
+def _parquet_files(sf_dir: str, name: str) -> list[str]:
+    """The parquet files of one table: its sorted part files when it is a
+    directory, ``[path]`` when it is one file, ``[]`` when it is missing.
+    os.walk: a PARTITIONED layout nests part files under key=value dirs —
+    a top-level listdir would read it as 0 bytes / unchanged after
+    regeneration (ADVICE r7)."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if os.path.isdir(path):
+        return sorted(
+            os.path.join(root, f)
+            for root, _, files in os.walk(path)
+            for f in files
+            if f.endswith(".parquet")
+        )
+    return [path] if os.path.exists(path) else []
+
+
 def table_bytes(sf_dir: str, name: str) -> int:
     """On-disk parquet size of one table — the cheap cardinality statistic
     queries use to pick between physical strategies (e.g. broadcast-probe
     vs per-key pre-aggregation), exactly as a cost-based optimizer would
     read table stats from a metastore. Returns 0 when unknown (missing
     path → callers fall through to the conservative at-scale plan)."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        if os.path.isdir(path):
-            # os.walk: a PARTITIONED layout nests part files under
-            # key=value dirs — a top-level listdir would read it as
-            # 0 bytes / unchanged after regeneration (ADVICE r7).
-            return sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _, files in os.walk(path)
-                for f in files
-                if f.endswith(".parquet")
-            )
-        return os.path.getsize(path)
+        return sum(os.path.getsize(f) for f in _parquet_files(sf_dir, name))
     except OSError:
         return 0
 
@@ -80,21 +86,13 @@ def table_ncols(sf_dir: str, name: str) -> int:
     hit = _SCHEMA_CACHE.get(key)
     if hit is not None:
         return hit  # type: ignore[return-value]
-    path = os.path.join(sf_dir, f"{name}.parquet")
     n = 0
     try:
         import pyarrow.parquet as pq
 
-        if os.path.isdir(path):
-            parts = sorted(
-                os.path.join(root, f)
-                for root, _, files in os.walk(path)
-                for f in files
-                if f.endswith(".parquet")
-            )
-            path = parts[0] if parts else ""
-        if path:
-            n = len(pq.read_schema(path).names)
+        files = _parquet_files(sf_dir, name)
+        if files:
+            n = len(pq.read_schema(files[0]).names)
     except Exception:
         n = 0
     if n:  # don't cache a miss — the dir may be generated later in-process
@@ -116,21 +114,11 @@ def table_rows(sf_dir: str, name: str) -> int:
     hit = _SCHEMA_CACHE.get(key)
     if hit is not None:
         return hit  # type: ignore[return-value]
-    path = os.path.join(sf_dir, f"{name}.parquet")
     n = 0
     try:
         import pyarrow.parquet as pq
 
-        if os.path.isdir(path):
-            parts = [
-                os.path.join(root, f)
-                for root, _, files in os.walk(path)
-                for f in files
-                if f.endswith(".parquet")
-            ]
-            n = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
-        else:
-            n = pq.ParquetFile(path).metadata.num_rows
+        n = sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(sf_dir, name))
     except Exception:
         n = 0
     if n:  # don't cache a miss — the dir may be generated later in-process
@@ -169,35 +157,24 @@ def table_fingerprint(sf_dir: str, name: str) -> str:
     handles, which re-scan files on every execution) must key on this so
     a regenerated table under the same path — benchdata/* is gitignored
     and routinely rebuilt — invalidates instead of silently serving stale
-    values."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    values. A directory without part files reads ``"0:0"``."""
+    files = _parquet_files(sf_dir, name)
+    if not files and not os.path.isdir(os.path.join(sf_dir, f"{name}.parquet")):
+        return "absent"
     try:
-        if os.path.isdir(path):
-            files = [
-                os.path.join(root, f)
-                for root, _, fs in os.walk(path)  # nested/partitioned layouts too
-                for f in fs
-                if f.endswith(".parquet")
-            ]
-            sz = sum(os.path.getsize(f) for f in files)
-            mt = max((os.stat(f).st_mtime_ns for f in files), default=0)
-        else:
-            st = os.stat(path)
-            sz, mt = st.st_size, st.st_mtime_ns
-        return f"{sz}:{mt}"
+        sts = [os.stat(f) for f in files]
     except OSError:
         return "absent"
+    return f"{sum(st.st_size for st in sts)}:{max((st.st_mtime_ns for st in sts), default=0)}"
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan of one synthetic table."""
+    """Lazy parquet scan of one synthetic table. Sets no conf: it expects a
+    session under ``session.RUNTIME_CONFS`` (a registry entry or
+    ``get_spark``), whose timestamp reading modes make timestamp[us]
+    columns TimestampType and TIMESTAMP(NANOS) columns longs."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Driver-built sessions don't run session.apply_runtime_confs; pin the
-    # timestamp reading mode here too so timestamp[us] parquet columns come
-    # back as TimestampType (UTC), never TIMESTAMP_NTZ.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     path = os.path.join(sf_dir, f"{name}.parquet")
     key = (sf_dir, name)
     cached = _SCHEMA_CACHE.get(key)
