@@ -994,3 +994,51 @@ def test_snapshot_statement_exchanges(spark):
     f = plan_facts(build_snapshot(pairs, inputs, RUN_TS, strict_repr=True))
     assert f.n_exchanges <= 9, f.n_exchanges
     assert f.n_broadcasts == 1, f.n_broadcasts
+
+
+def test_history_queries_over_the_store_plan_no_exchange(spark, tmp_path):
+    """The five analyst query shapes over a store written by
+    ``append_snapshot`` read it as a bucketed scan and move no rows: each
+    groups or partitions on ``pool_address`` or (user, pool), which the
+    store's pool buckets already satisfy."""
+    from pyspark.sql import functions as F
+
+    from traderjoe_etl_spark.operators.aggregates import argmax_rows, group_agg
+    from traderjoe_etl_spark.operators.topk import top_k_per_group
+    from traderjoe_etl_spark.operators.windows import moving_agg, snapshot_delta
+    from traderjoe_etl_spark.plans.traderjoe import PAIR_KEYS
+    from traderjoe_etl_spark.sinks import append_snapshot, read_snapshots
+
+    store = str(tmp_path / "snapshots")
+    for hour in range(0, 48, 12):  # two days
+        rows = spark.range(24).selectExpr(
+            "concat('0xuser', id % 6) AS user_address",
+            "concat('0xpool', id % 4) AS pool_address",
+            f"1767225600L + {hour} * 3600 AS current_unix_timestamp",
+            "id * 1.5D AS `total_token_value(USD)`",
+            f"id * {hour + 1} * 0.1D AS `accrued_fees_token_x(USD)`",
+            "id * 0.01D AS `APR%`",
+            "-id * 0.2D AS `impermanent_loss(USD)`",
+        )
+        append_snapshot(rows, store)
+    df = read_snapshots(spark, store)
+    day = df.withColumn("day", F.col("snapshot_date").cast("string"))
+    pool_day = ["pool_address", "day"]
+    hourly = group_agg(df, ["pool_address", "current_unix_timestamp"], {"apr": ("avg", "APR%")})
+    shapes = {
+        "argmax_rows": argmax_rows(df, PAIR_KEYS, ["current_unix_timestamp"]),
+        "snapshot_delta": group_agg(
+            snapshot_delta(day, PAIR_KEYS, ["current_unix_timestamp"], "accrued_fees_token_x(USD)", out="g"),
+            pool_day,
+            {"g": ("sum", "g")},
+        ),
+        "moving_agg": moving_agg(hourly, ["pool_address"], ["current_unix_timestamp"], "apr", 23, "avg"),
+        "top_k_per_group": top_k_per_group(
+            group_agg(df, PAIR_KEYS, {"il": ("max", "impermanent_loss(USD)")}), ["pool_address"], ["il"], 10
+        ),
+        "group_agg": group_agg(day, pool_day, {"n": ("count", "user_address"), "tvl": ("sum", "total_token_value(USD)")}),
+    }
+    for name, q in shapes.items():
+        f = plan_facts(q)
+        assert f.n_exchanges == 0, (name, f.text)
+        assert "Bucketed: true" in f.text, (name, f.text)

@@ -1,31 +1,55 @@
-"""Sink semantics: date-partitioned append Parquet + header-once CSV
-(K1, reference main.py:345-351)."""
+"""Sink semantics: the pool-bucketed, date-partitioned snapshot store +
+header-once CSV (K1, reference main.py:345-351)."""
 
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
-from traderjoe_etl_spark.sinks import append_snapshot, csv_export, read_snapshots
+from traderjoe_etl_spark.sinks import (
+    SNAPSHOT_BUCKETS,
+    _store_table,
+    append_snapshot,
+    csv_export,
+    read_snapshots,
+)
+
+DAY1 = 1767225600  # 2026-01-01 UTC
 
 
 def _batch(spark, ts, vals):
     return spark.createDataFrame(
-        [(v, ts) for v in vals], "value long, current_unix_timestamp long"
+        [(v, f"0xpool{v % 5}", ts) for v in vals],
+        "value long, pool_address string, current_unix_timestamp long",
     )
+
+
+def _date_files(d):
+    """{date directory: set of parquet file names}"""
+    return {
+        p: {f for f in os.listdir(os.path.join(d, p)) if f.endswith(".parquet")}
+        for p in os.listdir(d)
+        if p.startswith("snapshot_date=")
+    }
 
 
 def test_append_snapshot_partitions_and_accumulates(spark, tmp_path):
     d = str(tmp_path)
-    day1 = 1767225600  # 2026-01-01 UTC
+    day1 = DAY1
     day2 = day1 + 86400
-    append_snapshot(_batch(spark, day1, [1, 2]), d)
-    append_snapshot(_batch(spark, day2, [3]), d)
-    append_snapshot(_batch(spark, day2, [4]), d)  # append, not overwrite
+    batches = [_batch(spark, day1, [1, 2]), _batch(spark, day2, [3]), _batch(spark, day2, [4])]
+    for batch in batches:  # the last one appends, not overwrites
+        before = _date_files(d)
+        append_snapshot(batch, d)
+        added = {p: fs - before.get(p, set()) for p, fs in _date_files(d).items()}
+        assert all(len(fs) <= SNAPSHOT_BUCKETS for fs in added.values()), added
 
     back = read_snapshots(spark, d)
     assert back.count() == 4
@@ -40,11 +64,71 @@ def test_append_snapshot_partitions_and_accumulates(spark, tmp_path):
     assert pruned.count() == 2
 
 
+def test_append_never_overwrites_a_store_this_session_has_not_registered(spark, tmp_path):
+    """A fresh process has no catalog table over the store. Registration
+    must run before its first append: Spark's table-creating saveAsTable
+    writes in Overwrite mode and would erase every earlier day."""
+    d = str(tmp_path / "store")
+    append_snapshot(_batch(spark, DAY1, [1, 2]), d)
+    append_snapshot(_batch(spark, DAY1 + 86400, [3]), d)
+    spark.sql(f"DROP TABLE {_store_table(spark, d)}")  # external: the files stay
+    append_snapshot(_batch(spark, DAY1 + 2 * 86400, [4, 5]), d)
+    back = read_snapshots(spark, d)
+    assert sorted(r.value for r in back.select("value").collect()) == [1, 2, 3, 4, 5]
+
+
+def test_read_snapshots_sees_appends_made_outside_its_table(spark, tmp_path):
+    """Another process appends files, not catalog entries: the next
+    read_snapshots lists them, a new snapshot_date directory included."""
+    d, other = str(tmp_path / "store"), str(tmp_path / "other")
+    append_snapshot(_batch(spark, DAY1, [1, 2]), d)
+    assert read_snapshots(spark, d).count() == 2
+    append_snapshot(_batch(spark, DAY1 + 86400, [3, 4, 5]), other)
+    new_day = "snapshot_date=2026-01-02"
+    shutil.copytree(os.path.join(other, new_day), os.path.join(d, new_day))
+    back = read_snapshots(spark, d)
+    assert back.count() == 5
+    days = {r.snapshot_date.isoformat() for r in back.select("snapshot_date").distinct().collect()}
+    assert days == {"2026-01-01", "2026-01-02"}
+
+
+def test_store_file_without_bucket_id_fails_loudly(spark, tmp_path):
+    """A plain (unbucketed) parquet append, as the earlier sink wrote, has
+    no bucket id in its file name: a bucketed read must raise, never
+    return a silently wrong result."""
+    d = str(tmp_path / "store")
+    append_snapshot(_batch(spark, DAY1, [1, 2]), d)
+    legacy = _batch(spark, DAY1, [3]).withColumn(
+        "snapshot_date", F.to_date(F.timestamp_seconds("current_unix_timestamp"))
+    )
+    legacy.write.mode("append").partitionBy("snapshot_date").parquet(d)
+    per_pool = read_snapshots(spark, d).groupBy("pool_address").agg(F.sum("value"))
+    with pytest.raises(Py4JJavaError, match="INVALID_BUCKET_FILE"):
+        per_pool.collect()
+
+
+def test_store_refuses_catalog_tracked_partitions(spark, tmp_path):
+    """Under Spark's default conf a table registered from existing files
+    holds no partitions and reads zero rows: the store refuses to register
+    it in a session without RUNTIME_CONFS."""
+    key = "spark.sql.hive.manageFilesourcePartitions"
+    d = str(tmp_path / "store")
+    append_snapshot(_batch(spark, DAY1, [1]), d)
+    spark.sql(f"DROP TABLE {_store_table(spark, d)}")
+    spark.conf.set(key, "true")
+    try:
+        with pytest.raises(ValueError, match="RUNTIME_CONFS"):
+            read_snapshots(spark, d)
+    finally:
+        spark.conf.set(key, "false")
+    assert read_snapshots(spark, d).count() == 1
+
+
 def test_csv_export_header_once(spark, tmp_path):
     d = str(tmp_path)
     path = os.path.join(d, "snap.csv")
-    csv_export(_batch(spark, 1767225600, [1, 2]), path)
-    csv_export(_batch(spark, 1767225600, [3]), path)
+    csv_export(_batch(spark, 1767225600, [1, 2]).drop("pool_address"), path)
+    csv_export(_batch(spark, 1767225600, [3]).drop("pool_address"), path)
     lines = open(path, encoding="utf-8").read().strip().splitlines()
     assert lines[0] == "value,current_unix_timestamp"
     assert len(lines) == 4  # one header + three rows across two appends

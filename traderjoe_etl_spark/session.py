@@ -55,6 +55,11 @@ RUNTIME_CONFS = {
     # prune timestamp filters on data WE wrote. Micros also round-trips
     # through DuckDB/pyarrow without the INT96 shim.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # Partitioned catalog tables list their directory on each read instead
+    # of holding a partition list in the catalog: the snapshot store
+    # (sinks.py) must see date directories that another process appended.
+    # The only other catalog tables (save_bucketed) are unpartitioned.
+    "spark.sql.hive.manageFilesourcePartitions": "false",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

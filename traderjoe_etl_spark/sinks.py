@@ -1,32 +1,110 @@
 """Snapshot sinks — K1 generalized (reference main.py:345-351).
 
 The reference appends one wide row per run to a single CSV, writing the
-header only when the file is new. The engine's primary sink is append-mode
-Parquet partitioned by snapshot date (scales: each hourly batch is a new
-set of files, no read-modify-write, partition pruning on date for the
-time-series queries in operators/windows.py). The CSV export reproduces the
-reference's header-once, single-file byte format for compatibility.
+header only when the file is new. The engine's primary sink is a
+pool-bucketed Parquet store: an external catalog table over the store's
+path, partitioned by snapshot date and hashed into ``SNAPSHOT_BUCKETS``
+buckets on ``pool_address``. The files stay plain hive-partitioned
+Parquet, ``<path>/snapshot_date=YYYY-MM-DD/part-*_<bucket id>.c000.snappy.parquet``,
+so any Parquet reader can glob them. Every history query groups or
+partitions on ``pool_address`` or on (user, pool), which the buckets
+already satisfy: a query over the store moves no rows (no Exchange), and
+date filters still prune directories. The ceiling: a query over the store
+runs exactly ``SNAPSHOT_BUCKETS`` scan tasks, however large the store
+grows.
+
+Each append adds one file per non-empty bucket to its date directory;
+nothing is rewritten. The catalog table lives in the session's in-memory
+catalog, so every process registers it again from the files before its
+first append: Spark's table-creating ``saveAsTable`` writes in Overwrite
+mode, and would erase the store if it ran against existing files.
+``_store_table`` does that registration for both the writer and the
+reader. The table lists its directory on every read (no catalog-held
+partitions, ``spark.sql.hive.manageFilesourcePartitions=false`` in
+``RUNTIME_CONFS``), so appends from other processes show up after
+``read_snapshots``' refresh.
+
+Stores written before the bucketed layout hold files without a bucket id,
+and Spark refuses to read them as the bucketed table
+(``INVALID_BUCKET_FILE``). Rewrite such a store once: read it with
+``spark.read.parquet`` and ``append_snapshot`` the frame into a new path.
+
+The CSV export reproduces the reference's header-once, single-file byte
+format for compatibility.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+#: Hash buckets on ``pool_address``: the files an append writes into its
+#: date directory, and the scan tasks of every query over the store, which
+#: is that query's parallelism whatever the session's cores. On a 96 000-row
+#: history (4 vCPU, local[4]) the median query took 0.25 s with 2 buckets,
+#: 0.28 s with 4 (2 won 8 of 8 seeds) and 0.31 s with 1 (3 seeds): at that
+#: size a scan task's fixed cost outweighs its share of the rows. Raise it
+#: as the store grows.
+SNAPSHOT_BUCKETS = 2
+
+
+def _store_table(spark: SparkSession, path: str) -> str:
+    """Name of this session's catalog table over the store at the absolute
+    ``path``, registered from the store's files if the session has none.
+
+    Registration reads the schema from the store's footers once (Spark
+    refuses ``CLUSTERED BY`` over an inferred schema). With no store yet
+    there is nothing to register: the first append creates the table.
+    """
+    name = "snapshots_" + hashlib.sha1(path.encode()).hexdigest()[:16]
+    if spark.catalog.tableExists(name):
+        return name
+    if spark.conf.get("spark.sql.hive.manageFilesourcePartitions") != "false":
+        # A catalog-tracked table would see no partition it did not write.
+        raise ValueError("the snapshot store needs a session with RUNTIME_CONFS (session.get_spark)")
+    if not os.path.isdir(path):
+        return name
+    try:
+        ddl = spark.read.parquet(path)._jdf.schema().toDDL()
+    except AnalysisException as e:
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":  # not an empty directory
+            raise
+        return name
+    location = path.replace("\\", "\\\\").replace("'", "\\'")
+    spark.sql(
+        f"CREATE TABLE {name} ({ddl}) USING parquet PARTITIONED BY (snapshot_date) "
+        f"CLUSTERED BY (pool_address) INTO {SNAPSHOT_BUCKETS} BUCKETS LOCATION '{location}'"
+    )
+    return name
+
 
 def append_snapshot(df: DataFrame, path: str) -> None:
-    """Append-mode Parquet sink partitioned by ``snapshot_date``.
+    """Append to the pool-bucketed store at ``path``, partitioned by
+    ``snapshot_date``.
 
     Derives the partition date from ``current_unix_timestamp`` (the
     reference's run stamp, main.py:271). Append mode: hourly batches only
-    add files — the Parquet analog of the CSV append at main.py:347.
+    add files — the Parquet analog of the CSV append at main.py:347. The
+    frame is hash-partitioned on the bucket key first, so each write task
+    holds one bucket and writes one file.
     """
+    path = os.path.abspath(path)
+    name = _store_table(df.sparkSession, path)
     out = df.withColumn(
         "snapshot_date", F.to_date(F.timestamp_seconds(F.col("current_unix_timestamp")))
     )
-    out.write.mode("append").partitionBy("snapshot_date").parquet(path)
+    (
+        out.repartition(SNAPSHOT_BUCKETS, "pool_address")
+        .write.mode("append")
+        .bucketBy(SNAPSHOT_BUCKETS, "pool_address")
+        .partitionBy("snapshot_date")
+        .option("path", path)
+        .saveAsTable(name)
+    )
 
 
 #: csv_export materializes on the driver; above this many rows the caller
@@ -57,9 +135,12 @@ def csv_export(df: DataFrame, path: str) -> None:
 
 
 def read_snapshots(spark: SparkSession, path: str) -> DataFrame:
-    """Read the snapshot time series back (partition-pruned on
-    snapshot_date when filtered)."""
-    return spark.read.parquet(path)
+    """The snapshot store at ``path`` as this session's bucketed table,
+    refreshed so it lists appends made since the last read, by this
+    process or another (partition-pruned on snapshot_date when filtered)."""
+    name = _store_table(spark, os.path.abspath(path))
+    spark.catalog.refreshTable(name)
+    return spark.table(name)
 
 
 def clustered_write(
