@@ -25,6 +25,7 @@ from traderjoe_etl_spark.schemas import (
     FEES_EARNED_SCHEMA,
     POOL_STATS_SCHEMA,
     SNAPSHOT_ORDER,
+    SNAPSHOT_SCHEMA,
     USER_HISTORY_SCHEMA,
 )
 
@@ -293,20 +294,53 @@ def test_zero_liquidity_scrubs_to_null(spark):
 
 
 def test_missing_api_columns_tolerated(spark):
-    """main.py:81-83, 342-343: absent payload fields → column dropped from
-    the snapshot, everything else still produced."""
-    from pyspark.sql import functions as F
+    """main.py:81-83, 342-343: fields missing from the API payload read as
+    NULL through the source's declared schema, and the snapshot keeps all
+    46 columns (the reference drops them: a documented deviation)."""
+    from traderjoe_etl_spark.sources.rest import quarantine, rest_snapshot_source
 
-    pairs = spark.createDataFrame([(USER, POOL)], "user_address string, pool_address string")
+    depth = ("liquidityDepthMinus", "liquidityDepthPlus", "liquidityDepthTokenX", "liquidityDepthTokenY")
+    payload = {k: v for k, v in _pool_row().items() if k not in depth}
+    keys = spark.createDataFrame([(POOL,)], "k_pool string")
+    fetched = rest_snapshot_source(
+        keys, "fixture://pools/{k_pool}", POOL_STATS_SCHEMA, fetcher=lambda url, params: [payload]
+    )
+    pools_1d = quarantine(fetched)[0].drop("k_pool")
     inputs = _empty_inputs(spark, _pool_row())
-    # drop the liquidity-depth struct fields from the pool payload entirely
-    slim = inputs.pools_1d.drop("liquidityDepthMinus", "liquidityDepthPlus",
-                                "liquidityDepthTokenX", "liquidityDepthTokenY")
-    inputs = SnapshotInputs(slim, inputs.pools_1h, inputs.history, inputs.fees, inputs.bins)
+    inputs = SnapshotInputs(pools_1d, inputs.pools_1h, inputs.history, inputs.fees, inputs.bins)
+    pairs = spark.createDataFrame([(USER, POOL)], "user_address string, pool_address string")
     out = build_snapshot(pairs, inputs, RUN_TS)
-    assert "liquidityDepth+2%(USD)" not in out.columns
-    assert "pool_name" in out.columns
-    assert out.count() == 1
+    assert out.columns == SNAPSHOT_ORDER
+    rows = out.collect()
+    assert len(rows) == 1
+    nulls = ("liquidityDepth-2%(USD)", "liquidityDepth+2%(USD)", "liquidityDepth+2%TokenX", "liquidityDepth-2%TokenY")
+    assert {c: rows[0][c] for c in nulls} == dict.fromkeys(nulls)
+    assert rows[0]["pool_name"] == "TOKX-TOKY"
+
+
+@pytest.mark.parametrize("strict_repr", [False, True])
+def test_snapshot_carries_the_declared_schema(spark, strict_repr):
+    """Both render modes emit SNAPSHOT_SCHEMA: names, order and types
+    (nullability is not part of the contract)."""
+    pairs, inputs = _fixture_inputs(spark)
+    got = build_snapshot(pairs, inputs, RUN_TS, strict_repr=strict_repr).schema
+    assert [(f.name, f.dataType) for f in got] == [(f.name, f.dataType) for f in SNAPSHOT_SCHEMA]
+
+
+def test_run_stamp_past_2038_appends_to_an_earlier_store(spark, tmp_path):
+    """The run stamp is a bigint whatever the hour: a snapshot taken after
+    2038-01-19T03:14:08Z (2^31 s) appends to a store created before it, and
+    both hours read back."""
+    from traderjoe_etl_spark.sinks import append_snapshot, read_snapshots
+
+    pairs, inputs = _fixture_inputs(spark)
+    store = str(tmp_path / "store")
+    hours = [datetime(2038, 1, 19, 2, tzinfo=timezone.utc), datetime(2038, 1, 19, 4, tzinfo=timezone.utc)]
+    assert int(hours[0].timestamp()) < 2**31 <= int(hours[1].timestamp())
+    for ts in hours:
+        append_snapshot(build_snapshot(pairs, inputs, ts), store)
+    got = read_snapshots(spark, store).select("current_unix_timestamp", "user_address").collect()
+    assert sorted(tuple(r) for r in got) == [(int(ts.timestamp()), USER) for ts in hours]
 
 
 def test_strict_mode_golden_csv(spark, tmp_path):

@@ -1008,6 +1008,7 @@ def test_history_queries_over_the_store_plan_no_exchange(spark, tmp_path):
     from traderjoe_etl_spark.operators.windows import moving_agg, snapshot_delta
     from traderjoe_etl_spark.plans.traderjoe import PAIR_KEYS
     from traderjoe_etl_spark.sinks import append_snapshot, read_snapshots
+    from tests.test_sinks import snapshot_frame
 
     store = str(tmp_path / "snapshots")
     for hour in range(0, 48, 12):  # two days
@@ -1020,7 +1021,7 @@ def test_history_queries_over_the_store_plan_no_exchange(spark, tmp_path):
             "id * 0.01D AS `APR%`",
             "-id * 0.2D AS `impermanent_loss(USD)`",
         )
-        append_snapshot(rows, store)
+        append_snapshot(snapshot_frame(rows), store)
     df = read_snapshots(spark, store)
     day = df.withColumn("day", F.col("snapshot_date").cast("string"))
     pool_day = ["pool_address", "day"]

@@ -50,7 +50,7 @@ RUN_TS = datetime(2026, 1, 1, 3, tzinfo=timezone.utc)
 
 # Output types of the snapshot; every column not named here is a double.
 NON_DOUBLE = {
-    "current_unix_timestamp": "int",
+    "current_unix_timestamp": "bigint",
     "timestamp(datetime_pst)": "string",
     "pool_name": "string",
     "pool_address": "string",

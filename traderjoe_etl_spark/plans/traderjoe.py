@@ -27,7 +27,10 @@ Documented deviations from the reference (SURVEY.md §2C):
   JVM by default, Python-repr byte-parity under
   ``build_snapshot(..., strict_repr=True)``;
 - wall-clock is an injected ``run_ts`` parameter (§2C.6);
-- ``/0 → inf`` is scrubbed via nullif at derivation time (§2C.2).
+- ``/0 → inf`` is scrubbed via nullif at derivation time (§2C.2);
+- every snapshot has the columns and types of ``schemas.SNAPSHOT_SCHEMA``:
+  a field missing from a payload is NULL, not a dropped column
+  (main.py:81-83, 342-343), and the run stamp is a bigint, even before 2038.
 """
 
 from __future__ import annotations
@@ -90,16 +93,10 @@ class SnapshotInputs:
     bins: DataFrame  # BINS_RESERVE_SCHEMA, rows per (user, pool, bin)
 
 
-def _renames(df: DataFrame, mapping: dict[str, str]) -> dict[str, str]:
-    """dst → source path of the ``mapping`` entries whose top-level column
-    ``df`` has: absent API fields drop their column (main.py:81-83), and
-    dot paths read struct fields (the json_normalize flattening, main.py:52)."""
-    top = set(df.columns)
-    return {
-        dst: ".".join(f"`{p}`" for p in src.split("."))
-        for src, dst in mapping.items()
-        if src.split(".", 1)[0] in top
-    }
+def _renames(mapping: dict[str, str]) -> dict[str, str]:
+    """dst → quoted source path of the ``mapping`` entries: dot paths read
+    struct fields (the json_normalize flattening, main.py:52)."""
+    return {dst: ".".join(f"`{p}`" for p in src.split(".")) for src, dst in mapping.items()}
 
 
 def _safe_div(num: str, den: str) -> str:
@@ -126,8 +123,8 @@ def build_snapshot(
     clock (replaces main.py:171, 271 — §2C.6). ``strict_repr``: render the
     packed-string floats with Python ``repr`` for byte-parity with the
     reference's f-strings (default: JVM rendering, documented deviation)."""
-    p1d = _renames(inputs.pools_1d, POOL_RENAME_1D)
-    p1h = _renames(inputs.pools_1h, POOL_RENAME_1H)
+    p1d = _renames(POOL_RENAME_1D)
+    p1h = _renames(POOL_RENAME_1H)
 
     def select(cols: dict[str, str]) -> str:
         return ", ".join(f"{src} AS `{dst}`" for dst, src in cols.items())
@@ -146,7 +143,7 @@ def build_snapshot(
     total_usd = "(`token_x(USD)` + `token_y(USD)`)"
     fees_1d, liq = "`pool[total_fees(USD)](1d)`", "`pool[liquidity]`"
     derived = {
-        "current_unix_timestamp": str(int(run_ts.timestamp())),
+        "current_unix_timestamp": f"{int(run_ts.timestamp())}L",
         "timestamp(datetime_pst)": f"'{run_ts.strftime('%Y-%m-%d %H:%M:%S')}'",
         "total_token_value(USD)": total_usd,
         "accrued_fees_token_x(USD)": "accrued_fees_token_x * token_x_price",
@@ -159,10 +156,9 @@ def build_snapshot(
         "APR_1d%": f"{_safe_div(fees_1d, liq)} * 100",
     }
     pool_cols = ", ".join(f"`{c}`" for c in {**p1d, **p1h} if c != "pool_address")
-    absent = {*POOL_RENAME_1D.values(), *POOL_RENAME_1H.values()} - {*p1d, *p1h}
-    out = ", ".join(f"{derived.get(c, f'`{c}`')} AS `{c}`" for c in SNAPSHOT_ORDER if c not in absent)
+    out = ", ".join(f"{derived.get(c, f'`{c}`')} AS `{c}`" for c in SNAPSHOT_ORDER)
 
-    # Empty branches (main.py:143-153, 159-170, 227-244) are pairs absent
+    # Empty branches (main.py:143-153, 159-170, 227-244) are pairs missing
     # from a summary: the left joins plus coalesce give zeros, "()" and a
     # NULL deposit time, the reference's loops over empty lists.
     sql = f"""

@@ -11,9 +11,10 @@ Derived field-by-field from the reference (FIXTURES.md §A):
   *more* faithful raw representation — SURVEY.md §7.4.1)
 - snapshot:     the fixed output order at main.py:293-340
 
-Schema philosophy (SURVEY.md §1.3): sources get explicit schemas and
-PERMISSIVE reads (missing → NULL); the reference's "keep whichever columns
-exist" behavior is reproduced by plans/traderjoe.py::build_snapshot.
+Schema philosophy (SURVEY.md §1.3): sources read every payload into its
+declared schema, so an absent API field arrives as NULL; the snapshot
+always has all 46 columns of ``SNAPSHOT_SCHEMA`` (the reference instead
+drops a column whose field is absent, main.py:81-83, 342-343).
 """
 
 from __future__ import annotations
@@ -106,54 +107,57 @@ BINS_RESERVE_SCHEMA = T.StructType(
 )
 
 
-# The reference's fixed output order (main.py:293-340), '1h'/'1d' suffixes
-# resolved per main.py:46, 85. Emission is existence-tolerant
-# (build_snapshot drops absent pool columns ≡ main.py:342-343).
-SNAPSHOT_ORDER = [
-    "current_unix_timestamp",
-    "timestamp(datetime_pst)",
-    "pool_name",
-    "pool_address",
-    "pool[volume](1h)",
-    "pool[liquidity]",
-    "pool[total_fees(USD)](1h)",
-    "lbBinStep",
-    "base_fee%",
-    "max_fee%",
-    "protocol_fee%",
-    "token_x_symbol",
-    "token_y_symbol",
-    "token_x_address",
-    "token_y_address",
-    "pool[token_x_amount]",
-    "pool[token_y_amount]",
-    "token_x_price",
-    "token_y_price",
-    "activeBinId",
-    "liquidityDepth+2%TokenX",
-    "liquidityDepth-2%TokenY",
-    "liquidityDepth+2%(USD)",
-    "liquidityDepth-2%(USD)",
-    "user_address",
-    "total_tokenX_amount_initial_deposit",
-    "total_tokenY_amount_initial_deposit",
-    "MostRecentDepositTime",
-    "token_x_amount",
-    "token_y_amount",
-    "token_x(USD)",
-    "token_y(USD)",
-    "bin_distribution(bin id: token_x_amount, token_y_amounts)",
-    "total_token_value(USD)",
-    "accrued_fees_token_x",
-    "accrued_fees_token_y",
-    "accrued_fees_token_x(USD)",
-    "accrued_fees_token_y(USD)",
-    "fees_per_bin(bin_id: token_x, token_y_amounts)",
-    "value_if_held(USD)",
-    "impermanent_loss(USD)",
-    "user_%_of_pool_liquidity",
-    "fees_annual",
-    "APR%",
-    "APY%",
-    "APR_1d%",
-]
+# The reference's fixed output row (main.py:293-340), '1h'/'1d' suffixes
+# resolved per main.py:46, 85: build_snapshot's output and the snapshot
+# store's table. A change to the store's schema is made here.
+SNAPSHOT_SCHEMA = T.StructType(
+    [
+        T.StructField("current_unix_timestamp", T.LongType()),
+        T.StructField("timestamp(datetime_pst)", T.StringType()),
+        T.StructField("pool_name", T.StringType()),
+        T.StructField("pool_address", T.StringType()),
+        T.StructField("pool[volume](1h)", T.DoubleType()),
+        T.StructField("pool[liquidity]", T.DoubleType()),
+        T.StructField("pool[total_fees(USD)](1h)", T.DoubleType()),
+        T.StructField("lbBinStep", T.IntegerType()),
+        T.StructField("base_fee%", T.DoubleType()),
+        T.StructField("max_fee%", T.DoubleType()),
+        T.StructField("protocol_fee%", T.DoubleType()),
+        T.StructField("token_x_symbol", T.StringType()),
+        T.StructField("token_y_symbol", T.StringType()),
+        T.StructField("token_x_address", T.StringType()),
+        T.StructField("token_y_address", T.StringType()),
+        T.StructField("pool[token_x_amount]", T.DoubleType()),
+        T.StructField("pool[token_y_amount]", T.DoubleType()),
+        T.StructField("token_x_price", T.DoubleType()),
+        T.StructField("token_y_price", T.DoubleType()),
+        T.StructField("activeBinId", T.IntegerType()),
+        T.StructField("liquidityDepth+2%TokenX", T.DoubleType()),
+        T.StructField("liquidityDepth-2%TokenY", T.DoubleType()),
+        T.StructField("liquidityDepth+2%(USD)", T.DoubleType()),
+        T.StructField("liquidityDepth-2%(USD)", T.DoubleType()),
+        T.StructField("user_address", T.StringType()),
+        T.StructField("total_tokenX_amount_initial_deposit", T.DoubleType()),
+        T.StructField("total_tokenY_amount_initial_deposit", T.DoubleType()),
+        T.StructField("MostRecentDepositTime", T.StringType()),
+        T.StructField("token_x_amount", T.DoubleType()),
+        T.StructField("token_y_amount", T.DoubleType()),
+        T.StructField("token_x(USD)", T.DoubleType()),
+        T.StructField("token_y(USD)", T.DoubleType()),
+        T.StructField("bin_distribution(bin id: token_x_amount, token_y_amounts)", T.StringType()),
+        T.StructField("total_token_value(USD)", T.DoubleType()),
+        T.StructField("accrued_fees_token_x", T.DoubleType()),
+        T.StructField("accrued_fees_token_y", T.DoubleType()),
+        T.StructField("accrued_fees_token_x(USD)", T.DoubleType()),
+        T.StructField("accrued_fees_token_y(USD)", T.DoubleType()),
+        T.StructField("fees_per_bin(bin_id: token_x, token_y_amounts)", T.StringType()),
+        T.StructField("value_if_held(USD)", T.DoubleType()),
+        T.StructField("impermanent_loss(USD)", T.DoubleType()),
+        T.StructField("user_%_of_pool_liquidity", T.DoubleType()),
+        T.StructField("fees_annual", T.DoubleType()),
+        T.StructField("APR%", T.DoubleType()),
+        T.StructField("APY%", T.DoubleType()),
+        T.StructField("APR_1d%", T.DoubleType()),
+    ]
+)
+SNAPSHOT_ORDER = SNAPSHOT_SCHEMA.fieldNames()

@@ -14,14 +14,15 @@ runs exactly ``SNAPSHOT_BUCKETS`` scan tasks, however large the store
 grows.
 
 Each append adds one file per non-empty bucket to its date directory;
-nothing is rewritten. The catalog table lives in the session's in-memory
-catalog, so every process registers it again from the files before its
-first append: Spark's table-creating ``saveAsTable`` writes in Overwrite
-mode, and would erase the store if it ran against existing files.
-``_store_table`` does that registration for both the writer and the
-reader. The table lists its directory on every read (no catalog-held
-partitions, ``spark.sql.hive.manageFilesourcePartitions=false`` in
-``RUNTIME_CONFS``), so appends from other processes show up after
+nothing is rewritten. ``_store_table`` registers the table from the
+declared ``schemas.SNAPSHOT_SCHEMA`` plus ``snapshot_date`` before the
+first read or write of every process (the catalog lives in the session's
+memory), whether or not the store has files yet. An append only adds to
+that table, and the table's schema is its check: a frame with a missing
+or extra column, or a column that does not safely cast, fails at analysis
+and writes nothing. The table lists its directory on every read (no
+catalog-held partitions, ``spark.sql.hive.manageFilesourcePartitions=false``
+in ``RUNTIME_CONFS``), so appends from other processes show up after
 ``read_snapshots``' refresh.
 
 Stores written before the bucketed layout hold files without a bucket id,
@@ -38,9 +39,10 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .schemas import SNAPSHOT_SCHEMA
 
 #: Hash buckets on ``pool_address``: the files an append writes into its
 #: date directory, and the scan tasks of every query over the store, which
@@ -54,37 +56,26 @@ SNAPSHOT_BUCKETS = 2
 
 def _store_table(spark: SparkSession, path: str) -> str:
     """Name of this session's catalog table over the store at the absolute
-    ``path``, registered from the store's files if the session has none.
-
-    Registration reads the schema from the store's footers once (Spark
-    refuses ``CLUSTERED BY`` over an inferred schema). With no store yet
-    there is nothing to register: the first append creates the table.
-    """
+    ``path``, registered from ``SNAPSHOT_SCHEMA`` if the session has none."""
     name = "snapshots_" + hashlib.sha1(path.encode()).hexdigest()[:16]
     if spark.catalog.tableExists(name):
         return name
     if spark.conf.get("spark.sql.hive.manageFilesourcePartitions") != "false":
         # A catalog-tracked table would see no partition it did not write.
         raise ValueError("the snapshot store needs a session with RUNTIME_CONFS (session.get_spark)")
-    if not os.path.isdir(path):
-        return name
-    try:
-        ddl = spark.read.parquet(path)._jdf.schema().toDDL()
-    except AnalysisException as e:
-        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":  # not an empty directory
-            raise
-        return name
+    columns = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in SNAPSHOT_SCHEMA)
     location = path.replace("\\", "\\\\").replace("'", "\\'")
     spark.sql(
-        f"CREATE TABLE {name} ({ddl}) USING parquet PARTITIONED BY (snapshot_date) "
-        f"CLUSTERED BY (pool_address) INTO {SNAPSHOT_BUCKETS} BUCKETS LOCATION '{location}'"
+        f"CREATE TABLE IF NOT EXISTS {name} ({columns}, snapshot_date DATE) USING parquet "
+        f"PARTITIONED BY (snapshot_date) CLUSTERED BY (pool_address) INTO {SNAPSHOT_BUCKETS} BUCKETS "
+        f"LOCATION '{location}'"
     )
     return name
 
 
 def append_snapshot(df: DataFrame, path: str) -> None:
-    """Append to the pool-bucketed store at ``path``, partitioned by
-    ``snapshot_date``.
+    """Append the ``SNAPSHOT_SCHEMA`` frame ``df`` to the pool-bucketed
+    store at ``path``, partitioned by ``snapshot_date``.
 
     Derives the partition date from ``current_unix_timestamp`` (the
     reference's run stamp, main.py:271). Append mode: hourly batches only
@@ -137,8 +128,12 @@ def csv_export(df: DataFrame, path: str) -> None:
 def read_snapshots(spark: SparkSession, path: str) -> DataFrame:
     """The snapshot store at ``path`` as this session's bucketed table,
     refreshed so it lists appends made since the last read, by this
-    process or another (partition-pruned on snapshot_date when filtered)."""
-    name = _store_table(spark, os.path.abspath(path))
+    process or another (partition-pruned on snapshot_date when filtered).
+    Raises ``FileNotFoundError`` when ``path`` is no directory."""
+    path = os.path.abspath(path)
+    if not os.path.isdir(path):
+        raise FileNotFoundError(f"no snapshot store at {path}")
+    name = _store_table(spark, path)
     spark.catalog.refreshTable(name)
     return spark.table(name)
 
