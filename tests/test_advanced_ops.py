@@ -41,7 +41,7 @@ def test_ivf_recall_at_10_gate(spark, sf_dir):
     for r in cosine_topk_batch(corpus, queries, k=10).collect():
         exact.setdefault(r.query_id, set()).add(r.vec_id)
 
-    assigned, cents = ivf_assign(corpus, n_centroids=8, lloyd_iters=1)
+    assigned, cents = ivf_assign(corpus)
     assert assigned.count() == corpus.count()  # every vector in exactly one cluster
     qvecs = {r.query_id: r.qv for r in queries.collect()}
     total = 0.0
@@ -69,7 +69,7 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("weight"), 4).alias("w"))
     )
     salted = (
-        salted_join(events, dim, "event_type", salt_buckets=8)
+        salted_join(events, dim, "event_type")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("weight"), 4).alias("w"))
     )

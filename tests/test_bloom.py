@@ -18,7 +18,7 @@ from traderjoe_etl_spark.sources.tables import read_table
 def test_bloom_no_false_negatives(spark):
     """Every build key must pass its own filter — bloom guarantees no FNs."""
     build = spark.range(0, 5000).select((F.col("id") * 7 + 3).alias("k"))
-    words, m, k = build_bloom(build, "k", fpp=0.01)
+    words, m, k = build_bloom(build, "k")
     missed = build.where(~might_contain(F.col("k"), words, m, k)).count()
     assert missed == 0
 
@@ -27,7 +27,7 @@ def test_bloom_false_positive_rate_bounded(spark):
     """Non-member keys should pass at roughly the configured fpp (1%);
     allow generous slack for hash-family variance."""
     build = spark.range(0, 5000).select(F.col("id").alias("k"))
-    words, m, k = build_bloom(build, "k", fpp=0.01)
+    words, m, k = build_bloom(build, "k")
     probe = spark.range(1_000_000, 1_050_000).select(F.col("id").alias("k"))
     fp = probe.where(might_contain(F.col("k"), words, m, k)).count()
     assert fp / 50_000 < 0.05, f"false-positive rate {fp / 50_000:.3%} way above fpp"
@@ -74,7 +74,7 @@ def test_bloom_native_big_build_path(spark, sf_dir):
     # an overestimated key bound (exact either way) sizes the bitmap the
     # way a 10^5-key build would, past MAX_LITERAL_BITS
     bound = 300_000
-    assert _optimal_bits(bound, 0.01) > MAX_LITERAL_BITS
+    assert _optimal_bits(bound) > MAX_LITERAL_BITS
     got = bloom_prefilter_join(
         orders, cust, "o_custkey", "c_custkey", expected_keys=bound
     ).select("o_orderkey", "c_custkey")
@@ -93,7 +93,7 @@ def test_bloom_null_probe_keys_deterministically_drop(spark):
     """NULL probe keys must test FALSE (not hash the bare seeds): the
     standalone predicate is usable outside the join wrapper."""
     build = spark.range(0, 100).select(F.col("id").alias("k"))
-    words, m, k = build_bloom(build, "k", fpp=0.01)
+    words, m, k = build_bloom(build, "k")
     probe = spark.createDataFrame([(None,), (5,), (10**9,)], "k long")
     kept = [r["k"] for r in probe.where(might_contain(F.col("k"), words, m, k)).collect()]
     assert 5 in kept and None not in kept

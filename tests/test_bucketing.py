@@ -20,8 +20,8 @@ from traderjoe_etl_spark.sources.tables import read_table
 def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     orders = read_table(spark, sf_dir, "orders").limit(5000)
     cust = read_table(spark, sf_dir, "customer")
-    save_bucketed(orders.withColumnRenamed("o_custkey", "custkey"), "b_orders", "custkey", 8)
-    save_bucketed(cust.withColumnRenamed("c_custkey", "custkey"), "b_customer", "custkey", 8)
+    save_bucketed(orders.withColumnRenamed("o_custkey", "custkey"), "b_orders", "custkey")
+    save_bucketed(cust.withColumnRenamed("c_custkey", "custkey"), "b_customer", "custkey")
 
     # force the shuffle-join path (the planner would broadcast this small
     # side and skip bucketing entirely — at 100 TB neither side broadcasts)

@@ -31,7 +31,7 @@ def test_verbatim_benchmark_copy_is_flagged(spark):
     )
     out = {
         r["id"]: r["n_shared_ngrams"]
-        for r in contamination_report(train, bench, "text", "id", n=4).collect()
+        for r in contamination_report(train, bench, "text", "id").collect()
     }
     assert 11 not in out
     assert out[10] == 3  # 6-word benchmark doc has 3 distinct 4-grams
@@ -62,10 +62,10 @@ def test_temperature_mix_keeps_rare_groups_whole(spark, sf_dir):
     and survives intact; large groups shrink toward ~2*sqrt(N) kept."""
     docs = read_table(spark, sf_dir, "documents")
     tiny = docs.limit(3).withColumn("source", F.lit("rare_source"))
-    mixed = sqrt_temperature_mix(tiny, "source", "doc_id", scale=2.0)
+    mixed = sqrt_temperature_mix(tiny, "source", "doc_id")
     assert mixed.count() == 3
 
-    kept = sqrt_temperature_mix(docs, "source", "doc_id", scale=2.0)
+    kept = sqrt_temperature_mix(docs, "source", "doc_id")
     n, k = docs.count(), kept.count()
     assert 0 < k < n
 

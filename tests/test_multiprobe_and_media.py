@@ -55,4 +55,4 @@ def test_real_decoder_still_blocked_for_compressed(spark):
         "meta struct<mime:string,width:int,height:int,duration_ms:int>",
     )
     with _pytest.raises(Exception, match="(?i)NotImplemented|real decode|mime"):
-        extract_features(df, dim=4, decoder="real").collect()
+        extract_features(df, decoder="real").collect()

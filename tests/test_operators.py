@@ -107,27 +107,13 @@ def test_simhash_near_dups_have_small_hamming(spark):
 
 
 def test_cosine_topk_brute_is_exact(spark, emb):
-    """Brute-force top-k must equal a numpy-computed ground truth."""
-    import numpy as np
-
-    rows = emb.collect()
-    vecs = {r.vec_id: np.array(r.embedding, dtype=np.float64) for r in rows}
-    q = vecs[0]
-    sims = {
-        vid: float(v @ q / (np.linalg.norm(v) * np.linalg.norm(q)))
-        for vid, v in vecs.items()
-        if vid != 0
-    }
-    expected = sorted(sims, key=lambda v: (-sims[v], v))[:10]
-
+    """Brute-force top-k must equal a numpy-computed ground truth, ranked on
+    the 6-decimal grid with ties by id."""
     qdf = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    got = [
-        r.vec_id
-        for r in cosine_topk_brute(
-            emb.filter(F.col("vec_id") != 0), qdf, k=10, impl="const"
-        ).collect()
-    ]
-    assert got == expected
+    corpus = emb.filter(F.col("vec_id") != 0)
+    expected = _np_cosine_topk(corpus.collect(), [(0, qdf.first().qv)], k=10, digits=6)
+    got = [r.vec_id for r in cosine_topk_brute(corpus, qdf, k=10, impl="const").collect()]
+    assert got == [v for _, v, _ in expected]
 
 
 def test_cosine_near_dup_pairs_symmetric_and_thresholded(spark):
@@ -205,7 +191,7 @@ def test_cosine_near_dup_degenerate_bucket_bounded(spark, monkeypatch):
     # the bounded path's group sizes: the 200-row bucket splits into
     # ceil(200/32)=7 blocks -> 28 block-pair groups, each holding two
     # hash-assigned blocks (~57 rows expected) — never the whole bucket
-    planes = random_hyperplanes(8, 4, seed=42)
+    planes = random_hyperplanes(8, 4)
     b = emb.select(
         F.col("vec_id").alias("__id"),
         F.col("embedding").alias("__v"),
@@ -289,10 +275,10 @@ def test_asof_join_matches_pandas_merge_asof(spark):
 
     for _, e in expected.iterrows():
         o = out[out.lv == e.lv].iloc[0]
-        if pd.isna(e.rv):
-            assert pd.isna(o.rv)
+        if pd.isna(e.rts):
+            assert pd.isna(o.asof_rts)
         else:
-            assert o.rv == e.rv, (e.lv, o.rv, e.rv)
+            assert o.asof_rts == e.rts, (e.lv, o.asof_rts, e.rts)
 
 
 def test_portable_minhash_matches_pure_python(spark):
@@ -379,7 +365,7 @@ def test_rolling_hash_fingerprints_match_pure_python(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["n_grams"], list(r["fingerprints"]))
-        for r in rolling_hash_fingerprints(df, "doc_id", "text", k=k, window=w).collect()
+        for r in rolling_hash_fingerprints(df, "doc_id", "text").collect()
     }
     assert 3 not in got  # len("short") = 5 < k + w - 1 = 11, no full window
 
@@ -405,7 +391,7 @@ def test_rolling_hash_arrow_kernel_matches_hof(spark, sf_dir):
     }
     got = {
         r["doc_id"]: (r["n_grams"], list(r["fingerprints"]))
-        for r in rolling_hash_fingerprints(docs, "doc_id", "text", k=k, window=w).collect()
+        for r in rolling_hash_fingerprints(docs, "doc_id", "text").collect()
     }
     assert len(expected) > 0
     assert got == expected
@@ -439,7 +425,7 @@ def test_frame_sample_plan_edges(spark):
         "media_id", "kind", F.struct(F.col("duration_ms")).alias("meta")
     )
     got = {}
-    for r in frame_sample_plan(df, every_ms=1000).collect():
+    for r in frame_sample_plan(df).collect():
         got.setdefault(r["media_id"], []).append(r["frame_ms"])
     assert got == {1: [0], 2: [0], 3: [0, 1000, 2000]}
 
@@ -485,7 +471,7 @@ def test_adaptive_lsh_regime_pair_volume_linear(spark):
     )
 
     def pair_volume(n_planes: int) -> int:
-        planes = random_hyperplanes(dim, n_planes, seed=42)
+        planes = random_hyperplanes(dim, n_planes)
         buckets = emb.select(
             lsh_bucket_key("embedding", planes).alias("b")
         ).groupBy("b").count()
@@ -661,23 +647,26 @@ def test_batch_topk_arrow_equals_hof_under_rounding(spark, emb):
         got = sorted(
             (r.query_id, r.vec_id, r.cosine)
             for r in cosine_topk_batch(
-                emb.repartition(parts), queries, k=5, round_digits=6, exclude_self=True,
+                emb.repartition(parts), queries, k=5,
             ).select("query_id", "vec_id", "cosine").collect()
         )
         assert got == expected, f"kernel/numpy divergence at {parts} partitions"
 
 
 def test_brute_topk_arrow_equals_hof_raw(spark, emb):
-    """Single-query brute force with raw-score ranking (arrow pruning at
-    quantum=0, const as one codegen scan) must match numpy scoring."""
+    """Single-query brute force ranked on the rounded score (arrow pruning
+    at quantum=10^-6, const as one codegen scan) must match numpy scoring,
+    and the emitted cosine stays raw."""
     qdf = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     corpus = emb.filter(F.col("vec_id") != 0)
-    expected = _np_cosine_topk(corpus.collect(), [(0, qdf.first().qv)], k=10)
+    rows, q = corpus.collect(), [(0, qdf.first().qv)]
+    expected = _np_cosine_topk(rows, q, k=10, digits=6)
+    raw = {v: c for _, v, c in _np_cosine_topk(rows, q, k=len(rows))}
     for impl in ("const", "arrow"):
         got = cosine_topk_brute(corpus.repartition(5), qdf, k=10, impl=impl).collect()
         assert [r.vec_id for r in got] == [v for _, v, _ in expected], impl
-        for r, (_, _, c) in zip(got, expected):
-            assert abs(r.cosine - c) < 1e-9, impl
+        for r in got:
+            assert abs(r.cosine - raw[r.vec_id]) < 1e-9, impl
 
 
 def test_text_profile_fingerprint_families_exact_dup_classes(spark):

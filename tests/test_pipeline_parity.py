@@ -13,7 +13,6 @@ import math
 import os
 import sys
 from datetime import datetime, timezone
-from decimal import Decimal
 
 import pytest
 
@@ -94,13 +93,13 @@ def _fees_rows():
 
 def _bins_rows():
     # shares == totalShares (100%) in bin 10; uint128-scale magnitudes in bin 11
-    big = Decimal(2) ** 100  # far beyond int64
+    big = 2.0**100  # far beyond int64
     return [
         {"user_address": USER, "poolAddress": POOL, "binId": 10,
-         "reserveX": Decimal(4_000_000), "reserveY": Decimal(10) ** 18,
-         "shares": Decimal(500), "totalShares": Decimal(500)},
+         "reserveX": 4_000_000.0, "reserveY": 1e18,
+         "shares": 500.0, "totalShares": 500.0},
         {"user_address": USER, "poolAddress": POOL, "binId": 11,
-         "reserveX": Decimal(2_000_000), "reserveY": Decimal(0),
+         "reserveX": 2_000_000.0, "reserveY": 0.0,
          "shares": big, "totalShares": big * 2},
     ]
 
@@ -151,8 +150,8 @@ def test_strict_repr_packed_string(spark):
         bins=spark.createDataFrame(
             [
                 {"user_address": USER, "poolAddress": POOL, "binId": 7,
-                 "reserveX": Decimal(10) ** 22, "reserveY": Decimal(10) ** 14,
-                 "shares": Decimal(1), "totalShares": Decimal(1)},
+                 "reserveX": 1e22, "reserveY": 1e14,
+                 "shares": 1.0, "totalShares": 1.0},
             ],
             BINS_RESERVE_SCHEMA,
         ),

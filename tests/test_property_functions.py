@@ -32,7 +32,7 @@ def test_lenient_cast_matches_python_float(spark, values):
     """lenient_cast ≡ try: float(s) except: default (the pandas
     to_numeric(errors='coerce').fillna(0) contract, main.py:125-126)."""
     df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i long, s string")
-    got = {r.i: r.x for r in df.select("i", lenient_cast("s", "double", default=0.0).alias("x")).collect()}
+    got = {r.i: r.x for r in df.select("i", lenient_cast("s").alias("x")).collect()}
 
     for i, v in enumerate(values):
         try:

@@ -1,6 +1,6 @@
 """Every package definition is reached from a production root, and every
-option of a public function is set by a production caller, or is on an
-allow-list with its reason.
+option of a public function is set by a production caller and takes two
+values there, or is on an allow-list with its reason.
 
 A name scan over the ``ast`` of the package (no Spark). Roots: the
 ``@query`` functions, ``@atexit.register`` callbacks and module-level code
@@ -23,8 +23,6 @@ PKG = "traderjoe_etl_spark"
 # Unreached on purpose, keyed by module (every definition in it) or by
 # module::name.
 ALLOWED = {
-    f"{PKG}/operators/layout.py": "ROADMAP item 4: compaction of closed snapshot days",
-    f"{PKG}/sinks.py::clustered_write": "ROADMAP item 4: range-clustered snapshot writes",
     f"{PKG}/operators/observability.py": "ROADMAP item 5: observe() gates on the append",
     f"{PKG}/sources/rpc.py::default_web3_caller": "ROADMAP item 1: the production RPC client",
     f"{PKG}/plans/audit.py::plan_facts": "plan helper of tests/test_plan_shapes.py",
@@ -32,13 +30,14 @@ ALLOWED = {
 }
 
 
-# Defaulted parameters no production call sets, kept on purpose, keyed
-# module::function(param) or by module (every option in it).
+# Defaulted parameters that production calls leave unset or set to one
+# value, kept on purpose, keyed module::function(param) or by module
+# (every option in it).
 OPTIONS_ALLOWED = {
-    f"{PKG}/operators/layout.py": "ROADMAP item 4 decides its options",
     f"{PKG}/operators/observability.py": "ROADMAP item 5 decides its options",
-    f"{PKG}/sinks.py::clustered_write(mode)": "ROADMAP item 4 decides its options",
-    f"{PKG}/sinks.py::clustered_write(n_files)": "ROADMAP item 4 decides its options",
+    f"{PKG}/plans/traderjoe.py::build_snapshot(strict_repr)":
+        "ROADMAP item 9 removes it with the benchmark, which passes it by name",
+    f"{PKG}/operators/windows.py::moving_agg(fn)": "perfbench/history.py passes it by position",
     f"{PKG}/session.py::get_spark(master)": "deployment setting: the cluster master",
     f"{PKG}/sources/rest.py::rest_snapshot_source(params)":
         "deployment setting: API key header and time window (main.py:30-34)",
@@ -125,46 +124,112 @@ def test_every_definition_is_reached_or_allowed():
     assert stale == set(), "allow-listed but reached (or gone): drop the entry"
 
 
-def unset_options() -> set[str]:
-    """``module::function(param)`` of every defaulted parameter of a public
-    top-level package function that no call in the package or the roots
-    sets, by keyword or by position. Calls match by name, like
-    :func:`unreached`, so a shared name over-counts as set."""
-    options: dict[tuple[str, str], int | None] = {}  # (function, param) -> position
-    where: dict[tuple[str, str], str] = {}
+def _defaulted() -> dict[tuple[str, str], tuple[str, int | None, ast.expr]]:
+    """(function, param) -> (module, position or None, default) of every
+    defaulted parameter of a public top-level package function."""
+    options = {}
     for p in _package():
         for fn in _parse(p).body:
             if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
                 continue
             a = fn.args
             pos = a.posonlyargs + a.args
-            defaulted = [(x, i) for i, x in enumerate(pos)][len(pos) - len(a.defaults):]
-            defaulted += [(x, None) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
-            for arg, i in defaulted:
-                options[(fn.name, arg.arg)] = i
-                where[(fn.name, arg.arg)] = p
-    set_: set[tuple[str, str]] = set()
+            first = len(pos) - len(a.defaults)
+            for i, (x, d) in enumerate(zip(pos[first:], a.defaults)):
+                options[(fn.name, x.arg)] = (p, first + i, d)
+            for x, d in zip(a.kwonlyargs, a.kw_defaults):
+                if d is not None:
+                    options[(fn.name, x.arg)] = (p, None, d)
+    return options
+
+
+def _calls():
+    """(called name, call) of every call in the package and the roots."""
     for p in _package() + _roots():
         for call in ast.walk(_parse(p)):
-            if not isinstance(call, ast.Call):
+            if isinstance(call, ast.Call):
+                f = call.func
+                yield (f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None), call
+
+
+def unset_options() -> set[str]:
+    """``module::function(param)`` of every defaulted parameter of a public
+    top-level package function that no call in the package or the roots
+    sets, by keyword or by position. Calls match by name, like
+    :func:`unreached`, so a shared name over-counts as set."""
+    options = _defaulted()
+    set_: set[tuple[str, str]] = set()
+    for name, call in _calls():
+        n_pos = len(call.args)
+        for (fn, param), (_, i, _) in options.items():
+            if fn != name:
                 continue
-            f = call.func
-            name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
-            n_pos = len(call.args)
-            for (fn, param), i in options.items():
-                if fn != name:
-                    continue
-                if any(k.arg in (param, None) for k in call.keywords) or (
-                    i is not None and (i < n_pos or any(isinstance(x, ast.Starred) for x in call.args))
-                ):
-                    set_.add((fn, param))
-    return {f"{where[k]}::{k[0]}({k[1]})" for k in options if k not in set_}
+            if any(k.arg in (param, None) for k in call.keywords) or (
+                i is not None and (i < n_pos or any(isinstance(x, ast.Starred) for x in call.args))
+            ):
+                set_.add((fn, param))
+    return {f"{options[k][0]}::{k[0]}({k[1]})" for k in options if k not in set_}
+
+
+def _value(node: ast.expr):
+    """A literal's (type, repr); a fresh object, equal to nothing, for any
+    other expression."""
+    try:
+        v = ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return object()
+    return (type(v).__name__, repr(v))
+
+
+def single_valued_options() -> set[str]:
+    """``module::function(param)`` of every defaulted parameter of a public
+    top-level package function that takes one value at every call in the
+    package and the roots: each call passes the same literal or leaves the
+    default. A non-literal argument, ``*args`` or ``**kwargs`` counts as a
+    second value. Calls match by name, like :func:`unset_options`."""
+    options = _defaulted()
+    values: dict[tuple[str, str], set] = {k: set() for k in options}
+    for name, call in _calls():
+        for (fn, param), (_, i, default) in options.items():
+            if fn != name:
+                continue
+            kw = [k for k in call.keywords if k.arg in (param, None)]
+            if kw:
+                v = _value(kw[0].value) if kw[0].arg else object()
+            elif i is not None and any(isinstance(x, ast.Starred) for x in call.args[: i + 1]):
+                v = object()
+            elif i is not None and i < len(call.args):
+                v = _value(call.args[i])
+            else:
+                v = _value(default)
+                if not isinstance(v, tuple):
+                    v = ("default", ast.unparse(default))
+            values[(fn, param)].add(v)
+    return {
+        f"{options[k][0]}::{k[0]}({k[1]})"
+        for k, v in values.items()
+        if len(v) <= 1 and all(isinstance(x, tuple) for x in v)
+    }
+
+
+def _allowed(found: set[str]) -> set[str]:
+    return {k for k in found if k in OPTIONS_ALLOWED or k.split("::", 1)[0] in OPTIONS_ALLOWED}
+
+
+def _stale_options() -> set[str]:
+    found = single_valued_options()  # every unset option takes one value
+    return {k for k in OPTIONS_ALLOWED if not any(f == k or f.startswith(k + "::") for f in found)}
 
 
 def test_every_option_is_set_by_a_caller():
     found = unset_options()
-    allowed = {k for k in found if k in OPTIONS_ALLOWED or k.split("::", 1)[0] in OPTIONS_ALLOWED}
-    unset = sorted(found - allowed)
+    unset = sorted(found - _allowed(found))
     assert not unset, "options no production caller sets (make them constants):\n" + "\n".join(unset)
-    stale = {k for k in OPTIONS_ALLOWED if not any(f == k or f.startswith(k + "::") for f in found)}
-    assert stale == set(), "allow-listed but set by a caller (or gone): drop the entry"
+    assert _stale_options() == set(), "allow-listed but set to two values (or gone): drop the entry"
+
+
+def test_every_option_takes_two_values():
+    found = single_valued_options()
+    single = sorted(found - _allowed(found))
+    assert not single, "options every production call sets to one value (make them constants):\n" + "\n".join(single)
+    assert _stale_options() == set(), "allow-listed but set to two values (or gone): drop the entry"

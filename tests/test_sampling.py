@@ -61,7 +61,7 @@ def test_stratified_rates(spark, sf_dir):
     cust = read_table(spark, sf_dir, "customer")
     sampled = stratified_hash_sample(
         cust, key="c_custkey", strata="c_mktsegment",
-        rates={"BUILDING": 0.5, "AUTOMOBILE": 0.0}, default_rate=0.1,
+        rates={"BUILDING": 0.5, "AUTOMOBILE": 0.0},
     )
     by_seg = dict(
         sampled.groupBy("c_mktsegment").count().collect()

@@ -159,16 +159,18 @@ def test_store_schema_is_the_declared_snapshot_schema(spark, tmp_path):
         lambda df: df.drop("APR%"),
         lambda df: df.withColumn("extra", F.lit(1.0)),
         lambda df: df.withColumn("APR%", F.lit("12.5")),
+        lambda df: df.withColumn("current_unix_timestamp", F.col("current_unix_timestamp").cast("string")),
     ],
-    ids=["missing_column", "extra_column", "string_in_double"],
+    ids=["missing_column", "extra_column", "string_in_double", "string_run_stamp"],
 )
 def test_append_refuses_frames_off_the_schema(spark, tmp_path, bad):
     """The table's declared schema is the append's check: a frame that
-    does not fit it fails at analysis and writes no file."""
+    does not fit it fails at analysis with an error naming the store's
+    table, and writes no file."""
     d = str(tmp_path / "store")
     append_snapshot(_batch(spark, DAY1, [1, 2]), d)
     before = _store_files(d)
-    with pytest.raises(AnalysisException):
+    with pytest.raises(AnalysisException, match=_store_table(spark, os.path.abspath(d))):
         append_snapshot(bad(_batch(spark, DAY1, [3])), d)
     assert _store_files(d) == before
     assert read_snapshots(spark, d).count() == 2
@@ -238,101 +240,3 @@ def test_csv_export_header_once(spark, tmp_path):
     assert len(lines) == 4  # one header + three rows across two appends
     assert sum(1 for l in lines if l.startswith("value,")) == 1
 
-
-def test_clustered_write_prunes(spark, tmp_path):
-    """Range-clustered layout: per-file min/max stats must be pairwise
-    disjoint so footer-stat pruning can skip files, and a selective read
-    must push the filter down to the scan."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from traderjoe_etl_spark.sinks import clustered_write
-    from traderjoe_etl_spark.sources.tables import read_table
-
-    events = read_table(spark, "/root/testdata/sf0.001", "events")
-    out = str(tmp_path / "clustered")
-    clustered_write(events, out, "ts", n_files=8)
-
-    ranges = []
-    for f in glob.glob(out + "/*.parquet"):
-        md = pq.read_metadata(f)
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = next(
-                md.row_group(rg).column(i)
-                for i in range(md.num_columns)
-                if md.row_group(rg).column(i).path_in_schema == "ts"
-            )
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    assert len(ranges) >= 4
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, "file ranges overlap - clustering broken"
-
-    back = spark.read.parquet(out)
-    lo = events.agg(F.min("ts")).collect()[0][0]
-    filtered = back.filter(F.col("ts") <= F.lit(lo))
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "LessThanOrEqual(ts" in plan
-    assert filtered.count() >= 1
-
-
-def test_zorder_write_prunes_both_dims(spark, tmp_path):
-    """Z-order layout: per-file spans of BOTH interleaved columns must be
-    materially narrower than the global span (each dimension prunes)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from traderjoe_etl_spark.operators.layout import zorder_write
-    from traderjoe_etl_spark.sources.tables import read_table
-
-    events = read_table(spark, "/root/testdata/sf0.01", "events")
-    out = str(tmp_path / "zorder")
-    zorder_write(events, out, "user_id", "value", n_files=16)
-
-    def spans(col):
-        spans = []
-        glob_min, glob_max = None, None
-        for f in glob.glob(out + "/*.parquet"):
-            md = pq.read_metadata(f)
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                c = next(
-                    md.row_group(rg).column(i)
-                    for i in range(md.num_columns)
-                    if md.row_group(rg).column(i).path_in_schema == col
-                )
-                mins.append(c.statistics.min)
-                maxs.append(c.statistics.max)
-            lo, hi = min(mins), max(maxs)
-            spans.append(hi - lo)
-            glob_min = lo if glob_min is None else min(glob_min, lo)
-            glob_max = hi if glob_max is None else max(glob_max, hi)
-        return spans, glob_max - glob_min
-
-    for col in ("user_id", "value"):
-        per_file, full = spans(col)
-        avg = sum(per_file) / len(per_file)
-        # z-order over 2 dims: each file covers a sub-rectangle; average
-        # per-file span must be well under the full span on BOTH columns
-        # (a 1D range layout would give ~full span on the other column).
-        assert avg < 0.8 * full, (col, avg, full)
-
-
-def test_compact_small_files(spark, tmp_path):
-    from traderjoe_etl_spark.operators.layout import compact_small_files
-    from traderjoe_etl_spark.sources.tables import read_table
-
-    src = str(tmp_path / "many")
-    read_table(spark, "/root/testdata/sf0.001", "events").repartition(24).write.parquet(src)
-    out = str(tmp_path / "compacted")
-    n = compact_small_files(spark, src, out, target_mb=1)
-    import glob
-    files = glob.glob(out + "/*.parquet")
-    assert len(files) == n and n < 24
-    assert spark.read.parquet(out).count() == spark.read.parquet(src).count()

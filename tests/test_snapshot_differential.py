@@ -13,9 +13,10 @@ registry's ``snapshot_pipeline`` oracle, so neither can check itself.
 Floats compare at relative 1e-9 (sum order differs between engines);
 packed strings (byte for byte, including the per-bin amounts at or above
 2^53), ``MostRecentDepositTime`` and every non-float column compare
-exactly. Two pairs are edited into edge cases: one whose latest
-deposits tie on (blockNumber, timestamp) and one with no deposit, no fee
-and no bin.
+exactly. Three pairs are edited into edge cases: one whose latest
+deposits tie on (blockNumber, timestamp), one with no deposit, no fee
+and no bin, and one whose bins carry uint256 shares above 10^38 and a
+reserve next to 2^128, past any Spark decimal.
 """
 
 from __future__ import annotations
@@ -69,12 +70,12 @@ NON_DOUBLE = {
 
 def _payloads(u):
     """Raw payloads of one cycle, keyed like the fixture endpoints, with
-    the tie pair and the empty pair edited in."""
+    the tie pair, the empty pair and the uint256 pair edited in."""
     pools = {(p, w): fx.pool_stats(u.seed, p, w, CYCLE) for p in u.pools for w in ("1d", "1h")}
     hist = {k: fx.history(u.seed, *k, CYCLE) for k in u.pairs}
     fees = {k: fx.fees(u.seed, *k, CYCLE) for k in u.pairs}
     bins = {k: fx.bins(u.seed, *k, pools[(k[1], "1d")]["activeBinId"], CYCLE) for k in u.pairs}
-    tie, empty = u.pairs[0], u.pairs[1]
+    tie, empty, whale = u.pairs[0], u.pairs[1], u.pairs[2]
     rows = hist[tie]
     top = max(r["blockNumber"] for r in rows) + 1
     for r, ts in zip(rows[-3:], ("2025-11-29T00:00:00", "2025-11-30T12:00:00", "2025-11-30T12:00:00")):
@@ -82,6 +83,8 @@ def _payloads(u):
     for r in hist[empty]:
         r["isDeposit"] = False
     fees[empty], bins[empty] = [], []
+    active = pools[(whale[1], "1d")]["activeBinId"]
+    bins[whale] = [(active, 2**128 - 1, 10**24, 10**40, 4 * 10**40), (active + 1, 2**127 + 1, 0, 10**38, 10**38)]
     return pools, hist, fees, bins
 
 
@@ -318,10 +321,11 @@ def test_snapshot_matches_duckdb_over_raw_payloads(spark, universe):
     want = {(r["user_address"], r["pool_address"]): r for r in want_rows}
     assert sorted(got) == sorted(want) == sorted(universe.pairs)
 
-    tie, empty = universe.pairs[0], universe.pairs[1]
+    tie, empty, whale = universe.pairs[0], universe.pairs[1], universe.pairs[2]
     assert want[tie]["MostRecentDepositTime"] == "2025-11-30 12:00:00"
     assert want[empty]["MostRecentDepositTime"] is None
     assert want[empty]["fees_per_bin(bin_id: token_x, token_y_amounts)"] == "()"
+    assert want[whale]["bin_distribution(bin id: token_x_amount, token_y_amounts)"].count(";") == 1
     mismatches = [
         f"{key} {c}: program {got[key][c]!r} != oracle {want[key][c]!r}"
         for key in sorted(want)

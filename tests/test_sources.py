@@ -1,5 +1,5 @@
 """Source-adapter tests: REST fetcher executor path, RPC fetcher with
-decimal fidelity, parquet schema evolution."""
+uint-scale values, parquet schema evolution."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import os
 import sys
 import threading
 import time
-from decimal import Decimal
 
 import pytest
 
@@ -75,16 +74,28 @@ def test_rest_source_quarantines_non_object_payload_element(spark):
 
 
 def test_rpc_source_decimal_fidelity(spark):
+    """uint128 reserves and uint256 shares arrive as their nearest double,
+    above int64 and above DECIMAL(38, 0) alike: a uint256 share of 10**40
+    in one pair's bins fails neither that pair nor the other."""
+    bins = {
+        "u": [(5, 10**30, 1, 2**90, 2**91)],
+        "whale": [(5, 2**128 - 1, 0, 10**40, 3 * 10**40)],
+    }
+
     def caller(pool, user, active, plus, minus):
-        return [(active, 10**30, 1, 2**90, 2**91)]
+        return bins[user]
 
     keys = spark.createDataFrame(
-        [("u", "p", 5)], "user_address string, poolAddress string, activeBinId int"
+        [("u", "p", 5), ("whale", "p", 5)], "user_address string, poolAddress string, activeBinId int"
     )
-    row = rpc_bins_source(keys, caller).collect()[0]
-    assert row.reserveX == Decimal(10**30)  # > float64 exact range, > int64
-    assert row.shares == Decimal(2**90)
-    assert row.totalShares == Decimal(2**91)
+    rows = {r.user_address: r for r in rpc_bins_source(keys, caller).collect()}
+    assert sorted(rows) == sorted(bins)
+    for user, [(b, rx, ry, sh, tsh)] in bins.items():
+        r = rows[user]
+        assert r._fetch_error is None
+        assert (r.binId, r.reserveX, r.reserveY, r.shares, r.totalShares) == (
+            b, float(rx), float(ry), float(sh), float(tsh)
+        )
 
 
 def test_sources_fetch_each_key_once(spark):
@@ -126,7 +137,7 @@ def test_sources_fetch_each_key_once(spark):
     assert {r.user_address for r in bins_bad.collect()} == {"u_boom"}
     joined = bins_ok.join(ok.withColumnRenamed("pool", "poolAddress"), "poolAddress").collect()
     assert {r.binId for r in joined} == {1, 2, 3}
-    assert all(r.reserveX == Decimal(10**30) and r.totalShares == Decimal(2**91) for r in joined)
+    assert all(r.reserveX == float(10**30) and r.totalShares == float(2**91) for r in joined)
     assert rest_calls.value == len(pools) and rpc_calls.value == 6
 
 

@@ -60,7 +60,7 @@ def _drain(stream_df, name, mode="append"):
 
 def test_tumbling_window_matches_batch(spark, event_dir):
     src = spark.readStream.schema(EVENTS_SCHEMA).parquet(event_dir)
-    _drain(windowed_event_agg(src, window="1 hour", watermark="0 seconds"), "tumbling", mode="complete")
+    _drain(windowed_event_agg(src), "tumbling", mode="complete")
     got = spark.sql("SELECT sum(n) AS n, count(*) AS windows FROM tumbling").collect()[0]
     # batch equivalent on the same files
     batch = spark.read.schema(EVENTS_SCHEMA).parquet(event_dir)
@@ -73,7 +73,7 @@ def test_tumbling_window_matches_batch(spark, event_dir):
 
 def test_session_window_runs(spark, event_dir):
     src = spark.readStream.schema(EVENTS_SCHEMA).parquet(event_dir)
-    _drain(session_window_agg(src, gap="30 minutes", watermark="0 seconds"), "sessions", mode="complete")
+    _drain(session_window_agg(src), "sessions", mode="complete")
     rows = spark.sql("SELECT count(*) AS c, sum(n_events) AS n FROM sessions").collect()[0]
     batch = spark.read.schema(EVENTS_SCHEMA).parquet(event_dir)
     assert rows.n == batch.count()
@@ -84,7 +84,7 @@ def test_stream_dedup_drops_watermark_duplicates(spark, event_dir):
     # duplicate every event: dedup on event_id must return each once
     src = spark.readStream.schema(EVENTS_SCHEMA).parquet(event_dir)
     doubled = src.union(src)
-    _drain(stream_dedup(doubled, keys=["event_id"], watermark="10 minutes"), "dedup")
+    _drain(stream_dedup(doubled, keys=["event_id"]), "dedup")
     n = spark.sql("SELECT count(*) AS c, count(DISTINCT event_id) AS d FROM dedup").collect()[0]
     batch_n = spark.read.schema(EVENTS_SCHEMA).parquet(event_dir).count()
     assert n.c == n.d == batch_n
@@ -97,7 +97,7 @@ def test_stream_stream_join_matches_batch(spark, event_dir):
     buys = spark.readStream.schema(EVENTS_SCHEMA).parquet(event_dir).filter(
         F.col("event_type") == "purchase"
     )
-    joined = stream_stream_interval_join(views, buys, within="1 hour")
+    joined = stream_stream_interval_join(views, buys)
     _drain(joined.select("user_id", "event_id", "event_id_r"), "ssjoin")
     got = spark.sql("SELECT count(*) AS c FROM ssjoin").collect()[0].c
 

@@ -10,18 +10,18 @@ Spark-first operator library:
   inf/NaN scrub (main.py:268-269, 284-286), Python-repr float rendering
   (main.py:163-170, 239-244).
 - ``operators``  — the generalized relational surface (joins, aggregates,
-  windows, set ops, top-k, MERGE upsert, connected components, skew/salting,
-  data layout: z-order + compaction) plus LLM-data-pipeline ops (dedup,
-  similarity search, text analysis, multimodal plumbing) exercised on the
-  driver's documents/embeddings.
+  windows, set ops, top-k, MERGE upsert, connected components,
+  skew/salting) plus LLM-data-pipeline ops (dedup, similarity search, text
+  analysis, multimodal plumbing) exercised on the driver's
+  documents/embeddings.
 - ``plans``      — the reference pipeline recomposed as one SQL statement,
   plus physical-plan audit helpers (plans/audit.py).
 - ``streaming``  — event-time Structured Streaming jobs: windows,
   watermarks, stream-static enrichment, stateful dedup and position
   tracking. The reference's hourly loop (main.py:353-359) has no
   scheduler here yet: CLI ``run`` runs one cycle.
-- ``sinks``      — append-mode parquet snapshot sink, range-clustered writes,
-  header-once CSV export (main.py:345-351).
+- ``sinks``      — pool-bucketed parquet snapshot store, header-once CSV
+  export (main.py:345-351).
 - ``queries``    — the registry behind ``__spark_entry__`` (222 named
   queries, DuckDB oracle twins for everything SQL-expressible).
 

@@ -15,13 +15,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def lenient_cast(col: Column | str, to: str = "double", default: float | None = None) -> Column:
-    """``pd.to_numeric(errors='coerce')`` ≡ try_cast: invalid input → NULL.
-
-    ``default`` replicates the reference's ``.fillna(default)`` where used.
+def lenient_cast(col: Column | str) -> Column:
+    """``pd.to_numeric(errors='coerce').fillna(0)`` (main.py:125-126) ≡
+    try_cast to double with NULL → 0.0: invalid or missing input reads 0.0.
     """
     c = F.col(col) if isinstance(col, str) else col
-    out = c.try_cast(to)
-    if default is not None:
-        out = F.coalesce(out, F.lit(default).cast(to))
-    return out
+    return F.coalesce(c.try_cast("double"), F.lit(0.0).cast("double"))

@@ -53,15 +53,17 @@ import warnings
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Probes per key: the k of the standard sizing (k = 5 is near-optimal
-# at the 1 % fpp every caller asks for).
+# Target false-positive rate of every bitmap, and probes per key: the k of
+# the standard sizing (k = 5 is near-optimal at a 1 % fpp).
+BLOOM_FPP = 0.01
 BLOOM_HASHES = 5
 
 
-def _optimal_bits(n_keys: int, fpp: float) -> int:
-    """Standard Bloom sizing: m = -n ln(p) / (ln 2)^2, rounded up to a
-    multiple of 64 with a small floor so tiny builds stay well-behaved."""
-    m = int(-n_keys * math.log(fpp) / (math.log(2) ** 2)) + 1
+def _optimal_bits(n_keys: int) -> int:
+    """Standard Bloom sizing: m = -n ln(p) / (ln 2)^2 at p = ``BLOOM_FPP``,
+    rounded up to a multiple of 64 with a small floor so tiny builds stay
+    well-behaved."""
+    m = int(-n_keys * math.log(BLOOM_FPP) / (math.log(2) ** 2)) + 1
     return max(256, (m + 63) // 64 * 64)
 
 
@@ -80,7 +82,6 @@ def build_bloom(
     key: str | Column,
     *,
     expected_keys: int | None = None,
-    fpp: float = 0.01,
 ) -> tuple[list[int], int, int]:
     """Aggregate the build side into a Bloom bitmap.
 
@@ -95,7 +96,7 @@ def build_bloom(
         expected_keys = build.select(key_col.alias("k")).agg(
             F.approx_count_distinct("k").alias("n")
         ).collect()[0]["n"]
-    m_bits = _optimal_bits(max(1, expected_keys), fpp)
+    m_bits = _optimal_bits(max(1, expected_keys))
 
     pos = build.select(
         F.explode(_positions(key_col, BLOOM_HASHES, m_bits)).alias("pos")
@@ -162,7 +163,6 @@ def native_bloom_prefilter(
     build_key: str,
     *,
     expected_keys: int,
-    fpp: float = 0.01,
 ) -> DataFrame:
     """Big-build Bloom prefilter with the bitmap as a broadcast VALUE — a
     1-row ``array<long>`` aggregate joined with a broadcast hint — never a
@@ -183,7 +183,7 @@ def native_bloom_prefilter(
     the zero-copy ideal, but it is not exposed in the public function
     registry; this build keeps the SAME xxhash64 family on both sides
     using only public operators.)"""
-    m_bits = _optimal_bits(max(1, expected_keys), fpp)
+    m_bits = _optimal_bits(max(1, expected_keys))
     n_words = m_bits // 64
     key_col = F.col(build_key)
     pos = build.select(F.explode(_positions(key_col, BLOOM_HASHES, m_bits)).alias("pos"))
@@ -228,7 +228,7 @@ def native_bloom_prefilter(
     return joined.where(test).drop("__bloom_words")
 
 
-def _warn_if_underfilled(words: list[int], m_bits: int, k: int, fpp: float, n_keys: int) -> None:
+def _warn_if_underfilled(words: list[int], m_bits: int, k: int, n_keys: int) -> None:
     """Warn when a built bitmap's effective fpp exceeds twice the target.
 
     With X of m bits set, the false-positive rate is (X/m)^k and the
@@ -236,11 +236,11 @@ def _warn_if_underfilled(words: list[int], m_bits: int, k: int, fpp: float, n_ke
     already on the driver, so the check runs no Spark job."""
     ones = sum((w & 0xFFFFFFFFFFFFFFFF).bit_count() for w in words)
     effective = (ones / m_bits) ** k
-    if effective > 2 * fpp:
+    if effective > 2 * BLOOM_FPP:
         est = math.inf if ones >= m_bits else -(m_bits / k) * math.log(1 - ones / m_bits)
         warnings.warn(
             f"bloom bitmap sized for {n_keys} keys holds ~{est:.0f}: effective "
-            f"fpp {effective:.3g} vs requested {fpp:g}; raise expected_keys",
+            f"fpp {effective:.3g} vs requested {BLOOM_FPP:g}; raise expected_keys",
             stacklevel=3,
         )
 
@@ -251,7 +251,6 @@ def bloom_prefilter_join(
     probe_key: str,
     build_key: str,
     *,
-    fpp: float = 0.01,
     expected_keys: int | None = None,
 ) -> DataFrame:
     """Exact inner equi-join with a Bloom prefilter on the probe side.
@@ -259,7 +258,7 @@ def bloom_prefilter_join(
     Semantically identical to ``probe.join(build, on)`` — the bloom admits
     false positives, and the exact join removes them; true matches always
     pass (no false negatives). The win is that the probe's shuffle only
-    carries rows whose key is plausibly present: at fpp=1% a
+    carries rows whose key is plausibly present: at ``BLOOM_FPP`` = 1% a
     99%-selective join moves ~1% of the fact table plus noise. A bitmap
     above ``MAX_LITERAL_BITS`` takes the broadcast-value path.
 
@@ -274,10 +273,10 @@ def bloom_prefilter_join(
     followed the measured count. Underestimating is the failure mode: the
     bitmap is sized for too few keys, so it fills up and the effective
     fpp rises, ``(1 - exp(-k·n/m))^k`` for n real keys in m bits — at the
-    default fpp=1% and k=5, 2× too few keys gives ~11% and 10× too few
+    1% fpp and k=5, 2× too few keys gives ~11% and 10× too few
     ~97%, so the prefilter passes nearly every probe row. The result stays
     exact either way; only the saving is lost, and the literal path warns
-    when the built bitmap's effective fpp exceeds twice ``fpp``. ``0`` or
+    when the built bitmap's effective fpp exceeds twice ``BLOOM_FPP``. ``0`` or
     ``None`` falls back to the ``approx_count_distinct`` scan.
     """
     key_col = F.col(build_key)
@@ -286,11 +285,11 @@ def bloom_prefilter_join(
         n_keys = build.select(key_col.alias("k")).agg(
             F.approx_count_distinct("k").alias("n")
         ).collect()[0]["n"]
-    if _optimal_bits(max(1, n_keys), fpp) > MAX_LITERAL_BITS:
+    if _optimal_bits(max(1, n_keys)) > MAX_LITERAL_BITS:
         # big build: bitmap as a broadcast value, not a plan literal
-        pref = native_bloom_prefilter(probe, build, probe_key, build_key, expected_keys=n_keys, fpp=fpp)
+        pref = native_bloom_prefilter(probe, build, probe_key, build_key, expected_keys=n_keys)
     else:
-        words, m_bits, k = build_bloom(build, build_key, expected_keys=n_keys, fpp=fpp)
-        _warn_if_underfilled(words, m_bits, k, fpp, n_keys)
+        words, m_bits, k = build_bloom(build, build_key, expected_keys=n_keys)
+        _warn_if_underfilled(words, m_bits, k, n_keys)
         pref = probe.where(might_contain(F.col(probe_key), words, m_bits, k))
     return pref.join(build, pref[probe_key] == build[build_key], "inner")

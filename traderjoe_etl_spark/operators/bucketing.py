@@ -13,22 +13,22 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..scratch import scratch_dir
 
+#: Buckets of every table ``save_bucketed`` writes; two tables join
+#: without an Exchange only when their bucket counts are equal.
+NUM_BUCKETS = 8
 
-def save_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_key: str,
-    num_buckets: int = 16,
-) -> None:
-    """Persist as a bucketed catalog table whose files sit in a private
-    scratch directory (``scratch.py``), not in the session's warehouse —
+
+def save_bucketed(df: DataFrame, table_name: str, bucket_key: str) -> None:
+    """Persist as a ``NUM_BUCKETS``-bucketed catalog table whose files sit
+    in a private scratch directory (``scratch.py``), not in the session's
+    warehouse —
     by default ``spark-warehouse/`` under the working directory, shared by
     every session started there. Drops any previous table of the name
     first; a new directory per call means no leftover location can clash."""
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
     path = scratch_dir(f"bucketed_{table_name.lower()}_")
-    df.write.mode("overwrite").bucketBy(num_buckets, bucket_key).option("path", path).saveAsTable(table_name)
+    df.write.mode("overwrite").bucketBy(NUM_BUCKETS, bucket_key).option("path", path).saveAsTable(table_name)
 
 
 def bucketed_join(spark: SparkSession, left_table: str, right_table: str, key: str) -> DataFrame:

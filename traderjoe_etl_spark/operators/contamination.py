@@ -20,6 +20,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: Words per n-gram of ``contamination_report``.
+NGRAM_N = 4
+
 
 def tokens(text_col: str | Column) -> Column:
     """Lowercased whitespace tokens with empties dropped (leading/trailing
@@ -63,10 +66,9 @@ def contamination_report(
     benchmark: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 8,
 ) -> DataFrame:
-    """Per-training-document count of distinct n-gram hashes shared with
-    the benchmark set → ``(id_col, n_shared_ngrams)``, contaminated docs
+    """Per-training-document count of distinct ``NGRAM_N``-gram hashes
+    shared with the benchmark set → ``(id_col, n_shared_ngrams)``, contaminated docs
     only. Callers drop or quarantine the flagged ids.
 
     Join order is the whole ballgame at corpus scale: the broadcast
@@ -83,7 +85,7 @@ def contamination_report(
         toks = df.select(id_col, tokens(text_col).alias("__toks")).select(
             id_col, F.transform("__toks", lambda t: F.xxhash64(t)).alias("__toks")
         )
-        return toks.select(id_col, F.explode(ngram_hashes(F.col("__toks"), n)).alias("__h"))
+        return toks.select(id_col, F.explode(ngram_hashes(F.col("__toks"), NGRAM_N)).alias("__h"))
 
     bench_hashes = explode_hashes(benchmark).select("__h").distinct()
     return (

@@ -101,15 +101,13 @@ def connected_components(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     return nodes.union(roots).distinct()
 
 
-def dedup_cluster_assignments(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
-) -> DataFrame:
-    """Near-dup clusters from candidate pairs: (doc, canonical, cluster_size).
+def dedup_cluster_assignments(pairs: DataFrame) -> DataFrame:
+    """Near-dup clusters from candidate ``(id_a, id_b)`` pairs: (doc, canonical, cluster_size).
 
     canonical = the minimum doc id of the cluster (the survivor a curation
     pipeline keeps); cluster_size counts members, so `doc != canonical`
     filters to the rows to DELETE and `cluster_size` feeds dedup stats."""
-    comp = connected_components(pairs, id_a, id_b)
+    comp = connected_components(pairs, "id_a", "id_b")
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         comp.join(F.broadcast(sizes), "component")

@@ -7,8 +7,9 @@ lacks as built-ins but a snapshot/time-series data model needs:
 
 - broadcast dimension join (dims like region/nation/pool metadata are tiny
   at any scale — never shuffle the fact table for them),
-- as-of join ("pool state as of this event's timestamp" — the natural query
-  over the reference's append-only hourly snapshot CSV, main.py:345-351).
+- as-of join ("the last snapshot at or before this event's timestamp" —
+  the natural query over the reference's append-only hourly snapshot CSV,
+  main.py:345-351).
 """
 
 from __future__ import annotations
@@ -87,39 +88,23 @@ def asof_join(
     keys: Sequence[str],
     left_ts: str,
     right_ts: str,
-    right_cols: Sequence[str] | None = None,
 ) -> DataFrame:
-    """For each left row, attach the latest right row with
-    ``right_ts <= left_ts`` within the same key group (backward as-of join,
-    ``pd.merge_asof`` semantics).
+    """For each left row, attach the latest right timestamp
+    ``right_ts <= left_ts`` within the same key group as ``asof_{right_ts}``
+    (backward as-of join, ``pd.merge_asof`` semantics, NULL when the group
+    has no earlier right row).
 
     Implemented with the union-window trick — NOT a theta/range join:
     tag both sides, union, sort within key by (ts, side), and carry the last
-    seen right values forward with ``last(..., ignorenulls=True)``. One
+    seen right timestamp forward with ``last(..., ignorenulls=True)``. One
     shuffle on ``keys``; no O(n·m) range-join blowup, which is what makes
     this survive 100×: cost is a single sort per key group.
-
-    ``right_cols`` defaults to all non-key, non-ts right columns. Right
-    timestamp is also emitted as ``asof_{right_ts}``. If several right rows
-    share one timestamp, the last one in (ts, tie-break by input order) wins
-    — callers needing stricter determinism should pre-argmax the right side.
     """
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in keys and c != right_ts]
-    clash = set(right_cols) & set(left.columns)
-    if clash:
-        raise ValueError(
-            f"asof_join: right columns {sorted(clash)} collide with left column "
-            "names — rename or pass an explicit non-overlapping right_cols"
-        )
-    carried = [*right_cols, "__asof_ts"]
-
     lhs = left.select(
         *keys,
         F.col(left_ts).alias("__ts"),
         F.lit(1).alias("__side"),
         F.struct(*[F.col(c) for c in left.columns]).alias("__lrow"),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in right_cols],
         F.lit(None).cast(right.schema[right_ts].dataType).alias("__r___asof_ts"),
     )
     rhs = right.select(
@@ -127,7 +112,6 @@ def asof_join(
         F.col(right_ts).alias("__ts"),
         F.lit(0).alias("__side"),
         F.lit(None).cast(lhs.schema["__lrow"].dataType).alias("__lrow"),
-        *[F.col(c).alias(f"__r_{c}") for c in right_cols],
         F.col(right_ts).alias("__r___asof_ts"),
     )
 
@@ -140,10 +124,9 @@ def asof_join(
         "__side",
         "__ts",
         "__lrow",
-        *[F.last(f"__r_{c}", ignorenulls=True).over(w).alias(f"__f_{c}") for c in carried],
+        F.last("__r___asof_ts", ignorenulls=True).over(w).alias("__f___asof_ts"),
     )
 
     out = filled.filter(F.col("__side") == 1)
     left_cols = [F.col(f"__lrow.{c}").alias(c) for c in left.columns]
-    rcols = [F.col(f"__f_{c}").alias(c) for c in right_cols]
-    return out.select(*left_cols, *rcols, F.col("__f___asof_ts").alias(f"asof_{right_ts}"))
+    return out.select(*left_cols, F.col("__f___asof_ts").alias(f"asof_{right_ts}"))

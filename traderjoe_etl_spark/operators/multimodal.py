@@ -46,6 +46,12 @@ MEDIA_SCHEMA = T.StructType(
 MEDIA_PARTITION_BYTES = 64 * 1024 * 1024
 BATCH_ROWS = 64
 
+# Floats per feature vector, milliseconds between sampled video frames, and
+# the side of the square image ``resize_images`` outputs.
+FEATURE_DIM = 16
+FRAME_EVERY_MS = 1000
+RESIZED_SIDE = 8
+
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -56,13 +62,13 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def _fake_decode(blob: bytes, dim: int) -> list[float]:
-    """Deterministic stand-in for decode→feature-extract: derive ``dim``
-    floats from byte statistics. Stable across runs/machines."""
+def _fake_decode(blob: bytes) -> list[float]:
+    """Deterministic stand-in for decode→feature-extract: derive
+    ``FEATURE_DIM`` floats from byte statistics. Stable across runs/machines."""
     if not blob:
-        return [0.0] * dim
-    step = max(1, len(blob) // dim)
-    return [blob[min(i * step, len(blob) - 1)] / 255.0 for i in range(dim)]
+        return [0.0] * FEATURE_DIM
+    step = max(1, len(blob) // FEATURE_DIM)
+    return [blob[min(i * step, len(blob) - 1)] / 255.0 for i in range(FEATURE_DIM)]
 
 
 # ---------------------------------------------------------------------------
@@ -120,7 +126,7 @@ def _decode_wav(blob: bytes):
     return np.frombuffer(frames, dtype="<i2")
 
 
-def _real_features(blob: bytes, mime: str, dim: int) -> list[float]:
+def _real_features(blob: bytes, mime: str) -> list[float]:
     """Decode→feature-extract for the self-contained formats. Every
     feature is either an exact integer or an exact power-of-two ratio
     (sums of ints over 2^k counts), so a SQL oracle can replay the values
@@ -161,7 +167,7 @@ def _real_features(blob: bytes, mime: str, dim: int) -> list[float]:
             f"real decode for mime {mime!r} requires codec libs not present in "
             f"this environment (PPM/WAV decode IS implemented — see _real_features)"
         )
-    return (out + [0.0] * dim)[:dim]
+    return (out + [0.0] * FEATURE_DIM)[:FEATURE_DIM]
 
 
 def media_repartition(df: DataFrame) -> DataFrame:
@@ -176,12 +182,9 @@ def media_repartition(df: DataFrame) -> DataFrame:
     return df.repartition(n_parts, F.xxhash64("media_id"))
 
 
-def extract_features(
-    df: DataFrame,
-    dim: int = 16,
-    decoder: str = "fake",
-) -> DataFrame:
-    """Decode/feature-extract media blobs via ``mapInPandas``.
+def extract_features(df: DataFrame, decoder: str = "fake") -> DataFrame:
+    """Decode/feature-extract media blobs via ``mapInPandas`` into
+    ``FEATURE_DIM``-float vectors.
 
     ``decoder="fake"`` → deterministic byte-statistics features (testable
     end-to-end). ``decoder="real"`` → an actual decode for the
@@ -203,11 +206,11 @@ def extract_features(
                 chunk = pdf.iloc[start : start + BATCH_ROWS]
                 if decoder == "real":
                     feats = [
-                        _real_features(b, m["mime"], dim)
+                        _real_features(b, m["mime"])
                         for b, m in zip(chunk["content"], chunk["meta"])
                     ]
                 else:
-                    feats = [_fake_decode(b, dim) for b in chunk["content"]]
+                    feats = [_fake_decode(b) for b in chunk["content"]]
                 yield pd.DataFrame(
                     {
                         "media_id": chunk["media_id"].values,
@@ -220,14 +223,15 @@ def extract_features(
     return df.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: explode a per-row frame timeline from
-    metadata (duration), ready for a per-frame decoder. The decode itself is
+def frame_sample_plan(df: DataFrame) -> DataFrame:
+    """Video frame-sampling plumbing: explode a per-row frame timeline, one
+    frame per ``FRAME_EVERY_MS``, from metadata (duration), ready for a
+    per-frame decoder. The decode itself is
     the stubbed step; the explode/partition shape is the real operator."""
     return df.filter(F.col("kind") == "video").select(
         "media_id",
         F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)), F.lit(every_ms))
+            F.sequence(F.lit(0), F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)), F.lit(FRAME_EVERY_MS))
         ).alias("frame_ms"),
     )
 
@@ -242,21 +246,18 @@ RESIZED_SCHEMA = T.StructType(
 )
 
 
-def resize_images(
-    df: DataFrame,
-    out_w: int = 8,
-    out_h: int = 8,
-    resizer: str = "fake",
-) -> DataFrame:
-    """Image resize via ``mapInPandas`` (SURVEY.md §2B ◆ multimodal:
-    decode / feature-extract / RESIZE / frame-sample).
+def resize_images(df: DataFrame, resizer: str = "fake") -> DataFrame:
+    """Image resize to ``RESIZED_SIDE`` × ``RESIZED_SIDE`` via
+    ``mapInPandas`` (SURVEY.md §2B ◆ multimodal: decode / feature-extract /
+    RESIZE / frame-sample).
 
     ``resizer="fake"``: deterministic nearest-neighbor stride sampling
     treating the blob as a row-major ``meta.width × meta.height`` grayscale
     grid (indices clamped to the blob length, mirroring ``_fake_decode``) —
-    out[j][i] = blob[min((j·sh)·W + i·sw, len−1)] with sh = max(1, H//out_h),
-    sw = max(1, W//out_w). Pure byte arithmetic, so an external engine can
-    recompute the resized bytes exactly. ``resizer="real"`` ACTUALLY
+    out[j][i] = blob[min((j·sh)·W + i·sw, len−1)] with
+    sh = max(1, H//RESIZED_SIDE), sw = max(1, W//RESIZED_SIDE). Pure byte
+    arithmetic, so an external engine can recompute the resized bytes
+    exactly. ``resizer="real"`` ACTUALLY
     resizes binary P6 PPM inputs (numpy decode → integer grayscale
     area-mean pooling, gray=(r+g+b)//3 then block-sum//block-area — all
     exact integer arithmetic, so a SQL oracle replays the output bytes);
@@ -284,16 +285,16 @@ def resize_images(
                             )
                         px = _decode_ppm(blob).astype(np.int64)
                         h, w, _ = px.shape
-                        bh, bw = h // out_h, w // out_w
+                        bh, bw = h // RESIZED_SIDE, w // RESIZED_SIDE
                         if bh < 1 or bw < 1:
                             raise ValueError(
                                 f"real resizer only downsamples: input "
-                                f"{h}x{w} smaller than output {out_h}x{out_w}"
+                                f"{h}x{w} smaller than output {RESIZED_SIDE}x{RESIZED_SIDE}"
                             )
                         gray = px.sum(axis=2) // 3
                         pooled = (
-                            gray[: out_h * bh, : out_w * bw]
-                            .reshape(out_h, bh, out_w, bw)
+                            gray[: RESIZED_SIDE * bh, : RESIZED_SIDE * bw]
+                            .reshape(RESIZED_SIDE, bh, RESIZED_SIDE, bw)
                             .sum(axis=(1, 3))
                             // (bh * bw)
                         )
@@ -301,8 +302,8 @@ def resize_images(
                     yield pd.DataFrame(
                         {
                             "media_id": chunk["media_id"].values,
-                            "width": out_w,
-                            "height": out_h,
+                            "width": RESIZED_SIDE,
+                            "height": RESIZED_SIDE,
                             "content": out,
                         }
                     )
@@ -311,20 +312,20 @@ def resize_images(
                 for blob, meta in zip(chunk["content"], chunk["meta"]):
                     blob = blob or b"\x00"
                     w, h = int(meta["width"]), int(meta["height"])
-                    sw, sh = max(1, w // out_w), max(1, h // out_h)
+                    sw, sh = max(1, w // RESIZED_SIDE), max(1, h // RESIZED_SIDE)
                     n = len(blob)
                     out.append(
                         bytes(
                             blob[min(j * sh * w + i * sw, n - 1)]
-                            for j in range(out_h)
-                            for i in range(out_w)
+                            for j in range(RESIZED_SIDE)
+                            for i in range(RESIZED_SIDE)
                         )
                     )
                 yield pd.DataFrame(
                     {
                         "media_id": chunk["media_id"].values,
-                        "width": out_w,
-                        "height": out_h,
+                        "width": RESIZED_SIDE,
+                        "height": RESIZED_SIDE,
                         "content": out,
                     }
                 )

@@ -31,6 +31,13 @@ from pyspark.sql import functions as F
 HASH_BITS = 32
 _SPAN = 1 << HASH_BITS
 
+# Keep-rate of a stratum ``stratified_hash_sample`` is given no rate for.
+UNLISTED_STRATUM_RATE = 0.05
+# ``sqrt_temperature_mix``: rate_s = min(1, MIX_SCALE / sqrt(N_s)), drawn
+# under its own hash seed so its membership is independent of other samples.
+MIX_SCALE = 2.0
+MIX_SEED = "mix"
+
 
 def rate_threshold_hex(rate: float) -> str:
     """Fixed-width lowercase hex threshold for a keep-rate in [0, 1]."""
@@ -60,13 +67,12 @@ def stratified_hash_sample(
     key: str,
     strata: str,
     rates: dict[str, float],
-    default_rate: float = 0.0,
 ) -> DataFrame:
     """Per-stratum deterministic rates (e.g. downsample the dominant
     language, keep all of a rare one). Still map-only: the per-row
     threshold is a CASE over the strata column, no shuffle and no
-    per-stratum pass. With ``default_rate=0`` unlisted strata drop."""
-    thr: Column = F.lit(rate_threshold_hex(default_rate))
+    per-stratum pass. Unlisted strata keep ``UNLISTED_STRATUM_RATE``."""
+    thr: Column = F.lit(rate_threshold_hex(UNLISTED_STRATUM_RATE))
     for value, rate in rates.items():
         thr = F.when(F.col(strata) == value, F.lit(rate_threshold_hex(rate))).otherwise(thr)
     return df.filter(sample_bucket(key) < thr)
@@ -81,11 +87,9 @@ def runtime_rate_threshold_hex(rate: Column) -> Column:
     return F.lpad(F.lower(F.hex(ticks)), 8, "0")
 
 
-def sqrt_temperature_mix(
-    df: DataFrame, group_col: str, key: str, scale: float = 2.0, seed: str = "42"
-) -> DataFrame:
+def sqrt_temperature_mix(df: DataFrame, group_col: str, key: str) -> DataFrame:
     """Temperature-style source rebalancing at α = 0.5: keep each row of
-    group s with probability  rate_s = min(1, scale / sqrt(N_s)) — large
+    group s with probability  rate_s = min(1, MIX_SCALE / sqrt(N_s)) — large
     sources are flattened ∝ N^0.5 while rare sources are kept whole, the
     standard multilingual/multi-source pretraining mix.
 
@@ -100,11 +104,11 @@ def sqrt_temperature_mix(
     broadcast back onto the scan, then the same map-side hash filter as
     ``hash_sample`` — no shuffle of kept rows, no RNG, reproducible."""
     counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("__n"))
-    rate = F.least(F.lit(1.0), F.lit(scale) / F.sqrt(F.col("__n").cast("double")))
+    rate = F.least(F.lit(1.0), F.lit(MIX_SCALE) / F.sqrt(F.col("__n").cast("double")))
     rated = counts.select(group_col, runtime_rate_threshold_hex(rate).alias("__thr"))
     return (
         df.join(F.broadcast(rated), group_col)
-        .filter(sample_bucket(key, seed) < F.col("__thr"))
+        .filter(sample_bucket(key, MIX_SEED) < F.col("__thr"))
         .drop("__thr")
     )
 

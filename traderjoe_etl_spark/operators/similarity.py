@@ -32,6 +32,13 @@ ID_COL, VEC_COL, QUERY_ID_COL, QUERY_VEC_COL = "vec_id", "embedding", "query_id"
 # Rows one near-dup kernel group may hold before a bucket is
 # block-partitioned (see _near_dup_pairs_arrow).
 MAX_BUCKET_ROWS = 4096
+# The top-k operators rank on the cosine rounded to this many decimals,
+# ties broken by id: the grid the SQL oracles order by.
+SCORE_DIGITS = 6
+# IVF coarse quantizer size (seeded from the first rows by id).
+IVF_CENTROIDS = 8
+# Seed of the LSH plane bank; the near-dup oracle inlines the same planes.
+LSH_SEED = 42
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -70,10 +77,9 @@ def cosine_topk_brute(
     k: int,
     impl: str,
     cache_key: str | None = None,
-    round_digits: int | None = None,
 ) -> DataFrame:
     """Exact top-k by cosine against a single-row query DataFrame.
-    ``round_digits`` ranks by the ROUNDED score (ties broken by id) so
+    Ranks by the score rounded to ``SCORE_DIGITS`` (ties broken by id) so
     cross-engine comparisons share one grid; the emitted ``cosine`` stays
     raw (callers round for display).
 
@@ -107,28 +113,23 @@ def cosine_topk_brute(
         )
     elif impl == "arrow":
         scored = _topk_scores_arrow(
-            corpus, q_ids, Q, k, ID_COL, VEC_COL, "__qid",
-            quantum=(10.0 ** -round_digits) if round_digits is not None else 0.0,
+            corpus, q_ids, Q, k, ID_COL, VEC_COL, "__qid", quantum=10.0 ** -SCORE_DIGITS
         ).drop("__qid")
     else:
         raise ValueError(f"unknown impl {impl!r}")
-    rank = (
-        F.round("cosine", round_digits) if round_digits is not None else F.col("cosine")
-    )
-    return scored.orderBy(rank.desc(), F.col(ID_COL)).limit(k)
+    return scored.orderBy(F.round("cosine", SCORE_DIGITS).desc(), F.col(ID_COL)).limit(k)
 
 
 def cosine_topk_batch(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    round_digits: int | None = None,
-    exclude_self: bool = False,
     cache_key: str | None = None,
 ) -> DataFrame:
     """Exact top-k per query for a BATCH of query vectors (the retrieval /
     dedup-against-a-set shape): score corpus × Q in one shuffle-free scan,
-    per-query top-k via row_number.
+    per-query top-k via row_number. A corpus vector whose id equals the
+    query's id never ranks for that query.
 
     The query bank is collected (it is small
     by contract — a broadcastable set), and a ``mapInArrow`` kernel scores
@@ -145,9 +146,9 @@ def cosine_topk_batch(
     Spark plans the rank≤k filter as WindowGroupLimit (partial → final):
     each map task keeps a k-heap per query BEFORE the exchange, so the
     shuffle carries ≤ k·partitions rows per query — no corpus×Q blowup even
-    with a skewed handful of query keys. ``round_digits`` orders by the
-    ROUNDED score (tie-broken by id) so cross-engine comparisons are
-    deterministic at the rounding grid."""
+    with a skewed handful of query keys. The emitted ``cosine`` is rounded
+    to ``SCORE_DIGITS`` and orders the rows (tie-broken by id), so
+    cross-engine comparisons are deterministic at the rounding grid."""
     from pyspark.sql import Window
 
     q_ids, Q = _collect_query_bank(queries, QUERY_ID_COL, QUERY_VEC_COL, cache_key=cache_key)
@@ -159,11 +160,10 @@ def cosine_topk_batch(
         ID_COL,
         VEC_COL,
         QUERY_ID_COL,
-        quantum=(10.0 ** -round_digits) if round_digits is not None else 0.0,
-        exclude_self=exclude_self,
+        quantum=10.0 ** -SCORE_DIGITS,
+        exclude_self=True,
     )
-    if round_digits is not None:
-        scored = scored.withColumn("cosine", F.round("cosine", round_digits))
+    scored = scored.withColumn("cosine", F.round("cosine", SCORE_DIGITS))
     w = Window.partitionBy(QUERY_ID_COL).orderBy(F.col("cosine").desc(), F.col(ID_COL))
     return (
         scored.withColumn("__rn", F.row_number().over(w))
@@ -307,10 +307,10 @@ def adaptive_n_planes(n: int, target_bucket: int = 64) -> int:
     return max(4, math.ceil(math.log2(max(n, 1) / target_bucket + 1)))
 
 
-def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic unit-ish Gaussian hyperplanes (driver-side constants,
-    broadcast into the plan as literals)."""
-    rng = random.Random(seed)
+def random_hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
+    """Deterministic unit-ish Gaussian hyperplanes drawn from ``LSH_SEED``
+    (driver-side constants, broadcast into the plan as literals)."""
+    rng = random.Random(LSH_SEED)
     planes = []
     for _ in range(n_planes):
         v = [rng.gauss(0.0, 1.0) for _ in range(dim)]
@@ -422,22 +422,18 @@ def l2_assign_arrow(
     return emb.mapInArrow(assign_batches, ddl + ", cluster int, dist double")
 
 
-def ivf_assign(
-    emb: DataFrame,
-    n_centroids: int = 16,
-    lloyd_iters: int = 1,
-) -> tuple[DataFrame, DataFrame]:
-    """IVF coarse quantizer: deterministic seeding (first ``n_centroids``
-    rows by id) + ``lloyd_iters`` k-means refinement passes, then assign
-    every vector to its nearest centroid.
+def ivf_assign(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """IVF coarse quantizer: deterministic seeding (first ``IVF_CENTROIDS``
+    rows by id) + one k-means refinement pass, then assign every vector to
+    its nearest centroid.
 
     Returns (assigned, centroids): ``assigned`` = corpus + ``cluster``
     column; ``centroids`` = (cluster, centroid array). Centroids live on
-    the driver between iterations (n_centroids × dim floats — kilobytes)
+    the driver between passes (IVF_CENTROIDS × dim floats — kilobytes)
     and re-enter the plan as constants of the assignment kernel; the
     corpus is never collected.
     """
-    centroids_df = emb.orderBy(ID_COL).limit(n_centroids).select(F.col(VEC_COL).alias("centroid"))
+    centroids_df = emb.orderBy(ID_COL).limit(IVF_CENTROIDS).select(F.col(VEC_COL).alias("centroid"))
     # stable small collect → cluster id = enumeration order of the
     # id-ordered seed rows
     cents = [(i, list(r.centroid)) for i, r in enumerate(centroids_df.collect())]
@@ -455,23 +451,22 @@ def ivf_assign(
     # assign+score kernels).
     assigned = _assign_arrow(emb, cents, VEC_COL, _unit)
     n_dim = len(cents[0][1]) if cents else 0
-    for _ in range(lloyd_iters):
-        # centroid update = per-cluster element-wise mean: one groupBy with
-        # dim sum-aggregates (map-side partial combine → the shuffle carries
-        # n_clusters × (dim+1) doubles per map partition), instead of
-        # posexplode-ing n×dim rows through two shuffles
-        sums = assigned.groupBy("cluster").agg(
-            F.count(F.lit(1)).alias("__n"),
-            *[
-                F.sum(F.element_at(F.col(VEC_COL), i + 1).cast("double")).alias(f"__s{i}")
-                for i in range(n_dim)
-            ],
-        )
-        cents = [
-            (r["cluster"], [r[f"__s{i}"] / r["__n"] for i in range(n_dim)])
-            for r in sums.collect()
-        ]
-        assigned = _assign_arrow(emb, cents, VEC_COL, _unit)
+    # centroid update = per-cluster element-wise mean: one groupBy with
+    # dim sum-aggregates (map-side partial combine → the shuffle carries
+    # n_clusters × (dim+1) doubles per map partition), instead of
+    # posexplode-ing n×dim rows through two shuffles
+    sums = assigned.groupBy("cluster").agg(
+        F.count(F.lit(1)).alias("__n"),
+        *[
+            F.sum(F.element_at(F.col(VEC_COL), i + 1).cast("double")).alias(f"__s{i}")
+            for i in range(n_dim)
+        ],
+    )
+    cents = [
+        (r["cluster"], [r[f"__s{i}"] / r["__n"] for i in range(n_dim)])
+        for r in sums.collect()
+    ]
+    assigned = _assign_arrow(emb, cents, VEC_COL, _unit)
     cent_final = spark.createDataFrame(cents, "cluster int, centroid array<float>")
     return assigned, cent_final
 
@@ -770,7 +765,6 @@ def pca_fit(
     emb: DataFrame,
     dim: int,
     k: int,
-    pivot_order_col: str | None = None,
 ):
     """Distributed PCA fit: ``(mean, components[dim×k], explained_ratio)``.
 
@@ -807,13 +801,10 @@ def pca_fit(
 
     # pivot determinism (ADVICE r6): a bare first() is partition-order-
     # dependent, so the fitted mean/components could drift at ulp level
-    # across repartitionings. With pivot_order_col the pivot is the
-    # minimum-key row — a TakeOrderedAndProject one-row job, bit-stable
-    # for a given corpus regardless of layout.
-    if pivot_order_col is not None:
-        pivot_row = emb.orderBy(pivot_order_col).select(VEC_COL).first()
-    else:
-        pivot_row = emb.select(VEC_COL).first()
+    # across repartitionings. The pivot is the minimum-id row — a
+    # TakeOrderedAndProject one-row job, bit-stable for a given corpus
+    # regardless of layout.
+    pivot_row = emb.orderBy(ID_COL).select(VEC_COL).first()
     if pivot_row is None:
         raise ValueError("pca_fit: empty input corpus (no vectors to fit)")
     pivot = np.asarray(

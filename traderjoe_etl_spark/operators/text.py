@@ -112,22 +112,20 @@ def doc_fingerprint(
 
 ROLLING_BASE = 257
 ROLLING_MOD = 2_147_483_647  # 2^31 − 1, Mersenne prime
+# Chars per gram (k) and grams per winnowing window.
+ROLLING_K = 8
+ROLLING_WINDOW = 4
 
 
-def rolling_hash_fingerprints(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 8,
-    window: int = 4,
-) -> DataFrame:
+def rolling_hash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Winnowing document fingerprints over a Rabin–Karp rolling hash
     (SURVEY.md §2B ◆ document fingerprinting).
 
-    The classic winnowing scheme: hash every ``k``-char gram with the
-    polynomial rolling hash h_i = Σ c_{i+j}·B^{k−1−j} mod M (B=257,
-    M=2^31−1 over code points), then keep the MINIMUM hash of every
-    ``window`` consecutive grams; the sorted distinct minima are the
+    The classic winnowing scheme: hash every k-char gram (k =
+    ``ROLLING_K``) with the polynomial rolling hash
+    h_i = Σ c_{i+j}·B^{k−1−j} mod M (B=257, M=2^31−1 over code points),
+    then keep the MINIMUM hash of every ``ROLLING_WINDOW`` consecutive
+    grams; the sorted distinct minima are the
     document's fingerprint set — stable under local edits and position
     shifts, unlike a whole-document digest.
 
@@ -145,13 +143,14 @@ def rolling_hash_fingerprints(
     allocation (measured at 1.3M docs: 80 s as JVM higher-order functions
     → kernel seconds).
 
-    Documents shorter than ``k + window − 1`` chars carry no full window
-    and are filtered out (mirror the predicate in any oracle).
+    Documents shorter than ``ROLLING_K + ROLLING_WINDOW − 1`` chars carry
+    no full window and are filtered out (mirror the predicate in any
+    oracle).
     """
     import numpy as np
     import pandas as pd
 
-    b, m = ROLLING_BASE, ROLLING_MOD
+    b, m, k, window = ROLLING_BASE, ROLLING_MOD, ROLLING_K, ROLLING_WINDOW
     min_len = k + window - 1
 
     def kernel(batches):

@@ -62,18 +62,17 @@ def sessionize(
     keys: Sequence[str],
     ts_col: str,
     gap_seconds: int,
-    tie_break: Sequence[str] = (),
 ) -> DataFrame:
     """Assign batch session ids (column ``session_id``): a new session
     starts when the gap since the previous event in the key group exceeds
-    ``gap_seconds``.
+    ``gap_seconds``. Events at one timestamp order by ``event_id``.
 
     lag + conditional cumsum — the standard two-window single-shuffle plan
     (both windows share partitioning/ordering, so Catalyst plans ONE
     shuffle + sort). The streaming twin is ``session_window`` in
     streaming/jobs.py.
     """
-    order = _order([ts_col, *tie_break])
+    order = _order([ts_col, "event_id"])
     w = Window.partitionBy(*keys).orderBy(*order)
     gap = F.col(ts_col).cast("long") - F.lag(F.col(ts_col).cast("long")).over(w)
     is_new = F.when(gap.isNull() | (gap > gap_seconds), F.lit(1)).otherwise(F.lit(0))

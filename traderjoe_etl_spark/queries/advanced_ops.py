@@ -46,7 +46,7 @@ def ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-scoped (identity-checked, evicting) — functions/session_cache
     assigned, centroids = session_cache.get_df(
         _IVF_INDEX, spark, sf_dir,
-        lambda: ivf_assign(corpus, n_centroids=8, lloyd_iters=1),
+        lambda: ivf_assign(corpus),
         df_of=lambda v: v[0],
     )
     return ivf_topk(assigned, centroids, qdf, k=10, n_probe=6)
@@ -74,7 +74,7 @@ def salted_hot_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("view", 1.0), ("click", 2.0), ("purchase", 5.0), ("signup", 3.0), ("error", 0.5)],
         "event_type string, weight double",
     )
-    joined = salted_join(events, dim, key="event_type", salt_buckets=8)
+    joined = salted_join(events, dim, key="event_type")
     return joined.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("weight"), 4).alias("weighted"),
@@ -106,7 +106,7 @@ def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     events.write.mode("overwrite").parquet(d)
     src = spark.readStream.schema(spark.read.parquet(d).schema).parquet(d)
-    agg = windowed_event_agg(src, window="1 hour", watermark="0 seconds")
+    agg = windowed_event_agg(src)
     q = (
         agg.writeStream.outputMode("complete")
         .format("memory")
@@ -278,7 +278,7 @@ def stream_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import windowed_event_agg
 
     src = _events_stream(spark, sf_dir, "stream_slide_")
-    agg = windowed_event_agg(src, window="1 hour", slide="30 minutes", watermark="0 seconds")
+    agg = windowed_event_agg(src, slide="30 minutes")
     _drain(agg, "__stream_sliding_rollup")
     return spark.table("__stream_sliding_rollup").select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -323,7 +323,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import session_window_agg
 
     src = _events_stream(spark, sf_dir, "stream_sess_")
-    agg = session_window_agg(src, gap="30 minutes", watermark="0 seconds")
+    agg = session_window_agg(src)
     # Complete mode is semantics (trailing sessions never pass the final
     # watermark in append), but the result is one row per session — a
     # per-key table that must not collect on the driver; foreachBatch
@@ -367,7 +367,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks = _events_stream(spark, sf_dir, "stream_ij_r_").filter(
         F.col("event_type") == "click"
     )
-    joined = stream_stream_interval_join(purchases, clicks, within="1 hour")
+    joined = stream_stream_interval_join(purchases, clicks)
     # Append-mode join output and both sides' join state are O(events) —
     # distributed file sink + size-gated state provider, same rationale
     # as stream_dedup_events (driver memory sink wedged the sf10 audit).
@@ -408,7 +408,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     events.write.mode("append").parquet(d)
     events.write.mode("append").parquet(d)
     src = spark.readStream.schema(spark.read.parquet(d).schema).parquet(d)
-    deduped = stream_dedup(src, keys=["event_id"], watermark="2 hours")
+    deduped = stream_dedup(src, keys=["event_id"])
     # Distributed file sink + size-gated state provider: the dedup keeps
     # one state entry per event_id, and append mode emits the full deduped
     # stream — both are O(|events|), so neither may land on the driver
@@ -459,7 +459,7 @@ def ivf_full_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-scoped (identity-checked, evicting) — functions/session_cache
     assigned, centroids = session_cache.get_df(
         _IVF_INDEX, spark, sf_dir,
-        lambda: ivf_assign(corpus, n_centroids=8, lloyd_iters=1),
+        lambda: ivf_assign(corpus),
         df_of=lambda v: v[0],
     )
     out = ivf_topk(assigned, centroids, qdf, k=10, n_probe=8)
@@ -519,7 +519,7 @@ def stream_static_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("tier")
     )
-    agg = stream_static_enrich(src, dim, on="user_id", agg_keys=("tier",))
+    agg = stream_static_enrich(src, dim, on="user_id")
     _drain(agg, "__stream_static_enrich")
     return spark.table("__stream_static_enrich").select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),

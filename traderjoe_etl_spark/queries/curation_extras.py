@@ -483,7 +483,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import pca_fit, pca_project
 
     emb = read_table(spark, sf_dir, "embeddings")
-    mean, comps, _ = pca_fit(emb, dim=64, k=8, pivot_order_col="vec_id")
+    mean, comps, _ = pca_fit(emb, dim=64, k=8)
     out = pca_project(emb, mean, comps)
     return out.select(
         "vec_id", F.posexplode("proj").alias("component_idx", "v")

@@ -65,7 +65,7 @@ def benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     train = docs.filter(F.col("doc_id") % 97 != 0)
-    return contamination_report(train, bench, text_col="text", id_col="doc_id", n=4)
+    return contamination_report(train, bench, text_col="text", id_col="doc_id")
 
 
 @query(
@@ -97,7 +97,7 @@ def temperature_mix_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive the value-hash gate)."""
     docs = read_table(spark, sf_dir, "documents")
     kept = (
-        sqrt_temperature_mix(docs, group_col="source", key="doc_id", scale=2.0, seed="mix")
+        sqrt_temperature_mix(docs, group_col="source", key="doc_id")
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_kept"))
     )

@@ -188,8 +188,8 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = read_table(spark, sf_dir, "orders")
     cust = read_table(spark, sf_dir, "customer")
-    save_bucketed(orders.withColumnRenamed("o_custkey", "custkey"), "q_b_orders", "custkey", 8)
-    save_bucketed(cust.withColumnRenamed("c_custkey", "custkey"), "q_b_customer", "custkey", 8)
+    save_bucketed(orders.withColumnRenamed("o_custkey", "custkey"), "q_b_orders", "custkey")
+    save_bucketed(cust.withColumnRenamed("c_custkey", "custkey"), "q_b_customer", "custkey")
     j = bucketed_join(spark, "q_b_orders", "q_b_customer", "custkey")
     return j.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_orders"),

@@ -215,7 +215,6 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=10,
         impl="const" if 0 < eb <= _CONST_IMPL_BYTES else "arrow",
         cache_key=f"{sf_dir}::{fp}::cosine_topk",
-        round_digits=6,
     )
     return out.select("vec_id", F.round("cosine", 6).alias("cosine"))
 
@@ -257,8 +256,6 @@ def cosine_topk_batch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         queries,
         k=5,
-        round_digits=6,
-        exclude_self=True,
         cache_key=f"{sf_dir}::{table_fingerprint(sf_dir, 'embeddings')}::cosine_topk_batch",
     )
 
@@ -557,7 +554,7 @@ def stratified_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = read_table(spark, sf_dir, "customer")
     sampled = stratified_hash_sample(
         cust, key="c_custkey", strata="c_mktsegment",
-        rates={"BUILDING": 0.5, "AUTOMOBILE": 0.2}, default_rate=0.05,
+        rates={"BUILDING": 0.5, "AUTOMOBILE": 0.2},
     )
     return sampled.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_sampled"),

@@ -417,7 +417,6 @@ def asof_join_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["user_id"],
         left_ts="ts",
         right_ts="o_orderdate",
-        right_cols=[],
     )
     return joined.select(
         "event_id",
@@ -552,7 +551,7 @@ def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     single shuffle (SURVEY.md §2B streaming ◆; the batch twin of
     session_window)."""
     events = read_table(spark, sf_dir, "events")
-    sess = sessionize(events, keys=["user_id"], ts_col="ts", gap_seconds=1800, tie_break=["event_id"])
+    sess = sessionize(events, keys=["user_id"], ts_col="ts", gap_seconds=1800)
     return sess.groupBy("user_id", "session_id").agg(F.count(F.lit(1)).alias("n_events"))
 
 
@@ -740,8 +739,8 @@ def lenient_cast_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.casts import lenient_cast
 
     events = read_table(spark, sf_dir, "events")
-    k = lenient_cast(F.get_json_object("props", "$.k"), "double", default=0.0)
-    missing = lenient_cast(F.get_json_object("props", "$.missing"), "double", default=0.0)
+    k = lenient_cast(F.get_json_object("props", "$.k"))
+    missing = lenient_cast(F.get_json_object("props", "$.missing"))
     return events.groupBy("event_type").agg(
         F.round(F.sum(k), 4).alias("k_total"),
         F.round(F.sum(missing), 4).alias("missing_total"),

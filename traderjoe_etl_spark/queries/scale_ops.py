@@ -68,7 +68,7 @@ def bloom_prefilter_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders")
     cust = read_table(spark, sf_dir, "customer").where(F.col("c_acctbal") > 9000.0)
     joined = bloom_prefilter_join(
-        orders, cust, "o_custkey", "c_custkey", fpp=0.01,
+        orders, cust, "o_custkey", "c_custkey",
         expected_keys=table_rows(sf_dir, "customer"),
     )
     return (

@@ -399,9 +399,10 @@ _STOPS = ("the", "a", "and", "of", "to", "data", "value", "row")
 _STOP_SQL = ", ".join(f"'{s}'" for s in _STOPS)
 
 
-def gopher_doc_flags(docs: DataFrame, keep: list[str] | None = None) -> DataFrame:
+def gopher_doc_flags(docs: DataFrame) -> DataFrame:
     """Per-document Gopher rule flags (0 = pass, 1 = fail) over a `text`
-    column — the rule kernel behind the gopher_quality_rules report.
+    column, keyed by the `source` column — the rule kernel behind the
+    gopher_quality_rules report.
     Map-only: split once, translate-based char-class counts, literal-array
     stopword membership; no regexp_replace copies, no UDFs, no windows.
 
@@ -409,7 +410,6 @@ def gopher_doc_flags(docs: DataFrame, keep: list[str] | None = None) -> DataFram
     lang-id'd ASCII; a unicode-alpha rule would need a regexp per word);
     an empty/whitespace-only doc has NULL ratios, so every comparison is
     false and ALL rules fail — the conservative quarantine default."""
-    keep = list(keep or docs.columns)
     words = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda w: w != "")
     nchars = F.length(F.translate(F.col("text"), " \t\n\r", ""))
     # '...' is removed non-overlapping, so the length delta is always a
@@ -419,7 +419,7 @@ def gopher_doc_flags(docs: DataFrame, keep: list[str] | None = None) -> DataFram
         "+ (length(text) - length(replace(text, '...', ''))) div 3"
     )
     feat = docs.select(
-        *keep,
+        "source",
         words.alias("words"),
         nchars.alias("nchars"),
         symbols.cast("long").alias("symbols"),
@@ -445,7 +445,7 @@ def gopher_doc_flags(docs: DataFrame, keep: list[str] | None = None) -> DataFram
         return F.when(cond, 0).otherwise(1)
 
     return feat.select(
-        *keep,
+        "source",
         wc.cast("long").alias("wc"),
         zero_one((wc >= 50) & (wc <= 100000)).alias("f_wc"),
         zero_one(
@@ -522,7 +522,7 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     so they would be constants (documented, not hidden).
     """
     docs = read_table(spark, sf_dir, "documents")
-    rules = gopher_doc_flags(docs, keep=["source"])
+    rules = gopher_doc_flags(docs)
     return (
         rules.groupBy("source")
         .agg(

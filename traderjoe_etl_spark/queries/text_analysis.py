@@ -257,7 +257,7 @@ def _cosine_near_dup_oracle(threshold: float, n_planes: int) -> str:
     rounded to 6 dp on both sides)."""
     from ..operators.similarity import random_hyperplanes
 
-    planes = random_hyperplanes(64, n_planes, seed=42)
+    planes = random_hyperplanes(64, n_planes)
 
     def lit(p: list[float]) -> str:
         return "[" + ", ".join(repr(x) for x in p) + "]"
@@ -368,7 +368,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.length("text") * 10).cast("int").alias("duration_ms"),
         ).alias("meta"),
     )
-    feats = extract_features(media_repartition(media), dim=16)
+    feats = extract_features(media_repartition(media))
     return feats.select(
         "media_id",
         "kind",
@@ -416,7 +416,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).alias("duration_ms"),
         ).alias("meta"),
     )
-    resized = resize_images(media_repartition(media), out_w=8, out_h=8)
+    resized = resize_images(media_repartition(media))
     return resized.select(
         "media_id", "width", "height", F.md5("content").alias("content_md5")
     )
@@ -549,7 +549,7 @@ def multimodal_real_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(512).alias("duration_ms"),
         ).alias("meta"),
     )
-    feats = extract_features(media_repartition(media), dim=16, decoder="real")
+    feats = extract_features(media_repartition(media), decoder="real")
     return feats.select(
         "media_id",
         "kind",
@@ -612,7 +612,7 @@ def multimodal_real_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).alias("duration_ms"),
         ).alias("meta"),
     )
-    resized = resize_images(media_repartition(media), out_w=8, out_h=8, resizer="real")
+    resized = resize_images(media_repartition(media), resizer="real")
     return resized.select(
         "media_id", "width", "height", F.md5("content").alias("content_md5")
     )
@@ -670,7 +670,7 @@ def rolling_hash_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import rolling_hash_fingerprints
 
     docs = read_table(spark, sf_dir, "documents")
-    fps = rolling_hash_fingerprints(docs, "doc_id", "text", k=8, window=4)
+    fps = rolling_hash_fingerprints(docs, "doc_id", "text")
     return fps.select(
         "doc_id",
         "n_grams",
@@ -713,7 +713,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.length("text") * 10).cast("int").alias("duration_ms"),
         ).alias("meta"),
     )
-    return frame_sample_plan(media, every_ms=1000)
+    return frame_sample_plan(media)
 
 
 _DEDUP_CLUSTERS_ORACLE = r"""
@@ -808,7 +808,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import dedup_cluster_assignments
 
     near = _verified_near_dup_pairs(spark, sf_dir)
-    return dedup_cluster_assignments(near, "id_a", "id_b")
+    return dedup_cluster_assignments(near)
 
 
 @query(
@@ -959,7 +959,7 @@ def dedup_canonical_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = read_table(spark, sf_dir, "documents")
     near = _verified_near_dup_pairs(spark, sf_dir)
-    assigned = dedup_cluster_assignments(near, "id_a", "id_b")
+    assigned = dedup_cluster_assignments(near)
     rank = (F.col("n_chars") * 10000000 - F.col("doc_id")).cast("long")
     return (
         assigned.join(docs.select("doc_id", "n_chars"), "doc_id")

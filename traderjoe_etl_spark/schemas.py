@@ -6,9 +6,9 @@ Derived field-by-field from the reference (FIXTURES.md §A):
 - user_history: extraction loop at main.py:108-120
 - fees_earned:  extraction loop at main.py:162-165
 - bins_reserve: ABI ``PopulatedBinUser`` helperContractABI.json:229-260,
-  consumed at main.py:231-242 (uint128/uint256 → DecimalType(38,0); the
-  reference itself drops to float64 at main.py:232-233, so Decimal is the
-  *more* faithful raw representation — SURVEY.md §7.4.1)
+  consumed at main.py:231-242 (uint128/uint256 → double, as the reference
+  converts them at main.py:232-233; a uint256 can exceed DecimalType(38,0)
+  — SURVEY.md §7.4.1)
 - snapshot:     the fixed output order at main.py:293-340
 
 Schema philosophy (SURVEY.md §1.3): sources read every payload into its
@@ -99,10 +99,13 @@ BINS_RESERVE_SCHEMA = T.StructType(
         T.StructField("user_address", T.StringType()),
         T.StructField("poolAddress", T.StringType()),
         T.StructField("binId", T.IntegerType()),  # uint24 (ABI :236)
-        T.StructField("reserveX", T.DecimalType(38, 0)),  # uint128 (ABI :240-246)
-        T.StructField("reserveY", T.DecimalType(38, 0)),
-        T.StructField("shares", T.DecimalType(38, 0)),  # uint256 (ABI :250-255)
-        T.StructField("totalShares", T.DecimalType(38, 0)),
+        # uint128 reserves (ABI :240-246) and uint256 shares (ABI :250-255)
+        # as doubles, like the reference (main.py:232-233): a uint256 can
+        # exceed DECIMAL(38, 0)
+        T.StructField("reserveX", T.DoubleType()),
+        T.StructField("reserveY", T.DoubleType()),
+        T.StructField("shares", T.DoubleType()),
+        T.StructField("totalShares", T.DoubleType()),
     ]
 )
 

@@ -50,9 +50,8 @@ RUNTIME_CONFS = {
     # tz is value-identical to DuckDB's naive reading of the same file.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     # Write timestamps as INT64 micros, not the legacy stats-less INT96:
-    # INT96 columns carry no min/max footer stats, so range-clustered
-    # layouts (sinks.clustered_write) and plain predicate pushdown cannot
-    # prune timestamp filters on data WE wrote. Micros also round-trips
+    # INT96 columns carry no min/max footer stats, so predicate pushdown
+    # cannot prune timestamp filters on data WE wrote. Micros also round-trips
     # through DuckDB/pyarrow without the INT96 shim.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     # Partitioned catalog tables list their directory on each read instead

@@ -78,7 +78,9 @@ def append_snapshot(df: DataFrame, path: str) -> None:
     store at ``path``, partitioned by ``snapshot_date``.
 
     Derives the partition date from ``current_unix_timestamp`` (the
-    reference's run stamp, main.py:271). Append mode: hourly batches only
+    reference's run stamp, main.py:271), read as the table's ``bigint`` so
+    a run stamp of another type fails the table's own schema check, not
+    the date derivation. Append mode: hourly batches only
     add files — the Parquet analog of the CSV append at main.py:347. The
     frame is hash-partitioned on the bucket key first, so each write task
     holds one bucket and writes one file.
@@ -86,7 +88,7 @@ def append_snapshot(df: DataFrame, path: str) -> None:
     path = os.path.abspath(path)
     name = _store_table(df.sparkSession, path)
     out = df.withColumn(
-        "snapshot_date", F.to_date(F.timestamp_seconds(F.col("current_unix_timestamp")))
+        "snapshot_date", F.to_date(F.timestamp_seconds(F.col("current_unix_timestamp").cast("bigint")))
     )
     (
         out.repartition(SNAPSHOT_BUCKETS, "pool_address")
@@ -137,29 +139,3 @@ def read_snapshots(spark: SparkSession, path: str) -> DataFrame:
     spark.catalog.refreshTable(name)
     return spark.table(name)
 
-
-def clustered_write(
-    df: DataFrame,
-    path: str,
-    cluster_col: str,
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Range-clustered Parquet layout: repartitionByRange + in-partition
-    sort on ``cluster_col`` before writing.
-
-    At 100 TB the data LAYOUT is the cheapest query accelerator there is:
-    range-clustering a time/key column makes every file's (and row
-    group's) min/max footer stats disjoint, so a selective filter prunes
-    to the few files that can contain matches — the scan cost of
-    ``WHERE ts BETWEEN …`` drops from |table| to |selected range|, with
-    zero index infrastructure. repartitionByRange samples the column to
-    build balanced range bounds (skew-tolerant), and the in-partition
-    sort tightens per-row-group stats within each file.
-
-    ``n_files`` controls output fan-out (defaults to the session shuffle
-    parallelism): on a real cluster size it so files land in the
-    100 MB–1 GB sweet spot.
-    """
-    parts = df.repartitionByRange(*( [n_files] if n_files else [] ), F.col(cluster_col))
-    parts.sortWithinPartitions(cluster_col).write.mode(mode).parquet(path)

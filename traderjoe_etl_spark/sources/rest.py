@@ -70,7 +70,7 @@ def _fetch_per_key(
     NULL, ``_fetch_error = "ExcType: msg"`` (per-pair isolation,
     main.py:13-17). An empty payload yields zero rows. Every column is set
     explicitly (``None`` when missing): a column pandas fills with NaN
-    would break the Arrow cast to Decimal.
+    would break the Arrow cast to a non-float type.
     """
     out_schema = T.StructType([*schema.fields, T.StructField("_fetch_error", T.StringType())])
     key_cols = set(keys_df.columns)

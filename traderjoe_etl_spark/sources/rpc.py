@@ -21,7 +21,6 @@ several threads at once: one that keeps state must do so thread-safely.
 from __future__ import annotations
 
 from collections.abc import Callable
-from decimal import Decimal
 
 from pyspark.sql import DataFrame
 
@@ -63,16 +62,21 @@ def rpc_bins_source(keys_df: DataFrame, caller: BinsCaller) -> DataFrame:
     (main.py:213-214). Output: BINS_RESERVE_SCHEMA rows + _fetch_error
     (NULL on success); failed pairs quarantine instead of aborting
     (main.py:13-17 semantics).
+
+    The uint128 reserves and uint256 shares arrive as doubles, as the
+    reference converts them (main.py:232-233): a uint256 can exceed any
+    Spark decimal (38 digits), and one such value would fail the
+    conversion of the whole batch outside the per-key error capture.
     """
 
-    def dec(v):
-        return None if v is None else Decimal(int(v))
+    def num(v):
+        return None if v is None else float(int(v))
 
     def rows(key: dict) -> list:
         active = int(key["activeBinId"])
         bins = caller(key["poolAddress"], key["user_address"], active, BIN_WINDOW, BIN_WINDOW)
         return [
-            {"binId": b, "reserveX": dec(rx), "reserveY": dec(ry), "shares": dec(sh), "totalShares": dec(tsh)}
+            {"binId": b, "reserveX": num(rx), "reserveY": num(ry), "shares": num(sh), "totalShares": num(tsh)}
             for b, rx, ry, sh, tsh in bins
         ]
 

@@ -18,24 +18,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TS = "ts"
+# Event-time bounds: hourly windows and 30-minute session gaps with no
+# lateness allowed, two hours of dedup state, stream-stream matches within
+# an hour.
+WINDOW = "1 hour"
+NO_LATENESS = "0 seconds"
+SESSION_GAP = "30 minutes"
+DEDUP_WATERMARK = "2 hours"
+JOIN_WITHIN = "1 hour"
 
 
-def windowed_event_agg(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Tumbling (or sliding, if ``slide``) window aggregation per
-    ``event_type`` with a watermark bounding state for late data.
+def windowed_event_agg(events: DataFrame, slide: str | None = None) -> DataFrame:
+    """Tumbling (or sliding, if ``slide``) ``WINDOW`` aggregation per
+    ``event_type`` under a ``NO_LATENESS`` watermark.
 
     The tumbling 1-hour case is the reference's cadence (main.py:359) made
-    event-time-correct: late snapshots up to the watermark still land in
-    their hour; state for closed windows is dropped (bounded memory at any
-    scale)."""
-    win = F.window(F.col(TS), window, slide) if slide else F.window(F.col(TS), window)
+    event-time-correct; state for closed windows is dropped (bounded
+    memory at any scale)."""
+    win = F.window(F.col(TS), WINDOW, slide) if slide else F.window(F.col(TS), WINDOW)
     return (
-        events.withWatermark(TS, watermark)
+        events.withWatermark(TS, NO_LATENESS)
         .groupBy(win, "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
         .select(
@@ -48,16 +50,13 @@ def windowed_event_agg(
     )
 
 
-def session_window_agg(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Event-time session windows (gap-based) per ``user_id`` — the
-    streaming twin of operators.windows.sessionize."""
+def session_window_agg(events: DataFrame) -> DataFrame:
+    """Event-time session windows (``SESSION_GAP``) per ``user_id`` under a
+    ``NO_LATENESS`` watermark — the streaming twin of
+    operators.windows.sessionize."""
     return (
-        events.withWatermark(TS, watermark)
-        .groupBy(F.session_window(F.col(TS), gap), "user_id")
+        events.withWatermark(TS, NO_LATENESS)
+        .groupBy(F.session_window(F.col(TS), SESSION_GAP), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
         .select(
             F.col("session_window.start").alias("session_start"),
@@ -69,26 +68,19 @@ def session_window_agg(
     )
 
 
-def stream_dedup(
-    events: DataFrame,
-    keys: list[str],
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stateful exact dedup within the watermark horizon
+def stream_dedup(events: DataFrame, keys: list[str]) -> DataFrame:
+    """Stateful exact dedup within the ``DEDUP_WATERMARK`` horizon
     (``dropDuplicatesWithinWatermark``) — the streaming analog of the
     ``dedup_exact`` query's batch dedup, with bounded state."""
-    return events.withWatermark(TS, watermark).dropDuplicatesWithinWatermark(keys)
+    return events.withWatermark(TS, DEDUP_WATERMARK).dropDuplicatesWithinWatermark(keys)
 
 
-def stream_stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    within: str = "1 hour",
-) -> DataFrame:
+def stream_stream_interval_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """Stream-stream inner join with an event-time interval condition:
     right-side events matching the same ``user_id`` within ``[left.ts,
-    left.ts + within]``, both sides under a 2-hour watermark. Both sides carry watermarks so the join state for
-    expired time ranges is dropped — bounded state at any scale, the
+    left.ts + JOIN_WITHIN]``, both sides under a 2-hour watermark. Both
+    sides carry watermarks so the join state for expired time ranges is
+    dropped — bounded state at any scale, the
     streaming analog of the range join (SURVEY.md §2B joins; the
     reference's J1/J2 lookups generalized to two live feeds).
 
@@ -103,31 +95,26 @@ def stream_stream_interval_join(
     cond = (
         (lw[key] == rw[key])
         & (rw[f"{TS}_r"] >= lw[TS])
-        & (rw[f"{TS}_r"] <= F.col(TS) + F.expr(f"INTERVAL {within}"))
+        & (rw[f"{TS}_r"] <= F.col(TS) + F.expr(f"INTERVAL {JOIN_WITHIN}"))
     )
     return lw.join(rw, cond, "inner").drop(rw[key])
 
 
-def stream_static_enrich(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: str,
-    agg_keys: tuple[str, ...] = (),
-) -> DataFrame:
-    """Stream–static join + 1-hour windowed rollup (no lateness allowed:
-    the watermark is 0 seconds): each micro-batch hash-joins
+def stream_static_enrich(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
+    """Stream–static join + ``WINDOW`` rollup per the dim's ``tier`` (no
+    lateness allowed): each micro-batch hash-joins
     the (small) static dimension — stateless, no join state to watermark,
     the standard enrichment shape for reference data (user tiers, pool
     metadata). The dim is broadcast so the stream side never shuffles
     before its windowed aggregate."""
     enriched = stream.join(F.broadcast(dim), on=on)
     return (
-        enriched.withWatermark(TS, "0 seconds")
-        .groupBy(F.window(F.col(TS), "1 hour"), *agg_keys)
+        enriched.withWatermark(TS, NO_LATENESS)
+        .groupBy(F.window(F.col(TS), WINDOW), "tier")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
         .select(
             F.col("window.start").alias("window_start"),
-            *agg_keys,
+            "tier",
             "n",
             "total_value",
         )
